@@ -252,43 +252,18 @@ SORT_MERGE_TRANSIENT_FACTOR = 2
 #: result impact either way) keeps both regimes on their measured-best
 #: plan. 64 MiB of parquet ~= sf1 here; deserialized arrays run ~10-25x
 #: the parquet bytes, so the worst-case pin is ~1.6 GB of storage pool.
-PAYLOAD_PIN_BUDGET_ENV = "SPARK_GRAFT_PAYLOAD_PIN_BUDGET_BYTES"
-DEFAULT_PAYLOAD_PIN_BUDGET_BYTES = 64 << 20
-
-
-def _payload_pin_budget_bytes() -> int:
-    import os
-
-    raw = os.environ.get(PAYLOAD_PIN_BUDGET_ENV)
-    if raw is None or raw.strip() == "":
-        return DEFAULT_PAYLOAD_PIN_BUDGET_BYTES
-    try:
-        return int(raw)
-    except ValueError:
-        raise ValueError(
-            f"{PAYLOAD_PIN_BUDGET_ENV} must be an integer byte count "
-            f"(got {raw!r})"
-        ) from None
-
-
-# moved to operators.partitioning (r10 — the exploding-join pin route
-# prices inputs the same way); kept under the old private name for the
-# existing call sites and tests.
-_source_input_bytes = source_input_bytes
+PAYLOAD_PIN_BUDGET_BYTES = 64 << 20
 
 
 def _pin_small_payload(
     frame: DataFrame, source: DataFrame, caches: list[DataFrame]
 ) -> DataFrame:
     """Persist ``frame`` iff ``source``'s input files fit the pin budget
-    (see ``PAYLOAD_PIN_BUDGET_ENV``). Appends the persisted handle to
+    (see ``PAYLOAD_PIN_BUDGET_BYTES``). Appends the persisted handle to
     ``caches`` so the caller controls release. Result-invariant: the route
     only decides whether a recomputation is cached."""
-    budget = _payload_pin_budget_bytes()
-    if budget <= 0:
-        return frame
-    size = _source_input_bytes(source)
-    if size is None or size > budget:
+    size = source_input_bytes(source)
+    if size is None or size > PAYLOAD_PIN_BUDGET_BYTES:
         return frame
     pinned = frame.persist()
     caches.append(pinned)
@@ -491,13 +466,7 @@ def lsh_candidate_pairs(
         # the one-aggregation pre-flight, and cap only past the budget.
         # The cap window's partitioning matches the cache distribution,
         # so enabling it adds a per-partition sort but no extra exchange.
-        # expansion=10: the band join's candidate output runs ~10x its
-        # banded-index input at healthy profiles (the r7 octave ladder
-        # measured candidates growing linearly at that ratio), so the pin
-        # route prices scan bytes x 10 (see repartition_for_exploding_join).
-        banded = repartition_for_exploding_join(
-            banded, "band_id", "band_key", expansion=10.0
-        ).persist()
+        banded = repartition_for_exploding_join(banded, "band_id", "band_key").persist()
         if caches is not None:
             caches.append(banded)
         profile = lsh_band_cost_profile(
@@ -525,9 +494,7 @@ def lsh_candidate_pairs(
         # once and the join reads the cache with its distribution
         # requirement satisfied (same measured pattern as the
         # ngram/winnowing inverted-index caches).
-        banded = repartition_for_exploding_join(
-            banded, "band_id", "band_key", expansion=10.0
-        ).persist()
+        banded = repartition_for_exploding_join(banded, "band_id", "band_key").persist()
         if caches is not None:
             caches.append(banded)
 
@@ -866,16 +833,11 @@ def build_shingle_postings(
     quadratic join downstream is affordable; a caller routing away from
     the join should unpersist it."""
     df = ensure_min_parallelism(df)
-    # expansion=10: distinct postings carry ~10x the document scan's
-    # parquet bytes (short hash+id rows per shingle vs compressed text),
-    # so the pin route prices scan bytes x 10 — sf1-and-up pins (the
-    # measured 20.6 -> 10.7 s regime), toy inputs let AQE coalesce.
     return repartition_for_exploding_join(
         df.select(
             F.col(id_col), F.explode(word_shingles(text_col, shingle_k)).alias("sh")
         ).distinct(),
         "sh",
-        expansion=10.0,
     ).persist()
 
 
@@ -1035,14 +997,11 @@ def ngram_containment_pairs(
     all-pairs — carries over unchanged.
     """
     df = ensure_min_parallelism(df)
-    # expansion=10: same postings-vs-scan byte ratio as
-    # build_shingle_postings (see the route note there)
     exploded = repartition_for_exploding_join(
         df.select(
             F.col(id_col), F.explode(word_shingles(text_col, shingle_k)).alias("sh")
         ).distinct(),
         "sh",
-        expansion=10.0,
     ).persist()
     if max_shingle_df is not None:
         hot = (
@@ -1133,8 +1092,6 @@ def winnowing_near_duplicates(
     # cache hash-partitioned on the join key so neither self-join side
     # re-shuffles the exploded index (same measured trade as
     # ngram_jaccard_pairs: one build exchange buys two join-side shuffles)
-    # expansion=10: same exploded-index-vs-scan byte ratio as the shingle
-    # postings (see build_shingle_postings' route note)
     exploded = repartition_for_exploding_join(
         sk.select(
             F.col(id_col),
@@ -1142,7 +1099,6 @@ def winnowing_near_duplicates(
             F.explode("__sk").alias("__h"),
         ),
         "__h",
-        expansion=10.0,
     ).persist()
     if max_hash_df is not None:
         hot = (

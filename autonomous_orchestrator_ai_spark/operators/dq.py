@@ -368,10 +368,3 @@ FIELD_REMAP = {
     "subscription_plan": "plan",
     "country_code": "country",
 }
-
-
-def apply_field_remap(df: DataFrame, mapping: dict[str, str] | None = None) -> DataFrame:
-    """Rename business field names to technical ones (Q11) — a pure select."""
-    mapping = mapping or FIELD_REMAP
-    cols = [F.col(c).alias(mapping.get(c, c)) if c in mapping else F.col(c) for c in df.columns]
-    return df.select(*cols)

@@ -57,8 +57,10 @@ def source_input_bytes(df: DataFrame) -> int | None:
     return total
 
 
-def exploding_join_parallelism(df: DataFrame) -> int:
-    """Partition count for the shuffle feeding an EXPLODING join.
+def repartition_for_exploding_join(df: DataFrame, *keys: str) -> DataFrame:
+    """Hash-repartition ``df`` on ``keys`` at pinned cluster parallelism,
+    the input of an EXPLODING join. Result-invariant — only the physical
+    partitioning changes.
 
     AQE sizes post-shuffle partitions by the shuffle's INPUT bytes
     (``advisoryPartitionSizeInBytes`` / ``minPartitionSize``), which is
@@ -74,84 +76,15 @@ def exploding_join_parallelism(df: DataFrame) -> int:
     explodes; the optimizer cannot. Repartitioning the join input by
     the join key with an EXPLICIT count (``repartition(n, key)``, a
     REPARTITION_BY_NUM shuffle AQE never coalesces) pins the join's
-    reduce side to cluster parallelism.
+    reduce side to cluster parallelism. The pin is unconditional: an
+    interleaved A/B of letting AQE coalesce small inputs measured the
+    affected queries 0.77x slower at sf0.1, because even a sub-MB join
+    input carries a pair explosion whose compute wants every core.
 
     The count is the session's configured ``spark.sql.shuffle.partitions``
     — cores-derived locally (session.py sizes it from $SPARK_GRAFT_CPUS)
     and the deployment's own 2-3x-total-cores setting on a cluster, so
     the value scales with the cluster, not with this host."""
-    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-
-
-#: cost route for the explicit pin (r10, VERDICT r9 item 2) — shipped as
-#: a MEASUREMENT SURFACE, default OFF (threshold 0 = always pin). The
-#: r9 verdict hypothesized the unconditional pin pessimizes tiny joins
-#: (the driver's single cold r9 runs read copurchase_kcore_stats
-#: 0.283 -> 0.654 s vs r8) and asked for an input-priced route that lets
-#: AQE coalesce below a threshold. The r10 interleaved A/B (two rounds
-#: of min-of-3 per side, same window, bench methodology) REFUTED it at
-#: sf0.1: routing the pin off made the affected queries SLOWER —
-#: kcore 3.37 -> 4.73 s, pagerank 2.93 -> 4.55 s, triangle 1.40 ->
-#: 2.47 s, knn screen 3.09 -> 5.41 s (0.77x total over the 9-query hot
-#: set) — because even a sub-MB join input carries a pair explosion
-#: whose compute wants every core, exactly the effect the pin was built
-#: for. The knobs remain for future A/Bs and for deployments that want
-#: the route: ``SPARK_GRAFT_EXPLODE_PIN=never`` disables every pin;
-#: ``SPARK_GRAFT_EXPLODE_PIN_MIN_INPUT_BYTES=N`` (with mode ``auto``)
-#: prices each pin against its scan's on-disk bytes x the caller's
-#: expansion factor — driver-side file metadata, no job, the same
-#: mechanism as dedup.py's payload-pin route. Unknown size (non-file
-#: source) always pins — the conservative, scale-safe default.
-EXPLODE_PIN_MODE_ENV = "SPARK_GRAFT_EXPLODE_PIN"  # auto | always | never
-EXPLODE_PIN_MIN_BYTES_ENV = "SPARK_GRAFT_EXPLODE_PIN_MIN_INPUT_BYTES"
-DEFAULT_EXPLODE_PIN_MIN_INPUT_BYTES = 0
-
-
-def _explode_pin_min_bytes() -> int:
-    raw = os.environ.get(EXPLODE_PIN_MIN_BYTES_ENV)
-    if raw is None or raw.strip() == "":
-        return DEFAULT_EXPLODE_PIN_MIN_INPUT_BYTES
-    try:
-        return int(raw)
-    except ValueError:
-        raise ValueError(
-            f"{EXPLODE_PIN_MIN_BYTES_ENV} must be an integer byte count "
-            f"(got {raw!r})"
-        ) from None
-
-
-def repartition_for_exploding_join(
-    df: DataFrame,
-    *keys: str,
-    expansion: float = 1.0,
-    est_input_bytes: int | None = None,
-) -> DataFrame:
-    """Hash-repartition ``df`` on ``keys`` at pinned cluster parallelism
-    iff the join input is big enough that the explosion's compute
-    dominates per-task overhead; otherwise return ``df`` untouched and
-    let AQE size the exchange. Result-invariant either way — only the
-    physical partitioning changes.
-
-    With the default threshold of 0 this ALWAYS pins (the measured-best
-    behavior — see the route note above); the parameters exist for the
-    env-driven route. ``expansion``: the caller's priced ratio of
-    join-input bytes to SCAN bytes (a shingle-postings explode carries
-    ~10x its document scan; an LSH bucket index ~n_tables x). The
-    threshold compares scan bytes x expansion, so families with
-    different fan-outs route consistently. ``est_input_bytes``: callers
-    that already know their input size pass it (expansion then still
-    applies); otherwise the feeding scan's file bytes are priced
-    driver-side (``source_input_bytes``). ``$SPARK_GRAFT_EXPLODE_PIN``
-    forces the route (``always``/``never``) for A/B measurement."""
-    mode = os.environ.get(EXPLODE_PIN_MODE_ENV, "auto").strip().lower()
-    if mode == "never":
-        return df
-    if mode != "always":
-        size = (
-            est_input_bytes
-            if est_input_bytes is not None
-            else source_input_bytes(df)
-        )
-        if size is not None and size * expansion < _explode_pin_min_bytes():
-            return df
-    return df.repartition(exploding_join_parallelism(df), *keys)
+    return df.repartition(
+        int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")), *keys
+    )

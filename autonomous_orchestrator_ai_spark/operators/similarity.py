@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from autonomous_orchestrator_ai_spark.operators.partitioning import (
     ensure_min_parallelism,
     repartition_for_exploding_join,
-    source_input_bytes,
 )
 
 
@@ -316,20 +315,8 @@ def lsh_bucketed_topk(
         # 3-task stage). Pin the join input to cluster parallelism with
         # an explicit-count repartition on the join key; the cap window
         # below and the join both reuse this single exchange. See
-        # exploding_join_parallelism. Cost-routed (r10): ONE decision for
-        # both join sides, priced as (corpus + query) scan bytes x
-        # n_tables (the index replication factor) — a toy input whose
-        # whole collision set is per-task-overhead-bound skips the pin
-        # and lets AQE coalesce; unknown sizes pin (scale-safe).
-        cb, qb = source_input_bytes(c_base), source_input_bytes(q_base)
-        pin_est = None if (cb is None or qb is None) else (cb + qb)
-        c = repartition_for_exploding_join(
-            c,
-            "table_id",
-            "bucket",
-            expansion=float(n_tables),
-            est_input_bytes=pin_est,
-        )
+        # repartition_for_exploding_join.
+        c = repartition_for_exploding_join(c, "table_id", "bucket")
     if max_bucket_candidates is not None:
         # one linear window shuffle on (table_id, bucket) bounds every
         # bucket BEFORE the join — the quadratic never materializes
@@ -378,16 +365,9 @@ def lsh_bucketed_topk(
         )
 
     if not broadcast_queries:
-        # same single routing decision as the corpus side (pin_est): the
-        # two sides of one join must agree or the pinned side forces the
-        # exchange anyway
-        q = repartition_for_exploding_join(
-            q,
-            "table_id",
-            "bucket",
-            expansion=float(n_tables),
-            est_input_bytes=pin_est,
-        )
+        # pinned like the corpus side: the two sides of one join must
+        # agree or the pinned side forces the exchange anyway
+        q = repartition_for_exploding_join(q, "table_id", "bucket")
     pairs = c.join(
         F.broadcast(q) if broadcast_queries else q, ["table_id", "bucket"]
     )

@@ -88,8 +88,6 @@ _MLSH_CAP = 64
 WINNOW_SLICE_BUDGET_ENV = "SPARK_GRAFT_WINNOW_SLICE_BUDGET_BYTES"
 DEFAULT_WINNOW_SLICE_BUDGET_BYTES = 12 * 1024**3
 
-WINNOW_VERIFY_SLICES_ENV = "SPARK_GRAFT_WINNOW_VERIFY_SLICES"
-
 
 def _int_env(name: str, default: int) -> int:
     """Parse an integer env knob, failing with a message that names the
@@ -674,9 +672,7 @@ def winnowing_near_dup_pairs_lsh_q(
     # unaffected. N is AUTO-ROUTED from the guard pre-flight against
     # $SPARK_GRAFT_WINNOW_SLICE_BUDGET_BYTES (r9 — VERDICT r8 item 2:
     # the last scale decision made by a human env var now derives from
-    # the measured candidate profile); $SPARK_GRAFT_WINNOW_VERIFY_SLICES
-    # > 1 overrides, 0/unset = auto.
-    slices = _int_env(WINNOW_VERIFY_SLICES_ENV, 0)
+    # the measured candidate profile).
     return winnowing_near_duplicates_lsh(
         docs, "text", "doc_id", k=_WK, w=_WW, containment=0.6,
         num_hashes=NUM_HASHES, bands=BANDS,
@@ -684,7 +680,6 @@ def winnowing_near_dup_pairs_lsh_q(
         screen_cut=_WLSH_CUT,
         guard_budget_bytes=_lsh_budget_bytes(),
         guard_row_bytes=WINNOW_CAND_ROW_BYTES,
-        verify_slices=slices if slices > 1 else None,
         slice_budget_bytes=_winnow_slice_budget_bytes(),
     )
 

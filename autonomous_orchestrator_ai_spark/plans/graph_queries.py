@@ -30,12 +30,7 @@ def _copurchase_input(spark: SparkSession, sf_dir: str) -> DataFrame:
     explosion ran on 3 of 32 cores (measured 3-5 s of the 5-7 s query).
     One explicit REPARTITION_BY_NUM exchange, shared by both join sides
     via exchange reuse, pins the join stage to cluster parallelism; see
-    exploding_join_parallelism. r10 note (VERDICT r9 item 2): the
-    requested let-AQE-coalesce-below-a-threshold route was built and
-    A/B-measured — pin-off made kcore 3.37 -> 4.73 s and pagerank
-    2.93 -> 4.55 s at sf0.1 (interleaved min-of-3 x2 per side), so the
-    pin stays unconditional by default; the route remains env-driven
-    (see partitioning.repartition_for_exploding_join)."""
+    repartition_for_exploding_join."""
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     return repartition_for_exploding_join(li, "l_orderkey")
 

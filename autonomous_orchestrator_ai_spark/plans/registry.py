@@ -151,21 +151,29 @@ def table_row_count(sf_dir: str, name: str) -> int:
     the raw scan — and it is the SAME number the callable DuckDB oracles
     derive (``SELECT COUNT(*) FROM '....parquet'`` is answered from the
     same footer), so every routing decision priced on it stays
-    engine-identical. Raw source tables only: a filtered/derived frame
-    must keep using ``count()``. Not cached: one footer read is ~1 ms,
+    engine-identical. A dataset directory is walked recursively, so a
+    hive-partitioned ``k=v/part-*`` layout counts every file Spark scans.
+    Raw source tables only: a filtered/derived frame must keep using
+    ``count()``. Not cached: one footer read is ~1 ms,
     and memoizing anything keyed on the data dir across bench passes is
     out of contract."""
     import pyarrow.parquet as pq
 
     path = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(path):
-        import glob
+    if not os.path.isdir(path):
+        return pq.ParquetFile(path).metadata.num_rows
 
-        return sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in sorted(glob.glob(os.path.join(path, "*.parquet")))
+    # Spark's file index skips names starting with "_" or "." (_SUCCESS,
+    # _metadata, .crc checksums)
+    total = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if d[0] not in "_."]
+        total += sum(
+            pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+            for f in files
+            if f[0] not in "_."
         )
-    return pq.ParquetFile(path).metadata.num_rows
+    return total
 
 
 TABLES = (

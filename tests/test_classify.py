@@ -3,6 +3,7 @@ expression form and the weight-table join form must be the same model."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -329,3 +330,17 @@ def test_trained_score_expr_plan_is_shuffle_free(spark):
     plan = scored._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "Aggregate" not in plan
+
+
+def test_bucket_past_int_range_fails_loudly(spark):
+    """The cached design matrix narrows ``bucket`` to int: a bucket id past
+    2^31-1 must raise (ANSI cast overflow), not wrap to a negative id and
+    train the wrong weights."""
+    from pyspark.errors import ArithmeticException
+
+    feats = spark.createDataFrame(
+        [(0, INTERCEPT_BUCKET, 1.0), (0, 2**31, 0.5)], _FEAT_SCHEMA
+    )
+    labels = spark.createDataFrame([(0, 1.0)], ["doc_id", "y"])
+    with pytest.raises(ArithmeticException, match="CAST_OVERFLOW"):
+        train_logistic_gd(feats, labels, rounds=1)

@@ -9,8 +9,8 @@ from pyspark.sql import functions as F
 
 from autonomous_orchestrator_ai_spark.operators.dq import (
     DIMENSIONS,
+    FIELD_REMAP,
     Expectation,
-    apply_field_remap,
     classify_failure_rate,
     dimension_scores,
     evaluate_param,
@@ -150,5 +150,4 @@ def test_dimension_rollup(events_fixture):
 
 def test_field_remap(spark):
     df = spark.createDataFrame([(1, "x")], ["customer_id", "customer_name"])
-    out = apply_field_remap(df)
-    assert out.columns == ["id", "name"]
+    assert df.withColumnsRenamed(FIELD_REMAP).columns == ["id", "name"]

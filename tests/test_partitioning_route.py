@@ -1,14 +1,12 @@
-"""The exploding-join pin and its env-driven cost route (r10, VERDICT r9
-item 2): default pins unconditionally (the measured-best behavior — the
-A/B that routed the pin off at sf0.1 ran 0.77x), `never` disables, and
-`auto` with a byte threshold prices the feeding scan. All branches are
-result-invariant — only physical partitioning may differ."""
+"""The exploding-join pin: the join input is always hash-repartitioned at
+``spark.sql.shuffle.partitions`` (the measured-best behavior — an A/B that
+let AQE coalesce small inputs at sf0.1 ran 0.77x). Also the footer row count
+the LSH sizing reads, which must match ``count()``."""
 
 from __future__ import annotations
 
 from autonomous_orchestrator_ai_spark.operators.partitioning import (
     repartition_for_exploding_join,
-    source_input_bytes,
 )
 from autonomous_orchestrator_ai_spark.plans.registry import (
     table,
@@ -25,11 +23,7 @@ def _pinned(df) -> bool:
     return "RepartitionByExpression" in plan
 
 
-def test_default_pins(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_EXPLODE_PIN", raising=False)
-    monkeypatch.delenv(
-        "SPARK_GRAFT_EXPLODE_PIN_MIN_INPUT_BYTES", raising=False
-    )
+def test_default_pins(spark):
     li = table(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
     out = repartition_for_exploding_join(li, "l_orderkey")
     assert _pinned(out)
@@ -38,47 +32,11 @@ def test_default_pins(spark, monkeypatch):
     )
 
 
-def test_never_skips(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_EXPLODE_PIN", "never")
-    li = table(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
-    out = repartition_for_exploding_join(li, "l_orderkey")
-    assert out is li
-
-
-def test_auto_routes_on_priced_bytes(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_EXPLODE_PIN", "auto")
-    li = table(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
-    size = source_input_bytes(li)
-    assert size is not None and size > 0
-    # threshold above the scan -> skip; at or below -> pin
-    monkeypatch.setenv(
-        "SPARK_GRAFT_EXPLODE_PIN_MIN_INPUT_BYTES", str(size * 10)
-    )
-    assert repartition_for_exploding_join(li, "l_orderkey") is li
-    monkeypatch.setenv("SPARK_GRAFT_EXPLODE_PIN_MIN_INPUT_BYTES", "1")
-    assert _pinned(repartition_for_exploding_join(li, "l_orderkey"))
-    # expansion multiplies the priced bytes past the threshold
-    monkeypatch.setenv(
-        "SPARK_GRAFT_EXPLODE_PIN_MIN_INPUT_BYTES", str(size * 5)
-    )
-    assert _pinned(
-        repartition_for_exploding_join(li, "l_orderkey", expansion=10.0)
-    )
-
-
-def test_route_is_result_invariant(spark, monkeypatch):
-    li = table(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
-    monkeypatch.setenv("SPARK_GRAFT_EXPLODE_PIN", "always")
-    pinned = sorted(
-        repartition_for_exploding_join(li, "l_orderkey").collect()
-    )
-    monkeypatch.setenv("SPARK_GRAFT_EXPLODE_PIN", "never")
-    skipped = sorted(
-        repartition_for_exploding_join(li, "l_orderkey").collect()
-    )
-    assert pinned == skipped
-
-
-def test_table_row_count_matches_count(spark):
+def test_table_row_count_matches_count(spark, tmp_path):
     for name in ("embeddings", "documents", "lineitem"):
         assert table_row_count(SF, name) == table(spark, SF, name).count()
+    # a hive-partitioned layout keeps its part files under k=v/ directories
+    li = table(spark, SF, "lineitem").select("l_orderkey", "l_linenumber")
+    li.write.partitionBy("l_linenumber").parquet(str(tmp_path / "parted.parquet"))
+    parted = str(tmp_path)
+    assert table_row_count(parted, "parted") == table(spark, parted, "parted").count()
