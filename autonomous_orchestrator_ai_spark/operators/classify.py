@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from autonomous_orchestrator_ai_spark.functions.literals import array_literal
 from autonomous_orchestrator_ai_spark.functions.text import normalized_text
 
 __all__ = [
@@ -167,6 +168,12 @@ def trained_score_expr(
     untouched). Batch plans can use it too when the per-doc token list is
     short enough that the fold beats the exploded join.
 
+    Each literal is ONE parsed SQL expression
+    (:func:`functions.literals.array_literal`), so building the Column
+    costs the same few hundred py4j commands whatever the model size;
+    ``F.lit(list)`` would cost ~37k for a TRAIN_BUCKETS-sized model, paid
+    on every tick.
+
     Numerics: the fold sums token weights in ARRAY order while the
     grouped form sums partial aggregates in partition order, so the two
     agree to float-summation noise (~1e-12 relative), not bitwise —
@@ -175,9 +182,10 @@ def trained_score_expr(
     like the table form's left join.
     """
     items = sorted(weights.items())
-    bkeys = F.lit([int(b) for b, _ in items]).cast("array<bigint>")
-    bvals = F.lit([float(w) for _, w in items]).cast("array<double>")
-    wmap = F.map_from_arrays(bkeys, bvals)
+    wmap = F.map_from_arrays(
+        array_literal([b for b, _ in items], "bigint"),
+        array_literal([w for _, w in items], "double"),
+    )
     toks = F.split(normalized_text(text_col), " ")
     n = F.size(toks)
     total = F.aggregate(

@@ -25,8 +25,24 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from autonomous_orchestrator_ai_spark.schemas import INCIDENTS_SCHEMA
+
+#: the log lines as written: INCIDENTS_SCHEMA with the timestamps as their
+#: ISO strings — what schema inference yields, without inference's extra
+#: job on every read. Fields a sparse (legacy) line lacks read as nulls.
+LOG_JSON_SCHEMA = T.StructType(
+    [
+        T.StructField(
+            f_.name,
+            T.StringType()
+            if isinstance(f_.dataType, T.TimestampType)
+            else f_.dataType,
+        )
+        for f_ in INCIDENTS_SCHEMA.fields
+    ]
+)
 
 
 class IncidentStore:
@@ -171,12 +187,13 @@ class IncidentStore:
         ]
         if not paths:
             return self.spark.createDataFrame([], INCIDENTS_SCHEMA)
-        df = self.spark.read.json(paths)
-        cols = []
-        for f_ in INCIDENTS_SCHEMA.fields:
-            c = F.col(f_.name) if f_.name in df.columns else F.lit(None)
-            cols.append(c.cast(f_.dataType).alias(f_.name))
-        return df.select(*cols)
+        df = self.spark.read.schema(LOG_JSON_SCHEMA).json(paths)
+        return df.select(
+            *(
+                F.col(f_.name).cast(f_.dataType).alias(f_.name)
+                for f_ in INCIDENTS_SCHEMA.fields
+            )
+        )
 
     def latest_state(self, min_created_month: str | None = None) -> DataFrame:
         """Current state per incident: last appended version wins

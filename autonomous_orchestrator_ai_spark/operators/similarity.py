@@ -21,6 +21,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from autonomous_orchestrator_ai_spark.functions.literals import sql_array
 from autonomous_orchestrator_ai_spark.operators.partitioning import (
     ensure_min_parallelism,
     repartition_for_exploding_join,
@@ -142,17 +143,11 @@ def signbit_buckets(
     n_planes = len(tables_planes[0])
     # ONE parsed literal for the whole plane matrix: building it as
     # n_tables*n_planes separate F.lit(list) columns costs ~0.6s of py4j
-    # round-trips; one F.expr parse of the same values costs ~7ms. The
-    # 'D' suffix forces double literals (shortest-repr floats round-trip
-    # exactly through Double.parseDouble).
+    # round-trips; one F.expr parse of the same values costs ~7ms
     flat = F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{float(x)!r}D" for x in plane) + ")"
-            for planes in tables_planes
-            for plane in planes
+        sql_array(
+            [plane for planes in tables_planes for plane in planes], "double"
         )
-        + ")"
     )
 
     def table_bucket(t: F.Column) -> F.Column:

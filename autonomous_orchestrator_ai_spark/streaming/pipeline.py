@@ -46,10 +46,12 @@ def with_quality_score(
     """Curation-scoring stage for the bounded-stream tick (r7, VERDICT r6
     item 8): score each record with the trained classifier's weight table
     via the STATELESS per-row form (operators.classify.trained_score_expr
-    — the model is a bounded constant embedded as array literals, so this
-    is a map-only stage: no shuffle, no state, append-mode-safe, rides
-    the same micro-batch the DQ flags do) and observe (n, score_sum) so
-    the run report carries the exact cross-batch mean."""
+    — the model is a bounded constant embedded as two parsed array
+    literals, so building the stage costs the same driver time whatever
+    the model size, and it is a map-only stage: no shuffle, no state,
+    append-mode-safe, rides the same micro-batch the DQ flags do) and
+    observe (n, score_sum) so the run report carries the exact
+    cross-batch mean."""
     from autonomous_orchestrator_ai_spark.operators.classify import (
         TRAIN_BUCKETS,
         trained_score_expr,

@@ -344,3 +344,37 @@ def test_bucket_past_int_range_fails_loudly(spark):
     labels = spark.createDataFrame([(0, 1.0)], ["doc_id", "y"])
     with pytest.raises(ArithmeticException, match="CAST_OVERFLOW"):
         train_logistic_gd(feats, labels, rounds=1)
+
+
+def test_trained_score_expr_py4j_traffic_is_independent_of_model_size(
+    spark, monkeypatch
+):
+    """The model constant is parsed from SQL text in one call, so building
+    the scoring Column issues the same py4j commands for a TRAIN_BUCKETS
+    model as for a 16-bucket one (``F.lit(list)`` costs ~37k commands at
+    4,096 buckets: one ``lit()`` per element)."""
+    from autonomous_orchestrator_ai_spark.operators.classify import (
+        TRAIN_BUCKETS,
+        trained_score_expr,
+    )
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting_send(*args, **kwargs):
+        sent.append(1)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting_send)
+
+    def commands(n_weights: int) -> int:
+        weights = {b: (b % 7 - 3) / 11.0 for b in range(n_weights)}
+        sent.clear()
+        trained_score_expr("text", weights, TRAIN_BUCKETS, 0.1)
+        return len(sent)
+
+    commands(16)  # warm the JVM-side function lookups
+    small = commands(16)
+    assert small > 0
+    assert commands(TRAIN_BUCKETS) == small

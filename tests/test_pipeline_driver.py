@@ -69,3 +69,19 @@ def test_healthy_pipeline_no_escalation(spark, tmp_path):
     assert d["escalation_required"] is False
     assert "running normally" in d["reasoning"]
     assert [a["tool"] for a in d["actions_taken"]] == ["notify_ops"]
+
+
+def test_validation_count_matches_independent_count(spark, tmp_path):
+    """The load validation takes its row count from the DQ aggregate over
+    curated/; over two incremental ticks it must equal an independent
+    count of what the sink holds."""
+    g = EventGenerator(seed=13, n_customers=40, now=NOW, late_rate=0.0, drift_frequency=0)
+    indir, work = tmp_path / "in", tmp_path / "work"
+    for i, n in enumerate([120, 80]):
+        g.write_jsonl(indir / f"batch{i}.jsonl", n)
+        result = run_pipeline_once(
+            spark, str(indir), str(work), now=NOW.replace(tzinfo=None)
+        )
+        counted = spark.read.parquet(str(work / "curated")).count()
+        assert counted == 120 + 80 * i
+        assert result["validation"] == {"rows_in_curated": counted, "ok": True}

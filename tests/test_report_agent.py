@@ -170,6 +170,33 @@ def test_incident_store(spark, tmp_path):
     assert stats["by_severity"] == {"high": 1, "medium": 1}
 
 
+def test_sparse_legacy_incident_reads_typed_nulls(spark, tmp_path):
+    """A legacy log line that lacks escalated_at, resolved_at and
+    created_by reads back with those fields as nulls of the declared
+    types, and its timestamps parsed."""
+    base = tmp_path / "inc"
+    base.mkdir()
+    rec = {
+        "id": "old-2", "incident_type": "x", "summary": "s", "context": "{}",
+        "severity": "low", "status": "open",
+        "created_at": "2023-12-01T00:00:00", "updated_at": "2023-12-02T06:30:00",
+        "escalated": False, "resolution_notes": None,
+    }
+    (base / "log.jsonl").write_text(json.dumps(rec) + "\n")
+    df = IncidentStore(spark, str(base)).latest_state()
+    types = dict(df.dtypes)
+    assert (types["escalated_at"], types["resolved_at"], types["created_by"]) == (
+        "timestamp", "timestamp", "string"
+    )
+    [row] = df.collect()
+    assert row["escalated_at"] is None
+    assert row["resolved_at"] is None
+    assert row["created_by"] is None
+    assert row["created_at"] == datetime(2023, 12, 1)
+    assert row["updated_at"] == datetime(2023, 12, 2, 6, 30)
+    assert row["escalated"] is False
+
+
 def test_incident_store_monthly_partitions(spark, tmp_path):
     """VERDICT r4 item 8: updates touch exactly ONE partition file; reads
     with a retention cutoff prune old months; a legacy unpartitioned
