@@ -21,15 +21,17 @@ inline ``lsh_bucketed_topk`` would.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from autonomous_orchestrator_ai_spark.operators.partitioned_index import (
+    PartitionedIndex,
+)
 from autonomous_orchestrator_ai_spark.operators.partitioning import (
     ensure_min_parallelism,
 )
 from autonomous_orchestrator_ai_spark.operators.similarity import (
     _as_double_array,
-    cosine,
     hyperplanes,
     signbit_buckets,
 )
@@ -39,62 +41,17 @@ def _planes(dim: int, n_planes: int, n_tables: int, seed: int):
     return [hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
 
 
-#: Hash-family metadata lives beside the data (underscore dir — invisible
-#: to parquet discovery). Appends/queries with mismatched parameters would
-#: otherwise mix incompatible bucketings into one layout and silently
-#: tank recall.
-_META_DIR = "_lsh_index_meta"
+#: On-disk layout: entries PARTITIONED BY (table_id, bucket, __batch) with
+#: the ``_lsh_index_manifest`` / ``_lsh_index_meta`` underscore dirs beside
+#: them (operators/partitioned_index.py). The meta carries the hash family:
+#: appends/queries with mismatched parameters would otherwise mix
+#: incompatible bucketings into one layout and silently tank recall.
+LAYOUT = PartitionedIndex("lsh", ("table_id", "bucket"))
 _META_KEYS = ("n_planes", "n_tables", "dim", "seed")
 
 
-def write_index_meta(
-    spark: SparkSession, path: str, params: dict, meta_dir: str = _META_DIR
-) -> None:
-    """Persist index metadata beside the data (underscore dir — invisible
-    to parquet discovery). Shared by the LSH and IVF index layouts."""
-    spark.createDataFrame([params]).coalesce(1).write.mode("overwrite").json(
-        f"{path}/{meta_dir}"
-    )
-
-
-def read_index_meta(
-    spark: SparkSession, path: str, meta_dir: str = _META_DIR
-) -> dict | None:
-    """Load index metadata; None if the meta dir is missing (pre-metadata
-    index), LOUD ValueError on unreadable/unparseable/empty meta — a
-    silent skip is exactly the mismatched-append corruption the metadata
-    exists to prevent."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        meta_df = spark.read.json(f"{path}/{meta_dir}")
-        # all-corrupt JSON infers a schema of only _corrupt_record (which
-        # Spark refuses to even collect): treat as unparseable right here
-        if "_corrupt_record" in meta_df.columns or not meta_df.columns:
-            raise ValueError("meta is unparseable")
-        rows = meta_df.collect()
-    except AnalysisException:  # path-not-found: nothing to check
-        return None
-    except Exception as e:  # corrupt file / storage failure: fail LOUDLY
-        raise ValueError(
-            f"index meta at {path}/{meta_dir} exists but could not be "
-            "read or parsed — refusing to proceed without the "
-            "index-parameter guard"
-        ) from e
-    if not rows:
-        raise ValueError(
-            f"index meta at {path}/{meta_dir} exists but is empty — "
-            "refusing to proceed without the index-parameter guard"
-        )
-    return rows[0].asDict()
-
-
-def _write_meta(spark: SparkSession, path: str, params: dict) -> None:
-    write_index_meta(spark, path, params)
-
-
 def _check_meta(spark: SparkSession, path: str, params: dict) -> None:
-    stored = read_index_meta(spark, path)
+    stored = LAYOUT.read_meta(spark, path)
     if stored is None:  # pre-metadata index: nothing to check
         return
     mismatched = {
@@ -109,61 +66,14 @@ def _check_meta(spark: SparkSession, path: str, params: dict) -> None:
         )
 
 
-#: Bucket manifest: one row per live (table_id, bucket, __batch) partition
-#: with its row count — the metastore-catalog stand-in. Probes resolve
-#: their partition PATHS from this small table instead of listing the
-#: whole index directory tree (measured at sf10: discovery over 12.5k
-#: bucket dirs ~30-35 s, the pruned read itself ~0.4 s). Underscore dir —
-#: invisible to parquet discovery — and itself partitioned by __batch so
-#: the append path updates it with the same idempotent per-batch dynamic
-#: overwrite as the data.
-_MANIFEST_DIR = "_lsh_index_manifest"
-
-
-def _write_manifest(
-    spark: SparkSession,
-    path: str,
-    counts: DataFrame,
-    dynamic: bool,
-    manifest_dir: str = _MANIFEST_DIR,
-) -> None:
-    writer = counts.coalesce(1).write.mode("overwrite")
-    if dynamic:
-        writer = writer.option("partitionOverwriteMode", "dynamic")
-    writer.partitionBy("__batch").parquet(f"{path}/{manifest_dir}")
-
-
-def _manifest_counts(entries: DataFrame) -> DataFrame:
-    return entries.groupBy("table_id", "bucket", "__batch").agg(
-        F.count(F.lit(1)).alias("n_rows")
-    )
-
-
-def read_bucket_manifest(
-    spark: SparkSession, path: str, manifest_dir: str
-) -> DataFrame | None:
-    """A persisted index's bucket manifest (one row per live data
-    partition, with its row count); None for a pre-manifest index (probes
-    then fall back to directory discovery). Shared by the LSH and IVF
-    index layouts — the partition-key columns differ, the contract does
-    not."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(f"{path}/{manifest_dir}")
-    except AnalysisException:
-        return None
-
-
 def read_lsh_manifest(spark: SparkSession, path: str) -> DataFrame | None:
     """The LSH index's bucket manifest: (table_id, bucket, n_rows,
     __batch)."""
-    return read_bucket_manifest(spark, path, _MANIFEST_DIR)
+    return LAYOUT.read_manifest(spark, path)
 
 
-def _index_entries(
+def _index_rows(
     vectors: DataFrame,
-    batch_id: int,
     n_planes: int,
     n_tables: int,
     dim: int,
@@ -173,7 +83,8 @@ def _index_entries(
 ) -> DataFrame:
     """Shared bucketing projection for build and append — ONE source of
     truth for the layout, so batch-built and incrementally-appended
-    indexes can never drift."""
+    indexes can never drift. One scan: every table's bucket comes from a
+    single fused expression (signbit_buckets) + posexplode."""
     all_planes = _planes(dim, n_planes, n_tables, seed)
     return ensure_min_parallelism(vectors).select(
         F.col(id_col).alias("neighbor_id"),
@@ -181,23 +92,7 @@ def _index_entries(
         F.posexplode(signbit_buckets(_as_double_array(vec_col), all_planes)).alias(
             "table_id", "bucket"
         ),
-        F.lit(batch_id).cast("bigint").alias("__batch"),
     )
-
-
-def _write_entries(entries: DataFrame, path: str, dynamic: bool) -> None:
-    # one file set per (table_id, bucket) partition; buckets are
-    # uniform-ish under random hyperplanes, so files balance without
-    # salting. __batch is the innermost partition level: pruning on
-    # (table_id, bucket) is unaffected, and per-batch DYNAMIC overwrite
-    # (append path) replaces exactly this batch's partitions — replaying
-    # the same batch rewrites them to the same content (idempotent). The
-    # build path uses a STATIC overwrite so a rebuild fully replaces the
-    # index, leaving no stale batch partitions behind.
-    writer = entries.repartition("table_id", "bucket").write.mode("overwrite")
-    if dynamic:
-        writer = writer.option("partitionOverwriteMode", "dynamic")
-    writer.partitionBy("table_id", "bucket", "__batch").parquet(path)
 
 
 def build_lsh_index(
@@ -224,29 +119,10 @@ def build_lsh_index(
     staying constant (measured consequences in PERF.md round 5 late).
     The default of 4 matches the pinned oracle configuration at test
     scales, not a production corpus."""
-    # build owns __batch=-1: streaming epoch ids start at 0, so an
-    # append can never dynamic-overwrite the base build's partitions
-    entries = _index_entries(
-        corpus, -1, n_planes, n_tables, dim, seed, id_col, vec_col
-    )
-    spark = corpus.sparkSession
-    _write_entries(entries, path, dynamic=False)
-    # bucket manifest: one extra aggregation-only pass over the bucketing
-    # projection (no persist of the n_tables-replicated entries needed);
-    # on a cluster with commit-protocol metadata this would come for free
-    # from the write itself
-    _write_manifest(spark, path, _manifest_counts(entries), dynamic=False)
-    _write_meta(
-        spark,
+    LAYOUT.build(
+        _index_rows(corpus, n_planes, n_tables, dim, seed, id_col, vec_col),
         path,
-        {
-            "n_planes": n_planes,
-            "n_tables": n_tables,
-            "dim": dim,
-            "seed": seed,
-            # for typed empty results when a probe hits no live partition
-            "neighbor_id_type": corpus.schema[id_col].dataType.simpleString(),
-        },
+        {"n_planes": n_planes, "n_tables": n_tables, "dim": dim, "seed": seed},
     )
 
 
@@ -324,80 +200,7 @@ def query_lsh_index(
         (r.table_id, r.bucket)
         for r in q.select("table_id", "bucket").distinct().collect()
     }
-
-    def _empty_topk() -> DataFrame:
-        # id types come from the actual inputs — ids are not always bigint
-        qid_type = queries.schema[id_col].dataType.simpleString()
-        stored = read_index_meta(spark, path) or {}
-        nid_type = stored.get("neighbor_id_type") or (
-            load_lsh_index(spark, path).schema["neighbor_id"].dataType
-        ).simpleString()
-        return spark.createDataFrame(
-            [],
-            f"query_id {qid_type}, neighbor_id {nid_type}, "
-            "cosine_sim double, rank bigint",
-        )
-
-    if not probe_keys:  # empty query batch -> empty result, not a crash
-        return _empty_topk()
-    index = index_df
-    if index is None:
-        manifest = read_lsh_manifest(spark, path)
-        if manifest is not None:
-            # COLD-PROBE FAST PATH: resolve the probed partitions' paths
-            # from the manifest (one small parquet read) and read ONLY
-            # those directories — no discovery of the index tree at all.
-            # basePath keeps (table_id, bucket, __batch) as partition
-            # columns of the sub-scan.
-            live = sorted(
-                (r["table_id"], r["bucket"])
-                for r in manifest.select("table_id", "bucket")
-                .distinct()
-                .collect()
-                if (r["table_id"], r["bucket"]) in probe_keys
-            )
-            if not live:  # every probed bucket is empty in this index
-                return _empty_topk()
-            index = spark.read.option("basePath", path).parquet(
-                *[f"{path}/table_id={t}/bucket={b}" for t, b in live]
-            )
-        else:  # pre-manifest index: full directory discovery
-            index = load_lsh_index(spark, path)
-    # partition-literal pruning, grouped per table: (table_id == t) &
-    # bucket.isin([...]) gives the same static pruning as one disjunct per
-    # (table, bucket) but with O(n_tables) predicate-tree nodes instead of
-    # O(n_queries x n_tables x (1+n_planes)) — analysis/codegen cost stays
-    # flat as the serving batch grows. The query side is small by
-    # definition, so recomputing its bucket expression for the join is
-    # cheaper than any caching machinery.
-    by_table: dict[int, list] = {}
-    for t, b in sorted(probe_keys):
-        by_table.setdefault(t, []).append(b)
-    cond = None
-    for t, buckets in sorted(by_table.items()):
-        this = (F.col("table_id") == t) & F.col("bucket").isin(buckets)
-        cond = this if cond is None else (cond | this)
-    pairs = index.filter(cond).join(F.broadcast(q), ["table_id", "bucket"])
-    if exclude_self:
-        pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        cosine(F.col("__qv"), F.col("vec")).alias("__sim"),
-    ).dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("__sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("__sim", 6).alias("cosine_sim"),
-            "rank",
-        )
-    )
+    return LAYOUT.query(spark, path, q, probe_keys, k, exclude_self, index_df)
 
 
 def append_to_lsh_index(
@@ -423,31 +226,13 @@ def append_to_lsh_index(
     written at build time — appending under a different family would
     silently corrupt recall. Compaction of accumulated small files is
     ``sources.writers.compact_parquet``'s job, per partition."""
-    if batch_id < 0:
-        # the build reserves __batch=-1; an append at -1 would
-        # dynamic-overwrite (i.e. silently delete) base-build partitions
-        raise ValueError(
-            f"batch_id must be >= 0 (got {batch_id}); negative ids are "
-            "reserved for the base build"
-        )
-    spark = new_vectors.sparkSession
     _check_meta(
-        spark,
+        new_vectors.sparkSession,
         path,
         {"n_planes": n_planes, "n_tables": n_tables, "dim": dim, "seed": seed},
     )
-    entries = _index_entries(
-        new_vectors, batch_id, n_planes, n_tables, dim, seed, id_col, vec_col
+    LAYOUT.append(
+        _index_rows(new_vectors, n_planes, n_tables, dim, seed, id_col, vec_col),
+        path,
+        batch_id,
     )
-    # MANIFEST FIRST, entries second (r7, ADVICE): the two writes are not
-    # atomic, and cold probes resolve paths solely from the manifest. With
-    # the old entries-first order, dying between the writes left buckets
-    # newly created by this batch on disk but absent from the manifest —
-    # every later cold probe silently returned incomplete results until a
-    # replay happened to heal it. Manifest-first inverts the failure mode:
-    # a listed-but-missing partition path makes the probe's parquet read
-    # fail LOUDLY (PATH_NOT_FOUND), and replaying the batch heals both
-    # sides via the same per-batch dynamic overwrite (idempotent under
-    # at-least-once delivery). Loud-and-healable beats silent recall loss.
-    _write_manifest(spark, path, _manifest_counts(entries), dynamic=True)
-    _write_entries(entries, path, dynamic=True)

@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -45,6 +45,7 @@ from autonomous_orchestrator_ai_spark.operators.partitioning import (
 from autonomous_orchestrator_ai_spark.operators.similarity import (
     _as_double_array,
     cosine,
+    rank_topk,
 )
 
 
@@ -268,12 +269,11 @@ def ivf_topk(
     pairs = c.join(F.broadcast(probed), "bucket")
     if exclude_self:
         pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
-    ranked = pairs.select(
-        "query_id", "neighbor_id", cosine(F.col("__qv"), F.col("__cv")).alias("__sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("__sim"), F.asc("neighbor_id"))
-    return (
-        ranked.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("__sim", 6).alias("cosine_sim"), "rank")
+    return rank_topk(
+        pairs.select(
+            "query_id",
+            "neighbor_id",
+            cosine(F.col("__qv"), F.col("__cv")).alias("__sim"),
+        ),
+        k,
     )

@@ -25,58 +25,38 @@ from __future__ import annotations
 import json
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from autonomous_orchestrator_ai_spark.operators.ann_index import (
-    _write_manifest,
-    read_bucket_manifest,
-    read_index_meta,
-    write_index_meta,
-)
 from autonomous_orchestrator_ai_spark.operators.ivf import _nearest_centroid_udf
+from autonomous_orchestrator_ai_spark.operators.partitioned_index import (
+    PartitionedIndex,
+)
 from autonomous_orchestrator_ai_spark.operators.partitioning import (
     ensure_min_parallelism,
 )
 from autonomous_orchestrator_ai_spark.operators.similarity import (
     _as_double_array,
-    cosine,
 )
 
-_META_DIR = "_ivf_index_meta"
-
-#: Bucket manifest: one row per live (bucket, __batch) partition with its
-#: row count — same metastore-catalog stand-in the LSH index gained in r6
-#: (operators/ann_index.py _MANIFEST_DIR), ported here in r7 (the r6
-#: docstring argued IVF's partition count was bounded by n_lists, a model
-#: constant — true at build, but streaming appends multiply it by the
-#: batch count, so a long-lived index's directory tree grows without
-#: bound and cold-probe discovery grows with it; the LSH measurement was
-#: ~30-35 s discovery vs ~0.4 s pruned read at 12.5k dirs). Cold probes
-#: resolve the probed lists' paths from this small table; warm servers
-#: pass ``index_df`` from ``load_ivf_index`` as before.
-_MANIFEST_DIR = "_ivf_index_manifest"
-
-
-def _manifest_counts(entries: DataFrame) -> DataFrame:
-    return entries.groupBy("bucket", "__batch").agg(
-        F.count(F.lit(1)).alias("n_rows")
-    )
+#: On-disk layout: entries PARTITIONED BY (bucket, __batch) with the
+#: ``_ivf_index_manifest`` / ``_ivf_index_meta`` underscore dirs beside them
+#: (operators/partitioned_index.py). IVF's partition count is bounded by
+#: n_lists at build, but streaming appends multiply it by the batch count,
+#: so a long-lived index's directory tree grows without bound and cold
+#: probes need the manifest exactly as the LSH index does.
+LAYOUT = PartitionedIndex("ivf", ("bucket",))
 
 
 def read_ivf_manifest(spark: SparkSession, path: str) -> DataFrame | None:
     """The IVF index's bucket manifest: (bucket, n_rows, __batch), one row
     per live data partition; None for a pre-manifest index (probes then
     fall back to directory discovery)."""
-    return read_bucket_manifest(spark, path, _MANIFEST_DIR)
+    return LAYOUT.read_manifest(spark, path)
 
 
-def _entries(
-    vectors: DataFrame,
-    centroids: np.ndarray,
-    batch_id: int,
-    id_col: str,
-    vec_col: str,
+def _index_rows(
+    vectors: DataFrame, centroids: np.ndarray, id_col: str, vec_col: str
 ) -> DataFrame:
     """Shared assignment projection for build and append — one source of
     truth for the layout."""
@@ -87,15 +67,7 @@ def _entries(
             _as_double_array(vec_col).alias("vec"),
         )
         .withColumn("bucket", _nearest_centroid_udf(centroids)(F.col("vec")))
-        .withColumn("__batch", F.lit(batch_id).cast("bigint"))
     )
-
-
-def _write(entries: DataFrame, path: str, dynamic: bool) -> None:
-    writer = entries.repartition("bucket").write.mode("overwrite")
-    if dynamic:
-        writer = writer.option("partitionOverwriteMode", "dynamic")
-    writer.partitionBy("bucket", "__batch").parquet(path)
 
 
 def build_ivf_index(
@@ -110,32 +82,22 @@ def build_ivf_index(
     start at 0, so an append can never dynamic-overwrite build
     partitions)."""
     c = np.ascontiguousarray(centroids, dtype=np.float64)
-    entries = _entries(corpus, c, -1, id_col, vec_col)
-    spark = corpus.sparkSession
-    _write(entries, path, dynamic=False)
-    _write_manifest(
-        spark, path, _manifest_counts(entries), dynamic=False,
-        manifest_dir=_MANIFEST_DIR,
-    )
-    write_index_meta(
-        spark,
+    LAYOUT.build(
+        _index_rows(corpus, c, id_col, vec_col),
         path,
         {
             "n_lists": int(c.shape[0]),
             "dim": int(c.shape[1]),
             "centroids": json.dumps(c.tolist()),
-            # for typed empty results when a probe hits no live partition
-            "neighbor_id_type": corpus.schema[id_col].dataType.simpleString(),
         },
-        meta_dir=_META_DIR,
     )
 
 
 def load_ivf_centroids(spark: SparkSession, path: str) -> np.ndarray:
     """The frozen quantizer, from the index's own metadata."""
-    meta = read_index_meta(spark, path, meta_dir=_META_DIR)
+    meta = LAYOUT.read_meta(spark, path)
     if meta is None:
-        raise ValueError(f"no IVF index metadata at {path}/{_META_DIR}")
+        raise ValueError(f"no IVF index metadata at {path}/{LAYOUT.meta_dir}")
     c = np.array(json.loads(meta["centroids"]), dtype=np.float64)
     if c.shape != (int(meta["n_lists"]), int(meta["dim"])):
         raise ValueError(
@@ -178,85 +140,29 @@ def query_ivf_index(
     directories — no index-tree discovery (r7; pre-manifest indexes fall
     back to a full listing, which grows with the append count)."""
     centroids = load_ivf_centroids(spark, path)
+    qid_type = queries.schema[id_col].dataType.simpleString()
     qrows = queries.select(
         F.col(id_col).alias("query_id"), _as_double_array(vec_col).alias("__qv")
     ).collect()
-
-    def _empty_topk() -> DataFrame:
-        qid_type = queries.schema[id_col].dataType.simpleString()
-        stored = read_index_meta(spark, path, meta_dir=_META_DIR) or {}
-        nid_type = stored.get("neighbor_id_type") or (
-            load_ivf_index(spark, path).schema["neighbor_id"].dataType
-        ).simpleString()
-        return spark.createDataFrame(
-            [],
-            f"query_id {qid_type}, neighbor_id {nid_type}, "
-            "cosine_sim double, rank bigint",
-        )
-
-    if not qrows:
-        return _empty_topk()
-    qm = np.array([r["__qv"] for r in qrows], dtype=np.float64)
+    qm = np.array([r["__qv"] for r in qrows], dtype=np.float64).reshape(
+        len(qrows), centroids.shape[1]
+    )
     # SAME scoring as operators.ivf._probe_udf (squared-L2 argmin as
     # argmax of 2xc - |c|^2, stable ties) — a different probe metric here
     # would silently diverge from the inline operator
     c_norm2 = (centroids * centroids).sum(axis=1)
     scores = 2.0 * (qm @ centroids.T) - c_norm2
     probes = np.argsort(-scores, axis=1, kind="stable")[:, :n_probe]
-    probe_pairs = [
-        (r["query_id"], [int(b) for b in probes[i]])
-        for i, r in enumerate(qrows)
-    ]
-    buckets = sorted({b for _, bs in probe_pairs for b in bs})
     q = spark.createDataFrame(
-        [(qid, r["__qv"], b) for (qid, bs), r in zip(probe_pairs, qrows)
-         for b in bs],
-        f"query_id {queries.schema[id_col].dataType.simpleString()}, "
-        "__qv array<double>, bucket int",
+        [
+            (r["query_id"], r["__qv"], int(b))
+            for r, bs in zip(qrows, probes)
+            for b in bs
+        ],
+        f"query_id {qid_type}, __qv array<double>, bucket int",
     )
-    index = index_df
-    if index is None:
-        manifest = read_ivf_manifest(spark, path)
-        if manifest is not None:
-            # COLD-PROBE FAST PATH: resolve the probed lists' paths from
-            # the manifest (one small parquet read) and read ONLY those
-            # directories. basePath keeps (bucket, __batch) as partition
-            # columns of the sub-scan.
-            live = sorted(
-                r["bucket"]
-                for r in manifest.select("bucket").distinct().collect()
-                if r["bucket"] in set(buckets)
-            )
-            if not live:  # every probed list is empty in this index
-                return _empty_topk()
-            index = spark.read.option("basePath", path).parquet(
-                *[f"{path}/bucket={b}" for b in live]
-            )
-        else:  # pre-manifest index: full directory discovery
-            index = load_ivf_index(spark, path)
-    pairs = index.filter(F.col("bucket").isin(buckets)).join(
-        F.broadcast(q), "bucket"
-    )
-    if exclude_self:
-        pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        cosine(F.col("__qv"), F.col("vec")).alias("__sim"),
-    ).dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("__sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("__sim", 6).alias("cosine_sim"),
-            "rank",
-        )
-    )
+    probe_keys = {(int(b),) for b in probes.flat}
+    return LAYOUT.query(spark, path, q, probe_keys, k, exclude_self, index_df)
 
 
 def append_to_ivf_index(
@@ -270,22 +176,14 @@ def append_to_ivf_index(
     dynamic-overwrite exactly this batch's (bucket, batch) partitions —
     replaying a batch (at-least-once foreachBatch) rewrites the same
     partitions to the same content. No retraining on append, by design.
-
-    Manifest-first write order, same rationale as ``append_to_lsh_index``
-    (r7): the two writes are not atomic, and cold probes resolve paths
-    solely from the manifest — dying between them must leave a
-    listed-but-missing path that fails LOUDLY and heals on replay, never
-    an on-disk bucket the manifest silently omits."""
-    if batch_id < 0:
-        raise ValueError(
-            f"batch_id must be >= 0 (got {batch_id}); negative ids are "
-            "reserved for the base build"
-        )
-    spark = new_vectors.sparkSession
-    centroids = load_ivf_centroids(spark, path)
-    entries = _entries(new_vectors, centroids, batch_id, id_col, vec_col)
-    _write_manifest(
-        spark, path, _manifest_counts(entries), dynamic=True,
-        manifest_dir=_MANIFEST_DIR,
+    Manifest first, entries second (``PartitionedIndex.append``)."""
+    LAYOUT.append(
+        _index_rows(
+            new_vectors,
+            load_ivf_centroids(new_vectors.sparkSession, path),
+            id_col,
+            vec_col,
+        ),
+        path,
+        batch_id,
     )
-    _write(entries, path, dynamic=True)

@@ -53,6 +53,7 @@ from autonomous_orchestrator_ai_spark.operators.partitioning import (
 from autonomous_orchestrator_ai_spark.operators.similarity import (
     _as_double_array,
     cosine,
+    rank_topk,
 )
 
 
@@ -202,14 +203,4 @@ def ivfpq_topk(
         "neighbor_id",
         cosine(F.col("__qv"), F.col("__cv")).alias("__sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("__sim"), F.asc("neighbor_id"))
-    return (
-        reranked.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("__sim", 6).alias("cosine_sim"),
-            "rank",
-        )
-    )
+    return rank_topk(reranked, k)

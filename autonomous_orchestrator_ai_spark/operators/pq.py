@@ -32,6 +32,8 @@ from autonomous_orchestrator_ai_spark.operators.partitioning import (
 )
 from autonomous_orchestrator_ai_spark.operators.similarity import (
     _as_double_array,
+    cosine,
+    rank_topk,
 )
 
 
@@ -213,19 +215,7 @@ def pq_adc_topk(
             f"query_id {qid_type}, neighbor_id {nid_type}, adc_score double"
         ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("neighbor_id")
-    )
-    return (
-        partials.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("adc_score", 6).alias("adc_score"),
-            "rank",
-        )
-    )
+    return rank_topk(partials, k, score="adc_score", out="adc_score")
 
 
 def pq_adc_topk_chunked(
@@ -302,8 +292,6 @@ def pq_topk_reranked(
     Quantization error affects which rows make the shortlist, never the
     final ordering — on tightly-bunched neighbors this is the difference
     between ~0.3 and ~0.9 recall@5 at 64x compression."""
-    from autonomous_orchestrator_ai_spark.operators.similarity import cosine
-
     short = pq_adc_topk(
         corpus_codes,
         queries,
@@ -329,16 +317,4 @@ def pq_topk_reranked(
             cosine(F.col("__qv"), F.col("__cv")).alias("__sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("__sim"), F.asc("neighbor_id")
-    )
-    return (
-        reranked.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("__sim", 6).alias("cosine_sim"),
-            "rank",
-        )
-    )
+    return rank_topk(reranked, k)

@@ -8,9 +8,9 @@ which is unsupported (SURVEY.md §3.2 defect). Here:
 - batch: ``run_report_agg`` (one hash-aggregate job; map-side partial
   aggregation makes it a single reduce of 4 longs per partition — constant
   network cost at any scale), or
-- streaming: ``observed_metrics`` wires the same expressions through
-  ``df.observe`` so metrics accumulate per micro-batch with zero extra jobs
-  (see streaming.pipeline).
+- streaming: ``streaming.pipeline.with_run_observation`` wires the same
+  expressions through ``df.observe`` so metrics accumulate per micro-batch
+  with zero extra jobs.
 """
 
 from __future__ import annotations
@@ -19,18 +19,12 @@ import json
 from datetime import datetime, timezone
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from autonomous_orchestrator_ai_spark.functions.temporal import WATERMARK_DELAY
 
-#: Decision thresholds (reference agent/decision_agent.py:63-70;
-#: airflow/include/config.yml:46-49).
-LATE_ARRIVAL_THRESHOLD = 0.15
-DQ_FAILURE_THRESHOLD = 0.05
-
-
-def _report_metric_columns() -> list[Column]:
+def report_metric_columns() -> list[Column]:
     """The A1 conditional counts (ingest_transform.py:310-316)."""
     return [
         F.count(F.lit(1)).alias("total_records"),
@@ -44,15 +38,7 @@ def _report_metric_columns() -> list[Column]:
 
 def run_report_agg(df: DataFrame) -> DataFrame:
     """Global conditional-count aggregate -> 1-row DataFrame (reference A1)."""
-    return df.agg(*_report_metric_columns())
-
-
-def observed_metrics(df: DataFrame, name: str = "run_stats") -> tuple[DataFrame, Observation]:
-    """Streaming-safe variant: attach an Observation computing the same
-    metrics as a side effect of whatever sink runs — no extra pass over the
-    data (SURVEY.md §4 item 2)."""
-    obs = Observation(name)
-    return df.observe(obs, *_report_metric_columns()), obs
+    return df.agg(*report_metric_columns())
 
 
 def build_run_report(

@@ -64,6 +64,27 @@ def l2_normalized(a: F.Column | str) -> F.Column:
     )
 
 
+def rank_topk(
+    scored: DataFrame, k: int, score: str = "__sim", out: str = "cosine_sim"
+) -> DataFrame:
+    """The one per-query ranking policy of the vector-search operators:
+    rank by ``score`` descending, ties by ``neighbor_id`` ascending; keep
+    ranks 1..k as a bigint ``rank``. ``scored`` carries ``query_id``,
+    ``neighbor_id`` and ``score``; the output keeps every other column in
+    its order, then ``round(score, 6)`` as ``out``, then ``rank`` — the
+    ranking itself sees the unrounded score."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rank") <= k)
+        .select(
+            *[c for c in scored.columns if c != score],
+            F.round(score, 6).alias(out),
+            "rank",
+        )
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -100,17 +121,7 @@ def cosine_topk(
             / (F.col("__qn") * F.col("__cn"))
         ).alias("__sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("__sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("__sim", 6).alias("cosine_sim"),
-            "rank",
-        )
-    )
+    return rank_topk(scored, k)
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -418,12 +429,7 @@ def lsh_bucketed_topk(
             )
             .dropDuplicates(["query_id", "neighbor_id"])
         )
-    w = Window.partitionBy("query_id").orderBy(F.desc("__sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("__sim", 6).alias("cosine_sim"), "rank")
-    )
+    return rank_topk(scored, k)
 
 
 def embedding_near_duplicates(
@@ -599,21 +605,7 @@ def hard_negatives(
         "neighbor_label",
         cosine(F.col("__qv"), F.col("__cv")).alias("__sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("__sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "query_label",
-            "neighbor_id",
-            "neighbor_label",
-            F.round("__sim", 6).alias("cosine_sim"),
-            "rank",
-        )
-    )
+    return rank_topk(scored, k)
 
 
 def auto_planes(n_rows: int, target_bucket: int = 64, floor: int = 4) -> int:

@@ -53,7 +53,8 @@ def run_pipeline_once(
 
     Layout under ``work_dir``: curated/ (partitioned parquet sink),
     checkpoints/, ops/ (run_report.json, ge_results.json, decisions.jsonl,
-    notifications.jsonl), incidents/.
+    notifications.jsonl, quarantine/ — the retention sweep's only target),
+    incidents/.
     """
     now = now or datetime.now()
     work = Path(work_dir)
@@ -126,7 +127,12 @@ def run_pipeline_once(
         (ops / "load_validation.json").write_text(json.dumps(validation))
 
         # ---- C6: retention ----------------------------------------------
-        removed = cleanup_old_data(str(work / "checkpoints"), retention_days)
+        # sweeps the quarantine directives that pile up one per action; never
+        # checkpoints/: Spark writes only inside the live checkpoint's
+        # subdirs, so its ctime stays at the first tick's and a sweep would
+        # delete it, after which the restarted query's batch ids collide
+        # with the sink's committed ones and new events are skipped
+        removed = cleanup_old_data(str(ops / "quarantine"), retention_days)
 
         return {
             "run_report": run_report,

@@ -3,9 +3,9 @@ ingest_transform.py:338-392, rebuilt).
 
 Differences from the reference, by design (SURVEY.md §3.2 defects):
 
-- run metrics come from ``df.observe`` accumulated per micro-batch via a
-  StreamingQueryListener — the reference's post-hoc ``.agg().collect()`` on
-  a streaming DF is unsupported and silently broken;
+- run metrics come from ``df.observe``, summed over the micro-batches of
+  ``query.recentProgress`` — the reference's post-hoc ``.agg().collect()``
+  on a streaming DF is unsupported and silently broken;
 - the watermark actually bounds state here (it feeds windowed aggregations
   and dropDuplicatesWithinWatermark); in the reference it was inert;
 - bounded runs use ``trigger(availableNow=True)`` for deterministic tests
@@ -19,13 +19,12 @@ unchanged under a streaming plan.
 from __future__ import annotations
 
 import json
-from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQueryListener
 
 from autonomous_orchestrator_ai_spark.functions.temporal import WATERMARK_DELAY
+from autonomous_orchestrator_ai_spark.operators.report import report_metric_columns
 from autonomous_orchestrator_ai_spark.operators.transform import enrich_customer_events
 
 OBSERVATION_NAME = "run_stats"
@@ -86,49 +85,7 @@ def streaming_enrich(
 def with_run_observation(df: DataFrame) -> DataFrame:
     """Attach the A1 run-report metrics as an Observation (streaming-safe:
     metrics ride each micro-batch, no extra job)."""
-    return df.observe(
-        OBSERVATION_NAME,
-        F.count(F.lit(1)).alias("total_records"),
-        F.count(F.when(F.col("is_late_arrival") == True, 1)).alias("late_records"),  # noqa: E712
-        F.count(F.when(F.col("dq_passed") == False, 1)).alias("dq_failures"),  # noqa: E712
-        F.count(F.when(F.col("schema_drift_detected") == True, 1)).alias(  # noqa: E712
-            "schema_drift_count"
-        ),
-    )
-
-
-class RunStatsListener(StreamingQueryListener):
-    """Accumulates the observed metrics across micro-batches into run
-    totals (run-report fields are run totals, SURVEY.md §7.4)."""
-
-    def __init__(self) -> None:
-        self.totals: dict[str, int] = {
-            "total_records": 0,
-            "late_records": 0,
-            "dq_failures": 0,
-            "schema_drift_count": 0,
-        }
-        self.batches = 0
-
-    def onQueryStarted(self, event: Any) -> None:
-        pass
-
-    def onQueryProgress(self, event: Any) -> None:
-        row = event.progress.observedMetrics.get(OBSERVATION_NAME)
-        if row is None:
-            return
-        m = row.asDict() if hasattr(row, "asDict") else dict(row)
-        if int(m.get("total_records", 0) or 0) == 0:
-            return
-        for k in self.totals:
-            self.totals[k] += int(m.get(k, 0) or 0)
-        self.batches += 1
-
-    def onQueryTerminated(self, event: Any) -> None:
-        pass
-
-    def onQueryIdle(self, event: Any) -> None:
-        pass
+    return df.observe(OBSERVATION_NAME, *report_metric_columns())
 
 
 def windowed_event_counts(
@@ -165,8 +122,8 @@ def run_bounded(
 ) -> dict:
     """Bounded streaming run (T6): availableNow trigger processes the whole
     backlog then stops — the deterministic twin of the reference's
-    ``awaitTermination(duration*60)`` wall-clock runs. Returns accumulated
-    run stats from the listener."""
+    ``awaitTermination(duration*60)`` wall-clock runs. Returns the run
+    stats summed over the query's progress reports."""
     writer = (
         df.writeStream.format("parquet")
         .outputMode(output_mode)

@@ -358,6 +358,22 @@ def test_probe_of_dead_buckets_returns_typed_empty(spark, tmp_path):
     )
     assert out.columns == ["query_id", "neighbor_id", "cosine_sim", "rank"]
     out.collect()  # executes without error regardless of bucket overlap
+    # certain hit vs certain miss: the base vector finds itself; its
+    # negation flips every sign bit, so its one probed bucket is never
+    # live and the cold manifest path returns the typed empty result
+    kw = dict(
+        k=3, n_planes=8, n_tables=1, dim=64, multiprobe_bits=0,
+        exclude_self=False,
+    )
+    hit = query_lsh_index(spark, path, base, **kw)
+    assert hit.count() == 1
+    negated = base.select(
+        (F.col("vec_id") + 1).alias("vec_id"),
+        F.transform("embedding", lambda x: -x).alias("embedding"),
+    )
+    dead = query_lsh_index(spark, path, negated, **kw)
+    assert dead.count() == 0
+    assert out.dtypes == dead.dtypes == hit.dtypes
 
 
 def test_partial_append_fails_loudly_then_heals_on_replay(spark, tmp_path):
@@ -370,9 +386,8 @@ def test_partial_append_fails_loudly_then_heals_on_replay(spark, tmp_path):
     import pytest
 
     from autonomous_orchestrator_ai_spark.operators.ann_index import (
-        _index_entries,
-        _manifest_counts,
-        _write_manifest,
+        LAYOUT,
+        _index_rows,
     )
 
     emb = table(spark, SF, "embeddings")
@@ -388,7 +403,7 @@ def test_partial_append_fails_loudly_then_heals_on_replay(spark, tmp_path):
     cand = emb.filter(F.col("vec_id") > 0).limit(50)
     cand_buckets = {
         r["neighbor_id"]: (r["table_id"], r["bucket"])
-        for r in _index_entries(cand, 0, 8, 1, 64, 42, "vec_id", "embedding")
+        for r in _index_rows(cand, 8, 1, 64, 42, "vec_id", "embedding")
         .select("neighbor_id", "table_id", "bucket")
         .collect()
     }
@@ -397,8 +412,8 @@ def test_partial_append_fails_loudly_then_heals_on_replay(spark, tmp_path):
     )
     batch = emb.filter(F.col("vec_id") == new_vec_id)
     # simulate dying between the two writes: manifest lands, entries don't
-    entries = _index_entries(batch, 0, 8, 1, 64, 42, "vec_id", "embedding")
-    _write_manifest(spark, path, _manifest_counts(entries), dynamic=True)
+    rows = _index_rows(batch, 8, 1, 64, 42, "vec_id", "embedding")
+    LAYOUT.write_manifest(LAYOUT.entries(rows, 0), path, dynamic=True)
     queries = batch  # probes exactly the new (missing) bucket
     with pytest.raises(Exception, match="PATH_NOT_FOUND|Path does not exist"):
         query_lsh_index(

@@ -86,6 +86,23 @@ class TestIvfIndex:
             spark, path, emb.filter(F.col("vec_id") < 0), k=3
         )
         assert out.count() == 0
+        hit = query_ivf_index(spark, path, emb.filter(F.col("vec_id") == 0), k=3)
+        assert hit.count() == 3
+        assert out.dtypes == hit.dtypes
+        # a probe certain to hit no live list, through the cold manifest
+        # path: an index holding only centroid 0's own vector, probed
+        # (n_probe=1) by centroid 1's, whose nearest list is list 1
+        cvecs = spark.createDataFrame(
+            [(i, centroids[i].tolist()) for i in (0, 1)],
+            emb.select("vec_id", "embedding").schema,
+        )
+        one = str(tmp_path / "ivf_one")
+        build_ivf_index(cvecs.filter(F.col("vec_id") == 0), one, centroids)
+        dead = query_ivf_index(
+            spark, one, cvecs.filter(F.col("vec_id") == 1), k=3, n_probe=1
+        )
+        assert dead.count() == 0
+        assert dead.dtypes == hit.dtypes
 
 
 # ---------------------------------------------------------------------------
@@ -155,20 +172,16 @@ def test_partial_append_fails_loudly_then_heals_on_replay(
     """Manifest-first append order (r7): a crash between the manifest and
     the entries write leaves a listed-but-missing bucket whose cold probe
     fails LOUDLY; replaying the batch heals both sides."""
-    from autonomous_orchestrator_ai_spark.operators.ann_index import (
-        _write_manifest,
-    )
     from autonomous_orchestrator_ai_spark.operators.ivf_index import (
-        _MANIFEST_DIR,
-        _entries,
-        _manifest_counts,
+        LAYOUT,
+        _index_rows,
     )
     import numpy as np
 
     c = np.ascontiguousarray(centroids, dtype=np.float64)
     # base index holds only the vectors of ONE list; another list's
     # bucket directory therefore does not exist yet
-    assigned = _entries(emb, c, -1, "vec_id", "embedding").select(
+    assigned = _index_rows(emb, c, "vec_id", "embedding").select(
         "neighbor_id", "bucket"
     )
     by_bucket = {}
@@ -182,11 +195,8 @@ def test_partial_append_fails_loudly_then_heals_on_replay(
     path = str(tmp_path / "ivf")
     build_ivf_index(base, path, c)
     # simulate dying between the two writes: manifest lands, entries don't
-    entries = _entries(batch, c, 0, "vec_id", "embedding")
-    _write_manifest(
-        spark, path, _manifest_counts(entries), dynamic=True,
-        manifest_dir=_MANIFEST_DIR,
-    )
+    rows = _index_rows(batch, c, "vec_id", "embedding")
+    LAYOUT.write_manifest(LAYOUT.entries(rows, 0), path, dynamic=True)
     queries = batch  # n_probe=1 probes exactly the new (missing) list
     with pytest.raises(Exception, match="PATH_NOT_FOUND|Path does not exist"):
         query_ivf_index(

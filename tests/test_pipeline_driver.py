@@ -85,3 +85,30 @@ def test_validation_count_matches_independent_count(spark, tmp_path):
         counted = spark.read.parquet(str(work / "curated")).count()
         assert counted == 120 + 80 * i
         assert result["validation"] == {"rows_in_curated": counted, "ok": True}
+
+
+def test_retention_sweep_keeps_the_live_checkpoint(spark, tmp_path, monkeypatch):
+    """The tick's retention sweep runs on the wall clock. Past the
+    retention window it must not remove the live streaming checkpoint:
+    without it the next tick's query restarts at batch 0, the sink's
+    committed-batch log skips that id, and the new events never land."""
+    import time
+    import types
+
+    from autonomous_orchestrator_ai_spark.sources import writers
+
+    g = EventGenerator(seed=14, n_customers=40, now=NOW, late_rate=0.0, drift_frequency=0)
+    indir, work = tmp_path / "in", tmp_path / "work"
+    later = time.time() + 8 * 86400  # past the default 7-day retention
+    g.write_jsonl(indir / "batch0.jsonl", 120)
+    with monkeypatch.context() as m:  # tick 0's sweep sees everything expired
+        m.setattr(writers, "time", types.SimpleNamespace(time=lambda: later))
+        run_pipeline_once(spark, str(indir), str(work), now=NOW.replace(tzinfo=None))
+    g.write_jsonl(indir / "batch1.jsonl", 80)
+    result = run_pipeline_once(
+        spark, str(indir), str(work), now=NOW.replace(tzinfo=None)
+    )
+    assert (work / "checkpoints" / "curated").is_dir()
+    assert result["run_report"]["total_records"] == 80
+    assert spark.read.parquet(str(work / "curated")).count() == 200
+    assert result["validation"]["rows_in_curated"] == 200

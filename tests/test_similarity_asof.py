@@ -13,6 +13,7 @@ from autonomous_orchestrator_ai_spark.operators.similarity import (
     cosine_topk,
     embedding_near_duplicates,
     lsh_bucketed_topk,
+    rank_topk,
 )
 
 
@@ -40,6 +41,39 @@ def test_cosine_topk_matches_numpy(vectors):
     assert [r[1] for r in rows] == [1, 2, 3, 4]  # rank order
     for _, nid, sim in rows:
         assert math.isclose(sim, round(cos(vecs[0], vecs[nid]), 6), abs_tol=1e-6)
+
+
+def test_rank_topk_policy(spark):
+    """The ranking tail every vector-search operator shares: exact score
+    ties rank by ascending neighbor_id; two scores that round to the same
+    6-dp value rank by the UNROUNDED score; rank is bigint; the other
+    columns keep their order ahead of the rounded score and rank."""
+    scored = spark.createDataFrame(
+        [
+            (1, "a", 30, 0.5),
+            (1, "b", 10, 0.5),  # exact tie with 30: the lower id ranks first
+            (1, "c", 20, 0.1234562),  # rounds to 0.123456 ...
+            (1, "d", 5, 0.1234558),  # ... so does this, ranked below 20
+            (1, "e", 40, 0.01),  # past k
+            (2, "f", 7, 0.9),
+        ],
+        "query_id bigint, tag string, neighbor_id bigint, __sim double",
+    )
+    out = rank_topk(scored, k=4)
+    assert out.dtypes == [
+        ("query_id", "bigint"),
+        ("tag", "string"),
+        ("neighbor_id", "bigint"),
+        ("cosine_sim", "double"),
+        ("rank", "bigint"),
+    ]
+    assert [tuple(r) for r in out.orderBy("query_id", "rank").collect()] == [
+        (1, "b", 10, 0.5, 1),
+        (1, "a", 30, 0.5, 2),
+        (1, "c", 20, 0.123456, 3),
+        (1, "d", 5, 0.123456, 4),
+        (2, "f", 7, 0.9, 1),
+    ]
 
 
 def test_lsh_recall_on_testdata(spark):
