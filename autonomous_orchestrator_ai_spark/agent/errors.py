@@ -1,6 +1,7 @@
 """Error-handling policy (reference spec tests/test_spark_jobs.py:462-495 —
-there it's a self-asserting literal; here it's an actual dispatchable
-policy the pipeline driver consults on stage failure)."""
+there it's a self-asserting literal; here it's a dispatchable policy
+table). No production code calls it: the pipeline driver does not
+consult it on stage failure, and only tests exercise it."""
 
 from __future__ import annotations
 

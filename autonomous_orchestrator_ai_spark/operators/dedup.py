@@ -40,6 +40,9 @@ correctness.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -208,18 +211,38 @@ def minhash_signatures(
     return prepared.select(F.col(id_col), *cols)
 
 
-#: default per-candidate pricing of the GUARDED screen's sliced transient
-#: (r9): a 16 B pair-shuffle row plus the ~580 B join intermediate that
-#: carries one bottom-k bigint array between the two screen joins; 600 B
-#: brackets sf100's measured ~434 B/candidate peak with margin.
-SLICE_ROW_BYTES_DEFAULT = 600
+# ---------------------------------------------------------------------------
+# Bounded-transient mode: per-candidate prices, the slice pricer, the
+# slice sequencer (shared by the minhash verify and the winnowing
+# screen + verify)
+# ---------------------------------------------------------------------------
 
-#: sanity bound on the AUTO-routed slice count: each slice pays a fixed
+#: bytes per pre-distinct band-join candidate row for the minhash family
+#: (two ids + shuffle overhead — the verify is candidate-restricted and
+#: distinct'd, so the band join dominates its spill; the PERF.md constant).
+MINHASH_CAND_ROW_BYTES = 20
+
+#: bytes per minhash verify row: two shingle arrays per candidate (r9 —
+#: ~48 GB measured at sf1000 for 14.4M candidates).
+MINHASH_VERIFY_ROW_BYTES = 4_000
+
+#: bytes per winnowing candidate row that ships two full sketch arrays
+#: (~5 KB a side at this corpus's doc length — the PERF.md sf100
+#: constant, 43M candidates x ~10 KB >> disk). Prices both the unguarded
+#: plan the guard routes away from (so the crossover lands where that
+#: plan actually dies) and each row of the sliced verify.
+WINNOW_CAND_ROW_BYTES = 10_000
+
+#: per-candidate pricing of the GUARDED screen's sliced transient (r9): a
+#: 16 B pair-shuffle row plus the ~580 B join intermediate that carries
+#: one bottom-k bigint array between the two screen joins; 600 B brackets
+#: sf100's measured ~434 B/candidate peak with margin.
+SCREEN_ROW_BYTES = 600
+
+#: sanity bound on the slice count: each slice pays a fixed
 #: job-submission + checkpoint overhead, so past ~64 slices the overhead
 #: dominates any transient saved — a misconfigured (tiny) budget should
-#: degrade to a slow-but-sane plan, not tens of thousands of jobs. An
-#: EXPLICIT verify_slices is not capped (the human override stays an
-#: override).
+#: degrade to a slow-but-sane plan, not tens of thousands of jobs.
 MAX_AUTO_SLICES = 64
 
 #: sort-merge double-buffering factor for the auto-routed slice pricing
@@ -287,6 +310,46 @@ def _nudge_shuffle_cleanup(spark) -> None:
         spark.sparkContext._jvm.System.gc()
     except Exception:
         pass
+
+
+def slice_count(
+    est_bytes: int, budget_bytes: int | None, decision: dict | None = None
+) -> int:
+    """The one slice-count rule of the bounded-transient mode: how many
+    sequential hash-slices keep one slice's ON-DISK transient under
+    ``budget_bytes`` — ceil(est_bytes x SORT_MERGE_TRANSIENT_FACTOR /
+    budget), at least 1, at most ``MAX_AUTO_SLICES``. The budget is a
+    spill CAPACITY (unlike the guard budget's always-engage-at-0
+    threshold), so None or <= 0 prices one pass: slicing into max pieces
+    on a 0-capacity host helps nothing. ``decision`` (optional) records
+    the transient factor the count was priced with."""
+    if decision is not None:
+        decision["transient_factor"] = SORT_MERGE_TRANSIENT_FACTOR
+    if budget_bytes is None or budget_bytes <= 0:
+        return 1
+    n = -(-(est_bytes * SORT_MERGE_TRANSIENT_FACTOR) // budget_bytes)
+    return min(MAX_AUTO_SLICES, max(1, n))
+
+
+def _sequence_slices(
+    pairs: DataFrame, n: int, stage: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """The one slice sequencer of the bounded-transient mode: run
+    ``stage`` over ``n`` disjoint slices of the candidate ``pairs``
+    (xxhash64 of (id_a, id_b) mod n), one job at a time, each
+    localCheckpointed and followed by a shuffle-cleanup nudge so its
+    shuffle files are collectable before the next slice needs the disk.
+    Returns the union of the slices, which is exactly ``stage(pairs)``:
+    the mode trades time for space, never results."""
+    spark = pairs.sparkSession
+    parts = []
+    for i in range(n):
+        sl = pairs.where(
+            F.pmod(F.xxhash64(F.col("id_a"), F.col("id_b")), F.lit(n)) == i
+        )
+        parts.append(stage(sl).localCheckpoint(eager=True))
+        _nudge_shuffle_cleanup(spark)
+    return reduce(DataFrame.unionByName, parts)
 
 
 def lsh_band_cost_profile(
@@ -561,11 +624,8 @@ def minhash_near_duplicates(
     jaccard_threshold: float = 0.5,
     max_bucket_sample: int | None = None,
     sample_budget_bytes: int | None = None,
-    bytes_per_candidate_row: int = 20,
     guard_decision: dict | None = None,
-    verify_slices: int | None = None,
     verify_budget_bytes: int | None = None,
-    verify_row_bytes: int = 4_000,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: signatures -> banded candidates ->
     exact Jaccard verification on candidates only -> pairs over threshold.
@@ -589,23 +649,21 @@ def minhash_near_duplicates(
     guarded route engages BEFORE the spill disk would bind instead of
     paying the cap's recall trade at every scale).
 
-    ``verify_budget_bytes`` / ``verify_slices`` (r9 — the winnowing
-    family's bounded-transient mode, ported): the r8 pre-flight
-    calibration proved this family's growing spill is LINEAR verify
-    payload (true pairs x two shingle arrays, ~48 GB measured at sf1000
-    for 14.4M candidates ~= ``verify_row_bytes`` 4 KB/candidate), which
-    no recall-trading cap can or should cut — projected to exhaust a
-    fixed single-host disk near sf3000. The single-host answer is
-    SEQUENCING: when the runtime-priced verify transient
-    (candidate count x ``verify_row_bytes``) exceeds
-    ``verify_budget_bytes``, the verify runs in m sequential hash-slices
-    against the once-persisted, id-partitioned candidate-shingle table,
-    each slice localCheckpointed so its shuffle files are collectable
-    before the next runs. m <= 1 (every measured scale: 57.6 GB priced
-    at sf1000 vs the 64 GiB default budget) keeps the plan BIT-IDENTICAL
-    to the unsliced form; the slicing itself is result-invariant
-    (disjoint hash-slice union), so the oracle never sees the decision.
-    An explicit ``verify_slices`` overrides the pricing."""
+    ``verify_budget_bytes`` (r9 — the winnowing family's
+    bounded-transient mode, ported): the r8 pre-flight calibration proved
+    this family's growing spill is LINEAR verify payload (true pairs x
+    two shingle arrays, ~48 GB measured at sf1000 for 14.4M candidates ~=
+    ``MINHASH_VERIFY_ROW_BYTES`` 4 KB/candidate), which no recall-trading
+    cap can or should cut — projected to exhaust a fixed single-host disk
+    near sf3000. The single-host answer is SEQUENCING: the verify
+    transient (counted candidates x ``MINHASH_VERIFY_ROW_BYTES``) is
+    priced by ``slice_count`` against ``verify_budget_bytes``, and m > 1
+    runs the verify through ``_sequence_slices`` against the
+    once-persisted, id-partitioned candidate-shingle table. m == 1 (every
+    measured scale: 57.6 GB priced at sf1000 vs the 64 GiB default
+    budget) keeps the plan BIT-IDENTICAL to the unsliced form; the
+    slicing itself is result-invariant (disjoint hash-slice union), so
+    the oracle never sees the decision."""
     source = df
     df = ensure_min_parallelism(df)
     shingles = df.select(
@@ -635,35 +693,23 @@ def minhash_near_duplicates(
         bands,
         max_bucket_sample=max_bucket_sample,
         sample_budget_bytes=sample_budget_bytes,
-        bytes_per_candidate_row=bytes_per_candidate_row,
+        bytes_per_candidate_row=MINHASH_CAND_ROW_BYTES,
         guard_decision=decision,
         caches=upstream_caches,
     ).persist()
-    if verify_slices is None and verify_budget_bytes is not None and (
-        verify_budget_bytes > 0
-    ):
+    n_slices = 1
+    if verify_budget_bytes is not None and verify_budget_bytes > 0:
         # runtime-priced sequencing decision (see docstring): the
         # candidate cache is materialized by this count and reused by
-        # every consumer below, so the pricing costs no extra pass.
-        # (A non-positive budget disables the sequencer: it is a spill
-        # CAPACITY, unlike the guard budget's always-engage-at-0
-        # threshold semantics — slicing into max pieces on a 0-capacity
-        # host helps nothing and the shared env is pinned to 0 by the
-        # guard-route tests.)
+        # every consumer below, so the pricing costs no extra pass. A
+        # non-positive budget prices one pass, so it skips the count.
         n_cands = cands.count()
-        m = max(
-            1,
-            -(
-                -(n_cands * verify_row_bytes * SORT_MERGE_TRANSIENT_FACTOR)
-                // verify_budget_bytes
-            ),
+        n_slices = slice_count(
+            n_cands * MINHASH_VERIFY_ROW_BYTES, verify_budget_bytes, decision
         )
-        m = min(m, MAX_AUTO_SLICES)
         decision["verify_cand_rows"] = n_cands
         decision["verify_budget_bytes"] = verify_budget_bytes
-        decision["auto_verify_slices"] = int(m)
-        if m > 1:
-            verify_slices = int(m)
+        decision["auto_verify_slices"] = n_slices
 
     sh_named = shingles.withColumnRenamed("__shingles", "__sh")
 
@@ -689,35 +735,19 @@ def minhash_near_duplicates(
             .select("id_a", "id_b", "jaccard")
         )
 
-    if verify_slices is not None and verify_slices > 1:
+    if n_slices > 1:
         # bounded-transient verify: the candidate-shingle table is built
         # ONCE, persisted hash-partitioned on the doc id (alias-aware
         # partitioning lets both per-slice equi-joins read it in place —
-        # same cache pattern as the winnowing sliced mode), and each
-        # sequential slice checkpoints + GC-nudges so its shuffle files
-        # free before the next slice needs the disk
-        spark = df.sparkSession
+        # same cache pattern as the winnowing sliced mode)
         cand_sh = (
             _restrict_to_candidates(sh_named, cands, id_col)
             .repartition(F.col(id_col))
             .persist()
         )
-        parts = []
-        for i in range(int(verify_slices)):
-            sl = cands.where(
-                F.pmod(
-                    F.xxhash64(F.col("id_a"), F.col("id_b")),
-                    F.lit(int(verify_slices)),
-                )
-                == i
-            )
-            parts.append(
-                _verify_join(sl, cand_sh).localCheckpoint(eager=True)
-            )
-            _nudge_shuffle_cleanup(spark)
-        result = parts[0]
-        for p in parts[1:]:
-            result = result.unionByName(p)
+        result = _sequence_slices(
+            cands, n_slices, lambda sl: _verify_join(sl, cand_sh)
+        )
         cand_sh.unpersist()
         cands.unpersist()
         for c in pin_caches + upstream_caches:
@@ -1144,11 +1174,8 @@ def winnowing_near_duplicates_lsh(
     screen_k: int | None = None,
     screen_cut: tuple[int, int] | None = None,
     guard_budget_bytes: int | None = None,
-    guard_row_bytes: int = 10_000,
     guard_decision: dict | None = None,
-    verify_slices: int | None = None,
     slice_budget_bytes: int | None = None,
-    slice_row_bytes: int = SLICE_ROW_BYTES_DEFAULT,
 ) -> DataFrame:
     """Scale form of ``winnowing_near_duplicates``: MinHash-LSH over the
     winnowing SKETCH SETS (each doc's sketch hashes, stringified, play the
@@ -1195,45 +1222,35 @@ def winnowing_near_duplicates_lsh(
     budget the cap and the screen are pure overhead (measured +36% at
     sf0.1, where zero hot buckets exist) and are skipped — the plan is
     bit-identical to the unguarded form; past the budget both engage
-    exactly as before (the sf100 completion path). ``guard_row_bytes``
-    prices the UNGUARDED plan's verify rows (~2 sketch arrays x ~5 KB at
-    this corpus's doc length — the PERF.md sf100 constant), which is what
-    the routing decision is deciding against. The identical integer
-    estimate replays in the DuckDB oracle, so the route can never
+    exactly as before (the sf100 completion path).
+    ``WINNOW_CAND_ROW_BYTES`` prices the UNGUARDED plan's verify rows,
+    which is what the routing decision is deciding against. The identical
+    integer estimate replays in the DuckDB oracle, so the route can never
     diverge. ``guard_decision`` receives the estimate and outcome.
 
-    ``verify_slices`` (r8 — the sf1000 ENOSPC diagnosis; phases hoisted
-    r9) runs the screen, then the verify, over candidate pairs in
-    SEQUENTIAL hash-slices, each localCheckpointed, capping the
-    simultaneous shuffle transient at ~1/N of the total. The union of
-    disjoint slices is exactly the unsliced result — no recall trade, no
-    oracle change. Both per-doc payload tables (the bottom-k screen
-    table and the candidate-restricted full-sketch table) are built ONCE
-    and persisted hash-partitioned on the doc id, so each slice's joins
-    read them in place — per-slice cost tracks the slice, not the
-    corpus. Use when the corpus's total verify transient exceeds the
-    host's spill disk (winnowing at 50M docs needed ~3x this host's
-    78 GB); a cluster achieves the same with aggregate spill capacity.
-    None/1 = single-pass (default).
-
-    ``slice_budget_bytes`` (r9, VERDICT r8 item 2) AUTO-ROUTES the slice
-    count from the same pre-flight that routes the guards, closing the
-    last human-set scale knob: when ``verify_slices`` is not explicitly
-    given, the SCREEN slice count is N = ceil(est_transient /
-    slice_budget_bytes), where est_transient prices the branch actually
-    taken — the guarded branch at ``est_capped_candidate_rows x
-    slice_row_bytes`` (per screened candidate: a 16 B pair-shuffle row
-    plus the ~580 B join intermediate carrying one bottom-``screen_k``
-    bigint array; 600 B default brackets sf100's measured ~434 B/cand
-    peak) and the unguarded branch at the existing
-    ``est_candidate_rows x guard_row_bytes`` (full sketch arrays, no
-    screen). The VERIFY slice count is then priced at RUNTIME from the
-    counted screen survivors x ``guard_row_bytes``, since the screen
-    typically discards most candidates. N <= 1 keeps the single-pass
-    plan, so small corpora are untouched; the slicing itself is
-    result-invariant (disjoint hash-slice union), so the oracle never
-    sees this decision. Requires ``guard_budget_bytes`` (the pre-flight
-    must run). An explicit ``verify_slices`` overrides both counts.
+    ``slice_budget_bytes`` (r8 — the sf1000 ENOSPC diagnosis; auto-routed
+    and phases hoisted r9) is the bounded-transient mode: past the
+    budget, the screen, then the verify, run over candidate pairs
+    through ``_sequence_slices``, capping the simultaneous shuffle
+    transient at ~1/N of the total. The union of disjoint slices is
+    exactly the unsliced result — no recall trade, no oracle change. Both
+    per-doc payload tables (the bottom-k screen table and the
+    candidate-restricted full-sketch table) are built ONCE and persisted
+    hash-partitioned on the doc id, so each slice's joins read them in
+    place — per-slice cost tracks the slice, not the corpus. It matters
+    when the corpus's total verify transient exceeds the host's spill
+    disk (winnowing at 50M docs needed ~3x this host's 78 GB); a cluster
+    achieves the same with aggregate spill capacity. ``slice_count``
+    prices both counts from the same pre-flight that routes the guards:
+    the SCREEN count from the branch actually taken — the guarded branch
+    at ``est_capped_candidate_rows x SCREEN_ROW_BYTES``, the unguarded
+    branch at the existing ``est_candidate_rows x
+    WINNOW_CAND_ROW_BYTES`` (full sketch arrays, no screen); the VERIFY
+    count at RUNTIME from the counted screen survivors x
+    ``WINNOW_CAND_ROW_BYTES``, since the screen typically discards most
+    candidates. One slice keeps the single-pass plan, so small corpora
+    are untouched. Requires ``guard_budget_bytes`` (the pre-flight must
+    run).
 
     Recall trades (all documented, none affecting reported values): banded
     MinHash misses low-Jaccard/high-containment pairs (unequal sizes);
@@ -1291,7 +1308,7 @@ def winnowing_near_duplicates_lsh(
         max_bucket_size=max_bucket_size,
         max_bucket_sample=max_bucket_sample,
         sample_budget_bytes=guard_budget_bytes,
-        bytes_per_candidate_row=guard_row_bytes,
+        bytes_per_candidate_row=WINNOW_CAND_ROW_BYTES,
         guard_decision=decision,
         caches=upstream_caches,
     ).persist()
@@ -1301,36 +1318,25 @@ def winnowing_near_duplicates_lsh(
     screen_on = screen_k is not None and (
         guard_budget_bytes is None or decision.get("cap_enabled", False)
     )
-    if verify_slices is None and slice_budget_bytes is not None and decision:
+    n_slices = 1
+    if slice_budget_bytes is not None and decision:
         # auto-route the slice count from the pre-flight (r9, VERDICT r8
         # item 2): price the transient of the branch the guards chose —
         # guarded = capped candidates x screen-row bytes, unguarded =
-        # raw candidates x full-sketch verify bytes — and slice only when
-        # a single pass would exceed the budget. Pure integer arithmetic
-        # on already-collected profile numbers: no extra job, and the
-        # slicing is result-invariant so nothing downstream (or in the
-        # oracle) depends on where N lands.
+        # raw candidates x full-sketch verify bytes. Pure integer
+        # arithmetic on already-collected profile numbers: no extra job,
+        # and the slicing is result-invariant so nothing downstream (or
+        # in the oracle) depends on where N lands.
         if decision.get("cap_enabled", False):
             est_transient = (
-                decision.get("est_capped_candidate_rows", 0) * slice_row_bytes
+                decision.get("est_capped_candidate_rows", 0) * SCREEN_ROW_BYTES
             )
         else:
             est_transient = decision.get("est_shuffle_bytes", 0)
-        # the ceil prices the ON-DISK peak, not the payload: sort-merge
-        # shuffle double-buffers (spills + merged file coexist), so the
-        # real transient is ~2x the payload estimate — the factor is what
-        # the sf1000 ENOSPC (screen slice loop, r9) measured the hard way
-        n_auto = -(
-            -(est_transient * SORT_MERGE_TRANSIENT_FACTOR)
-            // slice_budget_bytes
-        )  # ceil div
-        n_auto = min(int(n_auto), MAX_AUTO_SLICES)
+        n_slices = slice_count(est_transient, slice_budget_bytes, decision)
         decision["est_transient_bytes"] = est_transient
         decision["slice_budget_bytes"] = slice_budget_bytes
-        decision["transient_factor"] = SORT_MERGE_TRANSIENT_FACTOR
-        decision["auto_verify_slices"] = n_auto
-        if n_auto > 1:
-            verify_slices = n_auto
+        decision["auto_verify_slices"] = n_slices
     num, den = screen_cut if screen_cut is not None else (9, 20)
 
     def _bk_table(cands_in: DataFrame) -> DataFrame:
@@ -1417,32 +1423,16 @@ def winnowing_near_duplicates_lsh(
             .select("id_a", "id_b", "shared", "containment")
         )
 
-    def _hash_slice(pairs: DataFrame, n: int, i: int) -> DataFrame:
-        return pairs.where(
-            F.pmod(F.xxhash64(F.col("id_a"), F.col("id_b")), F.lit(n)) == i
-        )
-
-    def _union_checkpoints(parts: list[DataFrame]) -> DataFrame:
-        result = parts[0]
-        for p in parts[1:]:
-            result = result.unionByName(p)
-        return result
-
-    if verify_slices is not None and verify_slices > 1:
+    if n_slices > 1:
         # Bounded-transient mode (r8 — the sf1000 ENOSPC diagnosis; phase
         # restructure r9): the screen + verify transients are LINEAR in
         # candidate volume with a per-row constant (bottom-k arrays, then
         # full sketch arrays), so one octave past the last measured scale
         # their simultaneous shuffle footprint exceeds any FIXED
         # single-host disk (winnowing at 50M docs needed ~3x this host's
-        # 78 GB and died on ENOSPC at 2h04m). Slicing candidate pairs by
-        # a hash of (id_a, id_b) and running screen, then verify, as
-        # SEQUENTIAL jobs caps the simultaneous transient at ~1/N of the
-        # total: each slice's output is localCheckpointed (truncating
-        # lineage so its shuffle files become collectable before the next
-        # slice runs) and the union of disjoint slices is EXACTLY the
-        # unsliced result — same pairs, same values, no recall trade, no
-        # oracle change.
+        # 78 GB and died on ENOSPC at 2h04m). ``_sequence_slices`` runs
+        # screen, then verify, as SEQUENTIAL slice jobs, capping the
+        # simultaneous transient at ~1/N of the total.
         #
         # The r8 version recomputed TWO corpus-scale sketch scans per
         # slice (the bottom-k build and the verify restrict both chained
@@ -1456,7 +1446,7 @@ def winnowing_near_duplicates_lsh(
         # pair-scale rows are exchanged. Per-slice transient ~
         # |slice| x payload row; per-slice corpus cost ZERO. (Same cache
         # pattern the banded index uses, measured at sf100.)
-        spark = df.sparkSession
+        #
         # materialize the candidate cache NOW and drop the corpus-scale
         # banded index before any payload phase runs: in bounded-disk
         # mode every pinned GB is a GB the slice transients can't spill
@@ -1465,52 +1455,33 @@ def winnowing_near_duplicates_lsh(
         cands.count()
         for c in upstream_caches:
             c.unpersist()
-        _nudge_shuffle_cleanup(spark)
+        _nudge_shuffle_cleanup(df.sparkSession)
         target = cands
-        n_screen = verify_slices
         if screen_on:
             bk_all = _bk_table(cands).repartition(F.col(id_col)).persist()
-            surv_parts = []
-            for i in range(n_screen):
-                surv_parts.append(
-                    _screen_join(_hash_slice(cands, n_screen, i), bk_all)
-                    .localCheckpoint(eager=True)
-                )
-                _nudge_shuffle_cleanup(spark)
-            target = _union_checkpoints(surv_parts)
+            target = _sequence_slices(
+                cands, n_slices, lambda sl: _screen_join(sl, bk_all)
+            )
             bk_all.unpersist()
         # the verify's slice count is RUNTIME-priced: survivors are now
         # counted (checkpointed parts — a cheap count), and each verify
-        # row ships two full sketch arrays (~guard_row_bytes). The screen
-        # typically discards most candidates, so m << n_screen.
+        # row ships two full sketch arrays. The screen typically discards
+        # most candidates, so m << n_slices.
         skr_all = (
             _restrict_to_candidates(sk, target, id_col)
             .repartition(F.col(id_col))
             .persist()
         )
-        if slice_budget_bytes is not None:
-            n_pairs = target.count()
-            m = max(
-                1,
-                -(
-                    -(n_pairs * guard_row_bytes * SORT_MERGE_TRANSIENT_FACTOR)
-                    // slice_budget_bytes
-                ),
-            )
-            m = min(m, MAX_AUTO_SLICES)
-            decision["verify_pairs"] = n_pairs
-        else:
-            m = verify_slices
-        decision["screen_slices"] = n_screen if screen_on else 0
-        decision["verify_slices_effective"] = int(m)
-        out_parts = []
-        for j in range(int(m)):
-            out_parts.append(
-                _verify_join(_hash_slice(target, int(m), j), skr_all)
-                .localCheckpoint(eager=True)
-            )
-            _nudge_shuffle_cleanup(spark)
-        result = _union_checkpoints(out_parts)
+        n_pairs = target.count()
+        m = slice_count(
+            n_pairs * WINNOW_CAND_ROW_BYTES, slice_budget_bytes, decision
+        )
+        decision["verify_pairs"] = n_pairs
+        decision["screen_slices"] = n_slices if screen_on else 0
+        decision["verify_slices_effective"] = m
+        result = _sequence_slices(
+            target, m, lambda sl: _verify_join(sl, skr_all)
+        )
         # every slice is checkpointed — release the sketch cache and the
         # candidate cache (the banded cache was already dropped the
         # moment cands materialized; r9, ADVICE r8: its handle is

@@ -114,8 +114,45 @@ def _violation(exp: Expectation, now: datetime | None) -> Column | None:
     return None
 
 
-SCHEMA_LEVEL = {"expect_column_to_exist", "expect_column_values_to_be_of_type"}
-AGG_LEVEL = {"expect_column_values_to_be_unique"}
+def _compile_suite(
+    df: DataFrame, suite: list[Expectation], now: datetime | None
+) -> tuple[list[Column], dict[int, Column], dict[int, bool]]:
+    """The one expectation compiler behind ``run_suite`` and
+    ``suite_violation_counts``. Returns:
+
+    - the columns of a single ``df.agg``: ``__element_count``, then one
+      bigint unexpected count ``__viol_{i}`` per expectation;
+    - the row predicate of each row-level expectation (for examples);
+    - the verdict of each schema-level expectation (exist / of_type),
+      resolved from ``df.schema``. A failed one counts every row as
+      unexpected, which is 0 on an empty frame, so the verdict cannot be
+      read back from the count."""
+    dtypes = dict(df.dtypes)
+    agg_cols: list[Column] = [F.count(F.lit(1)).alias("__element_count")]
+    predicates: dict[int, Column] = {}
+    schema_ok: dict[int, bool] = {}
+
+    for i, exp in enumerate(suite):
+        t = exp.expectation_type
+        if t == "expect_column_to_exist":
+            schema_ok[i] = exp.kwargs["column"] in dtypes
+        elif t == "expect_column_values_to_be_of_type":
+            expected = _normalize_type(exp.kwargs.get("type_", exp.kwargs.get("type")))
+            actual = dtypes.get(exp.kwargs["column"])
+            schema_ok[i] = actual is not None and _normalize_type(actual) == expected
+        if i in schema_ok:
+            viol = F.lit(0) if schema_ok[i] else F.count(F.lit(1))
+        elif t == "expect_column_values_to_be_unique":
+            c = F.col(exp.kwargs["column"])
+            viol = F.count(c) - F.countDistinct(c)
+        else:
+            pred = _violation(exp, now)
+            if pred is None:
+                raise ValueError(f"unsupported expectation_type: {t}")
+            predicates[i] = pred
+            viol = F.coalesce(F.sum(pred.cast("int")), F.lit(0))
+        agg_cols.append(viol.cast("bigint").alias(f"__viol_{i}"))
+    return agg_cols, predicates, schema_ok
 
 
 def run_suite(
@@ -131,50 +168,17 @@ def run_suite(
     pipeline_dag.py:183-204): validations[0].results per expectation +
     statistics + summary.
     """
-    dtypes = dict(df.dtypes)
-    agg_cols: list[Column] = [F.count(F.lit(1)).alias("__element_count")]
-    row_predicates: dict[int, Column] = {}
-
-    for i, exp in enumerate(suite):
-        t = exp.expectation_type
-        if t in SCHEMA_LEVEL:
-            continue
-        if t == "expect_column_values_to_be_unique":
-            c = exp.kwargs["column"]
-            agg_cols.append(F.count(F.col(c)).alias(f"__nn_{i}"))
-            agg_cols.append(F.countDistinct(F.col(c)).alias(f"__distinct_{i}"))
-            continue
-        pred = _violation(exp, now)
-        if pred is None:
-            raise ValueError(f"unsupported expectation_type: {t}")
-        row_predicates[i] = pred
-        agg_cols.append(F.sum(pred.cast("int")).alias(f"__viol_{i}"))
-
+    agg_cols, predicates, schema_ok = _compile_suite(df, suite, now)
     stats = df.agg(*agg_cols).collect()[0].asDict()
     element_count = int(stats["__element_count"])
 
     results = []
     for i, exp in enumerate(suite):
-        t = exp.expectation_type
-        if t == "expect_column_to_exist":
-            success = exp.kwargs["column"] in dtypes
-            unexpected = 0 if success else element_count
-        elif t == "expect_column_values_to_be_of_type":
-            expected = _normalize_type(exp.kwargs.get("type_", exp.kwargs.get("type")))
-            actual = dtypes.get(exp.kwargs["column"])
-            success = actual is not None and _normalize_type(actual) == expected
-            unexpected = 0 if success else element_count
-        elif t == "expect_column_values_to_be_unique":
-            nn = int(stats[f"__nn_{i}"])
-            unexpected = nn - int(stats[f"__distinct_{i}"])
-            success = unexpected == 0
-        else:
-            unexpected = int(stats.get(f"__viol_{i}") or 0)
-            success = unexpected == 0
-
+        unexpected = int(stats[f"__viol_{i}"])
+        success = schema_ok.get(i, unexpected == 0)
         pct = (unexpected / element_count * 100.0) if element_count else 0.0
         result = {
-            "expectation_type": t,
+            "expectation_type": exp.expectation_type,
             "kwargs": exp.kwargs,
             "success": success,
             "result": {
@@ -189,11 +193,11 @@ def run_suite(
     if collect_examples:
         for i, exp in enumerate(suite):
             res = results[i]
-            if res["success"] or i not in row_predicates:
+            if res["success"] or i not in predicates:
                 continue
             examples = [
                 r[0]
-                for r in df.filter(row_predicates[i])
+                for r in df.filter(predicates[i])
                 .select(exp.column)
                 .limit(collect_examples)
                 .collect()
@@ -236,43 +240,14 @@ def suite_violation_counts(
     distributed at any scale. Schema-level expectations are resolved from
     ``df.schema`` and injected as literal columns in the same single-row
     aggregate."""
-    dtypes = dict(df.dtypes)
-    agg_cols: list[Column] = [F.count(F.lit(1)).alias("__element_count")]
-    per_exp: list[tuple[Expectation, str]] = []  # (exp, unexpected-expr name)
-
-    for i, exp in enumerate(suite):
-        t = exp.expectation_type
-        if t == "expect_column_to_exist":
-            ok = exp.kwargs["column"] in dtypes
-            agg_cols.append(
-                (F.lit(0) if ok else F.count(F.lit(1))).cast("bigint").alias(f"__viol_{i}")
-            )
-        elif t == "expect_column_values_to_be_of_type":
-            expected = _normalize_type(exp.kwargs.get("type_", exp.kwargs.get("type")))
-            actual = dtypes.get(exp.kwargs["column"])
-            ok = actual is not None and _normalize_type(actual) == expected
-            agg_cols.append(
-                (F.lit(0) if ok else F.count(F.lit(1))).cast("bigint").alias(f"__viol_{i}")
-            )
-        elif t == "expect_column_values_to_be_unique":
-            c = F.col(exp.kwargs["column"])
-            agg_cols.append((F.count(c) - F.countDistinct(c)).cast("bigint").alias(f"__viol_{i}"))
-        else:
-            pred = _violation(exp, now)
-            if pred is None:
-                raise ValueError(f"unsupported expectation_type: {t}")
-            agg_cols.append(
-                F.coalesce(F.sum(pred.cast("int")), F.lit(0)).cast("bigint").alias(f"__viol_{i}")
-            )
-        per_exp.append((exp, f"__viol_{i}"))
-
+    agg_cols, _, _ = _compile_suite(df, suite, now)
     one_row = df.agg(*agg_cols)
     stack_args: list[str] = []
-    for exp, viol in per_exp:
+    for i, exp in enumerate(suite):
         col_name = (exp.column or "").replace("'", "")
-        stack_args += [f"'{exp.expectation_type}'", f"'{col_name}'", viol]
+        stack_args += [f"'{exp.expectation_type}'", f"'{col_name}'", f"__viol_{i}"]
     stack = F.expr(
-        f"stack({len(per_exp)}, {', '.join(stack_args)}) AS (expectation_type, column_name, unexpected_count)"
+        f"stack({len(suite)}, {', '.join(stack_args)}) AS (expectation_type, column_name, unexpected_count)"
     )
     return one_row.select(F.col("__element_count").alias("element_count"), stack).select(
         "expectation_type",

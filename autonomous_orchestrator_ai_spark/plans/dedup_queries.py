@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 
 from autonomous_orchestrator_ai_spark.functions.text import fingerprint
 from autonomous_orchestrator_ai_spark.operators.dedup import (
+    MINHASH_CAND_ROW_BYTES,
+    WINNOW_CAND_ROW_BYTES,
     edit_verified_near_duplicates,
     exact_dedup_by_fingerprint,
     minhash_near_duplicates,
@@ -54,30 +56,17 @@ ROWS_PER_BAND = NUM_HASHES // BANDS
 LSH_SPILL_BUDGET_ENV = "SPARK_GRAFT_LSH_SPILL_BUDGET_BYTES"
 DEFAULT_LSH_SPILL_BUDGET_BYTES = 64 * 1024**3
 
-#: bytes per pre-distinct band-join candidate row for the minhash family
-#: (two ids + shuffle overhead — the verify is candidate-restricted and
-#: distinct'd, so the band join dominates its spill; the PERF.md constant).
-MINHASH_CAND_ROW_BYTES = 20
-
-#: bytes per candidate row for the winnowing family: its unguarded verify
-#: ships two full sketch arrays (~5 KB a side at this corpus's doc
-#: length) per candidate — the PERF.md sf100 constant (43M candidates x
-#: ~10 KB >> disk). The estimate prices the plan being routed AWAY from,
-#: so the crossover lands where the unguarded form actually dies.
-WINNOW_CAND_ROW_BYTES = 10_000
-
 #: deterministic per-bucket sample size when a guard engages (the r7 cap).
 _MLSH_CAP = 64
 
 #: single-pass transient budget for the winnowing screen+verify (r9,
 #: VERDICT r8 item 2): when the pre-flight's GUARDED-branch transient
 #: estimate (capped candidates x ~1.1 KB screen rows) exceeds this, the
-#: operator auto-slices the screen+verify into
-#: ceil(est x SORT_MERGE_TRANSIENT_FACTOR / budget) sequential
-#: hash-slices (result-invariant). Default 12 GiB, re-sized by the r9
-#: sf1000 ENOSPC post-mortem: the first 24 GiB default ignored (a) the
-#: ~2x sort-merge double-buffering now priced by the router's factor and
-#: (b) that by slicing time the pinned payload caches (bottom-k table,
+#: operator auto-slices the screen+verify into as many sequential
+#: hash-slices as ``dedup.slice_count`` prices (result-invariant).
+#: Default 12 GiB, re-sized by the r9 sf1000 ENOSPC post-mortem: the
+#: first 24 GiB default ignored (a) the ~2x sort-merge double-buffering
+#: now priced by the router's factor and (b) that by slicing time the pinned payload caches (bottom-k table,
 #: candidate cache, accumulated slice checkpoints) had already consumed
 #: ~40 GB of this host's ~94 GB scratch, leaving ~24 GB — one
 #: zero-margin slice. Budget semantics: the SPILL PEAK a single slice
@@ -283,7 +272,6 @@ def minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_hashes=NUM_HASHES, bands=BANDS, shingle_k=3, jaccard_threshold=0.5,
         max_bucket_sample=_MLSH_CAP,
         sample_budget_bytes=_lsh_budget_bytes(),
-        bytes_per_candidate_row=MINHASH_CAND_ROW_BYTES,
         verify_budget_bytes=_lsh_budget_bytes(),
     )
 
@@ -679,7 +667,6 @@ def winnowing_near_dup_pairs_lsh_q(
         max_bucket_sample=_WLSH_CAP, screen_k=_WLSH_SCREEN_K,
         screen_cut=_WLSH_CUT,
         guard_budget_bytes=_lsh_budget_bytes(),
-        guard_row_bytes=WINNOW_CAND_ROW_BYTES,
         slice_budget_bytes=_winnow_slice_budget_bytes(),
     )
 

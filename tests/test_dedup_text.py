@@ -544,11 +544,11 @@ def test_winnowing_route_matches_pinned_twins(spark, monkeypatch):
 
 
 def test_winnowing_lsh_sliced_verify_equals_single_pass(spark):
-    """verify_slices partitions the screen+verify into sequential
-    checkpointed hash-slices; the disjoint-slice union must be EXACTLY
-    the single-pass result (pairs and values), with and without the
-    guards engaged — the bounded-transient mode trades time for space,
-    never results."""
+    """A slice budget below the priced transient partitions the
+    screen+verify into sequential checkpointed hash-slices; the
+    disjoint-slice union must be EXACTLY the single-pass result (pairs
+    and values), with and without the guards engaged — the
+    bounded-transient mode trades time for space, never results."""
     from autonomous_orchestrator_ai_spark.operators.dedup import (
         winnowing_near_duplicates_lsh,
     )
@@ -567,11 +567,23 @@ def test_winnowing_lsh_sliced_verify_equals_single_pass(spark):
             ).collect()
         )
 
-    # plain (no guards)
-    assert rows(verify_slices=3) == rows()
+    def sliced(budget, **kw):
+        dec: dict = {}
+        out = rows(guard_decision=dec, slice_budget_bytes=budget, **kw)
+        assert dec["auto_verify_slices"] >= 2
+        return out, dec["cap_enabled"]
+
+    # budgets sit below each branch's priced transient at this corpus
+    # (~6.5 MB unguarded, ~0.39 MB guarded) without nearing the cap.
+    # plain (no guards): the pre-flight runs, no estimate reaches its budget
+    assert sliced(
+        5_000_000, max_bucket_sample=64, guard_budget_bytes=10**18
+    ) == (rows(), False)
     # guards on (cap + screen) — the sf100+ configuration
     guarded = dict(max_bucket_sample=64, screen_k=64, screen_cut=(9, 20))
-    assert rows(verify_slices=3, **guarded) == rows(**guarded)
+    assert sliced(300_000, guard_budget_bytes=0, **guarded) == (
+        rows(**guarded), True
+    )
     # localCheckpoint lineage from the sliced runs must not leak into
     # later tests' storage accounting
     release_session_storage(spark)
@@ -672,13 +684,13 @@ def test_winnowing_auto_slice_route_from_preflight(spark):
         return out, dec
 
     from autonomous_orchestrator_ai_spark.operators.dedup import (
-        SLICE_ROW_BYTES_DEFAULT,
+        SCREEN_ROW_BYTES,
     )
 
     single, dec_single = run(10**18)
     assert dec_single["auto_verify_slices"] <= 1
     assert dec_single["est_transient_bytes"] == (
-        dec_single["est_capped_candidate_rows"] * SLICE_ROW_BYTES_DEFAULT
+        dec_single["est_capped_candidate_rows"] * SCREEN_ROW_BYTES
     )
     # budget sized to a third of the estimate -> N flips to >= 2
     tight = max(1, dec_single["est_transient_bytes"] // 3)
@@ -703,7 +715,8 @@ def test_registered_winnowing_auto_slices_result_invariant(spark, monkeypatch):
     """Through the REGISTRY path: shrinking the slice budget env forces
     the auto route to slice the screen+verify, and the result stays
     identical to the single-pass default — the oracle never sees the
-    decision, at any budget."""
+    decision, at any budget. A zero budget (no spill capacity) prices
+    one pass instead of dividing by zero."""
     from autonomous_orchestrator_ai_spark.plans import dedup_queries as dq
     from autonomous_orchestrator_ai_spark.session import (
         release_session_storage,
@@ -722,17 +735,39 @@ def test_registered_winnowing_auto_slices_result_invariant(spark, monkeypatch):
     single = rows()
     # a 50 kB budget forces several screen AND verify slices at this
     # corpus (est ~ hundreds of kB) without tripping MAX_AUTO_SLICES
-    monkeypatch.setenv(dq.WINNOW_SLICE_BUDGET_ENV, "50000")
-    assert rows() == single
+    for budget in ("50000", "0"):
+        monkeypatch.setenv(dq.WINNOW_SLICE_BUDGET_ENV, budget)
+        assert rows() == single
     release_session_storage(spark)
+
+
+def test_slice_count_rule():
+    """The one slice-count rule of both LSH families' bounded-transient
+    mode (and of the pre-flight probe): ceil(est x factor / budget),
+    never below one pass, capped at MAX_AUTO_SLICES; a budget <= 0 or
+    None (no spill capacity) prices one pass instead of dividing by it."""
+    from autonomous_orchestrator_ai_spark.operators.dedup import (
+        MAX_AUTO_SLICES,
+        SORT_MERGE_TRANSIENT_FACTOR,
+        slice_count,
+    )
+
+    assert slice_count(0, 1_000) == 1
+    assert slice_count(1_000, 1_000) == SORT_MERGE_TRANSIENT_FACTOR == 2
+    assert slice_count(10**18, 1) == MAX_AUTO_SLICES
+    for budget in (0, -5, None):
+        assert slice_count(1_000, budget) == 1
+    dec: dict = {}
+    slice_count(1, 1, dec)
+    assert dec == {"transient_factor": SORT_MERGE_TRANSIENT_FACTOR}
 
 
 def test_minhash_sliced_verify_equals_single_pass(spark):
     """The minhash family's bounded-transient verify (r9 — the ported
-    winnowing sequencer, for the sf3000 linear-payload wall): explicit
-    slices and a runtime-priced tiny budget must both return EXACTLY the
-    single-pass pairs and jaccards; a zero budget disables the sequencer
-    (capacity semantics, unlike the guard's threshold semantics)."""
+    winnowing sequencer, for the sf3000 linear-payload wall): runtime-
+    priced small budgets must return EXACTLY the single-pass pairs and
+    jaccards; a zero budget disables the sequencer (capacity semantics,
+    unlike the guard's threshold semantics)."""
     from autonomous_orchestrator_ai_spark.operators.dedup import (
         minhash_near_duplicates,
     )
@@ -752,12 +787,12 @@ def test_minhash_sliced_verify_equals_single_pass(spark):
         )
 
     single = rows()
-    assert rows(verify_slices=3) == single
-    dec: dict = {}
-    # ~4 candidate rows per slice: forces several slices via the pricing
-    priced = rows(verify_budget_bytes=16_000, guard_decision=dec)
-    assert dec["auto_verify_slices"] >= 2
-    assert priced == single
+    # 37 candidates x 4 KB here: ~12 and ~2 candidate rows per slice
+    for budget in (100_000, 16_000):
+        dec: dict = {}
+        priced = rows(verify_budget_bytes=budget, guard_decision=dec)
+        assert dec["auto_verify_slices"] >= 2
+        assert priced == single
     dec0: dict = {}
     assert rows(verify_budget_bytes=0, guard_decision=dec0) == single
     assert "auto_verify_slices" not in dec0

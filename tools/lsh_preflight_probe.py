@@ -42,8 +42,12 @@ def main() -> None:
         word_shingles,
     )
     from autonomous_orchestrator_ai_spark.operators.dedup import (
+        MINHASH_CAND_ROW_BYTES,
+        SCREEN_ROW_BYTES,
+        WINNOW_CAND_ROW_BYTES,
         lsh_band_cost_profile,
         minhash_signatures,
+        slice_count,
     )
     from autonomous_orchestrator_ai_spark.plans.dedup_queries import (
         _MLSH_CAP,
@@ -51,9 +55,7 @@ def main() -> None:
         _WLSH_CAP,
         _WW,
         BANDS,
-        MINHASH_CAND_ROW_BYTES,
         NUM_HASHES,
-        WINNOW_CAND_ROW_BYTES,
         _lsh_budget_bytes,
         _winnow_slice_budget_bytes,
     )
@@ -118,17 +120,11 @@ def main() -> None:
         prof["over_budget"] = prof["est_shuffle_bytes"] > out["budget_bytes"]
         # the slice auto-route's inputs (r9): guarded transient = capped
         # candidates x the per-candidate screen-row price vs the budget
-        from autonomous_orchestrator_ai_spark.operators.dedup import (
-            SLICE_ROW_BYTES_DEFAULT,
-        )
-
         slice_budget = _winnow_slice_budget_bytes()
-        est_guarded = (
-            prof.get("est_capped_candidate_rows", 0) * SLICE_ROW_BYTES_DEFAULT
-        )
+        est_guarded = prof.get("est_capped_candidate_rows", 0) * SCREEN_ROW_BYTES
         prof["est_guarded_transient_bytes"] = est_guarded
         prof["slice_budget_bytes"] = slice_budget
-        prof["auto_verify_slices"] = -(-est_guarded // slice_budget)
+        prof["auto_verify_slices"] = slice_count(est_guarded, slice_budget, prof)
         out["winnow"] = prof
 
     print(json.dumps(out))
