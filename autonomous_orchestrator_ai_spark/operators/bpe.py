@@ -37,9 +37,19 @@ clean AND sidesteps the one engine divergence in this area (Java regex
 walks UTF-16 units, DuckDB walks codepoints — they disagree only outside
 the BMP, which the filter excludes entirely).
 
-Per-iteration top-pair selection collects ONE row; the state column is
-localCheckpoint'd every few merges so the replace-chain lineage stays
-bounded (the pagerank pattern from operators/graph.py).
+Two routes share the one corpus pass (the checkpointed ``(seq, cnt)``
+table) and the semantics above:
+
+* **Driver route** (vocabulary ≤ ``DRIVER_VOCAB_MAX`` distinct words):
+  the table is collected once and every merge round runs in plain
+  Python — pair counts weighted by ``cnt`` from ``seq.split(␟␟)[1:-1]``,
+  top pair by ``(-cnt, a, b)``, one left-to-right ``str.replace``. Python
+  and Java ``replace`` scan identically, so both routes return the same
+  merges. One corpus pass plus one collect per training.
+* **Distributed route** (larger vocabularies): each round aggregates pair
+  counts and collects ONE top row; the state column is localCheckpoint'd
+  every few merges (never after the last) so the replace-chain lineage
+  stays bounded (the pagerank pattern from operators/graph.py).
 """
 
 from __future__ import annotations
@@ -119,6 +129,37 @@ def bpe_apply_merge(state: DataFrame, a: str, b: str) -> DataFrame:
     )
 
 
+#: Largest vocabulary (distinct words) trained on the driver; above it
+#: the merge rounds run as Spark jobs. Measured in PERF.md ("BPE driver
+#: route", tools/bpe_route_probe.py): at 10^5 words the driver route
+#: trains 3x faster than the distributed one on 4 cores; they break even
+#: near 10^6.
+DRIVER_VOCAB_MAX = 100_000
+
+
+def _driver_merges(
+    vocab: list[tuple[str, int]], n_merges: int
+) -> list[tuple[int, str, str, int]]:
+    """The merge rounds of bpe_train over a collected ``(seq, cnt)`` list:
+    the same counting, tie-break and replace as the Spark loop."""
+    seqs = [seq for seq, _ in vocab]
+    cnts = [cnt for _, cnt in vocab]
+    merges: list[tuple[int, str, str, int]] = []
+    for rank in range(1, n_merges + 1):
+        counts: dict[tuple[str, str], int] = {}
+        for seq, cnt in zip(seqs, cnts):
+            syms = seq.split(DSEP)[1:-1]
+            for pair in zip(syms, syms[1:]):
+                counts[pair] = counts.get(pair, 0) + cnt
+        if not counts:
+            break
+        (a, b), cnt = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append((rank, a, b, cnt))
+        old, new = f"{SEP}{a}{DSEP}{b}{SEP}", f"{SEP}{a}{b}{SEP}"
+        seqs = [seq.replace(old, new) for seq in seqs]
+    return merges
+
+
 def bpe_train(
     df: DataFrame,
     text_col: str = "text",
@@ -127,10 +168,15 @@ def bpe_train(
 ) -> list[tuple[int, str, str, int]]:
     """Learn ``n_merges`` BPE merges; returns [(rank, a, b, cnt), ...].
 
-    Each round: aggregate pair counts (vocab-bounded), collect the single
-    top pair (cnt desc, then (a, b) asc — the deterministic tie-break both
-    engines share), apply the merge. Stops early when no pair remains."""
+    Each round: count pairs (vocab-bounded), pick the top pair (cnt desc,
+    then (a, b) asc — the deterministic tie-break both engines share),
+    apply the merge. Stops early when no pair remains. A vocabulary of at
+    most ``DRIVER_VOCAB_MAX`` words runs every round on the driver;
+    a larger one runs each round as Spark jobs (module docstring)."""
     state = bpe_initial_state(bpe_word_counts(df, text_col)).localCheckpoint()
+    vocab = state.select("seq", "cnt").limit(DRIVER_VOCAB_MAX + 1).collect()
+    if len(vocab) <= DRIVER_VOCAB_MAX:
+        return _driver_merges([(r["seq"], int(r["cnt"])) for r in vocab], n_merges)
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, n_merges + 1):
         top = (
@@ -144,7 +190,7 @@ def bpe_train(
         a, b, cnt = top[0]["a"], top[0]["b"], int(top[0]["cnt"])
         merges.append((rank, a, b, cnt))
         state = bpe_apply_merge(state, a, b)
-        if rank % checkpoint_every == 0:
+        if rank % checkpoint_every == 0 and rank < n_merges:
             state = state.localCheckpoint()
     return merges
 

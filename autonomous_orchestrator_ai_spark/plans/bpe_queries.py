@@ -116,9 +116,13 @@ _MERGES_FINAL = " UNION ALL ".join(
 )
 def bpe_learned_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The first 8 learned BPE merges (merge_rank, a, b, cnt) —
-    operators.bpe.bpe_train's driver loop over the vocab-bounded word
-    table, hash-exact against the oracle's 8 unrolled rounds. Tie-break
-    (cnt desc, a, b) is the determinism contract both engines share."""
+    operators.bpe.bpe_train over the vocab-bounded word table,
+    hash-exact against the oracle's 8 unrolled rounds. Tie-break
+    (cnt desc, a, b) is the determinism contract both engines share.
+    The word table is built once; a vocabulary of at most
+    ``bpe.DRIVER_VOCAB_MAX`` words (every fixture scale: 31 words) is
+    collected and merged in plain Python, a larger one runs each round as
+    Spark jobs. Both routes return the same merges."""
     docs = table(spark, sf_dir, "documents")
     merges = bpe_train(docs, "text", _N_MERGES)
     return spark.createDataFrame(

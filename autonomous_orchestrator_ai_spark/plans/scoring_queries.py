@@ -524,7 +524,11 @@ from autonomous_orchestrator_ai_spark.plans.dedup_queries import (  # noqa: E402
     SELECT source,
            CAST(COUNT(*) AS BIGINT) AS n_survivors,
            CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-           ROUND(AVG(score), 6) AS avg_score
+           -- exact mean rounded half-up to 6 dp, in integer micro-units
+           -- (DuckDB divides decimals as DOUBLE; scores are positive)
+           CAST((2 * CAST(SUM(CAST(score AS DECIMAL(18,6))) * 1000000
+                          AS BIGINT) + COUNT(*)) // (2 * COUNT(*))
+                AS DOUBLE) / 1000000 AS avg_score
     FROM ranked WHERE rn = 1 GROUP BY source ORDER BY source
     """,
 )
@@ -534,7 +538,11 @@ def quality_ranked_survivors_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     classifier scores HIGHEST (ties -> smallest doc_id); edge-free docs
     survive untouched (operators.graph.quality_ranked_survivors). The
     per-source profile makes this directly comparable to
-    near_dup_survivors, which keeps the arbitrary smallest id instead."""
+    near_dup_survivors, which keeps the arbitrary smallest id instead.
+    ``avg_score`` sums the 6-dp scores exactly as DECIMAL and rounds the
+    quotient once (registry.exact_money_sum's pattern): a double mean can
+    land 1 ulp either side of a rounding midpoint depending on summation
+    order."""
     from autonomous_orchestrator_ai_spark.operators.graph import (
         quality_ranked_survivors,
     )
@@ -555,7 +563,13 @@ def quality_ranked_survivors_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_survivors"),
             F.sum("n_chars").alias("total_chars"),
-            F.round(F.avg("score"), 6).alias("avg_score"),
+            F.round(
+                F.sum(F.col("score").cast("decimal(18,6)"))
+                / F.count(F.lit(1)),
+                6,
+            )
+            .cast("double")
+            .alias("avg_score"),
         )
         .orderBy("source")
     )

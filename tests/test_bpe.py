@@ -1,16 +1,21 @@
 """BPE trainer unit tests (operators/bpe.py) — the registered queries are
 hash-exact vs the unrolled-SQL oracle (plans/bpe_queries.py); these pin
 the merge semantics on hand-computable corpora, especially the
-left-to-right non-overlap rule the delimited-replace encoding relies on.
+left-to-right non-overlap rule the delimited-replace encoding relies on,
+and check that bpe_train's driver and distributed routes agree.
 """
 
 from __future__ import annotations
 
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from autonomous_orchestrator_ai_spark.operators import bpe
 from autonomous_orchestrator_ai_spark.operators.bpe import (
     DSEP,
     bpe_apply_merge,
@@ -20,6 +25,10 @@ from autonomous_orchestrator_ai_spark.operators.bpe import (
     bpe_train,
     bpe_word_counts,
 )
+from autonomous_orchestrator_ai_spark.plans.registry import table
+
+#: the committed copy of the sf0.001 fixture tables
+SF0001 = str(Path(__file__).resolve().parent.parent / "perfbench" / "data" / "sf0.001")
 
 
 def _seq(*symbols):
@@ -46,6 +55,17 @@ def _py_bpe_segment(word, merges):
 
 def _docs(spark, texts):
     return spark.createDataFrame([(t,) for t in texts], "text string")
+
+
+def _train_both_routes(monkeypatch, docs, n_merges):
+    """(driver-route merges, distributed-route merges) for one corpus; a
+    bound of 0 forces every vocabulary onto the distributed loop."""
+    driver = bpe_train(docs, "text", n_merges)
+    with monkeypatch.context() as m:
+        m.setattr(bpe, "DRIVER_VOCAB_MAX", 0)
+        distributed = bpe_train(docs, "text", n_merges)
+    assert driver == distributed
+    return driver
 
 
 def test_word_counts_normalize_and_filter(spark):
@@ -94,10 +114,10 @@ def test_apply_merge_chains_adjacent_occurrences(spark):
     assert out == _seq("aa", "aa", "a")
 
 
-def test_train_pins_known_merges(spark):
+def test_train_pins_known_merges(spark, monkeypatch):
     # 5x "abab", 2x "abc": pairs round1 -> (a,b):12, (b,a):5, (b,c):2
     docs = _docs(spark, ["abab abab abab abab abab abc abc"])
-    merges = bpe_train(docs, "text", n_merges=3)
+    merges = _train_both_routes(monkeypatch, docs, 3)
     assert merges[0][1:] == ("a", "b", 12)
     # after merging 'ab': "ab|ab" -> pair (ab,ab):5 ; "ab|c" -> (ab,c):2
     assert merges[1][1:] == ("ab", "ab", 5)
@@ -145,9 +165,57 @@ def test_segment_matches_pure_python_sennrich(spark, words, merges):
         assert got[w] == _py_bpe_segment(w, ranked), (w, ranked)
 
 
-def test_train_early_stop_on_single_chars(spark):
+def test_train_early_stop_on_single_chars(spark, monkeypatch):
     # every word is one char: no pairs -> zero merges, no crash
-    assert bpe_train(_docs(spark, ["a b c a"]), "text", 4) == []
+    assert _train_both_routes(monkeypatch, _docs(spark, ["a b c a"]), 4) == []
+
+
+@pytest.mark.parametrize(
+    "text, n_merges, expected",
+    [
+        # four pairs of count 1: ordered by a first, then by b
+        ("ba az xb xa", 4,
+         [(1, "a", "z", 1), (2, "b", "a", 1), (3, "x", "a", 1),
+          (4, "x", "b", 1)]),
+        # each merge builds on the previous one's symbols; the run stops
+        # early once every word is one symbol
+        ("aaaa aaaaa", 5,
+         [(1, "a", "a", 7), (2, "aa", "aa", 2), (3, "aaaa", "a", 1)]),
+    ],
+    ids=["tie_break", "chaining"],
+)
+def test_train_routes_agree(spark, monkeypatch, text, n_merges, expected):
+    assert _train_both_routes(monkeypatch, _docs(spark, [text]), n_merges) == expected
+
+
+def test_train_routes_agree_on_documents(spark, monkeypatch):
+    docs = table(spark, SF0001, "documents")
+    assert len(_train_both_routes(monkeypatch, docs, 8)) == 8
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_driver_route_runs_one_corpus_job_per_training(spark, monkeypatch):
+    docs = table(spark, SF0001, "documents")
+    default = _jobs_in_group(
+        spark, "bpe-route-driver", lambda: bpe_train(docs, "text", 8)
+    )
+    monkeypatch.setattr(bpe, "DRIVER_VOCAB_MAX", 0)
+    forced = _jobs_in_group(
+        spark, "bpe-route-distributed", lambda: bpe_train(docs, "text", 8)
+    )
+    # the corpus aggregation + its checkpoint, then one collect
+    assert default <= 3
+    # at least one top-1 collect per merge round
+    assert forced > 8
 
 
 # ---------------------------------------------------------------------------
