@@ -40,8 +40,10 @@ correctness.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from functools import reduce
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -54,7 +56,6 @@ from autonomous_orchestrator_ai_spark.functions.text import (
 from autonomous_orchestrator_ai_spark.operators.partitioning import (
     ensure_min_parallelism,
     repartition_for_exploding_join,
-    source_input_bytes,
 )
 
 # ---------------------------------------------------------------------------
@@ -109,12 +110,6 @@ def _drop_hot_keys(frame: DataFrame, hot: DataFrame, on: list[str]) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-def exact_dedup(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Row-identity dedup: ``dropDuplicates`` (hash shuffle on the listed
-    columns; Catalyst plans it as a partial+final aggregate)."""
-    return df.dropDuplicates(cols) if cols else df.dropDuplicates()
-
-
 def exact_dedup_by_fingerprint(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -133,13 +128,6 @@ def exact_dedup_by_fingerprint(
 # ---------------------------------------------------------------------------
 # Portable hashing (identical in Spark and DuckDB: md5 hex strings)
 # ---------------------------------------------------------------------------
-
-
-def portable_minhash(shingle: F.Column, seed: int) -> F.Column:
-    """A min-hashable value: md5 of 'seed:shingle'. Min over the hex STRING
-    is a valid uniform min-hash (hex ordering == value ordering); avoids
-    engine-specific integer hash functions entirely."""
-    return F.md5(F.concat(F.lit(f"{seed}:"), shingle))
 
 
 def chunked_minhash(hash_col: F.Column, j: int) -> F.Column:
@@ -278,6 +266,28 @@ SORT_MERGE_TRANSIENT_FACTOR = 2
 PAYLOAD_PIN_BUDGET_BYTES = 64 << 20
 
 
+def _source_input_bytes(df: DataFrame) -> int | None:
+    """Total on-disk size of the files feeding ``df``'s scan, or None when
+    it cannot be determined (non-file source, remote scheme). Driver-side
+    metadata only — no job."""
+    try:
+        files = df.inputFiles()
+    except Exception:
+        return None
+    if not files:
+        return None
+    total = 0
+    for uri in files:
+        parsed = urlparse(uri)
+        if parsed.scheme not in ("", "file"):
+            return None
+        try:
+            total += os.path.getsize(parsed.path or uri)
+        except OSError:
+            return None
+    return total
+
+
 def _pin_small_payload(
     frame: DataFrame, source: DataFrame, caches: list[DataFrame]
 ) -> DataFrame:
@@ -285,7 +295,7 @@ def _pin_small_payload(
     (see ``PAYLOAD_PIN_BUDGET_BYTES``). Appends the persisted handle to
     ``caches`` so the caller controls release. Result-invariant: the route
     only decides whether a recomputation is cached."""
-    size = source_input_bytes(source)
+    size = _source_input_bytes(source)
     if size is None or size > PAYLOAD_PIN_BUDGET_BYTES:
         return frame
     pinned = frame.persist()

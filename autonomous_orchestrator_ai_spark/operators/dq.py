@@ -18,11 +18,9 @@ unchanged.
 
 from __future__ import annotations
 
-import json
 import re
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta
-from pathlib import Path
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -42,16 +40,6 @@ class Expectation:
     @property
     def column(self) -> str | None:
         return self.kwargs.get("column") or self.kwargs.get("column_A")
-
-
-def load_suite(path: str | Path) -> list[Expectation]:
-    """Load a GE-style suite JSON (same shape as the reference's
-    customers_expectation_suite.json)."""
-    doc = json.loads(Path(path).read_text())
-    return [
-        Expectation(e["expectation_type"], e.get("kwargs", {}))
-        for e in doc.get("expectations", [])
-    ]
 
 
 _NOW_RE = re.compile(r"^now(?:\s*-\s*(\d+)\s*(h|hours|d|days|m|minutes))?$")
@@ -280,31 +268,8 @@ def _normalize_type(t: str | None) -> str | None:
 
 
 # ---------------------------------------------------------------------------
-# Threshold ladder (Q9) + quality dimensions rollup (Q10) + remap (Q11)
+# Quality dimensions rollup (Q10) + remap (Q11)
 # ---------------------------------------------------------------------------
-
-#: Failure-rate bands (reference dq_rules.yml:85-89; DAG fail at >10%
-#: pipeline_dag.py:213-216).
-THRESHOLDS = {"critical": 0.01, "warning": 0.05, "acceptable": 0.10}
-
-
-def classify_failure_rate(failure_rate: float) -> str:
-    """rate <= 1% critical-band 'healthy'? No — reference semantics: the
-    *band label* describes how bad the failure rate is:
-    <=1% acceptable_excellent ('critical' threshold not exceeded), the DAG
-    fails outright above 10%.
-
-    Returns one of: 'ok' (<=1%), 'warning' (<=5%), 'degraded' (<=10%),
-    'fail' (>10%).
-    """
-    if failure_rate <= THRESHOLDS["critical"]:
-        return "ok"
-    if failure_rate <= THRESHOLDS["warning"]:
-        return "warning"
-    if failure_rate <= THRESHOLDS["acceptable"]:
-        return "degraded"
-    return "fail"
-
 
 #: Quality-dimension column groupings (reference dq_rules.yml:91-106).
 DIMENSIONS: dict[str, list[str]] = {

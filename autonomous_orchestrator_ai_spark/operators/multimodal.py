@@ -5,7 +5,7 @@ Design for 100 TB multimodal corpora:
 - media travels as an opaque ``binary`` column plus a typed metadata struct
   (mime, width/height/duration, codec) — Spark shuffles/spills binary
   columns fine, and Parquet stores them page-compressed;
-- decode / feature-extract / resize / frame-sample run as **Arrow-batched
+- decode / feature-extract / resize run as **Arrow-batched
   ``mapInPandas``** stages: per-partition batch iterators, so the Python
   worker amortizes (de)serialization over whole record batches and memory
   stays bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch``;
@@ -32,7 +32,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 #: Typed metadata struct carried next to every media blob.
@@ -62,15 +61,6 @@ FEATURES_SCHEMA = T.StructType(
         T.StructField("features", T.ArrayType(T.FloatType())),
     ]
 )
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_index", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-    ]
-)
-
 
 def _fake_decode_features(blob: bytes, dim: int = 8) -> list[float]:
     """Deterministic stand-in for a real decoder+embedder: sha256 bytes
@@ -172,48 +162,6 @@ def extract_features(
             )
 
     return df.mapInPandas(kernel, FEATURES_SCHEMA)
-
-
-def sample_frames(
-    df: DataFrame, every_n_bytes: int = 64, max_frames: int = 4,
-    use_real_codecs: bool = False,
-) -> DataFrame:
-    """Frame-sampling contract: one input row -> N frame rows. The fake
-    kernel slices the blob; a real one would ffmpeg-seek keyframes. Shows
-    the fan-out shape (mapInPandas output rows != input rows)."""
-    if use_real_codecs:
-        raise NotImplementedError("ffmpeg not available in this environment")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_idx, out_frames = [], [], []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                blob = blob or b""
-                for i in range(min(max_frames, max(1, len(blob) // every_n_bytes))):
-                    out_ids.append(mid)
-                    out_idx.append(i)
-                    out_frames.append(blob[i * every_n_bytes : (i + 1) * every_n_bytes])
-            yield pd.DataFrame(
-                {"media_id": out_ids, "frame_index": out_idx, "frame": out_frames}
-            )
-
-    return df.mapInPandas(kernel, FRAME_SCHEMA)
-
-
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize contract: metadata updates JVM-side (no Python needed for the
-    bookkeeping); the pixel work would live in the same mapInPandas slot as
-    extract_features. Kept expression-only so Catalyst sees through it."""
-    return df.withColumn(
-        "meta",
-        F.struct(
-            F.col("meta.mime").alias("mime"),
-            F.lit(width).alias("width"),
-            F.lit(height).alias("height"),
-            F.col("meta.duration_ms").alias("duration_ms"),
-            F.col("meta.codec").alias("codec"),
-        ),
-    )
 
 
 FEATURES_ERR_SCHEMA = T.StructType(
@@ -342,9 +290,8 @@ def synthetic_wav_media(spark, n: int = 12, seed: int = 42) -> DataFrame:
 def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
     """REAL resize for BMP/PNG media: decode -> nearest-neighbor
     resample -> re-encode IN THE ORIGINAL FORMAT (a resize step must not
-    silently transcode a corpus), metadata updated to the new dimensions
-    — the executable twin of ``resize_stub`` (which only rewrites
-    metadata). Same mapInPandas slot a PIL Lanczos kernel would occupy
+    silently transcode a corpus), metadata updated to the new dimensions.
+    Same mapInPandas slot a PIL Lanczos kernel would occupy
     on a real cluster; unsupported content raises loudly rather than
     passing through unscaled. PNG alpha is preserved through the resize
     (RGBA pixels resample as 4-byte units)."""

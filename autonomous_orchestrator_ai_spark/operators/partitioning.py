@@ -14,8 +14,6 @@ of splits, which already exceeds ``defaultParallelism``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 
@@ -30,31 +28,6 @@ def ensure_min_parallelism(df: DataFrame, target: int | None = None) -> DataFram
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def source_input_bytes(df: DataFrame) -> int | None:
-    """Total on-disk size of the files feeding ``df``'s scan, or None when
-    it cannot be determined (non-file source, remote scheme). Driver-side
-    metadata only — no job."""
-    from urllib.parse import urlparse
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    total = 0
-    for uri in files:
-        parsed = urlparse(uri)
-        if parsed.scheme not in ("", "file"):
-            return None
-        path = parsed.path or uri
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            return None
-    return total
 
 
 def repartition_for_exploding_join(df: DataFrame, *keys: str) -> DataFrame:

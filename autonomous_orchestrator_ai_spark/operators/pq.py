@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from autonomous_orchestrator_ai_spark.operators.partitioning import (
@@ -216,61 +216,6 @@ def pq_adc_topk(
         ),
     )
     return rank_topk(partials, k, score="adc_score", out="adc_score")
-
-
-def pq_adc_topk_chunked(
-    corpus_codes: DataFrame,
-    queries: DataFrame,
-    codebooks: np.ndarray,
-    k: int = 5,
-    chunk_size: int = 4096,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    code_col: str = "pq_code",
-    query_id_col: str | None = None,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """The documented chunked fallback for query sets past
-    ``pq_adc_topk``'s serving-batch bound: number the queries, run the
-    bounded operator per ``chunk_size`` slice, union the results — exact,
-    because per-query results are independent of other queries.
-
-    Cost model (why this is a FALLBACK): each chunk scans the corpus
-    codes once, so total cost is ceil(Q/chunk_size) corpus scans with a
-    bounded driver LUT per chunk. Worth it up to a handful of chunks;
-    for corpus-scale query sets use the LSH/IVF index paths, where cost
-    per query is a pruned bucket read instead of a scan."""
-    qid = query_id_col or id_col
-    numbered = queries.withColumn(
-        "__qn",
-        F.row_number().over(Window.orderBy(F.col(qid))),
-    )
-    n = numbered.count()
-    if n == 0:
-        raise ValueError("queries is empty")
-    outs = []
-    for start in range(1, n + 1, chunk_size):
-        sub = numbered.filter(
-            (F.col("__qn") >= start) & (F.col("__qn") < start + chunk_size)
-        ).drop("__qn")
-        outs.append(
-            pq_adc_topk(
-                corpus_codes,
-                sub,
-                codebooks,
-                k=k,
-                id_col=id_col,
-                vec_col=vec_col,
-                code_col=code_col,
-                query_id_col=query_id_col,
-                exclude_self=exclude_self,
-                max_query_batch=chunk_size,
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
 
 
 def pq_topk_reranked(

@@ -1,4 +1,4 @@
-"""Run-report metrics (reference A1/A7/S6 + severity classifier D12).
+"""Run-report metrics (reference A1/A7/S6).
 
 Reference: /root/reference/spark/jobs/ingest_transform.py:307-336 (the
 conditional-count aggregate + JSON report) — note the reference computes this
@@ -77,26 +77,3 @@ def write_run_report(report: dict, path: str) -> None:
     p = Path(path)
     p.parent.mkdir(parents=True, exist_ok=True)
     p.write_text(json.dumps(report, indent=2))
-
-
-def classify_dq_severity(failure_rate: float) -> str:
-    """DQ failure-rate -> severity (reference D12, ops/notifications.py:
-    295-304): >10% critical, >5% error, >1% warning, else info."""
-    if failure_rate > 0.10:
-        return "critical"
-    if failure_rate > 0.05:
-        return "error"
-    if failure_rate > 0.01:
-        return "warning"
-    return "info"
-
-
-def severity_expr(failure_rate: Column | str) -> Column:
-    """The same classifier as a CASE expression, for set-based ops analytics."""
-    c = F.col(failure_rate) if isinstance(failure_rate, str) else failure_rate
-    return (
-        F.when(c > 0.10, "critical")
-        .when(c > 0.05, "error")
-        .when(c > 0.01, "warning")
-        .otherwise("info")
-    )

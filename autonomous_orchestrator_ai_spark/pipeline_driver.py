@@ -26,7 +26,10 @@ from autonomous_orchestrator_ai_spark.agent.tools import PipelineTools
 from autonomous_orchestrator_ai_spark.operators.dq import dimension_scores, run_suite
 from autonomous_orchestrator_ai_spark.operators.dq_suites import customers_suite
 from autonomous_orchestrator_ai_spark.operators.incidents import IncidentStore
-from autonomous_orchestrator_ai_spark.operators.report import build_run_report
+from autonomous_orchestrator_ai_spark.operators.report import (
+    build_run_report,
+    write_run_report,
+)
 from autonomous_orchestrator_ai_spark.operators.transform import parse_kafka_messages
 from autonomous_orchestrator_ai_spark.schemas import customer_events_schema
 from autonomous_orchestrator_ai_spark.sources.readers import jsonl_as_kafka_envelope
@@ -91,7 +94,7 @@ def run_pipeline_once(
             run_report["quality_mean_score"] = round(
                 totals["quality_mean_score"], 6
             )
-        (ops / "run_report.json").write_text(json.dumps(run_report, indent=2))
+        write_run_report(run_report, str(ops / "run_report.json"))
 
         # ---- C3: declarative DQ over the curated table -------------------
         curated = spark.read.parquet(str(work / "curated"))

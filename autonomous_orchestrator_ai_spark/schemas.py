@@ -99,11 +99,6 @@ VALID_STATUSES = ["open", "resolved"]
 # Driver-generated synthetic star schema (/root/testdata, see TESTDATA.md)
 # ---------------------------------------------------------------------------
 
-TESTDATA_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),

@@ -1,4 +1,4 @@
-"""Readers (reference S1/S2/S7 + batch replay, SURVEY.md §2.1).
+"""Readers (reference S1/S2/S7, SURVEY.md §2.1).
 
 Kafka requires the spark-sql-kafka package on the classpath; in this
 container it is absent, so the Kafka readers raise a clear error at call time
@@ -12,24 +12,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from autonomous_orchestrator_ai_spark.schemas import TESTDATA_TABLES
-
 
 def read_parquet(spark: SparkSession, path: str, columns: list[str] | None = None) -> DataFrame:
     """Parquet batch scan (reference S7). Column pruning via an explicit
     select so the scan's ReadSchema only carries what's needed."""
     df = spark.read.parquet(path)
     return df.select(*columns) if columns else df
-
-
-def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load the driver's synthetic star schema (TESTDATA.md)."""
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in TESTDATA_TABLES}
-
-
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
-    for name, df in load_testdata(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 def kafka_stream(
@@ -46,18 +34,6 @@ def kafka_stream(
         .option("subscribe", topic)
         .option("startingOffsets", starting_offsets)
         .option("failOnDataLoss", str(fail_on_data_loss).lower())
-        .load()
-    )
-
-
-def kafka_batch(spark: SparkSession, brokers: str, topic: str) -> DataFrame:
-    """Batch replay of a Kafka topic (same envelope; for backfills)."""
-    return (
-        spark.read.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topic)
-        .option("startingOffsets", "earliest")
-        .option("endingOffsets", "latest")
         .load()
     )
 

@@ -26,47 +26,6 @@ def write_partitioned_parquet(
     df.write.mode(mode).partitionBy(*partition_by).parquet(path)
 
 
-def stream_to_parquet(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    partition_by: list[str] = ("country", "plan"),
-    trigger: dict | None = None,
-):
-    """Streaming partitioned parquet sink (reference S4, ingest_transform.py:
-    255-271): append mode, checkpointed, 30s processing-time trigger by
-    default; pass ``trigger={"availableNow": True}`` for bounded test runs."""
-    trigger = trigger or {"processingTime": "30 seconds"}
-    return (
-        df.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .partitionBy(*partition_by)
-        .trigger(**trigger)
-        .start()
-    )
-
-
-def foreach_batch_jdbc_sink(url: str, table: str, options: dict | None = None):
-    """foreachBatch relational sink (reference S5's Snowflake writer,
-    ingest_transform.py:273-305), generalized to any JDBC target.
-
-    Skips empty batches with ``isEmpty()`` — the reference used
-    ``count() > 0`` which forces a full extra job per micro-batch
-    (SURVEY.md §4 note)."""
-
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        writer = batch_df.write.format("jdbc").option("url", url).option("dbtable", table)
-        for k, v in (options or {}).items():
-            writer = writer.option(k, v)
-        writer.mode("append").save()
-
-    return _write
-
-
 #: connector option keys the reference's writer builds
 #: (ingest_transform.py:282-289); config must provide every one + "table"
 _SNOWFLAKE_CONFIG_KEYS = (
@@ -231,25 +190,10 @@ def read_latest_snapshot(spark, base_path: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Kafka produce path (the write twin of readers.parse_avro_value /
-# decode_avro_values — reference kafka/produce_events.py publishes these
+# Kafka produce path (the write twin of readers.decode_avro_values —
+# reference kafka/produce_events.py publishes these
 # wire bytes; the engine can now emit them too)
 # ---------------------------------------------------------------------------
-
-
-def serialize_avro_value(df: DataFrame, avro_schema_json: str) -> DataFrame:
-    """JVM to_avro encode of a struct column ``value`` into Avro binary —
-    the spark-avro produce path, mirroring ``readers.parse_avro_value``.
-    Requires the spark-avro package (absent in this container → clear
-    ImportError at call time); ``encode_avro_values`` below is the
-    vendored no-jar twin."""
-    from pyspark.sql import functions as F
-
-    try:
-        from pyspark.sql.avro.functions import to_avro
-    except ImportError as exc:  # pragma: no cover
-        raise ImportError("pyspark avro functions unavailable") from exc
-    return df.withColumn("value", to_avro(F.col("value"), avro_schema_json))
 
 
 def encode_avro_values(

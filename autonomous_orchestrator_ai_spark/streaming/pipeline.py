@@ -6,8 +6,9 @@ Differences from the reference, by design (SURVEY.md §3.2 defects):
 - run metrics come from ``df.observe``, summed over the micro-batches of
   ``query.recentProgress`` — the reference's post-hoc ``.agg().collect()``
   on a streaming DF is unsupported and silently broken;
-- the watermark actually bounds state here (it feeds windowed aggregations
-  and dropDuplicatesWithinWatermark); in the reference it was inert;
+- the watermark actually bounds state here (it feeds
+  dropDuplicatesWithinWatermark and the stream-stream join); in the
+  reference it was inert;
 - bounded runs use ``trigger(availableNow=True)`` for deterministic tests
   and backfills instead of only wall-clock ``awaitTermination``.
 
@@ -88,28 +89,25 @@ def with_run_observation(df: DataFrame) -> DataFrame:
     return df.observe(OBSERVATION_NAME, *report_metric_columns())
 
 
-def windowed_event_counts(
-    enriched: DataFrame,
-    window_duration: str = "10 minutes",
-    slide: str | None = None,
-) -> DataFrame:
-    """The windowed aggregation the reference imported but never built (T7):
-    event-time tumbling/sliding counts by plan, watermark-bounded state."""
-    win = (
-        F.window("event_timestamp", window_duration, slide)
-        if slide
-        else F.window("event_timestamp", window_duration)
-    )
-    return enriched.groupBy(win.alias("win"), "plan").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.count(F.when(F.col("is_late_arrival"), 1)).alias("n_late"),
-    )
-
-
 def stream_dedup(enriched: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """Stateful streaming dedup bounded by the watermark (T7):
     dropDuplicatesWithinWatermark on the event id."""
     return enriched.dropDuplicatesWithinWatermark(keys or ["id"])
+
+
+def _await_bounded(query, checkpoint: str, timeout_seconds: float | None) -> None:
+    """Wait for an availableNow query to drain its backlog. A run still
+    active after ``timeout_seconds`` is stopped and raises TimeoutError:
+    a bounded run either finishes or fails, never hands back the totals
+    of a partial backlog. The checkpoint keeps the committed batches, so
+    a re-run on it resumes where the stopped one ended."""
+    query.awaitTermination(timeout_seconds)
+    if query.isActive:
+        query.stop()
+        raise TimeoutError(
+            f"bounded streaming run on checkpoint {checkpoint} did not "
+            f"finish within {timeout_seconds} s"
+        )
 
 
 def run_bounded(
@@ -123,7 +121,8 @@ def run_bounded(
     """Bounded streaming run (T6): availableNow trigger processes the whole
     backlog then stops — the deterministic twin of the reference's
     ``awaitTermination(duration*60)`` wall-clock runs. Returns the run
-    stats summed over the query's progress reports."""
+    stats summed over the query's progress reports; raises TimeoutError
+    if the backlog is not drained within ``timeout_seconds``."""
     writer = (
         df.writeStream.format("parquet")
         .outputMode(output_mode)
@@ -134,9 +133,7 @@ def run_bounded(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     query = writer.start()
-    query.awaitTermination(timeout_seconds)
-    if query.isActive:
-        query.stop()
+    _await_bounded(query, checkpoint, timeout_seconds)
     # recentProgress is synchronous post-termination (listener events are
     # delivered on a separate thread and may lag a bounded run's end)
     totals = {k: 0 for k in ("total_records", "late_records", "dq_failures", "schema_drift_count")}
@@ -209,16 +206,16 @@ def run_foreach_batch(
     checkpoint: str,
     timeout_seconds: float | None = None,
 ) -> None:
-    """foreachBatch sink (T4/S5) under an availableNow bounded run."""
+    """foreachBatch sink (T4/S5) under an availableNow bounded run;
+    raises TimeoutError if the backlog is not drained within
+    ``timeout_seconds``."""
     query = (
         df.writeStream.foreachBatch(batch_fn)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
-    query.awaitTermination(timeout_seconds)
-    if query.isActive:
-        query.stop()
+    _await_bounded(query, checkpoint, timeout_seconds)
 
 
 def stream_stream_interval_join(

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from autonomous_orchestrator_ai_spark.functions.text import (
@@ -760,6 +762,32 @@ def test_slice_count_rule():
     dec: dict = {}
     slice_count(1, 1, dec)
     assert dec == {"transient_factor": SORT_MERGE_TRANSIENT_FACTOR}
+
+
+def test_payload_pin_routes_on_source_input_bytes(spark, monkeypatch):
+    """The payload pin persists a frame only when its source's input
+    files are known and fit PAYLOAD_PIN_BUDGET_BYTES; the caller gets the
+    persisted handle back in ``caches``."""
+    from autonomous_orchestrator_ai_spark.operators import dedup
+    from autonomous_orchestrator_ai_spark.plans.registry import table
+
+    sf = Path(__file__).resolve().parent.parent / "perfbench" / "data" / "sf0.001"
+    source = table(spark, str(sf), "documents")
+    caches: list = []
+    pinned = dedup._pin_small_payload(source.select("doc_id"), source, caches)
+    assert pinned.is_cached and caches == [pinned]
+    pinned.unpersist()
+
+    # no input files (an in-memory frame): size unknown, never pinned
+    local = spark.createDataFrame([(1, "a")], "doc_id bigint, text string")
+    caches = []
+    assert dedup._pin_small_payload(local, local, caches) is local
+    assert not local.is_cached and caches == []
+
+    monkeypatch.setattr(dedup, "PAYLOAD_PIN_BUDGET_BYTES", 0)
+    frame = source.select("doc_id")
+    assert dedup._pin_small_payload(frame, source, caches) is frame
+    assert not frame.is_cached and caches == []
 
 
 def test_minhash_sliced_verify_equals_single_pass(spark):

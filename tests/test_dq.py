@@ -11,7 +11,6 @@ from autonomous_orchestrator_ai_spark.operators.dq import (
     DIMENSIONS,
     FIELD_REMAP,
     Expectation,
-    classify_failure_rate,
     dimension_scores,
     evaluate_param,
     run_suite,
@@ -125,16 +124,6 @@ def test_freshness_window(spark):
         now=NOW,
     )
     assert out["validations"][0]["results"][0]["result"]["unexpected_count"] == 1
-
-
-def test_threshold_ladder():
-    """Reference bands (dq_rules.yml:85-89; spec test_dq.py:310-333)."""
-    assert classify_failure_rate(0.0) == "ok"
-    assert classify_failure_rate(0.01) == "ok"
-    assert classify_failure_rate(0.03) == "warning"
-    assert classify_failure_rate(0.05) == "warning"
-    assert classify_failure_rate(0.08) == "degraded"
-    assert classify_failure_rate(0.15) == "fail"
 
 
 def test_dimension_rollup(events_fixture):

@@ -10,8 +10,6 @@ import pytest
 from autonomous_orchestrator_ai_spark.operators.multimodal import (
     extract_features,
     repartition_for_decode,
-    resize_stub,
-    sample_frames,
     synthetic_media,
 )
 
@@ -44,35 +42,11 @@ def test_extract_features_after_repartition(media):
     assert out.count() == 16
 
 
-def test_sample_frames_fanout(media):
-    frames = sample_frames(media, every_n_bytes=64, max_frames=4)
-    per_media = {r["media_id"]: r for r in frames.filter("frame_index = 0").collect()}
-    assert len(per_media) == 16          # every media yields >=1 frame
-    counts = frames.groupBy("media_id").count().collect()
-    assert all(1 <= r["count"] <= 4 for r in counts)
-    # frame bytes really are slices of the blob
-    blob = bytes((hashlib.md5(b"42:1").digest() * 16))[: 128 + 64]
-    got = sorted(
-        (r["frame_index"], bytes(r["frame"]))
-        for r in frames.filter("media_id = 1").collect()
-    )
-    assert got[0][1] == blob[:64] and got[1][1] == blob[64:128]
-
-
-def test_resize_updates_meta_only(media):
-    out = resize_stub(media, 224, 224)
-    row = out.filter("media_id = 0").collect()[0]
-    assert row["meta"]["width"] == 224 and row["meta"]["height"] == 224
-    assert row["meta"]["mime"] == "image/fake"
-
-
 def test_real_codecs_loud_on_unsupported_formats(media):
     # fake (non-BMP) blobs through the REAL codec path must fail loudly at
     # execution time, never silently hash bytes instead of decoding pixels
     with pytest.raises(Exception, match="NotImplementedError|real decode"):
         extract_features(media, use_real_codecs=True).collect()
-    with pytest.raises(NotImplementedError):
-        sample_frames(media, use_real_codecs=True)
 
 
 # --- real BMP codec path ---------------------------------------------------

@@ -151,31 +151,3 @@ def test_query_batch_bound_enforced(spark):
         codes_df, df.filter(F.col("vec_id") < 8), cb, k=2, max_query_batch=8
     )
     assert out.select("query_id").distinct().count() == 8
-
-
-def test_chunked_adc_matches_unchunked(spark):
-    """pq_adc_topk_chunked: same results as one bounded call, regardless
-    of where the chunk boundaries fall (per-query independence)."""
-    from autonomous_orchestrator_ai_spark.operators.pq import pq_adc_topk_chunked
-
-    rng = np.random.default_rng(11)
-    n, dim = 30, 8
-    vecs = rng.normal(size=(n, dim))
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(n)],
-        ["vec_id", "embedding"],
-    )
-    cb = train_pq(df, m=4, n_codes=4, sample_size=n)
-    codes_df = pq_encode(df, cb)
-    queries = df.filter(F.col("vec_id") < 10)
-    whole = {
-        (r.query_id, r.rank): (r.neighbor_id, r.adc_score)
-        for r in pq_adc_topk(codes_df, queries, cb, k=3).collect()
-    }
-    chunked = {
-        (r.query_id, r.rank): (r.neighbor_id, r.adc_score)
-        for r in pq_adc_topk_chunked(
-            codes_df, queries, cb, k=3, chunk_size=4
-        ).collect()
-    }
-    assert chunked == whole

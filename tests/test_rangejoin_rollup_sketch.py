@@ -1,4 +1,4 @@
-"""Range join, continuous aggregate, and sketch tests."""
+"""Range join and sketch tests."""
 
 from __future__ import annotations
 
@@ -6,11 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from autonomous_orchestrator_ai_spark.operators.rangejoin import range_join
-from autonomous_orchestrator_ai_spark.operators.rollup import (
-    refresh_rollup,
-    refresh_rollup_incremental,
-    rollup_with_tail,
-)
 from autonomous_orchestrator_ai_spark.operators.sketch import (
     approx_distinct,
     bloom_filter_semi_join,
@@ -48,39 +43,6 @@ def test_range_join_matches_inequality_join(spark):
     assert got == naive
     assert (0, 100) in got and (2, 101) in got
     assert (2, 100) not in got        # 01:00 excluded from [0,1h)
-
-
-def test_rollup_with_tail_equals_direct(spark, tmp_path):
-    from autonomous_orchestrator_ai_spark.plans.registry import table
-
-    ev = table(spark, "/root/testdata/sf0.001", "events")
-
-    cutoff = "2024-01-20 00:00:00"
-    history = ev.filter(F.col("ts") < cutoff)
-    tail = ev.filter(F.col("ts") >= cutoff)
-
-    rollup_path = str(tmp_path / "rollup")
-    refresh_rollup(history, rollup_path, bucket="1 hour")
-
-    served = rollup_with_tail(spark, rollup_path, tail, bucket="1 hour")
-    direct = (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(F.col("w.start").alias("bucket_start"), "event_type", "n_events", "sum_value")
-    )
-    s = {(r["bucket_start"], r["event_type"]): (r["n_events"], round(r["sum_value"], 6))
-         for r in served.collect()}
-    d = {(r["bucket_start"], r["event_type"]): (r["n_events"], round(r["sum_value"], 6))
-         for r in direct.collect()}
-    assert s == d
-
-    # incremental refresh folds the tail's partitions in; serving with an
-    # empty tail then matches direct
-    refresh_rollup_incremental(spark, tail, rollup_path, bucket="1 hour")
-    empty_tail = tail.filter(F.lit(False))
-    s2 = {(r["bucket_start"], r["event_type"]): (r["n_events"], round(r["sum_value"], 6))
-          for r in rollup_with_tail(spark, rollup_path, empty_tail).collect()}
-    assert s2 == d
 
 
 def test_approx_distinct_error_bound(spark):

@@ -1,4 +1,4 @@
-"""Run-report, severity, incidents, and decision-agent tests
+"""Run-report, incidents, and decision-agent tests
 (reference specs: tests/test_spark_jobs.py:328-400, tests/test_agent.py)."""
 
 from __future__ import annotations
@@ -17,7 +17,6 @@ from autonomous_orchestrator_ai_spark.agent.tools import PipelineTools
 from autonomous_orchestrator_ai_spark.operators.incidents import IncidentStore
 from autonomous_orchestrator_ai_spark.operators.report import (
     build_run_report,
-    classify_dq_severity,
     run_report_from_df,
 )
 from autonomous_orchestrator_ai_spark.operators.transform import enrich_customer_events
@@ -46,14 +45,6 @@ def test_build_run_report_rates():
     assert r["late_rate"] == 0.075
     assert r["dq_failure_rate"] == 0.03
     assert r["schema_drift_detected"] is True
-
-
-def test_severity_classifier():
-    """Reference D12 (notifications.py:295-304)."""
-    assert classify_dq_severity(0.2) == "critical"
-    assert classify_dq_severity(0.08) == "error"
-    assert classify_dq_severity(0.03) == "warning"
-    assert classify_dq_severity(0.005) == "info"
 
 
 # -- decision agent ---------------------------------------------------------

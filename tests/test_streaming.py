@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import json
+import re
 from datetime import datetime, timezone
 
 import pytest
@@ -80,6 +81,27 @@ def test_streaming_pipeline_end_to_end(spark, tmp_path, event_jsonl):
     totals2 = run_bounded(observed, out, ckpt, timeout_seconds=120)
     assert totals2["total_records"] == 0
     assert spark.read.parquet(out).count() == 4
+
+
+def test_bounded_run_timeout_raises_then_rerun_is_exactly_once(spark, tmp_path, event_jsonl):
+    """A bounded run that cannot drain its backlog in time fails loudly
+    instead of returning partial totals; a re-run on the same checkpoint
+    then lands every event in the sink exactly once."""
+    envelope = jsonl_as_kafka_envelope(spark, event_jsonl, streaming=True)
+    parsed = parse_kafka_messages(envelope, CUSTOMER_EVENTS_SCHEMA)
+    observed = with_run_observation(
+        streaming_enrich(parsed, processing_time=F.to_timestamp(F.lit("2024-01-15 01:00:00")))
+    )
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    expected = f"checkpoint {ckpt} did not finish within 0.01 s"
+    with pytest.raises(TimeoutError, match=re.escape(expected)):
+        run_bounded(observed, out, ckpt, timeout_seconds=0.01)
+    assert not spark.streams.active
+
+    run_bounded(observed, out, ckpt, timeout_seconds=120)
+    ids = [r["id"] for r in spark.read.parquet(out).select("id").collect()]
+    assert sorted(ids) == ["e1", "e2", "e3", "e4"]
 
 
 def test_streaming_windowed_counts(spark, tmp_path, event_jsonl):

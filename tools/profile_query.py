@@ -1,26 +1,31 @@
-"""Per-query profiler: wall time, job/stage breakdown, formatted plan.
+"""Per-query job-group profile: the jobs, stages, tasks, shuffle and spill
+of plan building and of execution, read from the Spark event log.
 
-Runs one registered query N times (guide §1: measure first) with the
-Spark event log enabled, then parses the event JSON to attribute wall
-time to jobs/stages — the sandbox has no live UI, so the event log IS
-the Stages tab. The timed action matches bench.py (``df.count()``) so
-numbers are comparable with the headline bench; ``--noop`` switches to
-the noop sink (guide §1.4) to time full-column materialization instead.
+Each pass of each query runs under two job groups, as in
+perfbench/workloads.py: ``build:passN:<query>`` while the registry
+function builds the plan (including any eager jobs it runs) and
+``exec:passN:<query>`` while ``collect()`` runs it. The event log is
+summarized by ``perfbench.layers.parse_event_log``. Pass numbers run on
+across queries, so each ``(phase, passN)`` row belongs to one query. The
+first pass in a fresh JVM also pays class loading and JIT warm-up.
 
 Usage:
   python tools/profile_query.py QUERY [QUERY ...] [--sf DIR] [--passes N]
-         [--noop] [--explain-out FILE]
 """
 
 from __future__ import annotations
 
 import argparse
-import json
 import os
+import shutil
 import sys
+import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+COLUMNS = ("jobs", "stages", "tasks", "shuffle_write_bytes", "shuffle_read_bytes", "spill_bytes")
 
 
 def main() -> None:
@@ -28,123 +33,47 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--passes", type=int, default=2)
-    ap.add_argument("--noop", action="store_true")
-    ap.add_argument("--explain-out", default=None)
-    ap.add_argument("--eventdir", default="/tmp/spark-events-profile")
     args = ap.parse_args()
 
-    os.makedirs(args.eventdir, exist_ok=True)
-    from autonomous_orchestrator_ai_spark.session import (
-        get_spark,
-        release_session_storage,
-    )
     from autonomous_orchestrator_ai_spark.plans import registry
+    from autonomous_orchestrator_ai_spark.session import get_spark, release_session_storage
+    from perfbench.layers import parse_event_log
 
+    eventdir = Path(tempfile.mkdtemp(prefix="profile-events-"))
     spark = get_spark(
         "profile",
         extra_conf={
             "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": args.eventdir,
+            "spark.eventLog.dir": eventdir.as_uri(),
             "spark.eventLog.compress": "false",
             "spark.eventLog.rolling.enabled": "false",
         },
     )
     registry.load_all()
-    # same warm-up as bench.py
-    registry.QUERIES["tpch_q6_forecast_revenue"](spark, args.sf).collect()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark.range(cpus).repartition(cpus).mapInPandas(
-        lambda it: it, schema="id long"
-    ).count()
-
     sc = spark.sparkContext
+    runs = []  # (query, op, build seconds, exec seconds)
     for name in args.queries:
-        fn = registry.QUERIES[name]
-        walls = []
-        for p in range(args.passes):
-            sc.setJobDescription(f"{name}#pass{p}")
+        for _ in range(args.passes):
+            op = f"pass{len(runs)}"
             t0 = time.perf_counter()
-            df = fn(spark, args.sf)
-            if args.noop:
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                df.count()
-            walls.append(time.perf_counter() - t0)
+            sc.setJobGroup(f"build:{op}:{name}", name)
+            df = registry.QUERIES[name](spark, args.sf)
+            t1 = time.perf_counter()
+            sc.setJobGroup(f"exec:{op}:{name}", name)
+            df.collect()
+            runs.append((name, op, t1 - t0, time.perf_counter() - t1))
             release_session_storage(spark)
-        sc.setJobDescription(None)
-        print(f"\n=== {name}: walls={[round(w, 3) for w in walls]}")
-        if args.explain_out:
-            df = fn(spark, args.sf)
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
-            with open(args.explain_out, "w") as f:
-                f.write(plan)
-            release_session_storage(spark)
-
     app_id = sc.applicationId
     spark.stop()
-    # parse the event log: per-job wall and per-stage executor metrics
-    path = os.path.join(args.eventdir, app_id)
-    v2 = os.path.join(args.eventdir, f"eventlog_v2_{app_id}")
-    if os.path.isdir(v2):
-        path = next(
-            os.path.join(v2, f)
-            for f in sorted(os.listdir(v2))
-            if f.startswith("events_")
-        )
-    elif not os.path.exists(path):
-        for suf in (".inprogress", ".lz4", ".zstd"):
-            if os.path.exists(path + suf):
-                path += suf
-                break
-    jobs: dict[int, dict] = {}
-    stages: dict[int, dict] = {}
-    with open(path) as f:
-        for line in f:
-            ev = json.loads(line)
-            et = ev.get("Event")
-            if et == "SparkListenerJobStart":
-                jobs[ev["Job ID"]] = {
-                    "t0": ev["Submission Time"],
-                    "desc": ev.get("Properties", {}).get(
-                        "spark.job.description", ""
-                    ),
-                    "stages": [
-                        s["Stage ID"] for s in ev.get("Stage Infos", [])
-                    ],
-                }
-            elif et == "SparkListenerJobEnd":
-                if ev["Job ID"] in jobs:
-                    jobs[ev["Job ID"]]["t1"] = ev["Completion Time"]
-            elif et == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                stages[si["Stage ID"]] = {
-                    "name": si["Stage Name"].split("\n")[0][:70],
-                    "tasks": si["Number of Tasks"],
-                    "ms": si.get("Completion Time", 0)
-                    - si.get("Submission Time", 0),
-                }
-    by_desc: dict[str, list] = {}
-    for jid, j in sorted(jobs.items()):
-        if "t1" not in j:
-            continue
-        by_desc.setdefault(j["desc"], []).append((jid, j))
-    for desc, js in by_desc.items():
-        total = sum(j["t1"] - j["t0"] for _, j in js) / 1000.0
-        print(f"\n--- {desc or '(no desc)'}: {len(js)} jobs, {total:.3f}s")
-        for jid, j in js:
-            dur = (j["t1"] - j["t0"]) / 1000.0
-            stage_strs = []
-            for sid in j["stages"]:
-                if sid in stages:
-                    s = stages[sid]
-                    stage_strs.append(
-                        f"s{sid}[{s['tasks']}t {s['ms']}ms {s['name']}]"
-                    )
-            print(f"  job {jid}: {dur:7.3f}s  " + " | ".join(stage_strs))
+
+    phases = parse_event_log(eventdir / app_id)["phases"]
+    shutil.rmtree(eventdir)
+    print(f"{'group':<48} {'wall_s':>8} " + " ".join(COLUMNS))
+    for name, op, *walls in runs:
+        for phase, wall in zip(("build", "exec"), walls):
+            c = phases[(phase, op)]
+            group = f"{phase}:{op}:{name}"
+            print(f"{group:<48} {wall:8.3f} " + " ".join(f"{c[k]:>{len(k)}}" for k in COLUMNS))
 
 
 if __name__ == "__main__":
