@@ -11,7 +11,8 @@ incident + notification (the reference's failure callback C7).
 from __future__ import annotations
 
 import json
-from datetime import datetime
+import time
+from datetime import datetime, timedelta
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -60,6 +61,7 @@ def run_pipeline_once(
     incidents/.
     """
     now = now or datetime.now()
+    started = time.monotonic()
     work = Path(work_dir)
     ops = work / "ops"
     ops.mkdir(parents=True, exist_ok=True)
@@ -88,7 +90,14 @@ def run_pipeline_once(
             partition_by=["country", "plan"],
             timeout_seconds=300,
         )
-        run_report = build_run_report(totals, start_time=now.isoformat())
+        # both ends on the injected clock: the report's own default end is
+        # the wall clock in UTC, which a naive or replayed ``now`` never
+        # matches
+        run_report = build_run_report(
+            totals,
+            start_time=now.isoformat(),
+            end_time=(now + timedelta(seconds=time.monotonic() - started)).isoformat(),
+        )
         if "quality_scored_records" in totals:
             run_report["quality_scored_records"] = totals["quality_scored_records"]
             run_report["quality_mean_score"] = round(

@@ -185,8 +185,12 @@ def kmv_token_jaccard_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_a") + F.col("n_b") - F.coalesce(F.col("n_inter"), F.lit(0))
     )
     err = F.abs(F.col("jaccard_est") - j_exact)
+    # inter holds one row per source pair, but its static estimate (a token
+    # self-join) plans a sort-merge join that AQE turns into this broadcast
+    # at run time only if inter's stage ends before est's shuffle starts:
+    # the race left a 12th job and its classes on some passes (PERF.md)
     return (
-        est.join(inter, ["g_a", "g_b"], "left")
+        est.join(F.broadcast(inter), ["g_a", "g_b"], "left")
         .join(F.broadcast(sa), "g_a")
         .join(F.broadcast(sb), "g_b")
         .select(

@@ -91,23 +91,3 @@ INCIDENTS_SCHEMA = T.StructType(
         T.StructField("created_by", T.StringType(), nullable=True),
     ]
 )
-
-VALID_SEVERITIES = ["low", "medium", "high", "critical"]
-VALID_STATUSES = ["open", "resolved"]
-
-# ---------------------------------------------------------------------------
-# Driver-generated synthetic star schema (/root/testdata, see TESTDATA.md)
-# ---------------------------------------------------------------------------
-
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),  # JSON string
-    ]
-)
-
-VALID_EVENT_TYPES = ["signup", "click", "error", "view", "purchase"]

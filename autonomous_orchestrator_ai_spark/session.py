@@ -10,6 +10,14 @@ parallelism instead of the 200 default.
 On a real cluster the same builder is used with ``master`` unset (picked up
 from spark-submit) and ``shuffle_partitions`` sized ~2-3x total cores; AQE
 coalescing then trims empty post-shuffle partitions at runtime.
+
+``CODEGEN_CACHE_ENTRIES`` sizes Spark's generated-class cache
+(``spark.sql.codegen.cache.maxEntries``, default 100, least recently used
+evicted first) to the working set of a long-lived session. One pass of the
+benchmark's three-query suite generates 113 distinct classes, so at the
+default every steady pass evicted and recompiled 60-76 of them, and the JIT
+warmed each new class again from the interpreter. It is a static SQL conf:
+it takes effect only when set before the session's JVM starts.
 """
 
 from __future__ import annotations
@@ -17,6 +25,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: Generated classes the codegen cache keeps. One pass over all 203
+#: registered queries at sf0.01 generates 2,740 distinct classes, at about
+#: 10 KiB of Metaspace each; the sizing rule and the measurements are in
+#: PERF.md "Codegen cache: the session's working set".
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(
@@ -55,6 +69,7 @@ def get_spark(
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
         )
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
@@ -90,3 +105,13 @@ def release_session_storage(spark) -> int:
         it.next()._2().unpersist(True)
         n += 1
     return n
+
+
+def codegen_compiles(spark) -> tuple[int, float]:
+    """Generated classes Janino has compiled in this JVM (codegen cache
+    misses) and their summed milliseconds. The time is the count times the
+    mean of Spark's ``CodegenMetrics`` compile-time histogram, so it is
+    approximate once the histogram's reservoir samples."""
+    h = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    n = h.getCount()
+    return n, n * h.getSnapshot().getMean()

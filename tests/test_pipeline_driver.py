@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 import json
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 from pathlib import Path
 
 from autonomous_orchestrator_ai_spark.pipeline_driver import run_pipeline_once
@@ -62,13 +62,19 @@ def test_healthy_pipeline_no_escalation(spark, tmp_path):
     g = EventGenerator(seed=12, n_customers=40, now=NOW, late_rate=0.0, drift_frequency=0)
     indir = tmp_path / "in"
     g.write_jsonl(indir / "batch.jsonl", 100)
-    result = run_pipeline_once(
-        spark, str(indir), str(tmp_path / "work"), now=NOW.replace(tzinfo=None)
-    )
+    now = NOW.replace(tzinfo=None)
+    result = run_pipeline_once(spark, str(indir), str(tmp_path / "work"), now=now)
     d = result["decision"]
     assert d["escalation_required"] is False
     assert "running normally" in d["reasoning"]
     assert [a["tool"] for a in d["actions_taken"]] == ["notify_ops"]
+
+    # the report's start and end both sit on the injected (naive) clock
+    rr = json.loads((tmp_path / "work" / "ops" / "run_report.json").read_text())
+    start = datetime.fromisoformat(rr["start_time"])
+    end = datetime.fromisoformat(rr["end_time"])
+    assert start == now and end.tzinfo is None
+    assert start <= end < start + timedelta(minutes=1)
 
 
 def test_validation_count_matches_independent_count(spark, tmp_path):

@@ -1,13 +1,19 @@
 """Per-query job-group profile: the jobs, stages, tasks, shuffle and spill
 of plan building and of execution, read from the Spark event log.
 
-Each pass of each query runs under two job groups, as in
-perfbench/workloads.py: ``build:passN:<query>`` while the registry
+A pass runs each query given once, in the order given, as one
+``query_suite`` op of perfbench/workloads.py does, so the queries of a
+pass compete for the same caches as they do there. Query I of pass P runs
+under two job groups: ``build:passP.I:<query>`` while the registry
 function builds the plan (including any eager jobs it runs) and
-``exec:passN:<query>`` while ``collect()`` runs it. The event log is
-summarized by ``perfbench.layers.parse_event_log``. Pass numbers run on
-across queries, so each ``(phase, passN)`` row belongs to one query. The
-first pass in a fresh JVM also pays class loading and JIT warm-up.
+``exec:passP.I:<query>`` while ``collect()`` runs it. The event log is
+summarized by ``perfbench.layers.parse_event_log``. The first pass in a
+fresh JVM also pays class loading and JIT warm-up.
+
+``compiles`` and ``compile_ms`` are the generated classes Janino compiled
+during the phase (codegen cache misses) and their compile time, from
+``session.codegen_compiles`` before and after it. A steady pass of a query
+whose classes stay cached compiles none.
 
 Usage:
   python tools/profile_query.py QUERY [QUERY ...] [--sf DIR] [--passes N]
@@ -36,7 +42,11 @@ def main() -> None:
     args = ap.parse_args()
 
     from autonomous_orchestrator_ai_spark.plans import registry
-    from autonomous_orchestrator_ai_spark.session import get_spark, release_session_storage
+    from autonomous_orchestrator_ai_spark.session import (
+        codegen_compiles,
+        get_spark,
+        release_session_storage,
+    )
     from perfbench.layers import parse_event_log
 
     eventdir = Path(tempfile.mkdtemp(prefix="profile-events-"))
@@ -51,29 +61,41 @@ def main() -> None:
     )
     registry.load_all()
     sc = spark.sparkContext
-    runs = []  # (query, op, build seconds, exec seconds)
-    for name in args.queries:
-        for _ in range(args.passes):
-            op = f"pass{len(runs)}"
-            t0 = time.perf_counter()
+
+    def mark() -> tuple[float, int, float]:
+        return (time.perf_counter(), *codegen_compiles(spark))
+
+    def delta(a, b) -> list:
+        return [y - x for x, y in zip(a, b)]
+
+    runs = []  # (query, op, build, exec): each (seconds, compiles, compile ms)
+    for p in range(args.passes):
+        for i, name in enumerate(args.queries):
+            op = f"pass{p}.{i}"
+            m0 = mark()
             sc.setJobGroup(f"build:{op}:{name}", name)
             df = registry.QUERIES[name](spark, args.sf)
-            t1 = time.perf_counter()
+            m1 = mark()
             sc.setJobGroup(f"exec:{op}:{name}", name)
             df.collect()
-            runs.append((name, op, t1 - t0, time.perf_counter() - t1))
+            m2 = mark()
+            runs.append((name, op, delta(m0, m1), delta(m1, m2)))
             release_session_storage(spark)
     app_id = sc.applicationId
     spark.stop()
 
     phases = parse_event_log(eventdir / app_id)["phases"]
     shutil.rmtree(eventdir)
-    print(f"{'group':<48} {'wall_s':>8} " + " ".join(COLUMNS))
-    for name, op, *walls in runs:
-        for phase, wall in zip(("build", "exec"), walls):
+    print(f"{'group':<48} {'wall_s':>8} " + " ".join(COLUMNS) + " compiles compile_ms")
+    for name, op, *measured in runs:
+        for phase, (wall, compiles, compile_ms) in zip(("build", "exec"), measured):
             c = phases[(phase, op)]
             group = f"{phase}:{op}:{name}"
-            print(f"{group:<48} {wall:8.3f} " + " ".join(f"{c[k]:>{len(k)}}" for k in COLUMNS))
+            print(
+                f"{group:<48} {wall:8.3f} "
+                + " ".join(f"{c[k]:>{len(k)}}" for k in COLUMNS)
+                + f" {compiles:>8} {compile_ms:>10.1f}"
+            )
 
 
 if __name__ == "__main__":
