@@ -39,6 +39,7 @@ class PipelineTools:
         self.airflow = airflow
         self.dag_id = dag_id
         self.notifications: list[dict] = []  # console-fallback audit trail
+        self._quarantine_seq = 0
 
     # -- D7: versioned schema-remap config (tools.py:91-134) ---------------
 
@@ -72,10 +73,20 @@ class PipelineTools:
     ) -> dict:
         """Emit the quarantine directive; the Spark job performs the actual
         split-write (operators.transform.quarantine_split +
-        sources.writers.write_quarantine)."""
+        sources.writers.write_quarantine). Each directive gets its own
+        directory: the name carries a sequence number, and the create is
+        exclusive, so two directives in one second never share one."""
         ts = time.strftime("%Y%m%d_%H%M%S")
-        qdir = self.ops_dir / "quarantine" / f"quarantine_{ts}"
-        qdir.mkdir(parents=True, exist_ok=True)
+        parent = self.ops_dir / "quarantine"
+        parent.mkdir(exist_ok=True)
+        while True:
+            self._quarantine_seq += 1
+            qdir = parent / f"quarantine_{ts}_{self._quarantine_seq:04d}"
+            try:
+                qdir.mkdir(exist_ok=False)
+                break
+            except FileExistsError:  # another PipelineTools took this name
+                pass
         meta = {
             "filter_condition": filter_condition,
             "source": source,

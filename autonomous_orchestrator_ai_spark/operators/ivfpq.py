@@ -72,8 +72,7 @@ def ivfpq_encode(
     code). All BLAS; no per-row Python. Output keeps every non-vector
     input column and appends ``bucket int, pq_code array<int>`` — at scale
     this is the materialized index table, written partitioned by bucket so
-    probes prune partitions (see operators/ann_index.py for the serving-
-    layout treatment of the same idea)."""
+    probes prune partitions."""
     c = np.ascontiguousarray(centroids, dtype=np.float64)
     cb = np.ascontiguousarray(codebooks, dtype=np.float64)
     c_norm2 = (c * c).sum(axis=1)

@@ -979,7 +979,7 @@ def _lsh_disagreement_sql(
 #: makes the bucket join quadratic in hot-bucket size (measured >78 GB
 #: spill, round-6 octave probe).
 #:
-#: SERVING (similarity_queries.lsh_ann_topk, operators/ann_index.py):
+#: SERVING (similarity_queries.lsh_ann_topk):
 #: UNCAPPED (SERVING_BUCKET_CAP = None) — identity recall IS the product
 #: there, a ~16% loss is not acceptable, and serving query sets are small
 #: (bounded probe fan-out per query), so the hot-bucket quadratic never

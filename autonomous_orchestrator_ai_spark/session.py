@@ -33,6 +33,23 @@ from pyspark.sql import SparkSession
 CODEGEN_CACHE_ENTRIES = 4096
 
 
+def default_cpus() -> int:
+    """Local cores for a session: ``$SPARK_GRAFT_CPUS`` (driver contract)
+    when set, else the cores this process may run on, which is what
+    ``perfbench/run.py`` passes. A value that is not a positive integer
+    raises instead of sizing the session to a typo."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return len(os.sched_getaffinity(0))
+    try:
+        cpus = int(raw)
+    except ValueError:
+        cpus = 0
+    if cpus <= 0:
+        raise ValueError(f"$SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return cpus
+
+
 def get_spark(
     app_name: str = "autonomous-orchestrator-ai-spark",
     cpus: int | None = None,
@@ -41,10 +58,10 @@ def get_spark(
 ) -> SparkSession:
     """Create (or reuse) a local SparkSession tuned for this host.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or 32.
+    ``cpus`` defaults to ``default_cpus()``.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
 

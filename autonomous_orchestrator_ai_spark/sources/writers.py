@@ -123,35 +123,6 @@ def cleanup_old_data(base_path: str, retention_days: int = 7) -> list[str]:
     return removed
 
 
-def compact_parquet(
-    spark,
-    src: str,
-    dst: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """Small-file compaction: rewrite ``src``'s parquet into ``dst`` with
-    file sizes near ``target_file_bytes``. The streaming sink's
-    per-trigger micro-files are the classic 100 TB operational hazard
-    (every file is a task + a NameNode/listing entry); compaction restores
-    scan efficiency. File count comes from the on-disk byte size, the
-    rewrite is a shuffle-free ``coalesce``, and stats are returned so an
-    orchestrator can log/assert them. ``dst`` must not exist."""
-    src_p, dst_p = Path(src), Path(dst)
-    if dst_p.exists():
-        raise FileExistsError(f"compaction target already exists: {dst}")
-    files = [p for p in src_p.rglob("*.parquet") if p.is_file()]
-    total_bytes = sum(p.stat().st_size for p in files)
-    n_out = max(1, -(-total_bytes // target_file_bytes))  # ceil division
-    df = spark.read.parquet(src)
-    df.coalesce(int(n_out)).write.parquet(str(dst_p))
-    out_files = [p for p in dst_p.rglob("*.parquet") if p.is_file()]
-    return {
-        "files_before": len(files),
-        "files_after": len(out_files),
-        "bytes": total_bytes,
-    }
-
-
 def write_versioned_snapshot(df: DataFrame, base_path: str) -> int:
     """Append-only versioned snapshot (mini-lakehouse commit protocol):
     data lands under ``base_path/v=N/`` FIRST, and only then is the

@@ -3,7 +3,8 @@
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
 line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ...}. Unset, ``$SPARK_GRAFT_CPUS`` means the
+cores the process may run on (``session.default_cpus``).
 
 Each query is timed end-to-end (plan construction + execution to a count/
 collect on the driver) over ``$SPARK_GRAFT_BENCH_PASSES`` passes (default
@@ -165,13 +166,14 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
     from autonomous_orchestrator_ai_spark.session import (
+        default_cpus,
         get_spark,
         release_session_storage,
     )
     from autonomous_orchestrator_ai_spark.plans import registry
+
+    cpus = default_cpus()
 
     spark = get_spark("bench", cpus=cpus)
     registry.load_all()

@@ -8,14 +8,6 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from autonomous_orchestrator_ai_spark.session import get_spark  # noqa: E402
-from autonomous_orchestrator_ai_spark.testing.pbcompat import (  # noqa: E402
-    enable_sdk_protobuf,
-)
-
-# must run BEFORE any SparkSession's JVM starts: Spark's Python workers
-# inherit $PYTHONPATH from the JVM environment, and the protobuf bridge
-# (transformWithStateInPandas execution) rides it — see pbcompat docstring
-enable_sdk_protobuf()
 
 
 @pytest.fixture(scope="session")

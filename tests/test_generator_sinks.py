@@ -134,32 +134,6 @@ def test_retention_cleanup(tmp_path):
     assert (base / "fresh.txt").exists()
 
 
-class TestCompaction:
-    def test_compacts_many_small_files(self, spark, tmp_path):
-        from autonomous_orchestrator_ai_spark.sources.writers import (
-            compact_parquet,
-        )
-
-        src = tmp_path / "small"
-        spark.range(1000).repartition(20).write.parquet(str(src))
-        stats = compact_parquet(
-            spark, str(src), str(tmp_path / "compact"), target_file_bytes=10**9
-        )
-        assert stats["files_before"] == 20
-        assert stats["files_after"] == 1
-        assert spark.read.parquet(str(tmp_path / "compact")).count() == 1000
-
-    def test_refuses_existing_target(self, spark, tmp_path):
-        from autonomous_orchestrator_ai_spark.sources.writers import (
-            compact_parquet,
-        )
-
-        src = tmp_path / "src"
-        spark.range(10).write.parquet(str(src))
-        with pytest.raises(FileExistsError):
-            compact_parquet(spark, str(src), str(src))
-
-
 class TestVersionedSnapshots:
     def test_publish_and_read_latest(self, spark, tmp_path):
         from autonomous_orchestrator_ai_spark.sources.writers import (

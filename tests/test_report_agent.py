@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 from datetime import datetime, timedelta
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -121,6 +122,24 @@ def test_tools_and_decision_log(tmp_path):
 
     # unknown tool -> structured error, not crash
     assert tools.execute("nope", {})["success"] is False
+
+
+def test_quarantine_directives_in_one_second_each_keep_their_own_dir(tmp_path):
+    """Two directives issued back to back (same wall-clock second) land in
+    two directories; neither metadata.json overwrites the other."""
+    tools = PipelineTools(str(tmp_path / "ops"))
+    conds = ["country = 'INVALID'", "plan IS NULL"]
+    dirs = [tools.quarantine_records(c)["quarantine_dir"] for c in conds]
+    assert len(set(dirs)) == 2
+    assert sorted(p.name for p in (tmp_path / "ops" / "quarantine").iterdir()) == sorted(
+        Path(d).name for d in dirs
+    )
+    for d, cond in zip(dirs, conds):
+        meta = json.loads((Path(d) / "metadata.json").read_text())
+        assert meta["filter_condition"] == cond
+    # a second tools instance on the same ops dir skips the names taken
+    other = PipelineTools(str(tmp_path / "ops")).quarantine_records("x = 1")
+    assert other["quarantine_dir"] not in dirs
 
 
 # -- incidents --------------------------------------------------------------

@@ -1,14 +1,19 @@
-"""The session factory keeps a long-lived session's generated classes: a
-steady pass over the benchmark's query suite recompiles (almost) none."""
+"""The session factory sizes a session to the cores it may use, and keeps a
+long-lived session's generated classes: a steady pass over the benchmark's
+query suite recompiles (almost) none."""
 
 from __future__ import annotations
 
+import os
 from pathlib import Path
+
+import pytest
 
 from autonomous_orchestrator_ai_spark.plans import registry
 from autonomous_orchestrator_ai_spark.session import (
     CODEGEN_CACHE_ENTRIES,
     codegen_compiles,
+    default_cpus,
     release_session_storage,
 )
 
@@ -21,6 +26,20 @@ SUITE = ("bpe_learned_merges", "pq_ann_topk", "kmv_token_jaccard_by_source")
 #: 56 classes; the other two queries compile none. With Spark's default
 #: cache of 100 entries the second pass recompiled 67 classes over the three.
 KMV_STEADY_MAX_COMPILES = 24
+
+
+def test_default_cpus_is_the_cores_this_process_may_use(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3
+
+
+@pytest.mark.parametrize("bad", ["0", "-2", "four", "2.5", ""])
+def test_default_cpus_rejects_a_bad_value(monkeypatch, bad):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+    with pytest.raises(ValueError, match=r"\$SPARK_GRAFT_CPUS must be a positive integer"):
+        default_cpus()
 
 
 def test_session_sizes_the_codegen_cache(spark):

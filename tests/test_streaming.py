@@ -4,7 +4,9 @@
 from __future__ import annotations
 
 import json
+import os
 import re
+import time
 from datetime import datetime, timezone
 
 import pytest
@@ -14,10 +16,12 @@ from autonomous_orchestrator_ai_spark.operators.transform import parse_kafka_mes
 from autonomous_orchestrator_ai_spark.schemas import CUSTOMER_EVENTS_SCHEMA
 from autonomous_orchestrator_ai_spark.sources.readers import jsonl_as_kafka_envelope
 from autonomous_orchestrator_ai_spark.streaming.pipeline import (
+    ROCKSDB_STATE_PROVIDER,
     run_bounded,
     streaming_enrich,
     with_run_observation,
 )
+from autonomous_orchestrator_ai_spark.testing.generator import EventGenerator
 
 
 def _ms(iso: str) -> int:
@@ -129,6 +133,101 @@ def test_streaming_windowed_counts(spark, tmp_path, event_jsonl):
     got = {r["h"]: r["n"] for r in rows}
     assert got["2024-01-14 20"] == 1  # the late event's hour
     assert got["2024-01-15 00"] == 3
+
+
+def test_processing_time_trigger_delivers_every_event(spark, tmp_path):
+    """T3 processingTime: a continuously triggered query over the broker-
+    less Kafka envelope picks up a file present at start and one that
+    lands while it runs, and every generated event reaches the sink."""
+    gen = EventGenerator(seed=11, n_customers=50, now=datetime(2024, 1, 15, 1, 0))
+    inbox, staged = tmp_path / "in", tmp_path / "staged"
+    inbox.mkdir()
+    gen.write_jsonl(inbox / "b0.jsonl", 30)
+    gen.write_jsonl(staged / "b1.jsonl", 20)
+    expected = sorted(
+        (e["id"], e["event_ts"], e["version"])
+        for f in (inbox / "b0.jsonl", staged / "b1.jsonl")
+        for e in map(json.loads, f.read_text().splitlines())
+    )
+
+    envelope = jsonl_as_kafka_envelope(spark, str(inbox), streaming=True)
+    q = (
+        parse_kafka_messages(envelope, CUSTOMER_EVENTS_SCHEMA)
+        .writeStream.format("memory")
+        .queryName("ptime_events")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(processingTime="1 second")
+        .start()
+    )
+
+    def arrived(n: int) -> int:
+        deadline = time.monotonic() + 90
+        got = 0
+        while time.monotonic() < deadline:
+            got = spark.sql("SELECT count(*) c FROM ptime_events").collect()[0].c
+            if got >= n:
+                break
+            time.sleep(0.5)
+        return got
+
+    try:
+        assert arrived(30) == 30
+        os.rename(staged / "b1.jsonl", inbox / "b1.jsonl")  # lands mid-run
+        assert arrived(50) == 50
+    finally:
+        q.stop()
+    got = sorted(
+        (r.id, r.event_ts, r.version)
+        for r in spark.sql("SELECT id, event_ts, version FROM ptime_events").collect()
+    )
+    assert got == expected
+
+
+def test_windowed_agg_on_rocksdb_state_store(spark, tmp_path):
+    """The bounded-state scale path (SURVEY.md §7.4): a watermarked
+    windowed aggregation runs on ``streaming.pipeline``'s RocksDB
+    state-store provider, so state spills to local disk instead of living
+    on the JVM heap when key cardinality outgrows memory."""
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, ROCKSDB_STATE_PROVIDER)
+    try:
+        d = tmp_path / "in"
+        d.mkdir()
+        rows = [
+            {"user": "a", "ts": "2024-01-15T10:05:00"},
+            {"user": "a", "ts": "2024-01-15T10:20:00"},
+            {"user": "b", "ts": "2024-01-15T11:40:00"},
+        ]
+        (d / "r.jsonl").write_text("\n".join(json.dumps(r) for r in rows))
+        stream = (
+            spark.readStream.schema("user string, ts string")
+            .json(str(d))
+            .select("user", F.to_timestamp("ts").alias("ts"))
+            .withWatermark("ts", "10 minutes")
+        )
+        counts = stream.groupBy(
+            F.window("ts", "1 hour").alias("win"), "user"
+        ).agg(F.count(F.lit(1)).alias("n"))
+        q = (
+            counts.writeStream.outputMode("complete")
+            .format("memory")
+            .queryName("rocksdb_counts")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+        got = {
+            (r.user, r.win.start.hour): r.n
+            for r in spark.sql("SELECT * FROM rocksdb_counts").collect()
+        }
+        assert got == {("a", 10): 2, ("b", 11): 1}
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def test_incremental_dedup_sink(spark, tmp_path):
