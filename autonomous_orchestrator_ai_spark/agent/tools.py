@@ -46,13 +46,21 @@ class PipelineTools:
     def apply_schema_remap(self, mapping: dict | None = None, **kwargs) -> dict:
         """Write/merge the versioned remap JSON with the applied:false
         handshake the ingest job honors next run (consumed contract:
-        reference tests/test_agent.py:26-50)."""
+        reference tests/test_agent.py:26-50). Re-issuing the current
+        directive (same merged mapping, same extra params) is a successful
+        no-op that keeps its version and leaves the file untouched."""
         path = self.ops_dir / "schema_remap.json"
         existing = json.loads(path.read_text()) if path.exists() else {}
+        merged = {**existing.get("mapping", {}), **(mapping or {})}
+        current = {
+            k: v for k, v in existing.items() if k not in ("version", "applied", "timestamp")
+        }
+        if existing and current == {"mapping": merged, **kwargs}:
+            return {"success": True, "version": existing["version"], "path": str(path)}
         version = int(existing.get("version", 0)) + 1
         doc = {
             "version": version,
-            "mapping": {**existing.get("mapping", {}), **(mapping or {})},
+            "mapping": merged,
             "applied": False,
             "timestamp": datetime.now().isoformat(),
             **kwargs,

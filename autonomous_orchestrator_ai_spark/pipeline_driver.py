@@ -65,7 +65,7 @@ def run_pipeline_once(
     work = Path(work_dir)
     ops = work / "ops"
     ops.mkdir(parents=True, exist_ok=True)
-    incidents = IncidentStore(spark, str(work / "incidents"))
+    incidents = IncidentStore(str(work / "incidents"))
     tools = PipelineTools(str(ops), incident_store=incidents)
     now_lit = F.to_timestamp(F.lit(now.strftime("%Y-%m-%d %H:%M:%S")))
 
@@ -117,7 +117,7 @@ def run_pipeline_once(
         context = DecisionContext(
             run_report=run_report,
             ge_results=ge_results,
-            recent_incidents=[r.asDict() for r in incidents.recent(days=7, now=now).collect()],
+            recent_incidents=incidents.recent(days=7, now=now),
         )
         decision = rule_based_decision(context)
         executed = tools.execute_actions(decision.actions)

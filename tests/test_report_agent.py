@@ -4,9 +4,11 @@
 from __future__ import annotations
 
 import json
+import time
 from datetime import datetime, timedelta
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from autonomous_orchestrator_ai_spark.agent.decision import (
@@ -21,6 +23,7 @@ from autonomous_orchestrator_ai_spark.operators.report import (
     run_report_from_df,
 )
 from autonomous_orchestrator_ai_spark.operators.transform import enrich_customer_events
+from autonomous_orchestrator_ai_spark.schemas import INCIDENTS_SCHEMA
 
 NOW = datetime(2024, 1, 15, 1, 0, 0)
 
@@ -100,6 +103,11 @@ def test_tools_and_decision_log(tmp_path):
     doc = json.loads((tmp_path / "ops" / "schema_remap.json").read_text())
     assert doc["version"] == 2 and doc["mapping"] == {"old_col": "new_col", "a": "b"}
     assert r1["success"] and r2["version"] == 2
+    # re-issuing the current directive is a successful no-op
+    before = (tmp_path / "ops" / "schema_remap.json").read_bytes()
+    r3 = tools.apply_schema_remap({"a": "b"})
+    assert r3["success"] and r3["version"] == 2
+    assert (tmp_path / "ops" / "schema_remap.json").read_bytes() == before
 
     # D8 quarantine metadata (tests/test_agent.py:52-78)
     q = tools.quarantine_records("country = 'INVALID'", reason="bad country")
@@ -145,74 +153,117 @@ def test_quarantine_directives_in_one_second_each_keep_their_own_dir(tmp_path):
 # -- incidents --------------------------------------------------------------
 
 
-def test_incident_store(spark, tmp_path):
-    store = IncidentStore(spark, str(tmp_path / "incidents"))
+def _lines(base: Path) -> list[dict]:
+    return [json.loads(l) for p in sorted(base.glob("log_*.jsonl")) for l in p.read_text().splitlines()]
+
+
+def test_incident_store(tmp_path):
+    store = IncidentStore(str(tmp_path / "incidents"))
     t0 = NOW
     i1 = store.log_incident("pipeline_failure", "spark job failed", severity="high", now=t0)
     i2 = store.log_incident("data_quality", "dq below threshold", severity="medium",
                             now=t0 + timedelta(hours=1))
     store.log_incident("data_quality", "stale", severity="low", now=t0 - timedelta(days=30))
 
-    # auto-escalation on high severity (reference D10)
-    latest = {r["id"]: r for r in store.latest_state().collect()}
-    assert latest[i1]["escalated"] is True
-    assert latest[i2]["escalated"] is False
-
     # recent window + ordering (reference O1: ORDER BY created_at DESC)
-    recent = store.recent(days=7, now=t0 + timedelta(hours=2)).collect()
+    recent = store.recent(days=7, now=t0 + timedelta(hours=2))
     assert [r["id"] for r in recent] == [i2, i1]
+    assert all(list(r) == INCIDENTS_SCHEMA.fieldNames() for r in recent)
+    assert recent[1]["created_at"] == t0 and recent[1]["resolved_at"] is None
     only_dq = store.recent(days=7, incident_type="data_quality",
-                           now=t0 + timedelta(hours=2)).collect()
+                           now=t0 + timedelta(hours=2))
     assert [r["id"] for r in only_dq] == [i2]
 
-    # update/resolve via append-log + latest-state window
+    # auto-escalation on high severity (reference D10)
+    latest = {r["id"]: r for r in recent}
+    assert latest[i1]["escalated"] is True and latest[i1]["escalated_at"] == t0
+    assert latest[i2]["escalated"] is False
+
+    # update/resolve append a version line; the last one wins
     store.resolve_incident(i1, notes="restarted", now=t0 + timedelta(hours=3))
-    latest = {r["id"]: r for r in store.latest_state().collect()}
+    latest = {r["id"]: r for r in store.recent(days=7, now=t0 + timedelta(hours=4))}
     assert latest[i1]["status"] == "resolved"
     assert latest[i1]["resolution_notes"] == "restarted"
-    assert store.log_df().count() == 4  # 3 inserts + 1 update version
-
-    # stats via one cube pass (reference A2-A5)
-    stats = store.stats(days=7, now=t0 + timedelta(hours=2))
-    assert stats["total_incidents"] == 2
-    assert stats["escalated_count"] == 1
-    assert stats["by_type"] == {"pipeline_failure": 1, "data_quality": 1}
-    assert stats["by_severity"] == {"high": 1, "medium": 1}
+    assert latest[i1]["resolved_at"] == t0 + timedelta(hours=3)
+    assert len(_lines(tmp_path / "incidents")) == 4  # 3 inserts + 1 update version
 
 
-def test_sparse_legacy_incident_reads_typed_nulls(spark, tmp_path):
-    """A legacy log line that lacks escalated_at, resolved_at and
-    created_by reads back with those fields as nulls of the declared
-    types, and its timestamps parsed."""
-    base = tmp_path / "inc"
-    base.mkdir()
-    rec = {
-        "id": "old-2", "incident_type": "x", "summary": "s", "context": "{}",
-        "severity": "low", "status": "open",
-        "created_at": "2023-12-01T00:00:00", "updated_at": "2023-12-02T06:30:00",
-        "escalated": False, "resolution_notes": None,
-    }
-    (base / "log.jsonl").write_text(json.dumps(rec) + "\n")
-    df = IncidentStore(spark, str(base)).latest_state()
-    types = dict(df.dtypes)
-    assert (types["escalated_at"], types["resolved_at"], types["created_by"]) == (
-        "timestamp", "timestamp", "string"
+def test_incident_update_with_an_earlier_clock_keeps_the_last_appended_version(tmp_path):
+    """An update's ``now`` may be earlier than the previous version's (an
+    injected or replayed clock); the last appended version still wins,
+    for ``recent`` and for the next ``update_incident`` alike."""
+    store = IncidentStore(str(tmp_path / "inc"))
+    i = store.log_incident("data_quality", "x", now=NOW)
+    store.update_incident(i, status="in_progress", now=NOW + timedelta(hours=2))
+    store.resolve_incident(i, notes="fixed", now=NOW + timedelta(hours=1))
+    [row] = store.recent(days=7, now=NOW + timedelta(hours=3))
+    assert (row["status"], row["updated_at"]) == ("resolved", NOW + timedelta(hours=1))
+
+    store.update_incident(i, severity="low", now=NOW + timedelta(minutes=30))
+    last = _lines(tmp_path / "inc")[-1]
+    assert (last["status"], last["resolution_notes"], last["severity"]) == (
+        "resolved", "fixed", "low"
     )
-    [row] = df.collect()
-    assert row["escalated_at"] is None
-    assert row["resolved_at"] is None
-    assert row["created_by"] is None
-    assert row["created_at"] == datetime(2023, 12, 1)
-    assert row["updated_at"] == datetime(2023, 12, 2, 6, 30)
-    assert row["escalated"] is False
+    [row] = store.recent(days=7, now=NOW + timedelta(hours=3))
+    assert (row["status"], row["severity"]) == ("resolved", "low")
 
 
-def test_incident_store_monthly_partitions(spark, tmp_path):
-    """VERDICT r4 item 8: updates touch exactly ONE partition file; reads
-    with a retention cutoff prune old months; a legacy unpartitioned
-    log.jsonl stays readable and updatable."""
+def test_recent_returns_the_naive_times_written_in_any_host_zone(tmp_path, monkeypatch):
+    """Timestamps come back exactly as written, and the window edge sits
+    at ``now - days`` on the same naive clock, whatever the host's zone."""
+    store = IncidentStore(str(tmp_path / "inc"))
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        inside = store.log_incident("a", "x", now=NOW - timedelta(days=7) + timedelta(hours=1))
+        store.log_incident("b", "y", now=NOW - timedelta(days=7) - timedelta(hours=1))
+        latest = store.log_incident("c", "z", now=NOW)
+        rows = store.recent(days=7, now=NOW)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert [r["id"] for r in rows] == [latest, inside]
+    assert rows[0]["created_at"] == NOW and rows[0]["updated_at"] == NOW
+    assert rows[1]["created_at"] == NOW - timedelta(days=7) + timedelta(hours=1)
+
+
+def test_torn_final_line_is_skipped_then_cut_by_the_next_append(tmp_path):
+    """A crash mid-append leaves a final line without its newline: an
+    append that never committed. Reads skip it, and the next append cuts
+    it off, so the next incident is not fused onto it and lost."""
     base = tmp_path / "inc"
-    store = IncidentStore(spark, str(base))
+    store = IncidentStore(str(base))
+    i1 = store.log_incident("data_quality", "x", now=NOW)
+    path = base / "log_2024-01.jsonl"
+    with path.open("a") as f:
+        f.write('{"id": "torn", "incident_type": "data_qu')
+    assert [r["id"] for r in store.recent(days=7, now=NOW)] == [i1]
+    store.update_incident(i1, status="in_progress", now=NOW)  # cuts the torn line
+    i2 = store.log_incident("data_quality", "y", now=NOW + timedelta(minutes=1))
+    assert path.read_text().endswith("\n")
+    assert [r["id"] for r in _lines(base)] == [i1, i1, i2]
+    assert [r["id"] for r in store.recent(days=7, now=NOW + timedelta(hours=1))] == [i2, i1]
+
+
+def test_malformed_committed_line_raises_naming_the_file_and_line(tmp_path):
+    base = tmp_path / "inc"
+    store = IncidentStore(str(base))
+    i1 = store.log_incident("data_quality", "x", now=NOW)
+    path = base / "log_2024-01.jsonl"
+    with path.open("a") as f:
+        f.write("not json\n")
+    store.log_incident("data_quality", "y", now=NOW)
+    for read in (lambda: store.recent(days=7, now=NOW),
+                 lambda: store.update_incident(i1, status="resolved", now=NOW)):
+        with pytest.raises(ValueError, match=rf"log_2024-01\.jsonl:2: malformed"):
+            read()
+
+
+def test_incident_store_monthly_partitions(tmp_path):
+    """VERDICT r4 item 8: updates touch exactly ONE partition file; reads
+    with a retention cutoff prune old months."""
+    base = tmp_path / "inc"
+    store = IncidentStore(str(base))
     t_jan = datetime(2024, 1, 10, 12, 0)
     t_mar = datetime(2024, 3, 5, 9, 0)
     i_jan = store.log_incident("pipeline_failure", "old", severity="low", now=t_jan)
@@ -236,34 +287,12 @@ def test_incident_store_monthly_partitions(spark, tmp_path):
     # file, and results are correct
     pruned = store._files_desc("2024-02")
     assert jan_f not in pruned and mar_f in pruned
-    recent = store.recent(days=30, now=t_mar + timedelta(days=1)).collect()
+    recent = store.recent(days=30, now=t_mar + timedelta(days=1))
     assert [r["id"] for r in recent] == [i_mar]
-    latest = {r["id"]: r for r in store.latest_state().collect()}
+    latest = {r["id"]: r for r in store.recent(days=90, now=t_mar + timedelta(days=1))}
     assert latest[i_jan]["status"] == "resolved"
     assert latest[i_mar]["status"] == "in_progress"
 
-    # legacy layout: a plain log.jsonl is read and its incidents update
-    # in place (appends go back to the legacy file)
-    legacy_base = tmp_path / "legacy"
-    legacy_base.mkdir()
-    legacy_store = IncidentStore(spark, str(legacy_base))
-    rec = {
-        "id": "old-1", "incident_type": "x", "summary": "s", "context": "{}",
-        "severity": "low", "status": "open",
-        "created_at": "2023-12-01T00:00:00", "updated_at": "2023-12-01T00:00:00",
-        "resolved_at": None, "escalated_at": None, "escalated": False,
-        "resolution_notes": None, "created_by": "t",
-    }
-    (legacy_base / "log.jsonl").write_text(json.dumps(rec) + "\n")
-    legacy_store.update_incident("old-1", status="resolved",
-                                 now=datetime(2024, 1, 1))
-    assert len((legacy_base / "log.jsonl").read_text().splitlines()) == 2
-    assert not list(legacy_base.glob("log_*.jsonl"))
-    state = legacy_store.latest_state().collect()
-    assert state[0]["status"] == "resolved"
-
     # unknown id still raises
-    import pytest as _pytest
-
-    with _pytest.raises(KeyError):
+    with pytest.raises(KeyError):
         store.update_incident("nope")
