@@ -10,7 +10,6 @@ JSONL audit trail is always written, adapters or not."""
 from __future__ import annotations
 
 import json
-import time
 from datetime import datetime
 from pathlib import Path
 
@@ -20,7 +19,10 @@ from autonomous_orchestrator_ai_spark.agent.transports import (
 
 
 class PipelineTools:
-    """Tool registry (reference D5, tools.py:289-306)."""
+    """Tool registry (reference D5, tools.py:289-306).
+
+    ``now`` is the clock every tool stamps with (the tick's injected
+    clock; None reads the wall clock at each call)."""
 
     def __init__(
         self,
@@ -30,6 +32,7 @@ class PipelineTools:
         email=None,  # transports.EmailNotifier
         airflow=None,  # transports.AirflowClient
         dag_id: str = "data_pipeline",
+        now: datetime | None = None,
     ):
         self.ops_dir = Path(ops_dir)
         self.ops_dir.mkdir(parents=True, exist_ok=True)
@@ -38,8 +41,12 @@ class PipelineTools:
         self.email = email
         self.airflow = airflow
         self.dag_id = dag_id
+        self.now = now
         self.notifications: list[dict] = []  # console-fallback audit trail
         self._quarantine_seq = 0
+
+    def _now(self) -> datetime:
+        return self.now or datetime.now()
 
     # -- D7: versioned schema-remap config (tools.py:91-134) ---------------
 
@@ -62,7 +69,7 @@ class PipelineTools:
             "version": version,
             "mapping": merged,
             "applied": False,
-            "timestamp": datetime.now().isoformat(),
+            "timestamp": self._now().isoformat(),
             **kwargs,
         }
         path.write_text(json.dumps(doc, indent=2))
@@ -84,7 +91,7 @@ class PipelineTools:
         sources.writers.write_quarantine). Each directive gets its own
         directory: the name carries a sequence number, and the create is
         exclusive, so two directives in one second never share one."""
-        ts = time.strftime("%Y%m%d_%H%M%S")
+        ts = self._now().strftime("%Y%m%d_%H%M%S")
         parent = self.ops_dir / "quarantine"
         parent.mkdir(exist_ok=True)
         while True:
@@ -99,7 +106,7 @@ class PipelineTools:
             "filter_condition": filter_condition,
             "source": source,
             "reason": reason,
-            "timestamp": datetime.now().isoformat(),
+            "timestamp": self._now().isoformat(),
             "status": "pending",
         }
         (qdir / "metadata.json").write_text(json.dumps(meta, indent=2))
@@ -112,7 +119,7 @@ class PipelineTools:
         REST protocol (latest dagRun -> clearTaskInstances); the JSONL
         request marker is appended either way as the audit record."""
         marker = self.ops_dir / "retrigger_requests.jsonl"
-        req = {"task_id": task_id, "requested_at": datetime.now().isoformat()}
+        req = {"task_id": task_id, "requested_at": self._now().isoformat()}
         result = {"success": True, "request": req}
         if self.airflow is not None:
             api = self.airflow.retrigger_task(self.dag_id, task_id)
@@ -130,7 +137,7 @@ class PipelineTools:
             "message": message,
             "severity": severity,
             "color": SEVERITY_COLORS.get(severity, SEVERITY_COLORS["info"]),
-            "timestamp": datetime.now().isoformat(),
+            "timestamp": self._now().isoformat(),
         }
         if self.slack is not None:
             note["slack"] = self.slack.send(message, severity=severity)
@@ -155,6 +162,7 @@ class PipelineTools:
             summary=summary,
             context=context,
             severity=severity,
+            now=self.now,
         )
         return {"success": True, "incident_id": incident_id}
 

@@ -57,6 +57,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from autonomous_orchestrator_ai_spark.routes import record_route
+
 #: U+001F unit separator: cannot occur in ``^[a-z0-9]+$`` words.
 SEP = "\x1f"
 #: the symbol boundary: two separators (see module docstring).
@@ -172,10 +174,18 @@ def bpe_train(
     then (a, b) asc — the deterministic tie-break both engines share),
     apply the merge. Stops early when no pair remains. A vocabulary of at
     most ``DRIVER_VOCAB_MAX`` words runs every round on the driver;
-    a larger one runs each round as Spark jobs (module docstring)."""
+    a larger one runs each round as Spark jobs (module docstring). The
+    choice is the ``bpe_merge_loop`` route record."""
     state = bpe_initial_state(bpe_word_counts(df, text_col)).localCheckpoint()
     vocab = state.select("seq", "cnt").limit(DRIVER_VOCAB_MAX + 1).collect()
-    if len(vocab) <= DRIVER_VOCAB_MAX:
+    route = record_route(
+        "bpe_merge_loop",
+        inputs={"vocab_rows_read": len(vocab)},
+        estimate=len(vocab),
+        budget=DRIVER_VOCAB_MAX,
+        chosen="driver" if len(vocab) <= DRIVER_VOCAB_MAX else "distributed",
+    )
+    if route == "driver":
         return _driver_merges([(r["seq"], int(r["cnt"])) for r in vocab], n_merges)
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, n_merges + 1):

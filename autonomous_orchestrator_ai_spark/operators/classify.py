@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from autonomous_orchestrator_ai_spark.functions.literals import array_literal
 from autonomous_orchestrator_ai_spark.functions.text import normalized_text
+from autonomous_orchestrator_ai_spark.routes import record_route
 
 __all__ = [
     "token_bucket",
@@ -326,7 +327,6 @@ def train_logistic_gd(
     rounds: int = 5,
     lr: float = 1.0,
     early_stop: bool = True,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Full-batch logistic-regression GD over sparse hashed features.
 
@@ -384,8 +384,8 @@ def train_logistic_gd(
     only linear multiplier of that penalty — tail rounds whose deltas
     fall below the 1e-9 grid are pure waste. The comparison is a
     driver-side dict equality over the already-collected model constant:
-    zero extra Spark work. ``stats``, when provided, records
-    ``rounds_run`` (the number of gradient rounds actually executed).
+    zero extra Spark work. The number of gradient rounds actually run is
+    the ``logistic_gd_rounds`` route record.
     """
     spark = feats.sparkSession
     # Narrow the persisted design matrix (r10, guide §2.3/§5 — the sf1000
@@ -420,7 +420,8 @@ def train_logistic_gd(
         (r["bucket"], 0.0)
         for r in feats.select("bucket").distinct().collect()
     ]
-    for rnd in range(rounds):
+    rounds_run = 0
+    for rounds_run in range(1, rounds + 1):
         w = spark.createDataFrame(w_rows, schema)
         resid = (
             fl.join(F.broadcast(w), "bucket")
@@ -450,8 +451,6 @@ def train_logistic_gd(
             ).alias("weight"),
         )
         new_rows = [(r["bucket"], r["weight"]) for r in new_w.collect()]
-        if stats is not None:
-            stats["rounds_run"] = rnd + 1
         # snapped fixed point: identical incoming and outgoing tables mean
         # every remaining round recomputes exactly this table (w' = f(w)
         # depends on nothing that changes between rounds), so breaking is
@@ -460,6 +459,13 @@ def train_logistic_gd(
         w_rows = new_rows
         if converged:
             break
+    record_route(
+        "logistic_gd_rounds",
+        inputs={"early_stop": early_stop},
+        estimate=None,
+        budget=rounds,
+        chosen=rounds_run,
+    )
     fl.unpersist()
     return spark.createDataFrame(w_rows, schema)
 

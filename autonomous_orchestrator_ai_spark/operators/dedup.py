@@ -57,9 +57,10 @@ from autonomous_orchestrator_ai_spark.operators.partitioning import (
     ensure_min_parallelism,
     repartition_for_exploding_join,
 )
+from autonomous_orchestrator_ai_spark.routes import record_route
 
 # ---------------------------------------------------------------------------
-# Bounded hot-key guard (shared by the df-cap / bucket-cap operators)
+# Bounded hot-key guard (the ngram_jaccard_pairs df cap)
 # ---------------------------------------------------------------------------
 
 # Above this many hot keys the guard falls back to a broadcast anti-join
@@ -71,8 +72,8 @@ _HOT_SET_LITERAL_CAP = 1024
 def _drop_hot_keys(frame: DataFrame, hot: DataFrame, on: list[str]) -> DataFrame:
     """Remove rows of ``frame`` whose key appears in ``hot``.
 
-    The hot frame is BOUNDED by construction at every call site: a key is
-    hot only if it accounts for > max_df rows, so |hot| <= rows / max_df —
+    The hot frame is BOUNDED by construction: a key is hot only if it
+    accounts for > max_df rows, so |hot| <= rows / max_df —
     driver-side collection is safe regardless of corpus size. That bound
     buys a cheaper plan than the always-anti-join form:
 
@@ -296,7 +297,13 @@ def _pin_small_payload(
     ``caches`` so the caller controls release. Result-invariant: the route
     only decides whether a recomputation is cached."""
     size = _source_input_bytes(source)
-    if size is None or size > PAYLOAD_PIN_BUDGET_BYTES:
+    if not record_route(
+        "payload_pin",
+        inputs={"source_input_bytes": size},
+        estimate=size,
+        budget=PAYLOAD_PIN_BUDGET_BYTES,
+        chosen=size is not None and size <= PAYLOAD_PIN_BUDGET_BYTES,
+    ):
         return frame
     pinned = frame.persist()
     caches.append(pinned)
@@ -322,23 +329,33 @@ def _nudge_shuffle_cleanup(spark) -> None:
         pass
 
 
-def slice_count(
-    est_bytes: int, budget_bytes: int | None, decision: dict | None = None
-) -> int:
+def slice_count(est_bytes: int, budget_bytes: int | None) -> int:
     """The one slice-count rule of the bounded-transient mode: how many
     sequential hash-slices keep one slice's ON-DISK transient under
     ``budget_bytes`` — ceil(est_bytes x SORT_MERGE_TRANSIENT_FACTOR /
     budget), at least 1, at most ``MAX_AUTO_SLICES``. The budget is a
     spill CAPACITY (unlike the guard budget's always-engage-at-0
     threshold), so None or <= 0 prices one pass: slicing into max pieces
-    on a 0-capacity host helps nothing. ``decision`` (optional) records
-    the transient factor the count was priced with."""
-    if decision is not None:
-        decision["transient_factor"] = SORT_MERGE_TRANSIENT_FACTOR
+    on a 0-capacity host helps nothing."""
     if budget_bytes is None or budget_bytes <= 0:
         return 1
     n = -(-(est_bytes * SORT_MERGE_TRANSIENT_FACTOR) // budget_bytes)
     return min(MAX_AUTO_SLICES, max(1, n))
+
+
+def _priced_slices(name: str, rows: int, row_bytes: int, budget_bytes: int) -> int:
+    """``slice_count`` of ``rows`` candidate rows at ``row_bytes`` each,
+    reported as route ``name``."""
+    est = rows * row_bytes
+    return record_route(
+        name,
+        inputs=dict(
+            rows=rows, row_bytes=row_bytes, transient_factor=SORT_MERGE_TRANSIENT_FACTOR
+        ),
+        estimate=est,
+        budget=budget_bytes,
+        chosen=slice_count(est, budget_bytes),
+    )
 
 
 def _sequence_slices(
@@ -447,57 +464,39 @@ def lsh_candidate_pairs(
     id_col: str = "doc_id",
     num_hashes: int = 8,
     bands: int = 4,
-    max_bucket_size: int | None = None,
     max_bucket_sample: int | None = None,
     sample_budget_bytes: int | None = None,
     bytes_per_candidate_row: int = 20,
-    guard_decision: dict | None = None,
     caches: list | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, dict | None]:
     """LSH banding: concat each band's minhashes -> md5 band key -> self-join
     on (band_id, band_key) -> distinct (a, b) candidate pairs with a < b.
+    Returns ``(pairs, preflight)``; ``preflight`` is None unless a budget
+    is set (see below).
 
     The self-join shuffles on the band key; docs only meet if they collide in
     at least one band — this is the scale path (no all-pairs compare).
 
-    ``max_bucket_size`` drops band buckets larger than the cap before the
-    self-join — the banding analog of ``ngram_jaccard_pairs``'s
-    ``max_shingle_df`` guard. A degenerate bucket of B docs emits B·(B-1)/2
-    candidates (one hot boilerplate signature can dominate the whole job);
-    capped buckets bound the per-bucket cost at cap². The trade is
-    documented and deliberate: docs meeting ONLY inside a dropped bucket
-    (e.g. thousands of byte-identical boilerplate docs) lose their pair —
-    run exact/fingerprint dedup BEFORE LSH so identical docs never reach
-    the near-dup stage, which is the standard pipeline order.
-
-    ``max_bucket_sample`` is the gentler guard (the dedup twin of
+    ``max_bucket_sample`` is the hot-bucket guard (the dedup twin of
     similarity.py's ``max_bucket_candidates``, born from the round-7 sf100
-    probe): instead of dropping a hot bucket it keeps a DETERMINISTIC
-    per-bucket sample — the ``max_bucket_sample`` members with the
-    smallest bucket-salted md5 draw, id-tiebroken (``_bucket_sample_cap``)
-    — so per-bucket pair output is bounded by cap² while pairs between
-    sampled members still surface the bucket's duplicate mass. The same
-    QUALIFY window replays bit-for-bit in a DuckDB oracle. Use when hot
-    buckets carry REAL (mass-duplicated) content whose cluster should stay
-    partially connected; use ``max_bucket_size`` when hot buckets are
-    known junk.
+    probe): a degenerate bucket of B docs emits B·(B-1)/2 candidates, so
+    the guard keeps a DETERMINISTIC per-bucket sample — the
+    ``max_bucket_sample`` members with the smallest bucket-salted md5
+    draw, id-tiebroken (``_bucket_sample_cap``) — bounding per-bucket pair
+    output at cap² while pairs between sampled members still surface the
+    bucket's duplicate mass. The same QUALIFY window replays bit-for-bit
+    in a DuckDB oracle.
 
     ``sample_budget_bytes`` (r8, VERDICT r7 item 1) turns the sample cap
-    into a COST-ROUTED guard: when set (together with
-    ``max_bucket_sample``), a one-aggregation pre-flight over the banded
+    into a COST-ROUTED guard: a one-aggregation pre-flight over the banded
     index (``lsh_band_cost_profile``) estimates the band join's candidate
     shuffle and enables the cap ONLY when the estimate exceeds the budget
     — below the crossover the plan is bit-identical to the unguarded form
     (no window, no sort, zero overhead beyond the 1-row profile collect).
-    ``guard_decision`` (optional dict) receives the estimate, budget and
-    routing outcome for callers/oracles that need to replay the decision.
-    As of r9 (ADVICE r8) the pre-flight runs whenever
-    ``sample_budget_bytes`` is set, with or without ``max_bucket_sample``
-    — previously a budget without a cap silently skipped the pre-flight
-    entirely, so downstream guards keyed on the decision never engaged.
-    ``guard_decision["guard_engaged"]`` reports the estimate-vs-budget
-    outcome; ``cap_enabled`` stays the cap-specific bit (engaged AND a
-    cap value was supplied).
+    A budget needs a cap value to enable (``ValueError`` otherwise: a
+    budget with no cap would run unguarded at every scale). The choice is
+    one ``lsh_guard_cap`` route record, and ``preflight`` hands the
+    profile plus ``capped`` (the choice) back to the caller.
 
     ``caches`` (r9, ADVICE r8): if a list is passed, the persisted
     banded-index handle is appended to it so bounded-transient callers
@@ -505,6 +504,12 @@ def lsh_candidate_pairs(
     last slice is checkpointed; without it the cache stayed pinned for
     the session in exactly the disk-bounded mode it matters most.
     """
+    if sample_budget_bytes is not None and max_bucket_sample is None:
+        raise ValueError(
+            "lsh_candidate_pairs: sample_budget_bytes requires "
+            "max_bucket_sample (a budget with no cap value would silently "
+            "run unguarded at every scale)"
+        )
     rows_per_band = num_hashes // bands
     # ONE pass: explode an array of (band_id, band_key) structs instead of
     # unioning per-band branches (a union would recompute the signature
@@ -521,17 +526,7 @@ def lsh_candidate_pairs(
     banded = signatures.select(
         F.col(id_col), F.explode(F.array(*band_structs)).alias("__band")
     ).select(F.col(id_col), F.col("__band.band_id"), F.col("__band.band_key"))
-    if max_bucket_size is not None:
-        # the HOT buckets are few by definition (|hot| <= rows / cap);
-        # _drop_hot_keys collects them and short-circuits the usually-empty
-        # case instead of always paying a broadcast anti-join
-        hot = (
-            banded.groupBy("band_id", "band_key")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > max_bucket_size)
-            .select("band_id", "band_key")
-        )
-        banded = _drop_hot_keys(banded, hot, ["band_id", "band_key"])
+    preflight = None
     if sample_budget_bytes is not None:
         # cost-routed guard: persist the banded index FIRST (the profile
         # aggregation and both self-join sides all read the same cache,
@@ -545,14 +540,19 @@ def lsh_candidate_pairs(
         profile = lsh_band_cost_profile(
             banded, bytes_per_candidate_row, cap=max_bucket_sample
         )
-        enabled = profile["est_shuffle_bytes"] > sample_budget_bytes
-        cap_on = enabled and max_bucket_sample is not None
-        if guard_decision is not None:
-            guard_decision.update(profile)
-            guard_decision["budget_bytes"] = sample_budget_bytes
-            guard_decision["guard_engaged"] = enabled
-            guard_decision["cap_enabled"] = cap_on
-        if cap_on:
+        capped = record_route(
+            "lsh_guard_cap",
+            inputs={
+                **profile,
+                "bytes_per_candidate_row": bytes_per_candidate_row,
+                "cap": max_bucket_sample,
+            },
+            estimate=profile["est_shuffle_bytes"],
+            budget=sample_budget_bytes,
+            chosen=profile["est_shuffle_bytes"] > sample_budget_bytes,
+        )
+        preflight = {**profile, "capped": capped}
+        if capped:
             banded = _bucket_sample_cap(banded, id_col, max_bucket_sample)
     else:
         if max_bucket_sample is not None:
@@ -573,7 +573,7 @@ def lsh_candidate_pairs(
 
     a = banded.alias("a")
     b_ = banded.alias("b")
-    return (
+    pairs = (
         a.join(
             b_,
             (F.col("a.band_id") == F.col("b.band_id"))
@@ -586,14 +586,11 @@ def lsh_candidate_pairs(
         )
         .distinct()
     )
+    return pairs, preflight
 
 
 def _restrict_to_candidates(
-    source: DataFrame,
-    cands: DataFrame,
-    id_col: str,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
+    source: DataFrame, cands: DataFrame, id_col: str
 ) -> DataFrame:
     """Semi-join ``source`` down to rows whose id appears in a candidate
     pair — the verify-stage input reducer every LSH family shares.
@@ -617,8 +614,8 @@ def _restrict_to_candidates(
     semi-join keeps everything); they can never exceed it.
     """
     ids = (
-        cands.select(F.col(a_col).alias(id_col))
-        .union(cands.select(F.col(b_col).alias(id_col)))
+        cands.select(F.col("id_a").alias(id_col))
+        .union(cands.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
     return source.join(ids, id_col, "left_semi")
@@ -634,7 +631,6 @@ def minhash_near_duplicates(
     jaccard_threshold: float = 0.5,
     max_bucket_sample: int | None = None,
     sample_budget_bytes: int | None = None,
-    guard_decision: dict | None = None,
     verify_budget_bytes: int | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: signatures -> banded candidates ->
@@ -673,7 +669,8 @@ def minhash_near_duplicates(
     measured scale: 57.6 GB priced at sf1000 vs the 64 GiB default
     budget) keeps the plan BIT-IDENTICAL to the unsliced form; the
     slicing itself is result-invariant (disjoint hash-slice union), so
-    the oracle never sees the decision."""
+    the oracle never sees the decision. m is the
+    ``minhash_verify_slices`` route record."""
     source = df
     df = ensure_min_parallelism(df)
     shingles = df.select(
@@ -694,9 +691,8 @@ def minhash_near_duplicates(
     )
     # persisted: consumed by the two id-projections of the semi-join AND
     # as the verify join's left side (pair-scale rows, bounded)
-    decision: dict = guard_decision if guard_decision is not None else {}
     upstream_caches: list[DataFrame] = []
-    cands = lsh_candidate_pairs(
+    cands, _ = lsh_candidate_pairs(
         sigs,
         id_col,
         num_hashes,
@@ -704,22 +700,21 @@ def minhash_near_duplicates(
         max_bucket_sample=max_bucket_sample,
         sample_budget_bytes=sample_budget_bytes,
         bytes_per_candidate_row=MINHASH_CAND_ROW_BYTES,
-        guard_decision=decision,
         caches=upstream_caches,
-    ).persist()
+    )
+    cands = cands.persist()
     n_slices = 1
     if verify_budget_bytes is not None and verify_budget_bytes > 0:
         # runtime-priced sequencing decision (see docstring): the
         # candidate cache is materialized by this count and reused by
         # every consumer below, so the pricing costs no extra pass. A
         # non-positive budget prices one pass, so it skips the count.
-        n_cands = cands.count()
-        n_slices = slice_count(
-            n_cands * MINHASH_VERIFY_ROW_BYTES, verify_budget_bytes, decision
+        n_slices = _priced_slices(
+            "minhash_verify_slices",
+            cands.count(),
+            MINHASH_VERIFY_ROW_BYTES,
+            verify_budget_bytes,
         )
-        decision["verify_cand_rows"] = n_cands
-        decision["verify_budget_bytes"] = verify_budget_bytes
-        decision["auto_verify_slices"] = n_slices
 
     sh_named = shingles.withColumnRenamed("__shingles", "__sh")
 
@@ -817,7 +812,7 @@ def edit_verified_near_duplicates(
         shingle_k=shingle_k,
         precomputed_shingles=True,
     )
-    cands = lsh_candidate_pairs(sigs, id_col, num_hashes, bands).persist()
+    cands = lsh_candidate_pairs(sigs, id_col, num_hashes, bands)[0].persist()
     cand_t = _restrict_to_candidates(
         prepared.select(F.col(id_col), "__t"), cands, id_col
     ).persist()
@@ -1017,7 +1012,6 @@ def ngram_containment_pairs(
     id_col: str = "doc_id",
     shingle_k: int = 3,
     threshold: float = 0.8,
-    max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Asymmetric shingle *containment* for every pair sharing a shingle:
     ``C = |A ∩ B| / min(|A|, |B|)`` (Broder 1997's containment measure).
@@ -1031,26 +1025,11 @@ def ngram_containment_pairs(
     contained doc's content survives inside it.
 
     Plan shape is identical to ngram_jaccard_pairs (same inverted-index
-    self-join on the cached, join-key-partitioned shingle table, same
-    optional hot-shingle df-guard), so every scale argument there —
-    linear explode, bounded candidate generation under the guard, no
-    all-pairs — carries over unchanged.
+    self-join on the cached, join-key-partitioned shingle postings), so
+    every scale argument there — linear explode, no all-pairs — carries
+    over unchanged.
     """
-    df = ensure_min_parallelism(df)
-    exploded = repartition_for_exploding_join(
-        df.select(
-            F.col(id_col), F.explode(word_shingles(text_col, shingle_k)).alias("sh")
-        ).distinct(),
-        "sh",
-    ).persist()
-    if max_shingle_df is not None:
-        hot = (
-            exploded.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_shingle_df)
-            .select("sh")
-        )
-        exploded = _drop_hot_keys(exploded, hot, ["sh"])
+    exploded = build_shingle_postings(df, text_col, id_col, shingle_k)
     sizes = exploded.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
 
     a = exploded.select(F.col(id_col).alias("id_a"), "sh")
@@ -1101,7 +1080,6 @@ def winnowing_near_duplicates(
     k: int = 8,
     w: int = 4,
     containment: float = 0.6,
-    max_hash_df: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs by winnowing-sketch containment:
     (id_a, id_b, shared, containment) where containment =
@@ -1115,16 +1093,10 @@ def winnowing_near_duplicates(
     different documents; the min-size denominator makes it a containment
     measure (a short doc fully embedded in a long one scores 1.0).
 
-    ``max_hash_df`` drops sketch hashes appearing in more than that many
-    docs before the self-join (the ``max_shingle_df`` family of guards).
-    Sketch SIZES (the containment denominator) are computed before the
-    drop, so surviving pairs score lower, never higher (guarded output ⊆
-    unguarded output). NOTE: only effective on high-entropy corpora where
-    near-dup evidence rides rare grams; on low-entropy text (shared
-    boilerplate vocabulary) the signal hashes ARE the common hashes and a
-    df cap destroys recall — there, use
-    ``winnowing_near_duplicates_lsh`` instead, which replaces the
-    inverted-index join entirely."""
+    At scale use ``winnowing_near_duplicates_lsh``, which replaces the
+    inverted-index join entirely: on low-entropy text the high-df hashes
+    the join's cost concentrates on carry the near-dup signal, so no df
+    cap can bound the join without destroying recall."""
     from autonomous_orchestrator_ai_spark.functions.text import winnowing_sketch
 
     df = ensure_min_parallelism(df)
@@ -1140,14 +1112,6 @@ def winnowing_near_duplicates(
         ),
         "__h",
     ).persist()
-    if max_hash_df is not None:
-        hot = (
-            exploded.groupBy("__h")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_hash_df)
-            .select("__h")
-        )
-        exploded = _drop_hot_keys(exploded, hot, ["__h"])
     a = exploded.select(
         F.col(id_col).alias("id_a"), F.col("__sz").alias("__sza"), "__h"
     )
@@ -1179,12 +1143,10 @@ def winnowing_near_duplicates_lsh(
     containment: float = 0.6,
     num_hashes: int = 8,
     bands: int = 4,
-    max_bucket_size: int | None = None,
     max_bucket_sample: int | None = None,
     screen_k: int | None = None,
     screen_cut: tuple[int, int] | None = None,
     guard_budget_bytes: int | None = None,
-    guard_decision: dict | None = None,
     slice_budget_bytes: int | None = None,
 ) -> DataFrame:
     """Scale form of ``winnowing_near_duplicates``: MinHash-LSH over the
@@ -1236,7 +1198,9 @@ def winnowing_near_duplicates_lsh(
     ``WINNOW_CAND_ROW_BYTES`` prices the UNGUARDED plan's verify rows,
     which is what the routing decision is deciding against. The identical
     integer estimate replays in the DuckDB oracle, so the route can never
-    diverge. ``guard_decision`` receives the estimate and outcome.
+    diverge. A budget requires ``max_bucket_sample`` (``ValueError``
+    from ``lsh_candidate_pairs``); the choice is its ``lsh_guard_cap``
+    route record.
 
     ``slice_budget_bytes`` (r8 — the sf1000 ENOSPC diagnosis; auto-routed
     and phases hoisted r9) is the bounded-transient mode: past the
@@ -1260,7 +1224,8 @@ def winnowing_near_duplicates_lsh(
     ``WINNOW_CAND_ROW_BYTES``, since the screen typically discards most
     candidates. One slice keeps the single-pass plan, so small corpora
     are untouched. Requires ``guard_budget_bytes`` (the pre-flight must
-    run).
+    run). The counts are the ``winnow_screen_slices`` and
+    ``winnow_verify_slices`` route records.
 
     Recall trades (all documented, none affecting reported values): banded
     MinHash misses low-Jaccard/high-containment pairs (unequal sizes);
@@ -1270,18 +1235,6 @@ def winnowing_near_duplicates_lsh(
     0.45 cut. Surviving pairs always carry exact (shared, containment)."""
     from autonomous_orchestrator_ai_spark.functions.text import winnowing_sketch
 
-    if guard_budget_bytes is not None and max_bucket_sample is None:
-        # r9, ADVICE r8 (medium): a budget without a cap used to skip the
-        # pre-flight entirely inside lsh_candidate_pairs, so cap_enabled
-        # stayed False, screen_k was silently ignored, and NO guard ever
-        # engaged — exactly the ENOSPC regime the guards exist for. Fail
-        # loudly instead of silently routing to the unguarded plan.
-        raise ValueError(
-            "winnowing_near_duplicates_lsh: guard_budget_bytes requires "
-            "max_bucket_sample (the cost-routed guards cap hot buckets AND "
-            "screen candidates together; a budget with no cap value would "
-            "silently run unguarded at every scale)"
-        )
     source = df
     df = ensure_min_parallelism(df)
     # numeric sketch: verify/screen arithmetic on bigints (array_intersect
@@ -1308,28 +1261,24 @@ def winnowing_near_duplicates_lsh(
         num_hashes=num_hashes,
         precomputed_shingles=True,
     )
-    decision: dict = guard_decision if guard_decision is not None else {}
     upstream_caches: list[DataFrame] = []
-    cands = lsh_candidate_pairs(
+    cands, preflight = lsh_candidate_pairs(
         sigs,
         id_col,
         num_hashes,
         bands,
-        max_bucket_size=max_bucket_size,
         max_bucket_sample=max_bucket_sample,
         sample_budget_bytes=guard_budget_bytes,
         bytes_per_candidate_row=WINNOW_CAND_ROW_BYTES,
-        guard_decision=decision,
         caches=upstream_caches,
-    ).persist()
+    )
+    cands = cands.persist()
     # one pre-flight, one routing decision, BOTH guards: the estimate
     # prices the unguarded verify's candidate volume, which is exactly
     # what the cap bounds upstream and the screen bounds downstream
-    screen_on = screen_k is not None and (
-        guard_budget_bytes is None or decision.get("cap_enabled", False)
-    )
+    screen_on = screen_k is not None and (preflight is None or preflight["capped"])
     n_slices = 1
-    if slice_budget_bytes is not None and decision:
+    if slice_budget_bytes is not None and preflight is not None:
         # auto-route the slice count from the pre-flight (r9, VERDICT r8
         # item 2): price the transient of the branch the guards chose —
         # guarded = capped candidates x screen-row bytes, unguarded =
@@ -1337,16 +1286,13 @@ def winnowing_near_duplicates_lsh(
         # arithmetic on already-collected profile numbers: no extra job,
         # and the slicing is result-invariant so nothing downstream (or
         # in the oracle) depends on where N lands.
-        if decision.get("cap_enabled", False):
-            est_transient = (
-                decision.get("est_capped_candidate_rows", 0) * SCREEN_ROW_BYTES
-            )
+        if preflight["capped"]:
+            rows, row_bytes = preflight["est_capped_candidate_rows"], SCREEN_ROW_BYTES
         else:
-            est_transient = decision.get("est_shuffle_bytes", 0)
-        n_slices = slice_count(est_transient, slice_budget_bytes, decision)
-        decision["est_transient_bytes"] = est_transient
-        decision["slice_budget_bytes"] = slice_budget_bytes
-        decision["auto_verify_slices"] = n_slices
+            rows, row_bytes = preflight["est_candidate_rows"], WINNOW_CAND_ROW_BYTES
+        n_slices = _priced_slices(
+            "winnow_screen_slices", rows, row_bytes, slice_budget_bytes
+        )
     num, den = screen_cut if screen_cut is not None else (9, 20)
 
     def _bk_table(cands_in: DataFrame) -> DataFrame:
@@ -1482,13 +1428,12 @@ def winnowing_near_duplicates_lsh(
             .repartition(F.col(id_col))
             .persist()
         )
-        n_pairs = target.count()
-        m = slice_count(
-            n_pairs * WINNOW_CAND_ROW_BYTES, slice_budget_bytes, decision
+        m = _priced_slices(
+            "winnow_verify_slices",
+            target.count(),
+            WINNOW_CAND_ROW_BYTES,
+            slice_budget_bytes,
         )
-        decision["verify_pairs"] = n_pairs
-        decision["screen_slices"] = n_slices if screen_on else 0
-        decision["verify_slices_effective"] = m
         result = _sequence_slices(
             target, m, lambda sl: _verify_join(sl, skr_all)
         )
@@ -1595,32 +1540,15 @@ def simhash_duplicate_groups(
     text_col: str = "text",
     id_col: str = "doc_id",
     bits: int = 16,
-    max_members: int | None = None,
 ) -> DataFrame:
     """Docs sharing an identical SimHash signature (Hamming distance 0):
-    (simhash, n_docs, doc_ids sorted) for groups of size >= 2.
-
-    ``max_members`` caps the LISTED ids per group (n_docs stays exact) —
-    set it at corpus scale, where one boilerplate signature shared by
-    millions of docs would otherwise put a multi-GB array in a single
-    row. The cap bounds the AGGREGATION STATE, not just the output: ids
-    are ranked per group first and only the first ``max_members`` enter
-    collect_list (nulls are skipped), so no task ever buffers the full
-    membership. None (default) lists every member."""
-    sigs = simhash_signature(df, text_col, id_col, bits)
-    if max_members is None:
-        members = F.collect_list(id_col)
-    else:
-        w = Window.partitionBy("simhash").orderBy(id_col)
-        sigs = sigs.withColumn("__rn", F.row_number().over(w))
-        members = F.collect_list(
-            F.when(F.col("__rn") <= max_members, F.col(id_col))
-        )
+    (simhash, n_docs, doc_ids sorted) for groups of size >= 2."""
     return (
-        sigs.groupBy("simhash")
+        simhash_signature(df, text_col, id_col, bits)
+        .groupBy("simhash")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sort_array(members).alias("doc_ids"),
+            F.sort_array(F.collect_list(id_col)).alias("doc_ids"),
         )
         .filter(F.col("n_docs") >= 2)
     )

@@ -465,30 +465,14 @@ def dedup_clusters(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_members: int | None = None,
 ) -> DataFrame:
     """Duplicate clusters from near-dup pairs: (component, n_docs,
     doc_ids) — one row per connected component, members sorted. Every
-    cluster has >= 2 members by construction (each node has an edge).
-
-    ``max_members`` caps the LISTED ids per cluster (n_docs stays exact):
-    at corpus scale one mega-component (boilerplate that chains everything
-    together) would otherwise put millions of ids in a single row. The
-    cap bounds the aggregation STATE — members are ranked per component
-    first and only the first ``max_members`` enter collect_list — not
-    just the output. None (default) lists every member."""
+    cluster has >= 2 members by construction (each node has an edge)."""
     cc = connected_components(pairs, src, dst)
-    if max_members is None:
-        members = F.collect_list("node")
-    else:
-        w = Window.partitionBy("component").orderBy("node")
-        cc = cc.withColumn("__rn", F.row_number().over(w))
-        members = F.collect_list(
-            F.when(F.col("__rn") <= max_members, F.col("node"))
-        )
     return cc.groupBy("component").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.array_join(F.sort_array(members), ",").alias("doc_ids"),
+        F.array_join(F.sort_array(F.collect_list("node")), ",").alias("doc_ids"),
     )
 
 

@@ -179,9 +179,12 @@ class IncidentStore:
     ) -> list[dict]:
         """Current state of the recent incidents, newest first (reference
         incident_store.py:200-234: WHERE created_at >= cutoff [AND type]
-        ORDER BY created_at DESC). Each row has the INCIDENTS_SCHEMA keys,
-        its timestamps as the naive datetimes written."""
-        cutoff = (now or datetime.now()) - timedelta(days=days)
+        ORDER BY created_at DESC), bounded above by ``now``: an incident
+        created after it is not yet recent. Each row has the
+        INCIDENTS_SCHEMA keys, its timestamps as the naive datetimes
+        written."""
+        now = now or datetime.now()
+        cutoff = now - timedelta(days=days)
         rows = []
         for path in self._files_desc(cutoff.isoformat()[:7]):
             for rec in _latest_in(path).values():
@@ -189,7 +192,7 @@ class IncidentStore:
                 for name in TIMESTAMP_FIELDS:
                     if row[name] is not None:
                         row[name] = datetime.fromisoformat(row[name])
-                if row["created_at"] >= cutoff and (
+                if cutoff <= row["created_at"] <= now and (
                     not incident_type or row["incident_type"] == incident_type
                 ):
                     rows.append(row)

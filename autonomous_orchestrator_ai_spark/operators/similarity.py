@@ -206,7 +206,7 @@ def lsh_bucketed_topk(
     """Approximate top-k: candidates restricted to LSH bucket collisions.
 
     ``max_bucket_candidates``: HOT-BUCKET GUARD (the similarity twin of
-    dedup.py's ``max_bucket_size``/``max_shingle_df``). auto_planes holds
+    dedup.py's ``max_bucket_sample``/``max_shingle_df``). auto_planes holds
     the EXPECTED bucket size constant, but expectation is not a bound:
     a corpus with mass near-duplication (the realistic 100 TB shape — the
     sf100 probe's synthetic corpus carries ~1000 near-copies per base

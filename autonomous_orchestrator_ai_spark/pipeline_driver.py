@@ -66,7 +66,7 @@ def run_pipeline_once(
     ops = work / "ops"
     ops.mkdir(parents=True, exist_ok=True)
     incidents = IncidentStore(str(work / "incidents"))
-    tools = PipelineTools(str(ops), incident_store=incidents)
+    tools = PipelineTools(str(ops), incident_store=incidents, now=now)
     now_lit = F.to_timestamp(F.lit(now.strftime("%Y-%m-%d %H:%M:%S")))
 
     try:

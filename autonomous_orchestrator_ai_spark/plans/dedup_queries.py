@@ -21,6 +21,7 @@ from autonomous_orchestrator_ai_spark.operators.dedup import (
     simhash_duplicate_groups,
 )
 from autonomous_orchestrator_ai_spark.plans.registry import register, table
+from autonomous_orchestrator_ai_spark.routes import record_route
 
 # --- shared DuckDB fragments (mirror functions/text.py exactly) -----------
 
@@ -1239,9 +1240,16 @@ def _spill_budget_bytes() -> int:
     return _int_env(SPILL_BUDGET_ENV, DEFAULT_SPILL_BUDGET_BYTES)
 
 
-def _exact_split_route(est_shuffle_bytes: int) -> str:
-    return (
-        "exact" if est_shuffle_bytes <= _spill_budget_bytes() else "lsh"
+def _exact_split_route(sum_df_sq: int) -> str:
+    """"exact" when the inverted-index join's priced shuffle (Σ df² x
+    ``PAIR_ROW_BYTES``) fits the spill budget, else "lsh"."""
+    est, budget = PAIR_ROW_BYTES * sum_df_sq, _spill_budget_bytes()
+    return record_route(
+        "exact_split",
+        inputs={"sum_df_sq": sum_df_sq, "pair_row_bytes": PAIR_ROW_BYTES},
+        estimate=est,
+        budget=budget,
+        chosen="exact" if est <= budget else "lsh",
     )
 
 
@@ -1265,7 +1273,7 @@ def _auto_split_oracle(sf_dir: str) -> str:
     ).fetchone()[0]
     name = (
         "cluster_safe_split_report"
-        if _exact_split_route(PAIR_ROW_BYTES * int(sum_df_sq)) == "exact"
+        if _exact_split_route(int(sum_df_sq)) == "exact"
         else "cluster_safe_split_report_lsh"
     )
     return registry.ORACLES[name]
@@ -1308,7 +1316,7 @@ def cluster_safe_split_report_auto(spark: SparkSession, sf_dir: str) -> DataFram
         bytes_per_pair_row=PAIR_ROW_BYTES,
         _exploded=postings,
     )
-    if _exact_split_route(est["est_shuffle_bytes"]) == "exact":
+    if _exact_split_route(est["sum_df_sq"]) == "exact":
         return cluster_safe_split_report(spark, sf_dir, _postings=postings)
     postings.unpersist()
     return cluster_safe_split_report_lsh(spark, sf_dir)

@@ -40,6 +40,7 @@ from autonomous_orchestrator_ai_spark.plans.registry import (
 )
 from autonomous_orchestrator_ai_spark.plans.scoring_queries import _TOKENS_CTE
 from autonomous_orchestrator_ai_spark.plans.similarity_queries import _cos_sql
+from autonomous_orchestrator_ai_spark.routes import record_route
 
 #: the pinned bag-of-words query for the BM25 demo — common + mid + rare
 #: corpus terms so idf actually spreads
@@ -1017,7 +1018,13 @@ def _screen_multiprobe_route(n_vectors: int, n_planes: int) -> bool:
         * SCREENING_BUCKET_CAP
         * _SCREEN_PROBE_ROW_BYTES
     )
-    return est <= _SCREEN_PROBE_BUDGET_BYTES
+    return record_route(
+        "screen_multiprobe",
+        inputs={"n_vectors": n_vectors, "n_planes": n_planes},
+        estimate=est,
+        budget=_SCREEN_PROBE_BUDGET_BYTES,
+        chosen=est <= _SCREEN_PROBE_BUDGET_BYTES,
+    )
 
 
 #: rescore-after-dedup route (r9, performance-only — the two branches are
@@ -1042,7 +1049,13 @@ _SCREEN_DIM = 64
 
 def _screen_rescore_route(n_vectors: int, dim: int = _SCREEN_DIM) -> bool:
     est = 2 * n_vectors * (dim * 8 + _RESCORE_VEC_ROW_OVERHEAD)
-    return est <= _SCREEN_RESCORE_BUDGET_BYTES
+    return record_route(
+        "screen_rescore",
+        inputs={"n_vectors": n_vectors, "dim": dim},
+        estimate=est,
+        budget=_SCREEN_RESCORE_BUDGET_BYTES,
+        chosen=est <= _SCREEN_RESCORE_BUDGET_BYTES,
+    )
 
 
 def _lsh_disagreement_oracle(sf_dir: str) -> str:

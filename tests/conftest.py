@@ -53,3 +53,23 @@ def events_fixture(spark):
             event_ts=ms("2023-05-01T00:00:00"), version=1),
     ]
     return spark.createDataFrame(rows)
+
+
+@pytest.fixture()
+def routes(caplog):
+    """``routes(name)`` -> the ``route`` fields of every record named
+    ``name`` emitted so far in the test (``routes.clear()`` forgets them)."""
+    import logging
+
+    from autonomous_orchestrator_ai_spark.routes import LOGGER
+
+    caplog.set_level(logging.INFO, logger=LOGGER.name)
+
+    def of(name: str) -> list[dict]:
+        return [
+            r.route for r in caplog.records
+            if r.name == LOGGER.name and r.route["name"] == name
+        ]
+
+    of.clear = caplog.clear
+    return of

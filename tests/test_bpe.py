@@ -114,7 +114,7 @@ def test_apply_merge_chains_adjacent_occurrences(spark):
     assert out == _seq("aa", "aa", "a")
 
 
-def test_train_pins_known_merges(spark, monkeypatch):
+def test_train_pins_known_merges(spark, monkeypatch, routes):
     # 5x "abab", 2x "abc": pairs round1 -> (a,b):12, (b,a):5, (b,c):2
     docs = _docs(spark, ["abab abab abab abab abab abc abc"])
     merges = _train_both_routes(monkeypatch, docs, 3)
@@ -122,6 +122,13 @@ def test_train_pins_known_merges(spark, monkeypatch):
     # after merging 'ab': "ab|ab" -> pair (ab,ab):5 ; "ab|c" -> (ab,c):2
     assert merges[1][1:] == ("ab", "ab", 5)
     assert merges[2][1:] == ("ab", "c", 2)
+    # a 2-word vocabulary: the driver loop under the default bound, the
+    # distributed loop under a bound of 0 (which reads one row past it)
+    driver, distributed = routes("bpe_merge_loop")
+    assert (driver["estimate"], driver["chosen"]) == (2, "driver")
+    assert driver["budget"] == bpe.DRIVER_VOCAB_MAX
+    assert (distributed["estimate"], distributed["chosen"]) == (1, "distributed")
+    assert distributed["budget"] == 0
 
 
 def test_segment_applies_merges_in_order(spark):

@@ -202,40 +202,42 @@ def test_trained_model_separates_separable_labels(spark):
     assert acc >= 0.8, acc
 
 
-def _train_both(spark, rounds, lr):
+def _train_both(spark, routes, rounds, lr):
     rows, X, y = _synthetic_problem()
     feats = spark.createDataFrame(rows, _FEAT_SCHEMA)
     labels = spark.createDataFrame(
         [(int(d), float(v)) for d, v in enumerate(y)], ["doc_id", "y"]
     )
-    stats = {}
+    routes.clear()
     w_es = train_logistic_gd(
-        feats, labels, rounds=rounds, lr=lr, early_stop=True, stats=stats
+        feats, labels, rounds=rounds, lr=lr, early_stop=True
     )
+    [rec] = routes("logistic_gd_rounds")
+    assert rec["budget"] == rounds
     w_full = train_logistic_gd(
         feats, labels, rounds=rounds, lr=lr, early_stop=False
     )
     as_dict = lambda w: {r["bucket"]: r["weight"] for r in w.collect()}
-    return as_dict(w_es), as_dict(w_full), stats
+    return as_dict(w_es), as_dict(w_full), rec["chosen"]
 
 
-def test_early_stop_fixed_point_is_bit_identical(spark):
+def test_early_stop_fixed_point_is_bit_identical(spark, routes):
     """A learning rate small enough that every update rounds to the 1e-9
     grid's zero makes round 1 a snapped fixed point: early_stop must exit
     after ONE round with weights bit-identical to the full 7-round loop
     (whose six tail rounds recompute the same all-zero table)."""
-    got, full, stats = _train_both(spark, rounds=7, lr=1e-12)
-    assert stats["rounds_run"] == 1, stats
+    got, full, rounds_run = _train_both(spark, routes, rounds=7, lr=1e-12)
+    assert rounds_run == 1
     assert got == full
 
 
-def test_early_stop_does_not_fire_before_convergence(spark):
+def test_early_stop_does_not_fire_before_convergence(spark, routes):
     """On the standard fixture at a real learning rate the deltas stay
     above the snap grid for all 6 rounds: early_stop must run the full
     count and return exactly the un-stopped weights (the default path is
     unchanged, not merely approximately equal)."""
-    got, full, stats = _train_both(spark, rounds=6, lr=2.5)
-    assert stats["rounds_run"] == 6, stats
+    got, full, rounds_run = _train_both(spark, routes, rounds=6, lr=2.5)
+    assert rounds_run == 6
     assert got == full
 
 

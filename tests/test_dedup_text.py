@@ -214,23 +214,6 @@ def test_winnowing_lsh_is_subset_with_identical_scores(spark):
     assert len(lsh) >= 0.8 * len(exact)
 
 
-def test_simhash_groups_member_cap(spark):
-    from autonomous_orchestrator_ai_spark.operators.dedup import (
-        simhash_duplicate_groups,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "identical text body") for i in range(6)]
-        + [(100, "another text entirely different")],
-        ["doc_id", "text"],
-    )
-    capped = simhash_duplicate_groups(docs, max_members=2).collect()
-    assert len(capped) == 1
-    assert capped[0]["n_docs"] == 6 and capped[0]["doc_ids"] == [0, 1]
-    full = simhash_duplicate_groups(docs).collect()
-    assert full[0]["doc_ids"] == [0, 1, 2, 3, 4, 5]
-
-
 def test_drop_hot_keys_branches(spark):
     """The bounded hot-set guard has three plans: empty -> identity, small
     -> literal NOT-IN filter (no join), large -> broadcast anti-join."""
@@ -369,11 +352,11 @@ def test_exact_jaccard_cost_profile_matches_hand_computed_df(spark):
     assert est["est_shuffle_bytes"] == 20 * 15
 
 
-def test_cluster_safe_split_auto_routes_by_budget(spark, monkeypatch):
+def test_cluster_safe_split_auto_routes_by_budget(spark, monkeypatch, routes):
     """Budget routing both ways at sf0.001: a huge budget picks the exact
     edge path, a zero budget picks the LSH path — and each route's result
     equals the corresponding registered variant exactly. The callable
-    oracle replays the SAME decision in DuckDB."""
+    oracle replays the SAME decision in DuckDB, from the same Σ df²."""
     from autonomous_orchestrator_ai_spark.plans import dedup_queries as dq
     from autonomous_orchestrator_ai_spark.plans import registry
 
@@ -389,7 +372,14 @@ def test_cluster_safe_split_auto_routes_by_budget(spark, monkeypatch):
     assert registry.resolve_oracle("cluster_safe_split_report_auto", sf) == (
         registry.ORACLES["cluster_safe_split_report"]
     )
+    spark_rec, oracle_rec = routes("exact_split")
+    assert spark_rec == oracle_rec
+    sum_df_sq = spark_rec["inputs"]["sum_df_sq"]
+    assert sum_df_sq == 56_785  # the sf0.001 shingle-df profile
+    assert spark_rec["estimate"] == dq.PAIR_ROW_BYTES * sum_df_sq
+    assert spark_rec["budget"] == 10**15 and spark_rec["chosen"] == "exact"
 
+    routes.clear()
     monkeypatch.setenv(dq.SPILL_BUDGET_ENV, "0")
     assert rows(dq.cluster_safe_split_report_auto(spark, sf)) == rows(
         dq.cluster_safe_split_report_lsh(spark, sf)
@@ -397,6 +387,9 @@ def test_cluster_safe_split_auto_routes_by_budget(spark, monkeypatch):
     assert registry.resolve_oracle("cluster_safe_split_report_auto", sf) == (
         registry.ORACLES["cluster_safe_split_report_lsh"]
     )
+    assert [(r["inputs"]["sum_df_sq"], r["chosen"]) for r in routes("exact_split")] == [
+        (sum_df_sq, "lsh")
+    ] * 2
 
 
 def test_lsh_bucket_sample_bounds_and_determinism(spark):
@@ -413,15 +406,15 @@ def test_lsh_bucket_sample_bounds_and_determinism(spark):
     rows += [(100, DOC_A), (101, DOC_A_NEAR)]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     sigs = minhash_signatures(docs, "text", "doc_id", num_hashes=8, shingle_k=3)
-    uncapped = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(sigs).collect()}
+    uncapped = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(sigs)[0].collect()}
     cap = 5
     run1 = {
         (r.id_a, r.id_b)
-        for r in lsh_candidate_pairs(sigs, max_bucket_sample=cap).collect()
+        for r in lsh_candidate_pairs(sigs, max_bucket_sample=cap)[0].collect()
     }
     run2 = {
         (r.id_a, r.id_b)
-        for r in lsh_candidate_pairs(sigs, max_bucket_sample=cap).collect()
+        for r in lsh_candidate_pairs(sigs, max_bucket_sample=cap)[0].collect()
     }
     assert run1 == run2                      # deterministic md5 draw
     assert run1 <= uncapped
@@ -436,11 +429,13 @@ def test_lsh_bucket_sample_bounds_and_determinism(spark):
     assert (100, 101) in run1
 
 
-def test_lsh_sample_cap_cost_route_flips_on_hot_bucket(spark):
+def test_lsh_sample_cap_cost_route_flips_on_hot_bucket(spark, routes):
     """The band-join pre-flight (lsh_band_cost_profile) enables the
     sample cap exactly when the estimated candidate shuffle crosses the
     budget: a synthetic hot-bucket corpus flips the route under a tiny
-    budget, stays unguarded (bit-identical pairs) under a huge one."""
+    budget, stays unguarded (bit-identical pairs) under a huge one. Each
+    call emits one ``lsh_guard_cap`` record and returns the same outcome
+    as its pre-flight."""
     from autonomous_orchestrator_ai_spark.operators.dedup import (
         lsh_candidate_pairs,
     )
@@ -449,33 +444,33 @@ def test_lsh_sample_cap_cost_route_flips_on_hot_bucket(spark):
     rows += [(100, DOC_A), (101, DOC_A_NEAR)]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     sigs = minhash_signatures(docs, "text", "doc_id", num_hashes=8, shingle_k=3)
-    uncapped = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(sigs).collect()}
+    pairs, preflight = lsh_candidate_pairs(sigs)
+    uncapped = {(r.id_a, r.id_b) for r in pairs.collect()}
+    assert preflight is None and routes("lsh_guard_cap") == []
 
     # huge budget: route stays unguarded — identical candidate set
-    dec_off: dict = {}
-    off = {
-        (r.id_a, r.id_b)
-        for r in lsh_candidate_pairs(
-            sigs, max_bucket_sample=5, sample_budget_bytes=10**15,
-            guard_decision=dec_off,
-        ).collect()
-    }
-    assert dec_off["cap_enabled"] is False
-    assert dec_off["est_shuffle_bytes"] == 20 * dec_off["est_candidate_rows"]
+    pairs, preflight = lsh_candidate_pairs(
+        sigs, max_bucket_sample=5, sample_budget_bytes=10**15
+    )
+    off = {(r.id_a, r.id_b) for r in pairs.collect()}
+    [rec] = routes("lsh_guard_cap")
+    assert rec["chosen"] is False and preflight["capped"] is False
+    assert rec["budget"] == 10**15
+    cand_rows = rec["inputs"]["est_candidate_rows"]
+    assert rec["estimate"] == 20 * cand_rows == preflight["est_shuffle_bytes"]
     # 40 identical docs -> one 40-bucket per band: ≥ 4 * C(40,2) pre-distinct
-    assert dec_off["est_candidate_rows"] >= 4 * (40 * 39 // 2)
+    assert cand_rows >= 4 * (40 * 39 // 2)
     assert off == uncapped
 
     # zero budget: the hot bucket trips the guard -> bounded pairs
-    dec_on: dict = {}
-    on = {
-        (r.id_a, r.id_b)
-        for r in lsh_candidate_pairs(
-            sigs, max_bucket_sample=5, sample_budget_bytes=0,
-            guard_decision=dec_on,
-        ).collect()
-    }
-    assert dec_on["cap_enabled"] is True
+    routes.clear()
+    pairs, preflight = lsh_candidate_pairs(
+        sigs, max_bucket_sample=5, sample_budget_bytes=0
+    )
+    on = {(r.id_a, r.id_b) for r in pairs.collect()}
+    [rec] = routes("lsh_guard_cap")
+    assert rec["chosen"] is True and preflight["capped"] is True
+    assert rec["inputs"]["est_candidate_rows"] == cand_rows
     assert on <= uncapped
     # per-band independent samples (salted draw): <= bands * C(cap,2)
     dup_pairs = {p for p in on if p[0] < 40 and p[1] < 40}
@@ -545,7 +540,7 @@ def test_winnowing_route_matches_pinned_twins(spark, monkeypatch):
     assert set(guarded) <= set(unguarded)
 
 
-def test_winnowing_lsh_sliced_verify_equals_single_pass(spark):
+def test_winnowing_lsh_sliced_verify_equals_single_pass(spark, routes):
     """A slice budget below the priced transient partitions the
     screen+verify into sequential checkpointed hash-slices; the
     disjoint-slice union must be EXACTLY the single-pass result (pairs
@@ -570,10 +565,11 @@ def test_winnowing_lsh_sliced_verify_equals_single_pass(spark):
         )
 
     def sliced(budget, **kw):
-        dec: dict = {}
-        out = rows(guard_decision=dec, slice_budget_bytes=budget, **kw)
-        assert dec["auto_verify_slices"] >= 2
-        return out, dec["cap_enabled"]
+        routes.clear()
+        out = rows(slice_budget_bytes=budget, **kw)
+        [screen] = routes("winnow_screen_slices")
+        assert screen["chosen"] >= 2
+        return out, routes("lsh_guard_cap")[0]["chosen"]
 
     # budgets sit below each branch's priced transient at this corpus
     # (~6.5 MB unguarded, ~0.39 MB guarded) without nearing the cap.
@@ -594,7 +590,8 @@ def test_winnowing_lsh_sliced_verify_equals_single_pass(spark):
 def test_winnowing_guard_budget_requires_cap(spark):
     """guard_budget_bytes without max_bucket_sample used to silently skip
     the pre-flight (so NO guard ever engaged, at any scale — the ENOSPC
-    regime the guards exist for); r9 makes it a loud contract error."""
+    regime the guards exist for); lsh_candidate_pairs' one input check
+    makes it a loud contract error for the winnowing family too."""
     import pytest
 
     from autonomous_orchestrator_ai_spark.operators.dedup import (
@@ -609,11 +606,13 @@ def test_winnowing_guard_budget_requires_cap(spark):
         )
 
 
-def test_lsh_guard_engaged_reported_without_cap(spark):
-    """lsh_candidate_pairs runs the pre-flight whenever a budget is set
-    (r9, ADVICE r8): with no cap value the cap stays off, but the
-    estimate-vs-budget outcome is reported via guard_engaged instead of
-    silently never populating the decision."""
+def test_lsh_budget_without_cap_is_rejected(spark, routes):
+    """A guard budget with no cap value would run unguarded at every
+    scale, so lsh_candidate_pairs rejects it before any work (the one
+    input check of both LSH families). With a cap value, the capped
+    volume is priced by the same pre-flight."""
+    import pytest
+
     from autonomous_orchestrator_ai_spark.operators.dedup import (
         lsh_candidate_pairs,
     )
@@ -623,30 +622,20 @@ def test_lsh_guard_engaged_reported_without_cap(spark):
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     sigs = minhash_signatures(docs, "text", "doc_id", num_hashes=8, shingle_k=3)
 
-    dec: dict = {}
-    uncapped = {
-        (r.id_a, r.id_b)
-        for r in lsh_candidate_pairs(
-            sigs, sample_budget_bytes=0, guard_decision=dec
-        ).collect()
-    }
-    assert dec["guard_engaged"] is True        # est > 0 budget
-    assert dec["cap_enabled"] is False         # no cap value to enable
-    assert (100, 101) in uncapped              # plan stays unguarded
+    with pytest.raises(ValueError, match="max_bucket_sample"):
+        lsh_candidate_pairs(sigs, sample_budget_bytes=0)
+    assert routes("lsh_guard_cap") == []
 
-    # with a cap value, engaged => cap_enabled, and capped-volume pricing
-    # is part of the same profile
-    dec_on: dict = {}
-    lsh_candidate_pairs(
-        sigs, max_bucket_sample=5, sample_budget_bytes=0, guard_decision=dec_on
-    ).collect()
-    assert dec_on["guard_engaged"] is True and dec_on["cap_enabled"] is True
+    lsh_candidate_pairs(sigs, max_bucket_sample=5, sample_budget_bytes=0)
+    [rec] = routes("lsh_guard_cap")
+    assert rec["chosen"] is True and rec["inputs"]["cap"] == 5
     # 40-doc buckets collapse to least(n,5): capped pricing is strictly
     # below the raw quadratic estimate
-    assert 0 < dec_on["est_capped_candidate_rows"] < dec_on["est_candidate_rows"]
+    inputs = rec["inputs"]
+    assert 0 < inputs["est_capped_candidate_rows"] < inputs["est_candidate_rows"]
 
 
-def test_winnowing_auto_slice_route_from_preflight(spark):
+def test_winnowing_auto_slice_route_from_preflight(spark, routes):
     """VERDICT r8 item 2: the slice count derives from the pre-flight's
     guarded-transient estimate instead of a human env var. A synthetic
     hot fixture under a tiny slice budget flips N above 1; a huge budget
@@ -673,42 +662,45 @@ def test_winnowing_auto_slice_route_from_preflight(spark):
     )
 
     def run(slice_budget):
-        dec: dict = {}
+        routes.clear()
         out = sorted(
             (r.id_a, r.id_b, r.shared, r.containment)
             for r in winnowing_near_duplicates_lsh(
-                docs,
-                guard_decision=dec,
-                slice_budget_bytes=slice_budget,
-                **guards,
+                docs, slice_budget_bytes=slice_budget, **guards
             ).collect()
         )
-        return out, dec
+        [screen] = routes("winnow_screen_slices")
+        return out, screen, routes("winnow_verify_slices")
 
     from autonomous_orchestrator_ai_spark.operators.dedup import (
         SCREEN_ROW_BYTES,
+        SORT_MERGE_TRANSIENT_FACTOR,
+        WINNOW_CAND_ROW_BYTES,
+        slice_count,
     )
 
-    single, dec_single = run(10**18)
-    assert dec_single["auto_verify_slices"] <= 1
-    assert dec_single["est_transient_bytes"] == (
-        dec_single["est_capped_candidate_rows"] * SCREEN_ROW_BYTES
-    )
+    single, screen, verify = run(10**18)
+    [guard] = routes("lsh_guard_cap")
+    assert guard["chosen"] is True
+    assert screen["chosen"] == 1 and verify == []   # single pass
+    capped_rows = guard["inputs"]["est_capped_candidate_rows"]
+    assert screen["inputs"]["rows"] == capped_rows
+    assert screen["estimate"] == capped_rows * SCREEN_ROW_BYTES
     # budget sized to a third of the estimate -> N flips to >= 2
-    tight = max(1, dec_single["est_transient_bytes"] // 3)
-    sliced, dec_sliced = run(tight)
-    assert dec_sliced["auto_verify_slices"] >= 2
+    tight = max(1, screen["estimate"] // 3)
+    sliced, screen_sliced, [verify] = run(tight)
+    assert screen_sliced["chosen"] >= 2
     assert sliced == single
+    # the verify count is priced at runtime from the screen survivors,
+    # each shipping two full sketch arrays
+    assert verify["estimate"] == verify["inputs"]["rows"] * WINNOW_CAND_ROW_BYTES
+    assert verify["chosen"] == slice_count(verify["estimate"], tight)
     # a budget EXACTLY equal to the payload estimate is no longer priced
     # as a single pass (r9 sf1000 ENOSPC): the sort-merge factor prices
     # the ~2x on-disk peak of spills + merged file, routing to 2 slices
-    from autonomous_orchestrator_ai_spark.operators.dedup import (
-        SORT_MERGE_TRANSIENT_FACTOR,
-    )
-
-    exact, dec_exact = run(dec_single["est_transient_bytes"])
-    assert dec_exact["transient_factor"] == SORT_MERGE_TRANSIENT_FACTOR
-    assert dec_exact["auto_verify_slices"] == SORT_MERGE_TRANSIENT_FACTOR
+    exact, screen_exact, _ = run(screen["estimate"])
+    assert screen_exact["inputs"]["transient_factor"] == SORT_MERGE_TRANSIENT_FACTOR
+    assert screen_exact["chosen"] == SORT_MERGE_TRANSIENT_FACTOR
     assert exact == single
     release_session_storage(spark)
 
@@ -759,15 +751,12 @@ def test_slice_count_rule():
     assert slice_count(10**18, 1) == MAX_AUTO_SLICES
     for budget in (0, -5, None):
         assert slice_count(1_000, budget) == 1
-    dec: dict = {}
-    slice_count(1, 1, dec)
-    assert dec == {"transient_factor": SORT_MERGE_TRANSIENT_FACTOR}
 
 
-def test_payload_pin_routes_on_source_input_bytes(spark, monkeypatch):
+def test_payload_pin_routes_on_source_input_bytes(spark, monkeypatch, routes):
     """The payload pin persists a frame only when its source's input
     files are known and fit PAYLOAD_PIN_BUDGET_BYTES; the caller gets the
-    persisted handle back in ``caches``."""
+    persisted handle back in ``caches``. Each call is one record."""
     from autonomous_orchestrator_ai_spark.operators import dedup
     from autonomous_orchestrator_ai_spark.plans.registry import table
 
@@ -777,6 +766,10 @@ def test_payload_pin_routes_on_source_input_bytes(spark, monkeypatch):
     pinned = dedup._pin_small_payload(source.select("doc_id"), source, caches)
     assert pinned.is_cached and caches == [pinned]
     pinned.unpersist()
+    [rec] = routes("payload_pin")
+    assert rec["chosen"] is True
+    assert rec["estimate"] == dedup._source_input_bytes(source) > 0
+    assert rec["budget"] == dedup.PAYLOAD_PIN_BUDGET_BYTES
 
     # no input files (an in-memory frame): size unknown, never pinned
     local = spark.createDataFrame([(1, "a")], "doc_id bigint, text string")
@@ -788,9 +781,10 @@ def test_payload_pin_routes_on_source_input_bytes(spark, monkeypatch):
     frame = source.select("doc_id")
     assert dedup._pin_small_payload(frame, source, caches) is frame
     assert not frame.is_cached and caches == []
+    assert [r["chosen"] for r in routes("payload_pin")] == [True, False, False]
 
 
-def test_minhash_sliced_verify_equals_single_pass(spark):
+def test_minhash_sliced_verify_equals_single_pass(spark, routes):
     """The minhash family's bounded-transient verify (r9 — the ported
     winnowing sequencer, for the sf3000 linear-payload wall): runtime-
     priced small budgets must return EXACTLY the single-pass pairs and
@@ -814,16 +808,23 @@ def test_minhash_sliced_verify_equals_single_pass(spark):
             ).collect()
         )
 
+    from autonomous_orchestrator_ai_spark.operators.dedup import (
+        MINHASH_VERIFY_ROW_BYTES,
+    )
+
     single = rows()
     # 37 candidates x 4 KB here: ~12 and ~2 candidate rows per slice
-    for budget in (100_000, 16_000):
-        dec: dict = {}
-        priced = rows(verify_budget_bytes=budget, guard_decision=dec)
-        assert dec["auto_verify_slices"] >= 2
+    for budget, slices in ((100_000, 3), (16_000, 19)):
+        routes.clear()
+        priced = rows(verify_budget_bytes=budget)
+        [rec] = routes("minhash_verify_slices")
+        assert rec["inputs"]["rows"] == 37
+        assert rec["estimate"] == 37 * MINHASH_VERIFY_ROW_BYTES
+        assert rec["budget"] == budget and rec["chosen"] == slices
         assert priced == single
-    dec0: dict = {}
-    assert rows(verify_budget_bytes=0, guard_decision=dec0) == single
-    assert "auto_verify_slices" not in dec0
+    routes.clear()
+    assert rows(verify_budget_bytes=0) == single
+    assert routes("minhash_verify_slices") == []
     release_session_storage(spark)
 
 

@@ -147,29 +147,6 @@ class TestTriangleStats:
         assert row["clustering"] == 0.0
 
 
-def test_dedup_clusters_member_cap(spark):
-    from autonomous_orchestrator_ai_spark.operators.graph import (
-        dedup_clusters,
-    )
-
-    # one 5-member chain component + one pair
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], ["id_a", "id_b"]
-    )
-    capped = {
-        r["component"]: r
-        for r in dedup_clusters(pairs, max_members=3).collect()
-    }
-    # n_docs stays exact; listed ids cap at 3 smallest
-    big = capped[1]
-    assert big["n_docs"] == 5 and big["doc_ids"] == "1,2,3"
-    small = capped[10]
-    assert small["n_docs"] == 2 and small["doc_ids"] == "10,11"
-    # default is uncapped and unchanged
-    full = {r["component"]: r for r in dedup_clusters(pairs).collect()}
-    assert full[1]["doc_ids"] == "1,2,3,4,5"
-
-
 # ---------------------------------------------------------------------------
 # Star contraction (VERDICT r4 item 2)
 # ---------------------------------------------------------------------------

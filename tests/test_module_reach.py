@@ -29,7 +29,6 @@ ROOTS = (
 #: module -> (COVERAGE.md row, why it stays although nothing reaches it)
 ALLOWLIST = {
     f"{PKG}.agent.llm": ("§2.12 D3/D4 LLM decision path", "ROADMAP direction 1 decides"),
-    f"{PKG}.agent.errors": ("§2.11 C7 error policy", "ROADMAP direction 1 decides"),
     f"{PKG}.operators.multimodal": ("Scale machinery: Multimodal", "a1b210d kept"),
     f"{PKG}.operators.bmp_codec": ("Scale machinery: Multimodal (BMP)", "a1b210d kept"),
     f"{PKG}.operators.png_codec": ("Scale machinery: Multimodal (PNG)", "a1b210d kept"),

@@ -132,6 +132,30 @@ def test_tools_and_decision_log(tmp_path):
     assert tools.execute("nope", {})["success"] is False
 
 
+def test_tools_stamp_with_the_injected_clock(tmp_path):
+    """Every tool stamps with the tick's clock, not the wall clock: the
+    remap, the quarantine name and metadata, the retrigger, the notify,
+    and the escalated incident, which files in the clock's month and is
+    recent only from its creation on."""
+    now = datetime(2024, 1, 15, 12, 30, 5)
+    store = IncidentStore(str(tmp_path / "incidents"))
+    tools = PipelineTools(str(tmp_path / "ops"), incident_store=store, now=now)
+    stamp = now.isoformat()
+    tools.apply_schema_remap({"a": "b"})
+    doc = json.loads((tmp_path / "ops" / "schema_remap.json").read_text())
+    assert doc["timestamp"] == stamp
+    q = tools.quarantine_records("country = 'INVALID'")
+    assert Path(q["quarantine_dir"]).name.startswith("quarantine_20240115_123005_")
+    assert q["metadata"]["timestamp"] == stamp
+    assert tools.retrigger_task()["request"]["requested_at"] == stamp
+    assert tools.notify_ops("x")["notification"]["timestamp"] == stamp
+    incident_id = tools.execute("escalate_incident", {"summary": "x"})["incident_id"]
+    assert [p.name for p in (tmp_path / "incidents").iterdir()] == ["log_2024-01.jsonl"]
+    assert [r["id"] for r in store.recent(days=7, now=now)] == [incident_id]
+    # a replayed tick an hour earlier must not see the incident yet
+    assert store.recent(days=7, now=now - timedelta(hours=1)) == []
+
+
 def test_quarantine_directives_in_one_second_each_keep_their_own_dir(tmp_path):
     """Two directives issued back to back (same wall-clock second) land in
     two directories; neither metadata.json overwrites the other."""

@@ -44,6 +44,7 @@ def main() -> None:
     from autonomous_orchestrator_ai_spark.operators.dedup import (
         MINHASH_CAND_ROW_BYTES,
         SCREEN_ROW_BYTES,
+        SORT_MERGE_TRANSIENT_FACTOR,
         WINNOW_CAND_ROW_BYTES,
         lsh_band_cost_profile,
         minhash_signatures,
@@ -124,7 +125,8 @@ def main() -> None:
         est_guarded = prof.get("est_capped_candidate_rows", 0) * SCREEN_ROW_BYTES
         prof["est_guarded_transient_bytes"] = est_guarded
         prof["slice_budget_bytes"] = slice_budget
-        prof["auto_verify_slices"] = slice_count(est_guarded, slice_budget, prof)
+        prof["transient_factor"] = SORT_MERGE_TRANSIENT_FACTOR
+        prof["auto_verify_slices"] = slice_count(est_guarded, slice_budget)
         out["winnow"] = prof
 
     print(json.dumps(out))

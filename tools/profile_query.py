@@ -15,6 +15,10 @@ during the phase (codegen cache misses) and their compile time, from
 ``session.codegen_compiles`` before and after it. A steady pass of a query
 whose classes stay cached compiles none.
 
+Under each build group, one ``route`` line per route record the plan
+build emitted (``autonomous_orchestrator_ai_spark.routes``): the cost
+route's name, what it chose, its estimate and its budget.
+
 Usage:
   python tools/profile_query.py QUERY [QUERY ...] [--sf DIR] [--passes N]
 """
@@ -22,6 +26,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import logging
 import os
 import shutil
 import sys
@@ -42,6 +47,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from autonomous_orchestrator_ai_spark.plans import registry
+    from autonomous_orchestrator_ai_spark.routes import LOGGER
     from autonomous_orchestrator_ai_spark.session import (
         codegen_compiles,
         get_spark,
@@ -61,6 +67,11 @@ def main() -> None:
     )
     registry.load_all()
     sc = spark.sparkContext
+    records: list[logging.LogRecord] = []
+    handler = logging.Handler()
+    handler.emit = records.append
+    LOGGER.addHandler(handler)
+    LOGGER.setLevel(logging.INFO)
 
     def mark() -> tuple[float, int, float]:
         return (time.perf_counter(), *codegen_compiles(spark))
@@ -68,18 +79,21 @@ def main() -> None:
     def delta(a, b) -> list:
         return [y - x for x, y in zip(a, b)]
 
-    runs = []  # (query, op, build, exec): each (seconds, compiles, compile ms)
+    # (query, op, routes, build, exec): each phase (seconds, compiles, compile ms)
+    runs = []
     for p in range(args.passes):
         for i, name in enumerate(args.queries):
             op = f"pass{p}.{i}"
             m0 = mark()
             sc.setJobGroup(f"build:{op}:{name}", name)
+            records.clear()
             df = registry.QUERIES[name](spark, args.sf)
+            routes = [r.getMessage() for r in records]
             m1 = mark()
             sc.setJobGroup(f"exec:{op}:{name}", name)
             df.collect()
             m2 = mark()
-            runs.append((name, op, delta(m0, m1), delta(m1, m2)))
+            runs.append((name, op, routes, delta(m0, m1), delta(m1, m2)))
             release_session_storage(spark)
     app_id = sc.applicationId
     spark.stop()
@@ -87,7 +101,7 @@ def main() -> None:
     phases = parse_event_log(eventdir / app_id)["phases"]
     shutil.rmtree(eventdir)
     print(f"{'group':<48} {'wall_s':>8} " + " ".join(COLUMNS) + " compiles compile_ms")
-    for name, op, *measured in runs:
+    for name, op, routes, *measured in runs:
         for phase, (wall, compiles, compile_ms) in zip(("build", "exec"), measured):
             c = phases[(phase, op)]
             group = f"{phase}:{op}:{name}"
@@ -96,6 +110,9 @@ def main() -> None:
                 + " ".join(f"{c[k]:>{len(k)}}" for k in COLUMNS)
                 + f" {compiles:>8} {compile_ms:>10.1f}"
             )
+            if phase == "build":
+                for msg in routes:
+                    print(f"  {msg}")
 
 
 if __name__ == "__main__":
