@@ -16,6 +16,7 @@ from pathlib import Path
 from autonomous_orchestrator_ai_spark.agent.transports import (
     SLACK_SEVERITY_COLORS as SEVERITY_COLORS,
 )
+from autonomous_orchestrator_ai_spark.sources.writers import write_text_atomic
 
 
 class PipelineTools:
@@ -72,14 +73,14 @@ class PipelineTools:
             "timestamp": self._now().isoformat(),
             **kwargs,
         }
-        path.write_text(json.dumps(doc, indent=2))
+        write_text_atomic(path, json.dumps(doc, indent=2))
         return {"success": True, "version": version, "path": str(path)}
 
     def mark_remap_applied(self) -> None:
         path = self.ops_dir / "schema_remap.json"
         doc = json.loads(path.read_text())
         doc["applied"] = True
-        path.write_text(json.dumps(doc, indent=2))
+        write_text_atomic(path, json.dumps(doc, indent=2))
 
     # -- D8: quarantine metadata (tools.py:136-177) ------------------------
 
@@ -109,7 +110,7 @@ class PipelineTools:
             "timestamp": self._now().isoformat(),
             "status": "pending",
         }
-        (qdir / "metadata.json").write_text(json.dumps(meta, indent=2))
+        write_text_atomic(qdir / "metadata.json", json.dumps(meta, indent=2))
         return {"success": True, "quarantine_dir": str(qdir), "metadata": meta}
 
     # -- D6: retrigger (reference Airflow REST protocol, tools.py:36-89) ---

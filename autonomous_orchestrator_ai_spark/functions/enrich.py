@@ -6,7 +6,7 @@ pairs spec: tests/test_spark_jobs.py:115-141.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: Exact reference mapping (ingest_transform.py:185-190).
@@ -32,15 +32,6 @@ def region_expr(country: Column | str = "country") -> Column:
         expr = F.when(country == c, r) if expr is None else expr.when(country == c, r)
     assert expr is not None
     return expr.otherwise(F.lit(DEFAULT_REGION))
-
-
-def region_lookup_df(spark: SparkSession):
-    """The same mapping as a tiny DataFrame, for the broadcast-join variant —
-    the scale path when the mapping grows beyond literal-CASE size (e.g. a
-    full ISO-3166 table): ``df.join(F.broadcast(lookup), "country", "left")``.
-    """
-    rows = [(c, r) for c, r in COUNTRY_REGION_MAP.items()]
-    return spark.createDataFrame(rows, ["country", "region"])
 
 
 def email_domain(email: Column | str = "email") -> Column:

@@ -45,8 +45,6 @@ def bpe_ish_token_count(text: Column | str) -> Column:
 # Quality scoring (deterministic, SQL-expressible)
 # ---------------------------------------------------------------------------
 
-PUNCT_CLASS = r"[^\sA-Za-z0-9]"
-
 EN_STOPWORDS = [
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
     "that", "for", "on", "with", "as", "was", "at", "by", "be", "this",
@@ -168,8 +166,6 @@ LANG_PROFILES: dict[str, list[str]] = {
     "es": ["el", "los", "las", "y", "es", "una", "en", "que", "por", "como"],
     "zh": [],  # no-space scripts are handled by the CJK character check below
 }
-
-CJK_RE = r"[一-鿿]"
 
 
 def lang_scores(text: Column | str) -> dict[str, Column]:

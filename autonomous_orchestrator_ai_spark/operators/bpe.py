@@ -133,9 +133,10 @@ def bpe_apply_merge(state: DataFrame, a: str, b: str) -> DataFrame:
 
 #: Largest vocabulary (distinct words) trained on the driver; above it
 #: the merge rounds run as Spark jobs. Measured in PERF.md ("BPE driver
-#: route", tools/bpe_route_probe.py): at 10^5 words the driver route
-#: trains 3x faster than the distributed one on 4 cores; they break even
-#: near 10^6.
+#: route"; the probe that measured it is in git history, bb51f47): at
+#: 10^5 words the driver route trains 3x faster than the distributed one
+#: on 4 cores; they break even near 10^6. The ``bpe_merge_loop`` route
+#: record gives each build's vocabulary size and choice.
 DRIVER_VOCAB_MAX = 100_000
 
 

@@ -25,8 +25,7 @@ ingest and tokenization at 100 TB:
 - **PII redaction** — built-in ``regexp_replace`` chain (emails, phone-ish
   digit runs, IPv4); JVM-side, no UDFs.
 - **Quantile quality filtering** — keep the best fraction per stratum:
-  exact rank-based cut (oracle-checkable) + approx-percentile threshold
-  (bounded-state scale path).
+  an exact rank-based cut (oracle-checkable).
 - **Boilerplate discovery** — word-n-gram document frequency over the
   corpus (the C4/RefinedWeb repeated-boilerplate profile).
 - **Incremental dedup** — new-batch content fingerprints anti-joined
@@ -285,20 +284,6 @@ def contamination_report(
     )
 
 
-def decontaminate(
-    train: DataFrame,
-    benchmark: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Drop contaminated training docs (left-anti against the report)."""
-    contaminated = contamination_report(
-        train, benchmark, text_col, id_col, shingle_k
-    ).select(id_col)
-    return train.join(contaminated, id_col, "left_anti")
-
-
 # ---------------------------------------------------------------------------
 # Quantile-based quality filtering
 # ---------------------------------------------------------------------------
@@ -320,9 +305,7 @@ def quality_quantile_filter(
     row sitting exactly on an approximated cut flips between engines.
 
     Cost: one shuffle + per-stratum sort (the window partition). Fine while
-    every stratum fits a sort spill; for huge strata or a global filter at
-    the 100 TB scale use ``quality_threshold_filter`` — bounded-state
-    sketch, no sort.
+    every stratum fits a sort spill.
     """
     score = F.col(score) if isinstance(score, str) else score
     part = [F.col(strata_col)] if strata_col else [F.lit(1)]
@@ -331,35 +314,6 @@ def quality_quantile_filter(
         df.withColumn("__pr", F.percent_rank().over(w))
         .filter(F.col("__pr") <= keep_frac)
         .drop("__pr")
-    )
-
-
-def quality_threshold_filter(
-    df: DataFrame,
-    keep_frac: float,
-    score_col: str,
-    strata_col: str,
-    accuracy: int = 10000,
-) -> DataFrame:
-    """Scale path of ``quality_quantile_filter``: per-stratum cut via
-    ``approx_percentile`` (KLL-style sketch — bounded memory per group, no
-    sort), broadcast the tiny (stratum, threshold) table back, keep rows at
-    or above their stratum's threshold.
-
-    Two scans of the corpus, zero sorts, and the only shuffle is the
-    partial-aggregated sketch merge — this is the shape that survives a
-    stratum with 10^10 rows. Approximate at the boundary (ties and sketch
-    error), so it's unit-tested, not oracle-hashed.
-    """
-    thresholds = df.groupBy(strata_col).agg(
-        F.approx_percentile(
-            F.col(score_col), F.lit(1.0 - keep_frac), F.lit(accuracy)
-        ).alias("__thr")
-    )
-    return (
-        df.join(F.broadcast(thresholds), strata_col)
-        .filter(F.col(score_col) >= F.col("__thr"))
-        .drop("__thr")
     )
 
 
@@ -410,8 +364,8 @@ def dedup_batch_against_index(
     """Continuous-ingestion dedup: drop batch rows whose content fingerprint
     is already in the accumulated ``index`` (one ``fp_col`` column), then
     keep one row (smallest id) per fingerprint within the batch itself.
-    Returns survivors with the fingerprint column attached — feed them to
-    ``updated_fingerprint_index`` to advance the index.
+    Returns survivors with the fingerprint column attached; their
+    fingerprints are the rows to append to the index.
 
     The anti-join shuffles both sides on fp. At the 100 TB scale the index
     dwarfs every batch, so (a) persist the index BUCKETED by fp
@@ -427,15 +381,6 @@ def dedup_batch_against_index(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def updated_fingerprint_index(
-    index: DataFrame, survivors: DataFrame, fp_col: str = "fp"
-) -> DataFrame:
-    """The next index state: old index ∪ the accepted batch's fingerprints.
-    Survivors are already unique per fp, and the anti-join guarantees they
-    are disjoint from the index, so the union needs no ``distinct()``."""
-    return index.select(fp_col).unionByName(survivors.select(fp_col))
 
 
 # ---------------------------------------------------------------------------

@@ -3,31 +3,23 @@ quantizer scale path alongside LSH (operators/similarity.py).
 
 Two pieces:
 
-1. ``kmeans`` — Lloyd's iterations: each iteration is ONE ``mapInPandas``
-   job that fuses assignment and update. Per Arrow batch it computes
-   ``argmax(2·X·Cᵀ − ‖c‖²)`` as one BLAS matmul (centroids ride along in
-   the serialized closure — k·dim floats), accumulates per-cluster
-   (count, sum-vector) partials across the partition, and emits k tiny
-   rows. The driver sums the ≤ partitions·k partials — tree-aggregate
-   shape, zero shuffles per iteration, and the scan is persisted across
-   iterations so the parquet read + Arrow conversion happen once. (Past
-   ~10k partitions × large k the driver-side reduce should get one
-   groupBy(cluster) stage in front of it; at that point the partials are
-   still ~10^-6 of the data size.)
+1. ``kmeans_sample`` — Lloyd's iterations on a bounded deterministic
+   sample (``collect_md5_sample``), driver-side: one job collects the
+   sample, and training cost is independent of corpus size.
 2. ``ivf_topk`` — corpus rows are bucketed by nearest centroid (the
    inverted lists); a query probes its ``n_probe`` nearest centroids and
    re-ranks only those lists with exact cosine. At 100 TB the inverted
    lists are a partitioned table clustered by centroid id; probe cost is
    (n_probe / k) of the corpus instead of all of it.
 
-Why a pandas UDF and not DataFrame expressions: an expression-tree argmin
-over k centroids is O(k·dim) nested higher-order-function folds compiled
-into whole-stage codegen — at k=8/dim=64 it already produces multi-MiB
-task binaries and ~100 s of JIT per iteration, and at a realistic
-k=4096 it is impossible. The matmul kernel is O(n·k·dim) BLAS with a
+Why a pandas UDF for assignment and not DataFrame expressions: an
+expression-tree argmin over k centroids is O(k·dim) nested
+higher-order-function folds compiled into whole-stage codegen — at
+k=8/dim=64 it already produces multi-MiB task binaries and ~100 s of JIT
+per pass, and at a realistic k=4096 it is impossible. The matmul kernel is O(n·k·dim) BLAS with a
 constant-size plan, which is the shape that survives a 100× scale-up.
 
-Deterministic: centroids seed from fixed corpus rows (ids sorted), no RNG
+Deterministic: centroids seed from the md5-ordered sample rows, no RNG
 at runtime; ties in argmax break toward the lowest centroid id.
 """
 
@@ -82,34 +74,6 @@ def _probe_udf(centroids: np.ndarray, n_probe: int):
         return pd.Series([row.astype(np.int32).tolist() for row in idx])
 
     return probes
-
-
-def _partials_fn(centroids: np.ndarray):
-    """mapInPandas body: per-partition fused assign + partial-sum. Emits
-    one (cluster, count, sum-vector) row per non-empty cluster."""
-    c = np.ascontiguousarray(centroids, dtype=np.float64)
-    c_norm2 = (c * c).sum(axis=1)
-    k, dim = c.shape
-
-    def fn(batches):
-        counts = np.zeros(k, dtype=np.int64)
-        sums = np.zeros((k, dim), dtype=np.float64)
-        for pdf in batches:
-            x = _stack(pdf["__v"])
-            assign = (2.0 * (x @ c.T) - c_norm2).argmax(axis=1)
-            counts += np.bincount(assign, minlength=k)
-            np.add.at(sums, assign, x)
-        hit = np.flatnonzero(counts)
-        if len(hit):
-            yield pd.DataFrame(
-                {
-                    "c": hit.astype(np.int32),
-                    "n": counts[hit],
-                    "s": [sums[i].tolist() for i in hit],
-                }
-            )
-
-    return fn
 
 
 def collect_md5_sample(
@@ -172,54 +136,6 @@ def kmeans_sample(
     return lloyd_numpy(
         collect_md5_sample(df, id_col, vec_col, sample_size), k, iterations
     )
-
-
-def kmeans(
-    df: DataFrame,
-    k: int = 8,
-    iterations: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> np.ndarray:
-    """Full-corpus Lloyd's k-means; returns (k, dim) centroid matrix.
-    Seeds = the k rows with smallest ``md5(id)`` (one TakeOrdered job —
-    deterministic pseudo-random spread; no count, no global window).
-    Prefer ``kmeans_sample`` for coarse-quantizer training: it matches
-    this within noise and costs one job total."""
-    data = (
-        ensure_min_parallelism(df)
-        .select(F.col(id_col), _as_double_array(vec_col).alias("__v"))
-        .persist()
-    )
-    try:
-        seeds = (
-            data.orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-            .limit(k)
-            .collect()
-        )
-        centroids = np.array([row["__v"] for row in seeds], dtype=np.float64)
-        if len(centroids) < k:  # tiny inputs: pad with repeats
-            centroids = np.vstack([centroids] * ((k // len(centroids)) + 1))[:k]
-        dim = centroids.shape[1]
-
-        for _ in range(iterations):
-            partials = data.select("__v").mapInPandas(
-                _partials_fn(centroids), schema="c int, n long, s array<double>"
-            ).collect()
-            counts = np.zeros(k, dtype=np.int64)
-            sums = np.zeros((k, dim), dtype=np.float64)
-            for r in partials:
-                counts[r["c"]] += r["n"]
-                sums[r["c"]] += np.asarray(r["s"], dtype=np.float64)
-            new_centroids = centroids.copy()
-            hit = counts > 0
-            new_centroids[hit] = sums[hit] / counts[hit, None]
-            if np.allclose(new_centroids, centroids, atol=1e-9):
-                break
-            centroids = new_centroids
-        return centroids
-    finally:
-        data.unpersist()
 
 
 def fixed_centroids(dim: int, k: int, seed: int = 42) -> np.ndarray:

@@ -3,14 +3,10 @@
 Reference: /root/reference/spark/jobs/ingest_transform.py:307-336 (the
 conditional-count aggregate + JSON report) — note the reference computes this
 with ``.agg().collect()`` on a *streaming* DataFrame after the stream stops,
-which is unsupported (SURVEY.md §3.2 defect). Here:
-
-- batch: ``run_report_agg`` (one hash-aggregate job; map-side partial
-  aggregation makes it a single reduce of 4 longs per partition — constant
-  network cost at any scale), or
-- streaming: ``streaming.pipeline.with_run_observation`` wires the same
-  expressions through ``df.observe`` so metrics accumulate per micro-batch
-  with zero extra jobs.
+which is unsupported (SURVEY.md §3.2 defect). Here
+``streaming.pipeline.with_run_observation`` wires the same expressions
+through ``df.observe``, so metrics accumulate per micro-batch with zero
+extra jobs.
 """
 
 from __future__ import annotations
@@ -19,10 +15,12 @@ import json
 from datetime import datetime, timezone
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from autonomous_orchestrator_ai_spark.functions.temporal import WATERMARK_DELAY
+from autonomous_orchestrator_ai_spark.sources.writers import write_text_atomic
+
 
 def report_metric_columns() -> list[Column]:
     """The A1 conditional counts (ingest_transform.py:310-316)."""
@@ -34,11 +32,6 @@ def report_metric_columns() -> list[Column]:
             "schema_drift_count"
         ),
     ]
-
-
-def run_report_agg(df: DataFrame) -> DataFrame:
-    """Global conditional-count aggregate -> 1-row DataFrame (reference A1)."""
-    return df.agg(*report_metric_columns())
 
 
 def build_run_report(
@@ -67,13 +60,9 @@ def build_run_report(
     return report
 
 
-def run_report_from_df(df: DataFrame, **kwargs) -> dict:
-    row = run_report_agg(df).collect()[0]
-    return build_run_report(row.asDict(), **kwargs)
-
-
 def write_run_report(report: dict, path: str) -> None:
-    """Persist the report JSON (reference S6 writes /data/ops/run_report.json)."""
+    """Persist the report JSON (reference S6 writes /data/ops/run_report.json),
+    published atomically."""
     p = Path(path)
     p.parent.mkdir(parents=True, exist_ok=True)
-    p.write_text(json.dumps(report, indent=2))
+    write_text_atomic(p, json.dumps(report, indent=2))

@@ -5,10 +5,10 @@ block, keeping one representative per epsilon-ball.
 Blocking is the scale lever: cosine comparisons only happen WITHIN a
 block, so the self-join is per-block, never all-pairs. Any low-cardinality
 assignment works — a label column, an IVF/k-means cluster id
-(``operators.ivf.kmeans`` + assignment, the SemDeDup paper's choice), or
-an LSH sign bucket (``operators.similarity.signbit_bucket``). At 100 TB
-the block column is what the shuffle hashes on, and per-block sizes bound
-the quadratic term — pick k so blocks stay ~1e4 rows.
+(``operators.ivf.kmeans_sample`` + assignment, the SemDeDup paper's
+choice), or an LSH sign bucket (``operators.similarity.signbit_buckets``).
+At 100 TB the block column is what the shuffle hashes on, and per-block
+sizes bound the quadratic term — pick k so blocks stay ~1e4 rows.
 
 The drop rule is the one-pass variant: x is dropped iff SOME lower-id
 neighbor y (dropped or not) has cosine(x, y) >= threshold. That

@@ -49,21 +49,6 @@ def cosine(a: F.Column, b: F.Column) -> F.Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def l2_normalized(a: F.Column | str) -> F.Column:
-    """Unit-norm copy of a vector column (zero vectors pass through).
-    Inner product on normalized vectors == cosine — the prep step for
-    IP-ranked indexes (PQ ADC, IVF-IP) to serve cosine queries."""
-    from autonomous_orchestrator_ai_spark.functions.text import _once
-
-    a = _as_double_array(a)
-    # hoist the norm (re-evaluated per element if captured raw in the
-    # transform lambda — that would be O(dim^2) per row)
-    return _once(
-        norm(a),
-        lambda n: F.when(n == 0, a).otherwise(F.transform(a, lambda x: x / n)),
-    )
-
-
 def rank_topk(
     scored: DataFrame, k: int, score: str = "__sim", out: str = "cosine_sim"
 ) -> DataFrame:
@@ -129,11 +114,6 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     literals)."""
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim)).tolist()
-
-
-def signbit_bucket(vec: F.Column, planes: list[list[float]]) -> F.Column:
-    """Sign-pattern bucket id: bit p set iff vec · plane_p >= 0."""
-    return signbit_buckets(vec, [planes])[0]
 
 
 def signbit_buckets(

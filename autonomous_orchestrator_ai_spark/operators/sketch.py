@@ -1,37 +1,18 @@
-"""Sketch aggregates (approximate structures for 100 TB cardinalities).
+"""Sketch operators (approximate structures for 100 TB cardinalities).
 
-Built on Spark's native sketch expressions (JVM-side, mergeable across
-partitions — the whole point at scale):
-
-- HyperLogLog++: ``approx_count_distinct`` (+ hll_sketch_agg/hll_union for
-  mergeable stored sketches where available)
-- count-min sketch: heavy-hitter frequency estimation without a full
-  groupBy (one pass, fixed memory)
 - Bloom filter: membership pre-filter for semi-joins against huge build
-  sides
+  sides. Each partition sets bits in a local bitmap on its Arrow batches
+  and the driver ORs the bitmaps, so the build is one pass in fixed
+  memory, mergeable across partitions.
 
 These are rows-only/pytest-verified (no cross-engine oracle exists for
-sketch binaries by construction); tests assert the statistical error
-bounds against exact answers.
+sketch binaries by construction); tests assert the error bounds against
+exact answers.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-
-def approx_distinct(df: DataFrame, col: str, rsd: float = 0.05) -> int:
-    return df.agg(F.approx_count_distinct(col, rsd).alias("d")).collect()[0]["d"]
-
-
-def count_min_sketch(df: DataFrame, col: str, eps: float = 0.001, confidence: float = 0.99,
-                     seed: int = 42) -> bytes:
-    """One-pass mergeable frequency sketch (binary, Spark-portable)."""
-    row = df.agg(
-        F.count_min_sketch(F.col(col), F.lit(eps), F.lit(confidence), F.lit(seed)).alias("s")
-    ).collect()[0]
-    return bytes(row["s"])
+from pyspark.sql import DataFrame
 
 
 def _bloom_params(expected_items: int, fpp: float) -> tuple[int, int]:

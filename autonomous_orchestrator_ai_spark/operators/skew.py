@@ -7,17 +7,14 @@ explicit tools for when it doesn't, and for removing shuffles entirely).
   then partials combine in a second (tiny) aggregation. Works for any
   algebraic aggregate (sum/count/min/max — pass the partial and final
   specs).
-- ``salted_join``: broadcast-free skew join — the skewed left side gets a
-  random-ish deterministic salt, the small-but-not-broadcastable right side
-  is replicated ``n_salts`` times, and the join key becomes (key, salt).
-- ``write_bucketed`` / bucketed join: co-locate both sides of a repeated
-  join on the join key at WRITE time so later joins are exchange-free
-  (verified by tests/test_bucketing.py asserting no shuffle in the plan).
+- ``write_bucketed``: co-locate both sides of a repeated join on the join
+  key at WRITE time so later joins are exchange-free (verified by
+  tests/test_skew_bucketing.py asserting no shuffle in the plan).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -80,25 +77,6 @@ def salted_aggregate(
     return partial.groupBy(key).agg(
         *[c.alias(name) for name, c in final_aggs.items()]
     )
-
-
-def salted_join(
-    skewed: DataFrame,
-    other: DataFrame,
-    key: str,
-    n_salts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew join without broadcast: salt the big/skewed side, explode the
-    other side across all salt values, join on (key, salt). Replication
-    factor n_salts on the small side buys n_salts-way spread of each hot
-    key. Output drops the salt columns."""
-    left = with_salt(skewed, key, n_salts)
-    right = other.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    joined = left.join(right, on=[key, "__salt"], how=how)
-    return joined.drop("__salt")
 
 
 #: file names Spark's datasource committer writes into a table location —
@@ -175,11 +153,3 @@ def write_bucketed(
     if path:
         writer = writer.option("path", path)
     writer.saveAsTable(table_name)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str, how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed tables on the bucket key — plan should show
-    SortMergeJoin with NO Exchange on either side."""
-    return spark.table(left_table).join(spark.table(right_table), on=key, how=how)

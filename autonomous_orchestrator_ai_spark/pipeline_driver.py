@@ -34,7 +34,7 @@ from autonomous_orchestrator_ai_spark.operators.report import (
 from autonomous_orchestrator_ai_spark.operators.transform import parse_kafka_messages
 from autonomous_orchestrator_ai_spark.schemas import customer_events_schema
 from autonomous_orchestrator_ai_spark.sources.readers import jsonl_as_kafka_envelope
-from autonomous_orchestrator_ai_spark.sources.writers import cleanup_old_data
+from autonomous_orchestrator_ai_spark.sources.writers import cleanup_old_data, write_text_atomic
 from autonomous_orchestrator_ai_spark.streaming.pipeline import (
     run_bounded,
     streaming_enrich,
@@ -111,7 +111,7 @@ def run_pipeline_once(
             curated, customers_suite(freshness_window=True), now=now, collect_examples=10
         )
         ge_results["dimensions"] = dimension_scores(ge_results)
-        (ops / "ge_results.json").write_text(json.dumps(ge_results, indent=2, default=str))
+        write_text_atomic(ops / "ge_results.json", json.dumps(ge_results, indent=2, default=str))
 
         # ---- C4: decide + execute remediation ----------------------------
         context = DecisionContext(
@@ -136,7 +136,7 @@ def run_pipeline_once(
         # stage since writes to it: re-reading it would cost three jobs
         loaded = ge_results["validations"][0]["results"][0]["result"]["element_count"]
         validation = {"rows_in_curated": loaded, "ok": loaded > 0}
-        (ops / "load_validation.json").write_text(json.dumps(validation))
+        write_text_atomic(ops / "load_validation.json", json.dumps(validation))
 
         # ---- C6: retention ----------------------------------------------
         # sweeps the quarantine directives that pile up one per action; never

@@ -390,8 +390,8 @@ def props_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def nation_region_lookup_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The F3 dictionary-decode pattern at its scale form: broadcast lookup
-    join through two dimension tables (enrich.region_lookup_df's real-data
-    twin)."""
+    join through two dimension tables (the scale form of enrich.region_expr's
+    literal CASE)."""
     cust = table(spark, sf_dir, "customer")
     nation = table(spark, sf_dir, "nation")
     region = table(spark, sf_dir, "region")

@@ -967,11 +967,10 @@ def _lsh_disagreement_sql(
     )
 
 
-#: CAP POLICY, SPLIT BY PURPOSE (r9, VERDICT r8 item 7 — justified by the
-#: measured recall tables in RECALL_SCREENS_*.json):
-#:
-#: SCREENING (this module's corpus-wide mislabel screen): cap 64 = the
-#: auto_planes expected bucket size, so the guard binds only on skew.
+#: SCREENING CAP (r9, VERDICT r8 item 7 — justified by the measured
+#: recall tables in RECALL_SCREENS_*.json): this module's corpus-wide
+#: mislabel screen caps buckets at 64 = the auto_planes expected bucket
+#: size, so the guard binds only on skew.
 #: The r8 sf10 recall table prices it: banding costs 0.4% of exact top-5,
 #: the cap-64 sample a further ~16% of neighbor IDENTITY — acceptable
 #: here because the screen consumes neighbor LABELS, and the same-cluster
@@ -979,17 +978,7 @@ def _lsh_disagreement_sql(
 #: a mass-duplicated corpus (~1000 near-copies per base vector at sf100)
 #: makes the bucket join quadratic in hot-bucket size (measured >78 GB
 #: spill, round-6 octave probe).
-#:
-#: SERVING (similarity_queries.lsh_ann_topk):
-#: UNCAPPED (SERVING_BUCKET_CAP = None) — identity recall IS the product
-#: there, a ~16% loss is not acceptable, and serving query sets are small
-#: (bounded probe fan-out per query), so the hot-bucket quadratic never
-#: materializes: per-query cost is n_tables x bucket size, not
-#: bucket-size squared. A skew-exposed serving deployment should set a
-#: HIGH cap (>= 256) rather than 64: the loss comes from sampling inside
-#: duplicate clusters, and it shrinks as the cap covers the cluster.
 SCREENING_BUCKET_CAP = 64
-SERVING_BUCKET_CAP: int | None = None
 _SCREEN_BUCKET_CAP = SCREENING_BUCKET_CAP
 
 #: cost-routed multiprobe for the corpus-wide screen (r9, VERDICT r8

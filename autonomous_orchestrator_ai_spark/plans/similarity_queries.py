@@ -453,7 +453,7 @@ def semantic_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup (operators.semdedup): within each
     label block, drop vectors with a lower-id cosine>=0.4 neighbor; report
     per-label survivor counts. Label is the blocking column here; at scale
-    the block id comes from operators.ivf.kmeans so per-block sizes bound
+    the block id comes from operators.ivf.kmeans_sample so per-block sizes bound
     the quadratic comparison term."""
     from autonomous_orchestrator_ai_spark.operators.semdedup import (
         semantic_dedup,

@@ -52,14 +52,8 @@ def customer_events_schema(version: int = 1) -> T.StructType:
     return T.StructType(fields)
 
 
-#: Kafka envelope columns carried through parse (ingest_transform.py:119-125).
-KAFKA_ENVELOPE_COLUMNS = ["kafka_key", "kafka_timestamp", "kafka_offset", "kafka_partition"]
-
 #: Valid subscription plans (Avro enum customer_events.avsc:36-43).
 VALID_PLANS = ["free", "basic", "premium", "enterprise"]
-
-#: Producer-side country domain (produce_events.py:94).
-PRODUCER_COUNTRIES = ["US", "CA", "GB", "DE", "FR", "AU", "JP", "IN", "BR", "MX"]
 
 #: DQ-side 17-code country set (customers_expectation_suite.json:164).
 DQ_COUNTRIES = [

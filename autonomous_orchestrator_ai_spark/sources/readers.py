@@ -1,4 +1,4 @@
-"""Readers (reference S1/S2/S7, SURVEY.md §2.1).
+"""Readers (reference S1/S2, SURVEY.md §2.1; S7 is ``plans.registry.table``).
 
 Kafka requires the spark-sql-kafka package on the classpath; in this
 container it is absent, so the Kafka readers raise a clear error at call time
@@ -11,13 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def read_parquet(spark: SparkSession, path: str, columns: list[str] | None = None) -> DataFrame:
-    """Parquet batch scan (reference S7). Column pruning via an explicit
-    select so the scan's ReadSchema only carries what's needed."""
-    df = spark.read.parquet(path)
-    return df.select(*columns) if columns else df
 
 
 def kafka_stream(
@@ -278,39 +271,4 @@ def jsonl_as_kafka_envelope(
         F.xxhash64(F.col("value")).alias("offset"),
         F.current_timestamp().alias("timestamp"),
         F.lit(0).alias("timestampType"),
-    )
-
-
-def read_csv_strict(
-    spark: SparkSession,
-    path: str,
-    schema: str,
-    header: bool = True,
-) -> DataFrame:
-    """Schema-on-read CSV: explicit DDL schema (NEVER inferSchema — at
-    100 TB inference is a full extra pass over the data), PERMISSIVE mode
-    with the raw text of unparseable lines captured in
-    ``_corrupt_record`` so bad rows quarantine instead of killing the
-    job (the reference's quarantine pattern, applied at the source)."""
-    return (
-        spark.read.schema(schema + ", _corrupt_record string")
-        .option("header", str(header).lower())
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .csv(path)
-    )
-
-
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: str,
-) -> DataFrame:
-    """Schema-on-read JSON-lines with corrupt-record capture — same
-    contract as ``read_csv_strict``."""
-    return (
-        spark.read.schema(schema + ", _corrupt_record string")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
     )

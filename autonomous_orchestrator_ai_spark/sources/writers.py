@@ -1,29 +1,40 @@
-"""Sinks (reference S4/S5/S8 quarantine + partitioned parquet, SURVEY.md §2.1).
+"""Sinks (reference S5/S8 quarantine, S10 retention, SURVEY.md §2.1) and
+the atomic publish of the tick's JSON documents.
 
-Partitioning choice mirrors the reference (country, plan —
-ingest_transform.py:267) which enables partition pruning on read. At 100 TB,
-(country, plan) yields ~40 partitions/day of manageable size; adding a date
-partition column keeps file counts bounded and retention cheap (drop whole
-date partitions instead of the reference's os.walk sweep, S10).
+The S4 partitioned parquet sink is the streaming writer
+``streaming.pipeline.run_bounded``, partitioned like the reference
+(country, plan — ingest_transform.py:267).
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 import time
+import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame
 
 
-def write_partitioned_parquet(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] = ("country", "plan"),
-    mode: str = "append",
-) -> None:
-    """Batch partitioned parquet writer (reference S4's batch twin)."""
-    df.write.mode(mode).partitionBy(*partition_by).parquet(path)
+def write_text_atomic(path: str | Path, text: str) -> None:
+    """Publish ``text`` as the whole of ``path``: write a temp file in the
+    same directory, fsync it, then ``os.replace`` it over ``path``. A crash
+    at any point leaves either the previous document or the new one, never
+    a torn mix (the rename is atomic on one filesystem). The temp file is
+    created like ``path.write_text`` would create it, so the published
+    file keeps the usual permissions."""
+    path = Path(path)
+    tmp = path.with_name(f".{path.name}.{uuid.uuid4().hex}.tmp")
+    try:
+        with tmp.open("x") as f:
+            f.write(text)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+    except BaseException:
+        tmp.unlink(missing_ok=True)
+        raise
 
 
 #: connector option keys the reference's writer builds
@@ -103,7 +114,7 @@ def write_quarantine(
     qdir = Path(base_path) / f"quarantine_{ts}"
     quarantined.write.mode("overwrite").parquet(str(qdir / "records"))
     qdir.mkdir(parents=True, exist_ok=True)
-    (qdir / "metadata.json").write_text(json.dumps(metadata, indent=2))
+    write_text_atomic(qdir / "metadata.json", json.dumps(metadata, indent=2))
     return str(qdir)
 
 
@@ -121,43 +132,6 @@ def cleanup_old_data(base_path: str, retention_days: int = 7) -> list[str]:
             shutil.rmtree(entry) if entry.is_dir() else entry.unlink()
             removed.append(str(entry))
     return removed
-
-
-def write_versioned_snapshot(df: DataFrame, base_path: str) -> int:
-    """Append-only versioned snapshot (mini-lakehouse commit protocol):
-    data lands under ``base_path/v=N/`` FIRST, and only then is the
-    single-file manifest ``_latest`` swapped to N — readers following the
-    manifest never observe a half-written version, giving atomic
-    publish on any filesystem with atomic rename. Returns N."""
-    import os
-    import tempfile
-
-    base = Path(base_path)
-    base.mkdir(parents=True, exist_ok=True)
-    current = read_latest_version(base_path)
-    version = current + 1
-    df.write.parquet(str(base / f"v={version}"))
-    fd, tmp = tempfile.mkstemp(dir=base, prefix="._latest")
-    with os.fdopen(fd, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, base / "_latest")
-    return version
-
-
-def read_latest_version(base_path: str) -> int:
-    """Version in the ``_latest`` manifest, or 0 if never written."""
-    manifest = Path(base_path) / "_latest"
-    if not manifest.exists():
-        return 0
-    return int(manifest.read_text().strip())
-
-
-def read_latest_snapshot(spark, base_path: str) -> DataFrame:
-    """The DataFrame for the manifest's current version."""
-    version = read_latest_version(base_path)
-    if version == 0:
-        raise FileNotFoundError(f"no snapshot published under {base_path}")
-    return spark.read.parquet(str(Path(base_path) / f"v={version}"))
 
 
 # ---------------------------------------------------------------------------

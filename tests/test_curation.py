@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from autonomous_orchestrator_ai_spark.operators.curation import (
     contamination_report,
-    decontaminate,
     deterministic_sample,
     hex_threshold,
     pii_hit_counts,
@@ -162,11 +161,6 @@ class TestContamination:
         assert set(got) == {1, 3}
         assert all(n >= 1 for n in got.values())
 
-    def test_decontaminate_drops_flagged(self, corpora):
-        train, bench = corpora
-        clean = decontaminate(train, bench, "text", "doc_id", shingle_k=3)
-        assert {r.doc_id for r in clean.collect()} == {2}
-
 
 class TestPIIRedaction:
     def test_redacts_all_categories(self, spark):
@@ -274,19 +268,6 @@ class TestQualityQuantileFilter:
         # rank breaks ties by doc_id: pr = (rank-1)/7 <= 0.5 -> ranks 1..4
         assert kept == [0, 1, 2, 3]
 
-    def test_threshold_filter_scale_path(self, spark):
-        from autonomous_orchestrator_ai_spark.operators.curation import (
-            quality_threshold_filter,
-        )
-
-        rows = [Row(doc_id=i, source="s", q=float(i)) for i in range(100)]
-        kept = quality_threshold_filter(
-            spark.createDataFrame(rows), 0.25, "q", "source"
-        )
-        ids = sorted(r.doc_id for r in kept.collect())
-        # exact percentile on tiny data: threshold ~= 74.25 -> keep >= 75
-        assert ids[0] >= 74 and 24 <= len(ids) <= 27
-
 
 class TestNgramDocFrequency:
     def test_counts_documents_not_occurrences(self, spark):
@@ -314,7 +295,6 @@ class TestIncrementalDedup:
     def test_index_hits_in_batch_dups_and_fresh(self, spark):
         from autonomous_orchestrator_ai_spark.operators.curation import (
             dedup_batch_against_index,
-            updated_fingerprint_index,
         )
         from autonomous_orchestrator_ai_spark.functions.text import fingerprint
 
@@ -331,7 +311,7 @@ class TestIncrementalDedup:
         kept = dedup_batch_against_index(batch, index)
         assert sorted(r.doc_id for r in kept.collect()) == [11, 13]
         # advancing the index makes a replay of the same batch a no-op
-        next_index = updated_fingerprint_index(index, kept)
+        next_index = index.unionByName(kept.select("fp"))
         assert next_index.count() == 3
         replay = dedup_batch_against_index(batch, next_index)
         assert replay.count() == 0

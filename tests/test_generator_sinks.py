@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import json
 import time
-
-import pytest
 from datetime import datetime, timezone
 from pathlib import Path
 
@@ -18,11 +16,7 @@ from autonomous_orchestrator_ai_spark.operators.transform import (
 )
 from autonomous_orchestrator_ai_spark.schemas import customer_events_schema
 from autonomous_orchestrator_ai_spark.sources.readers import jsonl_as_kafka_envelope
-from autonomous_orchestrator_ai_spark.sources.writers import (
-    cleanup_old_data,
-    write_partitioned_parquet,
-)
-from autonomous_orchestrator_ai_spark.streaming.pipeline import run_foreach_batch
+from autonomous_orchestrator_ai_spark.sources.writers import cleanup_old_data, write_quarantine
 from autonomous_orchestrator_ai_spark.testing.generator import EventGenerator
 
 NOW = datetime(2024, 1, 15, 1, 0, 0, tzinfo=timezone.utc)
@@ -76,47 +70,6 @@ def test_generator_through_pipeline(spark, tmp_path):
     assert found <= {"marketing_opt_in", "customer_segment"} and found
 
 
-def test_foreach_batch_sink(spark, tmp_path):
-    """S5/T4: foreachBatch escape hatch under availableNow, with the
-    isEmpty() empty-batch skip."""
-    g = EventGenerator(seed=5, n_customers=10, now=NOW)
-    d = tmp_path / "fb_in"
-    g.write_jsonl(d / "b.jsonl", 20)
-    envelope = jsonl_as_kafka_envelope(spark, str(d), streaming=True)
-    parsed = parse_kafka_messages(envelope, customer_events_schema(1))
-
-    sink_dir = tmp_path / "fb_out"
-    sink_dir.mkdir()
-
-    def write_batch(batch_df, epoch_id):
-        if batch_df.isEmpty():
-            return
-        batch_df.select("id", "email").toPandas().to_json(
-            sink_dir / f"batch_{epoch_id}.json", orient="records"
-        )
-
-    run_foreach_batch(parsed, write_batch, str(tmp_path / "fb_ckpt"), timeout_seconds=120)
-    files = list(sink_dir.glob("batch_*.json"))
-    assert files
-    rows = sum(len(json.loads(f.read_text())) for f in files)
-    assert rows == 20
-
-
-def test_partitioned_write_and_pruning(spark, tmp_path, events_fixture):
-    """S4 batch twin: hive partitioning by (country, plan) -> partition
-    pruning visible in the scan plan."""
-    out = str(tmp_path / "curated")
-    write_partitioned_parquet(events_fixture, out, ["country", "plan"], mode="overwrite")
-    assert (Path(out) / "country=US").exists()
-
-    scan = spark.read.parquet(out).filter(
-        (F.col("country") == "US") & (F.col("plan") == "free")
-    )
-    assert scan.count() == 1
-    plan_str = scan._jdf.queryExecution().executedPlan().toString()
-    assert "country=US" not in plan_str or True  # plan formats vary; count checked above
-
-
 def test_retention_cleanup(tmp_path):
     """S10/C6: entries older than retention removed, fresh kept."""
     base = tmp_path / "ops"
@@ -134,57 +87,15 @@ def test_retention_cleanup(tmp_path):
     assert (base / "fresh.txt").exists()
 
 
-class TestVersionedSnapshots:
-    def test_publish_and_read_latest(self, spark, tmp_path):
-        from autonomous_orchestrator_ai_spark.sources.writers import (
-            read_latest_snapshot,
-            read_latest_version,
-            write_versioned_snapshot,
-        )
-
-        base = str(tmp_path / "snap")
-        assert write_versioned_snapshot(spark.range(5), base) == 1
-        assert write_versioned_snapshot(spark.range(7), base) == 2
-        assert read_latest_version(base) == 2
-        assert read_latest_snapshot(spark, base).count() == 7
-        # old version remains readable (time travel)
-        assert spark.read.parquet(f"{base}/v=1").count() == 5
-
-    def test_unpublished_raises(self, spark, tmp_path):
-        from autonomous_orchestrator_ai_spark.sources.writers import (
-            read_latest_snapshot,
-        )
-
-        with pytest.raises(FileNotFoundError):
-            read_latest_snapshot(spark, str(tmp_path / "missing"))
-
-
-class TestStrictReaders:
-    def test_csv_corrupt_capture(self, spark, tmp_path):
-        from autonomous_orchestrator_ai_spark.sources.readers import (
-            read_csv_strict,
-        )
-
-        p = tmp_path / "data.csv"
-        p.write_text("id,value\n1,2.5\nnot_an_int,3.0\n2,4.5\n")
-        df = read_csv_strict(spark, str(p), "id int, value double").cache()
-        good = df.filter(F.col("_corrupt_record").isNull())
-        bad = df.filter(F.col("_corrupt_record").isNotNull())
-        assert good.count() == 2 and bad.count() == 1
-        assert bad.first()._corrupt_record.startswith("not_an_int")
-        df.unpersist()
-
-    def test_jsonl_corrupt_capture(self, spark, tmp_path):
-        from autonomous_orchestrator_ai_spark.sources.readers import (
-            read_jsonl,
-        )
-
-        p = tmp_path / "data.jsonl"
-        p.write_text('{"id": 1}\n{broken\n{"id": 2}\n')
-        df = read_jsonl(spark, str(p), "id int").cache()
-        assert df.filter(F.col("_corrupt_record").isNull()).count() == 2
-        assert df.filter(F.col("_corrupt_record").isNotNull()).count() == 1
-        df.unpersist()
+def test_write_quarantine_publishes_records_and_metadata(spark, tmp_path, events_fixture):
+    """P10/D8: the quarantined rows land under ``records`` and the
+    metadata document next to them, with no temp file left behind."""
+    meta = {"filter_condition": "country = 'XX'", "status": "pending"}
+    qdir = Path(write_quarantine(events_fixture, str(tmp_path), meta, timestamp="20240115_010000"))
+    assert qdir.name == "quarantine_20240115_010000"
+    assert spark.read.parquet(str(qdir / "records")).count() == events_fixture.count()
+    assert json.loads((qdir / "metadata.json").read_text()) == meta
+    assert sorted(p.name for p in qdir.iterdir()) == ["metadata.json", "records"]
 
 
 class TestSnowflakeSink:

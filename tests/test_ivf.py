@@ -1,5 +1,6 @@
-"""IVF ANN tests: k-means convergence on separable clusters + IVF recall
-vs brute force on clustered data."""
+"""IVF ANN tests: sampled k-means (``kmeans_sample``, the coarse quantizer
+``ivf_ann_topk`` trains) converges on separable clusters, and IVF recall vs
+brute force on clustered data."""
 
 from __future__ import annotations
 
@@ -7,7 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from autonomous_orchestrator_ai_spark.operators.ivf import ivf_topk, kmeans
+from autonomous_orchestrator_ai_spark.operators.ivf import ivf_topk, kmeans_sample
 from autonomous_orchestrator_ai_spark.operators.similarity import cosine_topk
 
 
@@ -27,7 +28,7 @@ def clustered(spark):
 
 
 def test_kmeans_recovers_clusters(spark, clustered):
-    centroids = kmeans(clustered, k=4, iterations=5)
+    centroids = kmeans_sample(clustered, k=4, iterations=5)
     assert centroids.shape == (4, 8)
     # each true center has one recovered centroid within 1.0
     centers = np.eye(4, 8) * 10.0
@@ -37,7 +38,7 @@ def test_kmeans_recovers_clusters(spark, clustered):
 
 
 def test_ivf_topk_high_recall_on_clustered(spark, clustered):
-    centroids = kmeans(clustered, k=4, iterations=5)
+    centroids = kmeans_sample(clustered, k=4, iterations=5)
     queries = clustered.filter(F.col("vec_id") % 50 == 0)  # one per cluster
     exact = cosine_topk(clustered, queries, k=5)
     approx = ivf_topk(clustered, queries, centroids, k=5, n_probe=1)
@@ -49,7 +50,7 @@ def test_ivf_topk_high_recall_on_clustered(spark, clustered):
 
 
 def test_ivf_output_shape(spark, clustered):
-    centroids = kmeans(clustered, k=4, iterations=2)
+    centroids = kmeans_sample(clustered, k=4, iterations=2)
     out = ivf_topk(clustered, clustered.limit(3), centroids, k=5, n_probe=2)
     rows = out.collect()
     assert {r["rank"] for r in rows} <= {1, 2, 3, 4, 5}

@@ -1,17 +1,32 @@
-"""Every package module is one the system runs, or is kept on purpose.
+"""Every package module, and every top-level def in it, is one the system
+runs, or is kept on purpose. Static (``ast`` only, no Spark).
 
-A static walk of the import graph (``ast`` only, no Spark) from the
-production roots: the driver contract, ``bench.py``, the benchmark harness,
-every query module under ``plans/`` and the pipeline tick. Imports inside
-functions count, so ``registry.load_all``'s list and the lazy imports of the
-operators are followed. A package module that nothing reaches fails the test
-unless ``ALLOWLIST`` names it, with its COVERAGE.md row and why it is kept.
-Delete a module that only tests run; its history stays in git.
+Modules: a walk of the import graph from the production roots: the driver
+contract, ``bench.py``, the benchmark harness, every query module under
+``plans/`` and the pipeline tick. Imports inside functions count, so
+``registry.load_all``'s list and the lazy imports of the operators are
+followed. A package module that nothing reaches fails the test unless
+``ALLOWLIST`` names it, with its COVERAGE.md row and why it is kept.
+
+Defs: a top-level ``def`` or ``class`` of the package fails unless some
+production file (the package, ``bench.py``, ``__spark_entry__.py``,
+``perfbench/``) names it outside its own body, as a ``Name``, an
+``Attribute``, an import alias or an identifier string. Names inside the
+body of another unnamed def do not count, so a helper only an unnamed def
+calls is unnamed too. ``@register`` query functions are exempt (the
+registry runs them), and so are the defs of an ``ALLOWLIST`` module.
+``DEF_ALLOWLIST`` keeps a def, with its COVERAGE.md row and why.
+
+Delete a module or def that only tests run; its history stays in git.
+Tools are not production roots, so a third test checks that every package
+import in ``tools/`` still resolves.
 """
 
 from __future__ import annotations
 
 import ast
+import re
+from collections import Counter
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -33,6 +48,42 @@ ALLOWLIST = {
     f"{PKG}.operators.bmp_codec": ("Scale machinery: Multimodal (BMP)", "a1b210d kept"),
     f"{PKG}.operators.png_codec": ("Scale machinery: Multimodal (PNG)", "a1b210d kept"),
     f"{PKG}.operators.wav_codec": ("Scale machinery: Multimodal (WAV)", "a1b210d kept"),
+}
+
+_NO_BROKER = "kept, not run here: this container has no Kafka broker or connector jar"
+_NO_ENDPOINT = "kept, not run here: this container has no endpoint to reach"
+
+#: module.def -> (COVERAGE.md row, why it stays although no production file names it)
+DEF_ALLOWLIST = {
+    f"{PKG}.sources.readers.kafka_stream": ("S1 Kafka streaming scan", _NO_BROKER),
+    f"{PKG}.sources.readers.parse_avro_value": ("S2 Kafka value decode", _NO_BROKER),
+    f"{PKG}.sources.readers.decode_avro_values": ("S2 Kafka value decode", _NO_BROKER),
+    f"{PKG}.sources.writers.encode_avro_values": ("beyond: Kafka produce path", _NO_BROKER),
+    f"{PKG}.sources.writers.kafka_sink_options": ("beyond: Kafka produce path", _NO_BROKER),
+    f"{PKG}.sources.writers.foreach_batch_snowflake_sink": (
+        "S5 foreachBatch relational sink",
+        "kept, not run here: this container has no Snowflake account or connector jar",
+    ),
+    f"{PKG}.agent.transports.SlackNotifier": ("§2.12 D9 notify", _NO_ENDPOINT),
+    f"{PKG}.agent.transports.EmailNotifier": ("§2.12 D9 notify", _NO_ENDPOINT),
+    f"{PKG}.agent.transports.smtp_transport": ("§2.12 D9 notify", _NO_ENDPOINT),
+    f"{PKG}.agent.transports.AirflowClient": ("§2.12 D6 retrigger", _NO_ENDPOINT),
+    f"{PKG}.operators.transform.payload_drift_keys": (
+        "§2.7 set operations",
+        "kept, not run here: ROADMAP direction 1's drift directive reads it",
+    ),
+    f"{PKG}.sources.writers.write_quarantine": (
+        "P10 quarantine filter",
+        "kept, not run here: ROADMAP direction 1's quarantine apply writes through it",
+    ),
+    f"{PKG}.session.codegen_compiles": (
+        "Session: codegen cache",
+        "kept, not run here: an instrument tools/profile_query.py reads",
+    ),
+    f"{PKG}.streaming.pipeline.rocksdb_state_conf": (
+        "§2.9 RocksDB state store",
+        "kept, not run here: an instrument tools/parity_sf1.py and the RocksDB test read",
+    ),
 }
 
 
@@ -106,3 +157,154 @@ def test_allowlist_names_only_unreached_modules():
     package = set(_package_modules())
     assert not set(ALLOWLIST) - package, "allowlisted modules that do not exist"
     assert not set(ALLOWLIST) & reached_modules(), "allowlisted modules that are reached"
+
+
+# -- defs -------------------------------------------------------------------
+
+_IDENTIFIER = re.compile(r"[A-Za-z_]\w*")
+_DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _production_files() -> list[Path]:
+    return [
+        *sorted((REPO / PKG).rglob("*.py")),
+        REPO / "bench.py",
+        REPO / "__spark_entry__.py",
+        *sorted((REPO / "perfbench").rglob("*.py")),
+    ]
+
+
+def _names(node: ast.AST) -> Counter:
+    """How often each name occurs in ``node``: as a ``Name``, an
+    ``Attribute``, an import alias or a string that is an identifier."""
+    names: Counter = Counter()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            names[n.id] += 1
+        elif isinstance(n, ast.Attribute):
+            names[n.attr] += 1
+        elif isinstance(n, ast.alias):
+            names[n.name.rsplit(".", 1)[-1]] += 1
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            if _IDENTIFIER.fullmatch(n.value):
+                names[n.value] += 1
+    return names
+
+
+def _registered(node: ast.AST) -> bool:
+    return any(
+        isinstance(d, ast.Call) and isinstance(d.func, ast.Name) and d.func.id == "register"
+        for d in node.decorator_list
+    )
+
+
+def package_defs() -> tuple[dict[str, tuple[str, Counter]], Counter]:
+    """Every top-level def of the package (``module.name`` -> its name and
+    the names in its body) that is not a registered query, and the names
+    of every production file together."""
+    defs: dict[str, tuple[str, Counter]] = {}
+    total: Counter = Counter()
+    for path in _production_files():
+        tree = ast.parse(path.read_text(), str(path))
+        total += _names(tree)
+        if PKG not in path.relative_to(REPO).parts:
+            continue
+        module = _module_name(path)
+        for node in tree.body:
+            if isinstance(node, _DEF) and not _registered(node):
+                defs[f"{module}.{node.name}"] = (node.name, _names(node))
+    return defs, total
+
+
+def unnamed_defs(kept: dict | set = DEF_ALLOWLIST) -> set[str]:
+    """Package defs that no production file names outside their own body
+    and the bodies of the other unnamed defs. ``kept`` defs and the defs of
+    ``ALLOWLIST`` modules count as named, and their bodies as callers."""
+    defs, total = package_defs()
+    candidates = {
+        key: entry
+        for key, entry in defs.items()
+        if key not in kept and key.rsplit(".", 1)[0] not in ALLOWLIST
+    }
+    unnamed: set[str] = set()
+    while True:
+        inside_unnamed = sum((defs[key][1] for key in unnamed), Counter())
+        new = {
+            key
+            for key, (name, own) in candidates.items()
+            if key not in unnamed and total[name] - own[name] - inside_unnamed[name] <= 0
+        }
+        if not new:
+            return unnamed
+        unnamed |= new
+
+
+def test_every_package_def_is_named_or_allowlisted():
+    stray = sorted(unnamed_defs())
+    assert not stray, (
+        f"package defs no production file names: {stray}. Delete them (and "
+        "the tests that only run them), or add each to DEF_ALLOWLIST with its "
+        "COVERAGE.md row and the reason it is kept."
+    )
+
+
+def test_def_allowlist_names_only_existing_unnamed_defs():
+    """An allowlisted def that was deleted, or that production now names,
+    is a stale entry."""
+    defs, _ = package_defs()
+    gone = sorted(set(DEF_ALLOWLIST) - set(defs))
+    assert not gone, f"allowlisted defs that do not exist: {gone}"
+    named = sorted(set(DEF_ALLOWLIST) - unnamed_defs(kept=set()))
+    assert not named, f"allowlisted defs that production names: {named}"
+
+
+# -- tools ------------------------------------------------------------------
+
+
+def _module_bindings(path: Path) -> set[str]:
+    """Names a module binds at top level (inside ``if``/``try`` too):
+    defs, classes, assignments and imports."""
+    bound: set[str] = set()
+    todo = list(ast.parse(path.read_text(), str(path)).body)
+    while todo:
+        node = todo.pop()
+        if isinstance(node, _DEF):
+            bound.add(node.name)
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            bound.update((a.asname or a.name).split(".")[0] for a in node.names)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                bound.update(n.id for n in ast.walk(t) if isinstance(n, ast.Name))
+        elif isinstance(node, (ast.If, ast.Try, ast.With)):
+            for field in ("body", "orelse", "finalbody", "handlers"):
+                todo.extend(getattr(node, field, []))
+        elif isinstance(node, ast.ExceptHandler):
+            todo.extend(node.body)
+    return bound
+
+
+def test_tools_package_imports_resolve():
+    """``from autonomous_orchestrator_ai_spark.X import a`` in ``tools/``:
+    ``X`` exists and defines or imports ``a`` (or ``a`` is a submodule)."""
+    package = _package_modules()
+    broken = []
+    for path in sorted((REPO / "tools").glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Import):
+                wanted = [(a.name, None) for a in node.names if a.name.startswith(PKG)]
+            elif isinstance(node, ast.ImportFrom) and node.module and node.module.startswith(PKG):
+                wanted = [(node.module, a.name) for a in node.names]
+            else:
+                continue
+            for module, name in wanted:
+                where = f"{path.name}:{node.lineno}"
+                if module not in package:
+                    broken.append(f"{where} no module {module}")
+                elif (
+                    name is not None
+                    and f"{module}.{name}" not in package
+                    and name not in _module_bindings(package[module])
+                ):
+                    broken.append(f"{where} {module} has no {name}")
+    assert not broken, broken

@@ -89,14 +89,13 @@ def test_adc_matches_numpy_reference(spark):
 
 
 def test_pq_recall_vs_bruteforce_on_embeddings(spark):
-    from autonomous_orchestrator_ai_spark.operators.similarity import (
-        l2_normalized,
-    )
-
     emb = table(spark, SF, "embeddings")
     # ADC ranks by inner product; normalizing first makes IP == cosine,
-    # the standard prep for serving cosine from a PQ index
-    unit = emb.select("vec_id", l2_normalized("embedding").alias("embedding"))
+    # the standard prep for serving cosine from a PQ index (the embeddings
+    # fixture has no zero vectors)
+    vec = F.col("embedding").cast("array<double>")
+    norm = F.sqrt(F.aggregate(vec, F.lit(0.0), lambda acc, x: acc + x * x))
+    unit = emb.select("vec_id", F.transform(vec, lambda x: x / norm).alias("embedding"))
     queries = unit.filter(F.col("vec_id") < 10)
     cb = train_pq(unit, m=8, n_codes=32, sample_size=500)
     codes = pq_encode(unit, cb)

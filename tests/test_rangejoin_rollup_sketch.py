@@ -2,15 +2,10 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from autonomous_orchestrator_ai_spark.operators.rangejoin import range_join
-from autonomous_orchestrator_ai_spark.operators.sketch import (
-    approx_distinct,
-    bloom_filter_semi_join,
-    count_min_sketch,
-)
+from autonomous_orchestrator_ai_spark.operators.sketch import bloom_filter_semi_join
 
 
 def test_range_join_matches_inequality_join(spark):
@@ -43,19 +38,6 @@ def test_range_join_matches_inequality_join(spark):
     assert got == naive
     assert (0, 100) in got and (2, 101) in got
     assert (2, 100) not in got        # 01:00 excluded from [0,1h)
-
-
-def test_approx_distinct_error_bound(spark):
-    ev = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    exact = ev.select("l_orderkey").distinct().count()
-    approx = approx_distinct(ev, "l_orderkey", rsd=0.05)
-    assert abs(approx - exact) / exact < 0.15
-
-
-def test_count_min_sketch_builds(spark):
-    ev = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    sketch = count_min_sketch(ev, "l_returnflag")
-    assert isinstance(sketch, bytes) and len(sketch) > 0
 
 
 def test_bloom_filter_semi_join(spark):

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import io
 import json
 import time
 from datetime import datetime, timedelta
@@ -20,7 +21,7 @@ from autonomous_orchestrator_ai_spark.agent.tools import PipelineTools
 from autonomous_orchestrator_ai_spark.operators.incidents import IncidentStore
 from autonomous_orchestrator_ai_spark.operators.report import (
     build_run_report,
-    run_report_from_df,
+    report_metric_columns,
 )
 from autonomous_orchestrator_ai_spark.operators.transform import enrich_customer_events
 from autonomous_orchestrator_ai_spark.schemas import INCIDENTS_SCHEMA
@@ -32,7 +33,7 @@ def test_run_report(events_fixture):
     curated = enrich_customer_events(
         events_fixture, processing_time=F.to_timestamp(F.lit("2024-01-15 01:00:00"))
     )
-    report = run_report_from_df(curated)
+    report = build_run_report(curated.agg(*report_metric_columns()).first().asDict())
     assert report["total_records"] == 5
     assert report["dq_failures"] == 1  # cust_003
     assert report["schema_drift_count"] == 0
@@ -130,6 +131,68 @@ def test_tools_and_decision_log(tmp_path):
 
     # unknown tool -> structured error, not crash
     assert tools.execute("nope", {})["success"] is False
+
+
+class _Crash(Exception):
+    """A crash injected partway through a file write."""
+
+
+def _tear_writes(monkeypatch):
+    """Every file opened for writing dies in its first write: half the
+    text reaches the file, then ``_Crash`` is raised (a process killed
+    mid-write leaves the same bytes behind)."""
+    real_open = io.open
+
+    class Torn:
+        def __init__(self, f):
+            self._f = f
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self._f.close()
+
+        def write(self, text):
+            self._f.write(text[: len(text) // 2])
+            self._f.flush()
+            raise _Crash
+
+        def __getattr__(self, name):
+            return getattr(self._f, name)
+
+    def torn_open(file, mode="r", *args, **kwargs):
+        f = real_open(file, mode, *args, **kwargs)
+        return Torn(f) if set(mode) & set("wxa+") else f
+
+    monkeypatch.setattr(io, "open", torn_open)
+
+
+@pytest.mark.parametrize("step", ["apply_schema_remap", "mark_remap_applied"])
+def test_crash_mid_remap_write_keeps_the_previous_version(tmp_path, monkeypatch, step):
+    """A crash partway through publishing ``schema_remap.json`` leaves the
+    previous version whole, and the next remap succeeds on it."""
+    tools = PipelineTools(str(tmp_path), now=NOW)
+    tools.apply_schema_remap({"old_col": "new_col"})
+    path = tmp_path / "schema_remap.json"
+    before = path.read_bytes()
+    with monkeypatch.context() as m:
+        _tear_writes(m)
+        with pytest.raises(_Crash):
+            if step == "apply_schema_remap":
+                tools.apply_schema_remap({"a": "b"})
+            else:
+                tools.mark_remap_applied()
+    assert path.read_bytes() == before
+    assert json.loads(path.read_text())["version"] == 1
+    assert [p.name for p in tmp_path.iterdir()] == ["schema_remap.json"]
+    r = tools.apply_schema_remap({"a": "b"})
+    assert r["success"] and r["version"] == 2
+    doc = json.loads(path.read_text())
+    assert doc["mapping"] == {"old_col": "new_col", "a": "b"} and doc["applied"] is False
+    # published with the mode a plain write_text gives
+    (tmp_path / "ref.json").write_text("{}")
+    assert path.stat().st_mode == (tmp_path / "ref.json").stat().st_mode
 
 
 def test_tools_stamp_with_the_injected_clock(tmp_path):

@@ -7,9 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from autonomous_orchestrator_ai_spark.operators.skew import (
-    bucketed_join,
     salted_aggregate,
-    salted_join,
     with_salt,
     write_bucketed,
 )
@@ -53,16 +51,6 @@ def test_salted_aggregate_matches_plain(skewed_df):
     assert plain == salted
 
 
-def test_salted_join_matches_plain(spark, skewed_df):
-    dim = spark.createDataFrame(
-        [("HOT", "hot-dim")] + [(f"key_{i}", f"dim_{i}") for i in range(100)],
-        ["k", "label"],
-    )
-    plain = skewed_df.join(dim, "k").groupBy("k", "label").count()
-    salted = salted_join(skewed_df, dim, "k").groupBy("k", "label").count()
-    assert {tuple(r) for r in plain.collect()} == {tuple(r) for r in salted.collect()}
-
-
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ
     try:
@@ -71,7 +59,7 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
         write_bucketed(left, "bkt_left", "k", n_buckets=4, sort_by="k")
         write_bucketed(right, "bkt_right", "k", n_buckets=4, sort_by="k")
 
-        joined = bucketed_join(spark, "bkt_left", "bkt_right", "k")
+        joined = spark.table("bkt_left").join(spark.table("bkt_right"), "k")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan
         assert "Exchange" not in plan            # co-located: shuffle-free
@@ -169,8 +157,7 @@ def test_aqe_skew_join_splits_hot_partition(spark):
       groupBy — a hot group still lands on one reducer. That is what
       operators.skew.salted_aggregate is for (two-phase partial/final).
     - Joins where the skewed side must stay co-partitioned for a later
-      stage: splitting breaks the partitioning contract, so AQE skips it
-      — operators.skew.salted_join is the manual fallback.
+      stage: splitting breaks the partitioning contract, so AQE skips it.
     """
     saved = {
         k: spark.conf.get(k, None)
@@ -223,11 +210,6 @@ def test_aqe_skew_join_splits_hot_partition(spark):
         assert n == 30000 + 200
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in plan, f"AQE did not split the hot partition:\n{plan[:2000]}"
-
-        # the manual salted path gives the same rows — it's the fallback
-        # for the cases AQE won't touch (see docstring)
-        salted = salted_join(left, right, "k")
-        assert salted.count() == n
     finally:
         for k, v in saved.items():
             if v is None:
@@ -271,4 +253,3 @@ def test_write_bucketed_refuses_foreign_directory(spark, tmp_path):
         assert spark.table("bkt_guard_t2").count() == 10
     finally:
         spark.sql("DROP TABLE IF EXISTS bkt_guard_t2")
-

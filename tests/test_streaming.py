@@ -230,387 +230,6 @@ def test_windowed_agg_on_rocksdb_state_store(spark, tmp_path):
             spark.conf.set(key, prev)
 
 
-def test_incremental_dedup_sink(spark, tmp_path):
-    """Streaming dedup across micro-batches, runs, and restarts: survivors
-    accumulate in the corpus sink, fingerprints in the index, duplicates
-    (even reformatted ones) never land twice."""
-    import json as _json
-
-    from autonomous_orchestrator_ai_spark.streaming.pipeline import (
-        incremental_dedup_sink,
-    )
-
-    in_dir = tmp_path / "docs_in"
-    in_dir.mkdir()
-
-    def write_file(name, rows):
-        (in_dir / name).write_text(
-            "\n".join(_json.dumps(r) for r in rows) + "\n"
-        )
-
-    write_file(
-        "b0.jsonl",
-        [
-            {"doc_id": 1, "text": "alpha beta gamma"},
-            {"doc_id": 2, "text": "delta epsilon"},
-            {"doc_id": 3, "text": "ALPHA  beta gamma "},  # dup of 1, reformatted
-        ],
-    )
-    write_file(
-        "b1.jsonl",
-        [
-            {"doc_id": 4, "text": "delta epsilon"},  # dup of 2, other batch
-            {"doc_id": 5, "text": "zeta eta theta"},
-        ],
-    )
-
-    def stream():
-        return (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(in_dir))
-        )
-
-    out = str(tmp_path / "corpus")
-    idx = str(tmp_path / "fp_index")
-    ckpt = str(tmp_path / "dedup_ckpt")
-    incremental_dedup_sink(stream(), out, idx, ckpt, timeout_seconds=120)
-
-    kept = {r.doc_id for r in spark.read.parquet(out).collect()}
-    assert kept == {1, 2, 5}
-    assert spark.read.parquet(idx).count() == 3
-
-    # a later run over the same checkpoint: replayed content is dropped,
-    # fresh content lands exactly once
-    write_file(
-        "b2.jsonl",
-        [
-            {"doc_id": 6, "text": "alpha beta gamma"},  # dup of committed 1
-            {"doc_id": 7, "text": "brand new words"},
-        ],
-    )
-    incremental_dedup_sink(stream(), out, idx, ckpt, timeout_seconds=120)
-    kept = {r.doc_id for r in spark.read.parquet(out).collect()}
-    assert kept == {1, 2, 5, 7}
-    assert spark.read.parquet(idx).count() == 4
-
-
-def test_stream_stream_interval_join(spark, tmp_path):
-    """View→click attribution: clicks join only when they land within 30
-    minutes after the same user's view; later clicks age out."""
-    import json as _json
-
-    from autonomous_orchestrator_ai_spark.streaming.pipeline import (
-        stream_stream_interval_join,
-    )
-
-    views_dir = tmp_path / "views"
-    clicks_dir = tmp_path / "clicks"
-    views_dir.mkdir()
-    clicks_dir.mkdir()
-    (views_dir / "v.jsonl").write_text(
-        "\n".join(
-            _json.dumps(r)
-            for r in [
-                {"user_id": 1, "view_ts": "2024-01-15T10:00:00", "page": "a"},
-                {"user_id": 2, "view_ts": "2024-01-15T10:05:00", "page": "b"},
-            ]
-        )
-    )
-    (clicks_dir / "c.jsonl").write_text(
-        "\n".join(
-            _json.dumps(r)
-            for r in [
-                {"user_id": 1, "click_ts": "2024-01-15T10:10:00", "target": "x"},
-                {"user_id": 1, "click_ts": "2024-01-15T11:30:00", "target": "y"},  # too late
-                {"user_id": 2, "click_ts": "2024-01-15T10:04:00", "target": "z"},  # before view
-            ]
-        )
-    )
-    views = (
-        spark.readStream.schema("user_id bigint, view_ts string, page string")
-        .json(str(views_dir))
-        .withColumn("view_ts", F.to_timestamp("view_ts"))
-    )
-    clicks = (
-        spark.readStream.schema("user_id bigint, click_ts string, target string")
-        .json(str(clicks_dir))
-        .withColumn("click_ts", F.to_timestamp("click_ts"))
-    )
-    joined = stream_stream_interval_join(
-        views, clicks, "user_id", "view_ts", "click_ts", within="30 minutes"
-    )
-    out = str(tmp_path / "joined_out")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt_ssj"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.read.parquet(out).collect()
-    assert len(rows) == 1
-    assert rows[0].user_id == 1
-    assert rows[0].left_page == "a" and rows[0].right_target == "x"
-
-
-class TestBucketedUpsertSink:
-    def test_latest_wins_merge_across_batches(self, spark, tmp_path):
-        import json as _json
-
-        from autonomous_orchestrator_ai_spark.streaming.pipeline import (
-            bucketed_upsert_sink,
-            read_upsert_table,
-        )
-
-        in_dir = tmp_path / "updates"
-        in_dir.mkdir()
-
-        def write_file(name, rows):
-            (in_dir / name).write_text(
-                "\n".join(_json.dumps(r) for r in rows) + "\n"
-            )
-
-        write_file(
-            "b0.jsonl",
-            [
-                {"id": 1, "plan": "free", "seq": 10},
-                {"id": 2, "plan": "basic", "seq": 10},
-                {"id": 2, "plan": "premium", "seq": 11},  # in-batch collapse
-            ],
-        )
-        write_file(
-            "b1.jsonl",
-            [
-                {"id": 1, "plan": "enterprise", "seq": 20},  # update
-                {"id": 3, "plan": "basic", "seq": 20},       # insert
-                {"id": 2, "plan": "stale", "seq": 5},        # stale: ignored
-            ],
-        )
-
-        def stream():
-            return (
-                spark.readStream.schema("id bigint, plan string, seq bigint")
-                .option("maxFilesPerTrigger", 1)
-                .json(str(in_dir))
-            )
-
-        table = str(tmp_path / "upsert_table")
-        ckpt = str(tmp_path / "upsert_ckpt")
-        bucketed_upsert_sink(
-            stream(), table, ckpt, ["id"], "seq", n_buckets=8,
-            timeout_seconds=120,
-        )
-
-        state = {r.id: (r.plan, r.seq) for r in read_upsert_table(spark, table).collect()}
-        assert state == {
-            1: ("enterprise", 20),
-            2: ("premium", 11),
-            3: ("basic", 20),
-        }
-
-        # second run, same checkpoint: tie on seq -> incoming batch wins
-        write_file("b2.jsonl", [{"id": 3, "plan": "premium", "seq": 20}])
-        bucketed_upsert_sink(
-            stream(), table, ckpt, ["id"], "seq", n_buckets=8,
-            timeout_seconds=120,
-        )
-        state = {r.id: (r.plan, r.seq) for r in read_upsert_table(spark, table).collect()}
-        assert state[3] == ("premium", 20)
-        assert len(state) == 3
-
-    def test_schema_drift_fails_batch_without_data_loss(self, spark, tmp_path):
-        """A batch whose schema drifted must FAIL the micro-batch (union
-        error), never be treated as 'table missing' and dynamic-overwrite
-        live buckets with batch-only rows."""
-        import json as _json
-
-        import pytest
-        from pyspark.errors.exceptions.captured import StreamingQueryException
-
-        from autonomous_orchestrator_ai_spark.streaming.pipeline import (
-            bucketed_upsert_sink,
-            read_upsert_table,
-        )
-
-        in1 = tmp_path / "in1"
-        in1.mkdir()
-        (in1 / "b0.jsonl").write_text(
-            "\n".join(
-                _json.dumps({"id": i, "plan": "p", "seq": 1}) for i in range(40)
-            )
-            + "\n"
-        )
-        table = str(tmp_path / "t")
-        bucketed_upsert_sink(
-            spark.readStream.schema("id bigint, plan string, seq bigint")
-            .json(str(in1)),
-            table,
-            str(tmp_path / "c1"),
-            ["id"],
-            "seq",
-            n_buckets=4,
-            timeout_seconds=120,
-        )
-        before = {r.id: r.plan for r in read_upsert_table(spark, table).collect()}
-        assert len(before) == 40
-
-        # drifted batch: `plan` column gone — would touch every bucket
-        in2 = tmp_path / "in2"
-        in2.mkdir()
-        (in2 / "b1.jsonl").write_text(
-            "\n".join(_json.dumps({"id": i, "seq": 2}) for i in range(40)) + "\n"
-        )
-        with pytest.raises(StreamingQueryException):
-            bucketed_upsert_sink(
-                spark.readStream.schema("id bigint, seq bigint").json(str(in2)),
-                table,
-                str(tmp_path / "c2"),
-                ["id"],
-                "seq",
-                n_buckets=4,
-                timeout_seconds=120,
-            )
-        after = {r.id: r.plan for r in read_upsert_table(spark, table).collect()}
-        assert after == before, "failed batch must leave the table intact"
-
-    def test_staging_dir_durable_merge(self, spark, tmp_path):
-        """staging_dir mode: merge staged to reliable storage instead of
-        localCheckpoint; results identical."""
-        import json as _json
-
-        from autonomous_orchestrator_ai_spark.streaming.pipeline import (
-            bucketed_upsert_sink,
-            read_upsert_table,
-        )
-
-        in_dir = tmp_path / "in"
-        in_dir.mkdir()
-        (in_dir / "b0.jsonl").write_text(
-            "\n".join(
-                _json.dumps({"id": i, "plan": "p", "seq": 1}) for i in range(10)
-            )
-            + "\n"
-        )
-        (in_dir / "b1.jsonl").write_text(
-            _json.dumps({"id": 0, "plan": "q", "seq": 2}) + "\n"
-        )
-        table = str(tmp_path / "t")
-        bucketed_upsert_sink(
-            spark.readStream.schema("id bigint, plan string, seq bigint")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(in_dir)),
-            table,
-            str(tmp_path / "c"),
-            ["id"],
-            "seq",
-            n_buckets=4,
-            timeout_seconds=120,
-            staging_dir=str(tmp_path / "stage"),
-        )
-        state = {r.id: (r.plan, r.seq) for r in read_upsert_table(spark, table).collect()}
-        assert state[0] == ("q", 2)
-        assert len(state) == 10
-        # committed epochs' staged copies are deleted — retention is O(1)
-        import os
-
-        stage_root = tmp_path / "stage"
-        leftovers = (
-            [d for d in os.listdir(stage_root) if d.startswith("epoch=")]
-            if stage_root.exists()
-            else []
-        )
-        assert leftovers == []
-
-    def test_untouched_bucket_files_not_rewritten(self, spark, tmp_path):
-        import os
-
-        from autonomous_orchestrator_ai_spark.streaming.pipeline import (
-            bucketed_upsert_sink,
-        )
-
-        in_dir = tmp_path / "updates"
-        in_dir.mkdir()
-        rows0 = [{"id": i, "plan": "p", "seq": 1} for i in range(50)]
-        (in_dir / "b0.jsonl").write_text(
-            "\n".join(__import__("json").dumps(r) for r in rows0) + "\n"
-        )
-
-        def stream():
-            return (
-                spark.readStream.schema("id bigint, plan string, seq bigint")
-                .option("maxFilesPerTrigger", 1)
-                .json(str(in_dir))
-            )
-
-        table = str(tmp_path / "t")
-        bucketed_upsert_sink(
-            stream(), table, str(tmp_path / "c1"), ["id"], "seq",
-            n_buckets=16, timeout_seconds=120,
-        )
-        mtimes = {}
-        for root, _dirs, files in os.walk(table):
-            for f in files:
-                p = os.path.join(root, f)
-                mtimes[p] = os.path.getmtime(p)
-
-        # one-key update: only that key's bucket partition may change
-        (in_dir / "b1.jsonl").write_text(
-            __import__("json").dumps({"id": 0, "plan": "q", "seq": 2}) + "\n"
-        )
-        bucketed_upsert_sink(
-            stream(), table, str(tmp_path / "c1"), ["id"], "seq",
-            n_buckets=16, timeout_seconds=120,
-        )
-        from pyspark.sql import functions as F
-
-        bucket0 = spark.range(1).select(
-            F.pmod(F.xxhash64(F.lit(0).cast("bigint")), F.lit(16)).cast("int").alias("b")
-        ).collect()[0].b
-        # a rewritten bucket DELETES its old part files (new files get
-        # fresh UUID names), so existence must be asserted, not used as a
-        # skip condition — otherwise a full static overwrite passes here
-        for p, old_m in mtimes.items():
-            if f"__bucket={bucket0}" not in p and p.endswith(".parquet"):
-                assert os.path.exists(p), f"untouched bucket file deleted: {p}"
-                assert os.path.getmtime(p) == old_m, f"untouched bucket rewritten: {p}"
-
-    def test_crashed_first_write_husk_treated_as_no_table(self, spark, tmp_path):
-        """A table dir containing only the output committer's _temporary
-        husk (crash before any commit) must count as 'no table' — the
-        batch proceeds as first batch instead of wedging every retry on
-        an unreadable read."""
-        import json as _json
-        import os
-
-        from autonomous_orchestrator_ai_spark.streaming.pipeline import (
-            bucketed_upsert_sink,
-            read_upsert_table,
-        )
-
-        table = tmp_path / "t"
-        (table / "_temporary" / "0").mkdir(parents=True)
-        in_dir = tmp_path / "in"
-        in_dir.mkdir()
-        (in_dir / "b0.jsonl").write_text(
-            _json.dumps({"id": 1, "plan": "p", "seq": 1}) + "\n"
-        )
-        bucketed_upsert_sink(
-            spark.readStream.schema("id bigint, plan string, seq bigint")
-            .json(str(in_dir)),
-            str(table),
-            str(tmp_path / "c"),
-            ["id"],
-            "seq",
-            n_buckets=4,
-            timeout_seconds=120,
-        )
-        assert {r.id for r in read_upsert_table(spark, str(table)).collect()} == {1}
-        # and a real bucket dir now exists
-        assert any(d.startswith("__bucket=") for d in os.listdir(table))
-
-
 def test_rocksdb_state_store_backed_aggregation(tmp_path):
     """Stateful streaming under the RocksDB state store (the bounded-
     memory 100 TB configuration, streaming/pipeline.rocksdb_state_conf):

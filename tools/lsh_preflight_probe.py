@@ -32,9 +32,6 @@ def main() -> None:
     )
     ns = p.parse_args()
 
-    import os
-
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     from pyspark.sql import functions as F
 
     from autonomous_orchestrator_ai_spark.functions.text import (

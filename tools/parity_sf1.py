@@ -105,9 +105,7 @@ def main() -> None:
         rocksdb_state_conf,
     )
 
-    spark = get_spark(
-        "parity-sf1", cpus=16, extra_conf=rocksdb_state_conf()
-    )
+    spark = get_spark("parity-sf1", extra_conf=rocksdb_state_conf())
     assert (
         spark.conf.get("spark.sql.streaming.stateStore.providerClass")
         == ROCKSDB_STATE_PROVIDER
@@ -123,70 +121,6 @@ def main() -> None:
 
     results: dict[str, dict] = {}
     ok = True
-
-    # stream-stream interval join (view -> click attribution): two stream
-    # sides from the same event log, watermark + bounded time range so
-    # join state expires; batch twin is the identical join condition on
-    # static frames. Runs outside the _cores loop because it needs two
-    # readStream sources.
-    from autonomous_orchestrator_ai_spark.streaming.pipeline import (
-        stream_stream_interval_join,
-    )
-
-    def _split(df, etype, ts_alias):
-        # NTZ -> TIMESTAMP: watermarks require an instant-typed column
-        # (session TZ is UTC, so the cast is a pure relabel — applied to
-        # BOTH batch and stream sides, parity unaffected)
-        return (
-            df.filter(F.col("event_type") == etype)
-            .select(
-                "user_id",
-                F.col("ts").cast("timestamp").alias(ts_alias),
-                "event_id",
-            )
-        )
-
-    views_b = _split(spark.read.parquet(src), "view", "view_ts")
-    clicks_b = _split(spark.read.parquet(src), "click", "click_ts")
-    batch_join = _canon(
-        stream_stream_interval_join(
-            views_b, clicks_b, "user_id", "view_ts", "click_ts",
-            within="30 minutes", watermark="10 minutes",
-        )
-    )
-    views_s = _split(
-        spark.readStream.schema(src_schema).parquet(src), "view", "view_ts"
-    )
-    clicks_s = _split(
-        spark.readStream.schema(src_schema).parquet(src), "click", "click_ts"
-    )
-    sj = stream_stream_interval_join(
-        views_s, clicks_s, "user_id", "view_ts", "click_ts",
-        within="30 minutes", watermark="10 minutes",
-    )
-    outdir, ck = str(work / "ssjoin_out"), str(work / "ssjoin_ck")
-    q = (
-        sj.writeStream.format("parquet")
-        .option("path", outdir)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(900)
-    stream_join = _canon(spark.read.schema(sj.schema).parquet(outdir))
-    metrics = _state_metrics([json.loads(p.json) for p in q.recentProgress])
-    match = batch_join == stream_join
-    ok &= match
-    results["stream_stream_interval_join"] = {
-        "parity": "exact" if match else "MISMATCH",
-        "batch_rows": len(batch_join),
-        "stream_rows": len(stream_join),
-        **metrics,
-    }
-    print(
-        f"{'OK  ' if match else 'FAIL'} stream_stream_interval_join: "
-        f"{results['stream_stream_interval_join']}"
-    )
 
     for name, (mode, core) in _cores().items():
         batch = _canon(core(spark.read.parquet(src)))
