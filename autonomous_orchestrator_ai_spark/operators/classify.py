@@ -36,7 +36,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from autonomous_orchestrator_ai_spark.functions.literals import array_literal
+from autonomous_orchestrator_ai_spark.functions.literals import (
+    array_literal,
+    local_relation,
+)
 from autonomous_orchestrator_ai_spark.functions.text import normalized_text
 from autonomous_orchestrator_ai_spark.routes import record_route
 
@@ -422,7 +425,7 @@ def train_logistic_gd(
     ]
     rounds_run = 0
     for rounds_run in range(1, rounds + 1):
-        w = spark.createDataFrame(w_rows, schema)
+        w = local_relation(spark, w_rows, schema)
         resid = (
             fl.join(F.broadcast(w), "bucket")
             .groupBy(id_col)
@@ -467,7 +470,7 @@ def train_logistic_gd(
         chosen=rounds_run,
     )
     fl.unpersist()
-    return spark.createDataFrame(w_rows, schema)
+    return local_relation(spark, w_rows, schema)
 
 
 def score_features(

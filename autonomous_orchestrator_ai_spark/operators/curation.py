@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from autonomous_orchestrator_ai_spark.functions.literals import local_relation
 from autonomous_orchestrator_ai_spark.functions.text import (
     fingerprint,
     token_count,
@@ -112,9 +113,10 @@ def stratified_sample(
     stable under repartitioning).
     """
     spark = df.sparkSession
-    rates = spark.createDataFrame(
+    rates = local_relation(
+        spark,
         [(s, hex_threshold(f) or "zzzz") for s, f in fractions.items()],
-        [strata_col, "__thr"],
+        f"`{strata_col}` string, __thr string",
     )
     draw = F.substring(sample_hash(key_col, salt), 1, _HEX_CHARS)
     return (
@@ -648,8 +650,8 @@ def mixture_epoch_plan(
             "weight", F.element_at(wmap, F.col(source_col))
         )
     else:
-        wdf = spark.createDataFrame(
-            list(norm.items()), f"{source_col} string, weight double"
+        wdf = local_relation(
+            spark, list(norm.items()), f"`{source_col}` string, weight double"
         )
         weighted = per_source_tokens.join(
             F.broadcast(wdf), source_col, "left"

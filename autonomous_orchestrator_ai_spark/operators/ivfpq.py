@@ -47,9 +47,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from autonomous_orchestrator_ai_spark.operators.partitioning import (
-    ensure_min_parallelism,
-)
 from autonomous_orchestrator_ai_spark.operators.similarity import (
     _as_double_array,
     cosine,
@@ -72,7 +69,8 @@ def ivfpq_encode(
     code). All BLAS; no per-row Python. Output keeps every non-vector
     input column and appends ``bucket int, pq_code array<int>`` — at scale
     this is the materialized index table, written partitioned by bucket so
-    probes prune partitions."""
+    probes prune partitions. Like ``pq.pq_encode`` it runs on ``df``'s own
+    partitions."""
     c = np.ascontiguousarray(centroids, dtype=np.float64)
     cb = np.ascontiguousarray(codebooks, dtype=np.float64)
     c_norm2 = (c * c).sum(axis=1)
@@ -100,9 +98,7 @@ def ivfpq_encode(
             yield out
 
     keep = [col for col in df.columns if col != vec_col]
-    prepared = ensure_min_parallelism(df).select(
-        *keep, _as_double_array(vec_col).alias("__v")
-    )
+    prepared = df.select(*keep, _as_double_array(vec_col).alias("__v"))
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in prepared.schema.fields

@@ -27,9 +27,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from autonomous_orchestrator_ai_spark.operators.partitioning import (
-    ensure_min_parallelism,
-)
 from autonomous_orchestrator_ai_spark.operators.similarity import (
     _as_double_array,
     cosine,
@@ -96,7 +93,11 @@ def pq_encode(
     """Distributed encoding: vec -> array<int> of ``m`` nearest-sub-
     centroid ids. One Arrow-batched pass; per batch the assignment is m
     small BLAS matmuls. Codebooks ride in the task closure
-    (m·n_codes·sub doubles — KBs)."""
+    (m·n_codes·sub doubles — KBs). It runs on ``df``'s own partitions:
+    the kernel costs microseconds per row and each Python task ~0.2 s
+    of worker start-up, so spreading a small input with a round-robin
+    exchange costs more than it saves (PERF.md "What a Python worker
+    task costs")."""
     cb = np.ascontiguousarray(codebooks, dtype=np.float64)
     m, n_codes, sub = cb.shape
 
@@ -116,9 +117,7 @@ def pq_encode(
             yield out
 
     keep = [c for c in df.columns if c != vec_col]
-    prepared = ensure_min_parallelism(df).select(
-        *keep, _as_double_array(vec_col).alias("__v")
-    )
+    prepared = df.select(*keep, _as_double_array(vec_col).alias("__v"))
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in prepared.schema.fields
@@ -195,7 +194,9 @@ def pq_adc_topk(
                     s, batch_ids = s[keep_mask], ids[keep_mask]
                 else:
                     batch_ids = ids
-                top = np.argsort(-s, kind="stable")[: min(k, len(batch_ids))]
+                # score desc, then neighbor id asc: rank_topk's order, so
+                # equal scores keep the lowest ids whatever the batching
+                top = np.lexsort((batch_ids, -s))[:k]
                 yield pd.DataFrame(
                     {
                         "query_id": q_ids[qi],

@@ -33,6 +33,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from autonomous_orchestrator_ai_spark.functions.literals import local_relation
 from autonomous_orchestrator_ai_spark.operators.scoring import (
     _tokens,
     explode_tokens,
@@ -74,8 +75,8 @@ def bm25_scores(
         if not query_terms:
             raise ValueError("bm25_scores: query_terms must be non-empty")
         spark = docs.sparkSession
-        terms = spark.createDataFrame(
-            [(t.lower(),) for t in dict.fromkeys(query_terms)], ["token"]
+        terms = local_relation(
+            spark, [(t.lower(),) for t in dict.fromkeys(query_terms)], "token string"
         )
 
     tokens = explode_tokens(docs.select(id_col, text_col), id_col, text_col)

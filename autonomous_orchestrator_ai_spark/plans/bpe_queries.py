@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from autonomous_orchestrator_ai_spark.functions.literals import local_relation
 from autonomous_orchestrator_ai_spark.operators.bpe import (
     bpe_initial_state,
     bpe_pair_counts,
@@ -125,8 +126,8 @@ def bpe_learned_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark jobs. Both routes return the same merges."""
     docs = table(spark, sf_dir, "documents")
     merges = bpe_train(docs, "text", _N_MERGES)
-    return spark.createDataFrame(
-        merges, "merge_rank int, a string, b string, cnt bigint"
+    return local_relation(
+        spark, merges, "merge_rank int, a string, b string, cnt bigint"
     )
 
 

@@ -23,6 +23,18 @@ def spark(tmp_path_factory):
 
 
 @pytest.fixture()
+def one_partition_vectors(spark):
+    """(vec_id, 2-dim embedding) rows in one partition, fewer partitions
+    than the session's cores."""
+    from pyspark.sql import functions as F
+
+    return spark.range(0, 40, 1, 1).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.col("id").cast("double"), F.lit(1.0)).alias("embedding"),
+    )
+
+
+@pytest.fixture()
 def events_fixture(spark):
     """The violation-seeded 5-row fixture (FIXTURES.md §1; pattern from
     reference tests/test_dq.py:22-49): exactly one violation per DQ rule."""

@@ -57,6 +57,14 @@ def test_encode_matches_numpy_reference(spark):
         assert got[i] == (want_b[i], want_codes[i].tolist())
 
 
+def test_encode_runs_on_the_input_partitions(one_partition_vectors):
+    df = one_partition_vectors
+    enc = ivfpq_encode(df, fixed_centroids(2, 3, seed=1), fixed_pq_codebooks(2, 2, 4))
+    assert enc.rdd.getNumPartitions() == df.rdd.getNumPartitions() == 1
+    plan = enc._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" not in plan
+
+
 def test_encode_rejects_dim_mismatch(spark):
     df = spark.createDataFrame([(1, [0.0] * 16)], ["vec_id", "embedding"])
     with pytest.raises(ValueError):

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from autonomous_orchestrator_ai_spark.operators.pq import (
+    fixed_pq_codebooks,
     pq_adc_topk,
     pq_encode,
     train_pq,
@@ -86,6 +87,30 @@ def test_adc_matches_numpy_reference(spark):
             got_id, got_score = got[(qid, rank)]
             assert got_id == exp_id, (qid, rank, got_id, exp_id)
             assert abs(got_score - exp_score) < 1e-4
+
+
+def test_adc_partial_topk_keeps_the_lowest_ids_of_a_tie(spark):
+    """Ten rows of one batch share a code vector, so their ADC scores tie.
+    The global rank breaks ties by neighbor id, so the batch's partial
+    top-k must keep the lowest ids, not the first ones in batch order."""
+    cb = np.array([[[1.0], [-1.0]], [[1.0], [-1.0]]])  # m=2, 2 codes, sub=1
+    rows = [(i, [0, 0]) for i in range(10, 0, -1)] + [(11, [1, 1])]
+    codes = spark.createDataFrame(rows, "vec_id bigint, pq_code array<int>")
+    queries = spark.createDataFrame(
+        [(100, [1.0, 1.0])], "vec_id bigint, embedding array<double>"
+    )
+    got = pq_adc_topk(codes.coalesce(1), queries, cb, k=3).orderBy("rank")
+    assert [r.neighbor_id for r in got.collect()] == [1, 2, 3]
+
+
+def test_encode_runs_on_the_input_partitions(one_partition_vectors):
+    """The NumPy kernel costs microseconds per row; a round-robin exchange
+    to spread a small input would only start more Python tasks."""
+    df = one_partition_vectors
+    enc = pq_encode(df, fixed_pq_codebooks(2, m=2, n_codes=4))
+    assert enc.rdd.getNumPartitions() == df.rdd.getNumPartitions() == 1
+    plan = enc._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" not in plan
 
 
 def test_pq_recall_vs_bruteforce_on_embeddings(spark):

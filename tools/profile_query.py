@@ -15,6 +15,13 @@ during the phase (codegen cache misses) and their compile time, from
 ``session.codegen_compiles`` before and after it. A steady pass of a query
 whose classes stay cached compiles none.
 
+``py_driver_s``, ``jvm_s`` and ``py_workers_s`` split the CPU seconds of
+the phase by process: this Python driver, the JVM it launched, and the
+JVM's Python workers (daemons and the workers they fork). They are read
+from ``/proc/<pid>/stat`` (user + system, reaped children included, the
+count ``perfbench.layers.tree_cpu_seconds`` sums), so a change at the
+Arrow/Python boundary shows in the process that moved.
+
 Under each build group, one ``route`` line per route record the plan
 build emitted (``autonomous_orchestrator_ai_spark.routes``): the cost
 route's name, what it chose, its estimate and its budget.
@@ -37,6 +44,23 @@ from pathlib import Path
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 COLUMNS = ("jobs", "stages", "tasks", "shuffle_write_bytes", "shuffle_read_bytes", "spill_bytes")
+CPU_COLUMNS = ("py_driver_s", "jvm_s", "py_workers_s")
+
+
+def cpu_split(jvm: int) -> tuple[float, float, float]:
+    """CPU seconds of this Python driver, of its JVM (pid ``jvm``) and of
+    the processes below the JVM: its Python workers, and through the JVM's
+    reaped children the workers that have exited."""
+    from perfbench.layers import tree_cpu_seconds
+
+    f = Path(f"/proc/{jvm}/stat").read_text().rsplit(")", 1)[1].split()
+    jvm_own = (int(f[11]) + int(f[12])) / os.sysconf("SC_CLK_TCK")
+    below_driver = tree_cpu_seconds(jvm)
+    return (
+        tree_cpu_seconds(os.getpid()) - below_driver,
+        jvm_own,
+        below_driver - jvm_own,
+    )
 
 
 def main() -> None:
@@ -67,19 +91,21 @@ def main() -> None:
     )
     registry.load_all()
     sc = spark.sparkContext
+    jvm = sc._gateway.proc.pid  # spark-submit execs into the JVM
     records: list[logging.LogRecord] = []
     handler = logging.Handler()
     handler.emit = records.append
     LOGGER.addHandler(handler)
     LOGGER.setLevel(logging.INFO)
 
-    def mark() -> tuple[float, int, float]:
-        return (time.perf_counter(), *codegen_compiles(spark))
+    def mark() -> tuple:
+        return (time.perf_counter(), *codegen_compiles(spark), *cpu_split(jvm))
 
     def delta(a, b) -> list:
         return [y - x for x, y in zip(a, b)]
 
-    # (query, op, routes, build, exec): each phase (seconds, compiles, compile ms)
+    # (query, op, routes, build, exec): each phase (seconds, compiles,
+    # compile ms, then the CPU_COLUMNS seconds)
     runs = []
     for p in range(args.passes):
         for i, name in enumerate(args.queries):
@@ -100,15 +126,19 @@ def main() -> None:
 
     phases = parse_event_log(eventdir / app_id)["phases"]
     shutil.rmtree(eventdir)
-    print(f"{'group':<48} {'wall_s':>8} " + " ".join(COLUMNS) + " compiles compile_ms")
+    print(
+        f"{'group':<48} {'wall_s':>8} "
+        + " ".join((*COLUMNS, "compiles", "compile_ms", *CPU_COLUMNS))
+    )
     for name, op, routes, *measured in runs:
-        for phase, (wall, compiles, compile_ms) in zip(("build", "exec"), measured):
+        for phase, (wall, compiles, compile_ms, *cpu) in zip(("build", "exec"), measured):
             c = phases[(phase, op)]
             group = f"{phase}:{op}:{name}"
             print(
                 f"{group:<48} {wall:8.3f} "
                 + " ".join(f"{c[k]:>{len(k)}}" for k in COLUMNS)
-                + f" {compiles:>8} {compile_ms:>10.1f}"
+                + f" {compiles:>8} {compile_ms:>10.1f} "
+                + " ".join(f"{v:>{len(k)}.2f}" for k, v in zip(CPU_COLUMNS, cpu))
             )
             if phase == "build":
                 for msg in routes:
