@@ -410,11 +410,13 @@ def train_logistic_gd(
     n_docs = float(fl.select(id_col).distinct().count())  # 1-value read
     # The weight table is a MODEL CONSTANT (<= n_buckets + sentinels rows),
     # so it round-trips through the driver between rounds — the same
-    # bounded-control-plane pattern as the IVF codebook. Rebroadcasting it
-    # as a LocalTableScan makes each round exactly ONE Spark action (the
-    # collect of the updated weights), instead of separate
-    # checkpoint/broadcast/collect jobs whose fixed cost dominated at
-    # small-to-mid scale (143 s -> ~40 s for 24 rounds at sf0.1). ALL
+    # bounded-control-plane pattern as the IVF codebook. Each round
+    # rebuilds it as a JVM LocalRelation (`local_relation`), which starts
+    # no Python worker, in place of the checkpoint/broadcast jobs of the
+    # join-chained form whose fixed cost dominated at small-to-mid scale
+    # (143 s -> ~40 s for 24 rounds at sf0.1). A round still runs several
+    # jobs (133 for 24 rounds at sf0.01; see the CHANGES.md FOUND line on
+    # `train_logistic_gd`), not one collect. ALL
     # arithmetic — including the 1e-9 grid snap — stays in Spark
     # expressions, so results are bit-identical to the join-chained form
     # and to the DuckDB oracle.

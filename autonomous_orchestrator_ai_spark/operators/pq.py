@@ -95,9 +95,10 @@ def pq_encode(
     small BLAS matmuls. Codebooks ride in the task closure
     (m·n_codes·sub doubles — KBs). It runs on ``df``'s own partitions:
     the kernel costs microseconds per row and each Python task ~0.2 s
-    of worker start-up, so spreading a small input with a round-robin
-    exchange costs more than it saves (PERF.md "What a Python worker
-    task costs")."""
+    of worker start-up. A round-robin spread to the cluster's
+    parallelism measured slower at sf0.01, sf0.1 and sf1, and a forced
+    4-way spread of sf10's 200k vectors was slower than one task
+    (PERF.md "What a Python worker task costs")."""
     cb = np.ascontiguousarray(codebooks, dtype=np.float64)
     m, n_codes, sub = cb.shape
 

@@ -20,7 +20,9 @@ the phase by process: this Python driver, the JVM it launched, and the
 JVM's Python workers (daemons and the workers they fork). They are read
 from ``/proc/<pid>/stat`` (user + system, reaped children included, the
 count ``perfbench.layers.tree_cpu_seconds`` sums), so a change at the
-Arrow/Python boundary shows in the process that moved.
+Arrow/Python boundary shows in the process that moved. A session whose
+JVM this tool did not launch (a gateway attached through
+``PYSPARK_GATEWAY_PORT``) prints no CPU columns.
 
 Under each build group, one ``route`` line per route record the plan
 build emitted (``autonomous_orchestrator_ai_spark.routes``): the cost
@@ -55,11 +57,11 @@ def cpu_split(jvm: int) -> tuple[float, float, float]:
 
     f = Path(f"/proc/{jvm}/stat").read_text().rsplit(")", 1)[1].split()
     jvm_own = (int(f[11]) + int(f[12])) / os.sysconf("SC_CLK_TCK")
-    below_driver = tree_cpu_seconds(jvm)
+    jvm_tree = tree_cpu_seconds(jvm)
     return (
-        tree_cpu_seconds(os.getpid()) - below_driver,
+        tree_cpu_seconds(os.getpid()) - jvm_tree,
         jvm_own,
-        below_driver - jvm_own,
+        jvm_tree - jvm_own,
     )
 
 
@@ -91,7 +93,11 @@ def main() -> None:
     )
     registry.load_all()
     sc = spark.sparkContext
-    jvm = sc._gateway.proc.pid  # spark-submit execs into the JVM
+    # spark-submit execs into the JVM; a gateway attached through
+    # PYSPARK_GATEWAY_PORT has no child process to read, so no CPU columns
+    # (vars(): py4j answers any missing gateway attribute with a JavaMember)
+    proc = vars(sc._gateway).get("proc")
+    cpu_columns = CPU_COLUMNS if proc else ()
     records: list[logging.LogRecord] = []
     handler = logging.Handler()
     handler.emit = records.append
@@ -99,13 +105,14 @@ def main() -> None:
     LOGGER.setLevel(logging.INFO)
 
     def mark() -> tuple:
-        return (time.perf_counter(), *codegen_compiles(spark), *cpu_split(jvm))
+        cpu = cpu_split(proc.pid) if proc else ()
+        return (time.perf_counter(), *codegen_compiles(spark), *cpu)
 
     def delta(a, b) -> list:
         return [y - x for x, y in zip(a, b)]
 
     # (query, op, routes, build, exec): each phase (seconds, compiles,
-    # compile ms, then the CPU_COLUMNS seconds)
+    # compile ms, then the cpu_columns seconds)
     runs = []
     for p in range(args.passes):
         for i, name in enumerate(args.queries):
@@ -128,7 +135,7 @@ def main() -> None:
     shutil.rmtree(eventdir)
     print(
         f"{'group':<48} {'wall_s':>8} "
-        + " ".join((*COLUMNS, "compiles", "compile_ms", *CPU_COLUMNS))
+        + " ".join((*COLUMNS, "compiles", "compile_ms", *cpu_columns))
     )
     for name, op, routes, *measured in runs:
         for phase, (wall, compiles, compile_ms, *cpu) in zip(("build", "exec"), measured):
