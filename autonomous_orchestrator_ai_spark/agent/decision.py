@@ -7,10 +7,11 @@ IO. Thresholds mirror decision_agent.py:63-70.
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass, field
 from datetime import datetime
 from pathlib import Path
+
+from autonomous_orchestrator_ai_spark.sources.writers import append_jsonl
 
 #: Reference thresholds (decision_agent.py:63-70; config.yml:46-49).
 THRESHOLDS = {
@@ -114,7 +115,8 @@ def log_decision(
     path: str | Path,
     now: datetime | None = None,
 ) -> None:
-    """JSONL audit log (reference D11, decision_agent.py:495-523)."""
+    """JSONL audit log (reference D11, decision_agent.py:495-523), appended
+    under ``writers.append_jsonl``'s commit rule."""
     entry = {
         "timestamp": (now or datetime.now()).isoformat(),
         "decision": result.to_dict(),
@@ -128,5 +130,4 @@ def log_decision(
     }
     p = Path(path)
     p.parent.mkdir(parents=True, exist_ok=True)
-    with p.open("a") as f:
-        f.write(json.dumps(entry) + "\n")
+    append_jsonl(p, entry)

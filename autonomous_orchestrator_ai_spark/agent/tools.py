@@ -16,7 +16,10 @@ from pathlib import Path
 from autonomous_orchestrator_ai_spark.agent.transports import (
     SLACK_SEVERITY_COLORS as SEVERITY_COLORS,
 )
-from autonomous_orchestrator_ai_spark.sources.writers import write_text_atomic
+from autonomous_orchestrator_ai_spark.sources.writers import (
+    append_jsonl,
+    write_text_atomic,
+)
 
 
 class PipelineTools:
@@ -126,8 +129,7 @@ class PipelineTools:
             api = self.airflow.retrigger_task(self.dag_id, task_id)
             req["airflow"] = api
             result = {"success": api.get("success", False), "request": req}
-        with marker.open("a") as f:
-            f.write(json.dumps(req) + "\n")
+        append_jsonl(marker, req)
         return result
 
     # -- D9: notify (Slack/SMTP adapters; console fallback,
@@ -147,8 +149,7 @@ class PipelineTools:
                 "Pipeline Alert", message, severity=severity
             )
         self.notifications.append(note)
-        with (self.ops_dir / "notifications.jsonl").open("a") as f:
-            f.write(json.dumps(note) + "\n")
+        append_jsonl(self.ops_dir / "notifications.jsonl", note)
         return {"success": True, "notification": note}
 
     # -- D10: escalate (tools.py:223-267) ----------------------------------

@@ -4,8 +4,8 @@ Reference: /root/reference/spark/jobs/ingest_transform.py:164-225.
 
 Deviation documented per SURVEY.md §7.4: the reference converts epoch millis
 with ``from_unixtime(ms/1000)`` which truncates to SECOND precision
-(ingest_transform.py:168-173). The default here is exact
-(``timestamp_millis``); pass ``second_precision=True`` for strict parity.
+(ingest_transform.py:168-173). The engine keeps millisecond timestamps
+(``timestamp_millis``).
 """
 
 from __future__ import annotations
@@ -19,19 +19,15 @@ LATE_THRESHOLD_MINUTES = 15
 WATERMARK_DELAY = "15 minutes"
 
 
-def millis_to_timestamp(col: Column | str, second_precision: bool = False) -> Column:
-    """Epoch-millis long -> TimestampType (reference F1)."""
+def millis_to_timestamp(col: Column | str) -> Column:
+    """Epoch-millis long -> TimestampType, millis kept (reference F1)."""
     col = F.col(col) if isinstance(col, str) else col
-    if second_precision:
-        # strict reference parity: from_unixtime(ms/1000) truncates millis
-        return F.from_unixtime(F.floor(col / F.lit(1000))).cast("timestamp")
     return F.timestamp_millis(col)
 
 
 def with_event_timestamps(
     df: DataFrame,
     processing_time: Column | None = None,
-    second_precision: bool = False,
 ) -> DataFrame:
     """Derive signup_timestamp / event_timestamp / processing_timestamp.
 
@@ -42,18 +38,15 @@ def with_event_timestamps(
     if processing_time is None:
         processing_time = F.current_timestamp()
     return (
-        df.withColumn("signup_timestamp", millis_to_timestamp("signup_ts", second_precision))
-        .withColumn("event_timestamp", millis_to_timestamp("event_ts", second_precision))
+        df.withColumn("signup_timestamp", millis_to_timestamp("signup_ts"))
+        .withColumn("event_timestamp", millis_to_timestamp("event_ts"))
         .withColumn("processing_timestamp", processing_time)
     )
 
 
-def late_arrival_flag(
-    event_ts: Column | str,
-    processing_ts: Column | str,
-    threshold_minutes: int = LATE_THRESHOLD_MINUTES,
-) -> Column:
-    """is_late_arrival := unix(processing) - unix(event) > threshold*60.
+def late_arrival_flag(event_ts: Column | str, processing_ts: Column | str) -> Column:
+    """is_late_arrival := unix(processing) - unix(event) >
+    LATE_THRESHOLD_MINUTES*60.
 
     Reference P9: ingest_transform.py:211-225. Semantics are *annotate,
     never filter* — late rows are flagged and kept (T2).
@@ -61,7 +54,8 @@ def late_arrival_flag(
     event_ts = F.col(event_ts) if isinstance(event_ts, str) else event_ts
     processing_ts = F.col(processing_ts) if isinstance(processing_ts, str) else processing_ts
     return (
-        F.unix_timestamp(processing_ts) - F.unix_timestamp(event_ts) > threshold_minutes * 60
+        F.unix_timestamp(processing_ts) - F.unix_timestamp(event_ts)
+        > LATE_THRESHOLD_MINUTES * 60
     )
 
 

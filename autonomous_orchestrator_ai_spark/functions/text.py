@@ -31,6 +31,14 @@ def tokens(text: Column | str) -> Column:
     )
 
 
+def lower_tokens(text: Column | str) -> Column:
+    """Lowercase whitespace tokens, ``split(lower(trim(text)), '\\s+')``:
+    the DuckDB oracles' ``string_split_regex(lower(trim(text)), '\\s+')``.
+    An empty text gives ``['']``; callers drop the empty token."""
+    text = F.col(text) if isinstance(text, str) else text
+    return F.split(F.lower(F.trim(text)), WHITESPACE_RE)
+
+
 def token_count(text: Column | str) -> Column:
     return F.size(tokens(text)).cast("bigint")
 
@@ -59,11 +67,10 @@ def punct_ratio(text: Column | str) -> Column:
     return F.when(total == 0, F.lit(0.0)).otherwise(punct / total)
 
 
-def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Column:
-    """stopword tokens / tokens (0 for empty). Case-insensitive."""
-    stopwords = stopwords or EN_STOPWORDS
+def stopword_ratio(text: Column | str) -> Column:
+    """``EN_STOPWORDS`` tokens / tokens (0 for empty). Case-insensitive."""
     toks = tokens(F.lower(F.col(text) if isinstance(text, str) else text))
-    hits = F.size(F.filter(toks, lambda t: t.isin(stopwords)))
+    hits = F.size(F.filter(toks, lambda t: t.isin(EN_STOPWORDS)))
     n = F.size(toks)
     return F.when(n == 0, F.lit(0.0)).otherwise(hits / n)
 

@@ -57,6 +57,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from autonomous_orchestrator_ai_spark.functions.text import lower_tokens
 from autonomous_orchestrator_ai_spark.routes import record_route
 
 #: U+001F unit separator: cannot occur in ``^[a-z0-9]+$`` words.
@@ -70,7 +71,7 @@ def bpe_word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     ``^[a-z0-9]+$``. The ONE corpus-scale pass; everything after is
     vocabulary-bounded."""
     tok = F.explode(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+        lower_tokens(text_col)
     ).alias("word")
     return (
         df.select(tok)
@@ -167,7 +168,6 @@ def bpe_train(
     df: DataFrame,
     text_col: str = "text",
     n_merges: int = 8,
-    checkpoint_every: int = 4,
 ) -> list[tuple[int, str, str, int]]:
     """Learn ``n_merges`` BPE merges; returns [(rank, a, b, cnt), ...].
 
@@ -201,7 +201,7 @@ def bpe_train(
         a, b, cnt = top[0]["a"], top[0]["b"], int(top[0]["cnt"])
         merges.append((rank, a, b, cnt))
         state = bpe_apply_merge(state, a, b)
-        if rank % checkpoint_every == 0 and rank < n_merges:
+        if rank % 4 == 0 and rank < n_merges:
             state = state.localCheckpoint()
     return merges
 
@@ -293,7 +293,7 @@ def bpe_doc_token_counts(
     words = docs.select(
         id_col,
         F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+            lower_tokens(text_col)
         ).alias("word"),
     )
     enc = bpe_word_encodings(docs, merges, text_col)

@@ -4,27 +4,22 @@ Production LLM-data pipelines gate documents with a cheap linear
 classifier over hashed bag-of-words features (fastText supervised, the
 CCNet / GPT-3 "quality filter"): tokenize, hash each token into one of
 ``n_buckets`` feature buckets, average the bucket weights, squash with a
-sigmoid, threshold. This module implements that scoring shape Spark-first,
-in two interchangeable forms:
+sigmoid, threshold. This module implements that scoring shape Spark-first:
 
 * :func:`hashed_linear_score` — the whole model as ONE column expression:
   tokens -> md5 bucket -> in-expression weight -> ``F.aggregate`` mean ->
   sigmoid. Zero shuffle, zero UDF, zero join: scoring 100 TB is a pure
   map over the scan, the best possible plan for this operator. Weights
-  are derived from ``md5(salt # bucket)`` — a *frozen pseudo-random
+  are derived from ``md5('w1#' || bucket)`` — a *frozen pseudo-random
   model*, the same derandomization trick as the frozen LSH hyperplanes
   (operators/similarity.py), which is what lets a DuckDB oracle replay
   the classifier bit-for-bit.
 
-* :func:`score_with_weight_table` — the trained-model path: weights live
-  in a (bucket, weight) DataFrame (loaded from wherever training wrote
-  them), broadcast-joined against exploded tokens. The weight table is
-  bounded by ``n_buckets`` (a model constant, never corpus-scaled), so
-  the broadcast hint is safe by construction.
-
-Both paths produce identical scores when the table holds the frozen
-weights — pinned by a test — so the oracle-checked expression form
-certifies the join-plan form too.
+* :func:`train_logistic_gd` trains a (bucket, weight) table over
+  :func:`hashed_features`; :func:`score_features` (batch) and
+  :func:`trained_score_expr` (the streaming tick's map-only form) score
+  with it. The table is bounded by the bucket count (a model constant,
+  never corpus-scaled), so broadcasting it is safe by construction.
 
 Reference parity note: the reference repo has no ML-based scoring; this
 extends the beyond-reference curation surface (operators/curation.py,
@@ -48,7 +43,6 @@ __all__ = [
     "bucket_weight",
     "hashed_linear_score",
     "frozen_weight_table",
-    "score_with_weight_table",
     "hashed_features",
     "train_logistic_gd",
     "score_features",
@@ -72,16 +66,16 @@ def token_bucket(tok: Column, n_buckets: int = N_BUCKETS) -> Column:
     )
 
 
-def bucket_weight(bucket: Column, salt: str = "w1") -> Column:
+def bucket_weight(bucket: Column) -> Column:
     """Frozen pseudo-weight of a feature bucket, uniform on the +/-1 grid.
 
-    Derived from md5 of the salted bucket id — a deterministic function,
-    not state: every executor, every engine, every run agrees without
-    shipping a table. Swapping in trained weights = switching to
-    :func:`score_with_weight_table`; the scoring algebra is identical.
+    Derived from md5 of the bucket id salted ``w1`` — a deterministic
+    function, not state: every executor, every engine, every run agrees
+    without shipping a table. Trained weights score through
+    :func:`trained_score_expr`; the scoring algebra is identical.
     """
     h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt + "#"), bucket.cast("string"))), 1, 8),
+        F.substring(F.md5(F.concat(F.lit("w1#"), bucket.cast("string"))), 1, 8),
         16,
         10,
     ).cast("bigint")
@@ -90,77 +84,39 @@ def bucket_weight(bucket: Column, salt: str = "w1") -> Column:
     )
 
 
-def hashed_linear_score(
-    text: Column | str,
-    salt: str = "w1",
-    n_buckets: int = N_BUCKETS,
-    bias: float = 0.0,
-) -> Column:
+def hashed_linear_score(text: Column | str) -> Column:
     """Classifier probability as a single column expression.
 
-    logit = bias + mean over tokens of weight(bucket(token));
-    score = sigmoid(logit). ``F.aggregate`` folds over the token array
-    row-locally — the whole classifier runs inside whole-stage codegen
-    with no exchange. NULL text scores sigmoid(bias); empty text
-    tokenizes (like everywhere in this engine) to a single '' token.
+    logit = 0 + mean over tokens of weight(bucket(token)) over
+    ``N_BUCKETS`` buckets; score = sigmoid(logit). ``F.aggregate`` folds
+    over the token array row-locally — the whole classifier runs inside
+    whole-stage codegen with no exchange. NULL text scores 0.5; empty
+    text tokenizes (like everywhere in this engine) to a single '' token.
     """
     toks = F.split(normalized_text(text), " ")
     n = F.size(toks)
     total = F.aggregate(
         toks,
         F.lit(0.0),
-        lambda acc, t: acc + bucket_weight(token_bucket(t, n_buckets), salt),
+        lambda acc, t: acc + bucket_weight(token_bucket(t, N_BUCKETS)),
     )
-    logit = F.lit(float(bias)) + F.when(n > 0, total / n).otherwise(F.lit(0.0))
+    # the frozen model's bias: 0
+    logit = F.lit(0.0) + F.when(n > 0, total / n).otherwise(F.lit(0.0))
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-logit))
 
 
-def frozen_weight_table(
-    spark: SparkSession, n_buckets: int = N_BUCKETS, salt: str = "w1"
-) -> DataFrame:
+def frozen_weight_table(spark: SparkSession, n_buckets: int = N_BUCKETS) -> DataFrame:
     """The frozen model materialized as (bucket, weight) — what a trained
     fastText model would be loaded as. Generated distributed via range()
     (no driver-side list of n_buckets rows)."""
     b = spark.range(n_buckets).select(F.col("id").alias("bucket"))
-    return b.select("bucket", bucket_weight(F.col("bucket"), salt).alias("weight"))
+    return b.select("bucket", bucket_weight(F.col("bucket")).alias("weight"))
 
 
-def score_with_weight_table(
-    docs: DataFrame,
-    weights: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = N_BUCKETS,
-    bias: float = 0.0,
-) -> DataFrame:
-    """Trained-model scoring path: (doc_id, score).
-
-    Explode tokens -> bucket -> broadcast join the bounded weight table ->
-    per-doc mean -> sigmoid. Tokens missing from the table contribute
-    weight 0 (an untrained bucket), matching fastText's zero-initialized
-    rows. The groupBy shuffles (doc_id, partial sums) only — token text
-    never leaves the map side.
-    """
-    toks = docs.select(
-        id_col, F.explode(F.split(normalized_text(text_col), " ")).alias("tok")
-    ).select(id_col, token_bucket(F.col("tok"), n_buckets).alias("bucket"))
-    joined = toks.join(F.broadcast(weights), "bucket", "left").select(
-        id_col, F.coalesce(F.col("weight"), F.lit(0.0)).alias("w")
-    )
-    logit = F.lit(float(bias)) + F.sum("w") / F.count(F.lit(1))
-    return joined.groupBy(id_col).agg(
-        (F.lit(1.0) / (F.lit(1.0) + F.exp(-logit))).alias("score")
-    )
-
-
-def trained_score_expr(
-    text_col: str,
-    weights: dict[int, float],
-    n_buckets: int = N_BUCKETS,
-    bias: float = 0.0,
-) -> Column:
-    """STATELESS per-row trained-classifier score — the streaming form of
-    :func:`score_with_weight_table` (r7, VERDICT r6 item 8).
+def trained_score_expr(text_col: str, weights: dict[int, float]) -> Column:
+    """STATELESS per-row trained-classifier score over ``TRAIN_BUCKETS``
+    buckets — the streaming form of an explode + broadcast-join + groupBy
+    table scorer (r7, VERDICT r6 item 8).
 
     The trained weight table is a bounded MODEL CONSTANT (<= TRAIN_BUCKETS
     rows), so instead of explode + broadcast-join + groupBy (an
@@ -181,7 +137,7 @@ def trained_score_expr(
     Numerics: the fold sums token weights in ARRAY order while the
     grouped form sums partial aggregates in partition order, so the two
     agree to float-summation noise (~1e-12 relative), not bitwise —
-    asserted in tests/test_classifier_training.py. Tokens whose bucket is
+    asserted in tests/test_classify.py. Tokens whose bucket is
     absent from ``weights`` contribute 0.0 (untrained bucket), exactly
     like the table form's left join.
     """
@@ -197,10 +153,11 @@ def trained_score_expr(
         F.lit(0.0),
         lambda acc, t: acc
         + F.coalesce(
-            F.element_at(wmap, token_bucket(t, n_buckets)), F.lit(0.0)
+            F.element_at(wmap, token_bucket(t, TRAIN_BUCKETS)), F.lit(0.0)
         ),
     )
-    logit = F.lit(float(bias)) + F.when(n > 0, total / n).otherwise(F.lit(0.0))
+    # bias: 0
+    logit = F.lit(0.0) + F.when(n > 0, total / n).otherwise(F.lit(0.0))
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-logit))
 
 
@@ -231,6 +188,10 @@ INTERCEPT_BUCKET = -1
 #: from bit-identical weights. The same trick makes the NumPy parity test
 #: exact rather than tolerance-based.
 WEIGHT_DECIMALS = 9
+
+#: stop ``train_logistic_gd`` at a snapped fixed point (bit-identical to
+#: running every round; tests turn it off to compare against that).
+GD_EARLY_STOP = True
 
 
 def _structural_features(text_col: str):
@@ -271,17 +232,17 @@ def hashed_features(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_buckets: int = TRAIN_BUCKETS,
 ) -> DataFrame:
     """Design matrix for the quality classifier: (id, bucket, x).
 
     Two feature families per document:
 
     * hashed bag-of-words, mean-pooled: x[doc, b] = (# tokens hashing to
-      bucket b) / n_tokens — the fastText feature. Tokenization matches
+      bucket b of ``TRAIN_BUCKETS``) / n_tokens — the fastText feature.
+      Tokenization matches
       :func:`hashed_linear_score` exactly (normalized text split on single
       spaces), so a model trained here scores identically through
-      :func:`score_with_weight_table`.
+      :func:`trained_score_expr`.
     * structural signals at sentinel buckets (< -1): token count / 100,
       mean word length / 10, punctuation ratio, distinct-stopword hits /
       10, distinct-token ratio, alpha-word fraction — the CCNet-style
@@ -305,7 +266,7 @@ def hashed_features(
         F.size("_toks").alias("_n_tok"),
     )
     feats = toks.groupBy(
-        id_col, token_bucket(F.col("_tok"), n_buckets).alias("bucket")
+        id_col, token_bucket(F.col("_tok"), TRAIN_BUCKETS).alias("bucket")
     ).agg((F.count(F.lit(1)).cast("double") / F.min("_n_tok")).alias("x"))
     structural = {INTERCEPT_BUCKET: F.lit(1.0)}
     structural.update(_structural_features(text_col))
@@ -329,12 +290,11 @@ def train_logistic_gd(
     id_col: str = "doc_id",
     rounds: int = 5,
     lr: float = 1.0,
-    early_stop: bool = True,
 ) -> DataFrame:
     """Full-batch logistic-regression GD over sparse hashed features.
 
     Returns the trained (bucket, weight) table — the model that
-    :func:`score_with_weight_table` and :func:`score_features` consume.
+    :func:`trained_score_expr` and :func:`score_features` consume.
     ``labels`` is (id, y) with y in {0.0, 1.0} (e.g. an exact rule gate
     like the Gopher all-pass — a deterministic proxy label any engine can
     recompute).
@@ -372,12 +332,13 @@ def train_logistic_gd(
     ever appears at a new scale, suspect a midpoint hit before suspecting
     the plan.
 
-    ``early_stop`` (default on) breaks out of the round loop at a SNAPPED
-    FIXED POINT — when a round's post-snap weight table equals the table
-    it started from. This is not an approximation: each round is a
-    deterministic function w' = f(w) of the incoming table alone (the
-    data and lr are constant across rounds), so f(w) == w means every
-    remaining round would recompute exactly w — the early exit is
+    ``GD_EARLY_STOP`` (on; tests turn it off for the reference) breaks
+    out of the round loop at a SNAPPED FIXED POINT — when a round's
+    post-snap weight table equals the table it started from. This is not
+    an approximation: each round is a deterministic function w' = f(w)
+    of the incoming table alone (the data and lr are constant across
+    rounds), so f(w) == w means every remaining round would recompute
+    exactly w — the early exit is
     BIT-IDENTICAL to running all ``rounds`` rounds, and the unrolled
     DuckDB oracle (which always computes the full chain) agrees for the
     same reason: its tail rounds are the same no-ops in its own
@@ -460,13 +421,13 @@ def train_logistic_gd(
         # every remaining round recomputes exactly this table (w' = f(w)
         # depends on nothing that changes between rounds), so breaking is
         # bit-identical to finishing the loop
-        converged = early_stop and dict(new_rows) == dict(w_rows)
+        converged = GD_EARLY_STOP and dict(new_rows) == dict(w_rows)
         w_rows = new_rows
         if converged:
             break
     record_route(
         "logistic_gd_rounds",
-        inputs={"early_stop": early_stop},
+        inputs={"early_stop": GD_EARLY_STOP},
         estimate=None,
         budget=rounds,
         chosen=rounds_run,

@@ -137,11 +137,10 @@ def token_budget_pack(
     text_col: str,
     id_col: str,
     strata_col: str | None = None,
-    salt: str = "mix",
 ) -> DataFrame:
     """Select documents until each stratum holds ~``budget_tokens`` tokens.
 
-    Docs are taken in hash-of-id order (a deterministic shuffle of the
+    Docs are taken in md5('mix:' || id) order (a deterministic shuffle of the
     corpus — no recency/size bias) and kept while the running token total
     stays <= budget. Adds ``n_tokens`` and ``running_tokens`` columns.
 
@@ -156,7 +155,7 @@ def token_budget_pack(
     part = [strata_col] if strata_col else [F.lit(1)]
     w = (
         Window.partitionBy(*part)
-        .orderBy(sample_hash(id_col, salt), F.col(id_col))
+        .orderBy(sample_hash(id_col, "mix"), F.col(id_col))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     with_running = df.withColumn("n_tokens", token_count(text_col)).withColumn(
@@ -683,39 +682,20 @@ def mixture_epoch_plan(
 def assign_split(
     df: DataFrame,
     key_col: str = "doc_id",
-    fractions: tuple[float, float] = (0.8, 0.1),
     salt: str = "split",
 ) -> DataFrame:
-    """Deterministic train/val/test assignment: 'split' column from the
-    portable md5 draw (``sample_hash``) against cumulative 4-hex
-    thresholds — train gets ``fractions[0]``, val ``fractions[1]``, test
-    the rest. A document's split depends only on (salt, key), so it is
+    """Deterministic 80/10/10 train/val/test assignment: 'split' column
+    from the portable md5 draw (``sample_hash``) against cumulative 4-hex
+    thresholds. A document's split depends only on (salt, key), so it is
     stable under corpus growth and identical in any engine — the property
     an eval split must have for results to be comparable across pipeline
     runs. Quantization granularity is 1/65536 (same as
     ``deterministic_sample``)."""
-    # hex_threshold returns None at fraction >= 1.0, and `h < None` is NULL
-    # in SQL — every row would silently land in "test". Reject bad fractions
-    # loudly instead of misassigning the whole corpus.
-    if not (
-        0.0 < fractions[0] < 1.0
-        and 0.0 <= fractions[1]
-        and fractions[0] + fractions[1] <= 1.0
-    ):
-        raise ValueError(
-            "fractions must satisfy 0 < train < 1, 0 <= val, "
-            f"train + val <= 1 (got {fractions!r})"
-        )
-    t1 = hex_threshold(fractions[0])
-    t2 = hex_threshold(fractions[0] + fractions[1])
     h = F.substring(sample_hash(key_col, salt), 1, _HEX_CHARS)
-    # t2 is None when train + val == 1.0 exactly ("keep everything"):
-    # the val branch must then be unconditionally true, not `h < NULL`.
-    in_val = F.lit(True) if t2 is None else (h < t2)
     return df.withColumn(
         "split",
-        F.when(h < t1, F.lit("train"))
-        .when(in_val, F.lit("val"))
+        F.when(h < hex_threshold(0.8), F.lit("train"))
+        .when(h < hex_threshold(0.9), F.lit("val"))
         .otherwise(F.lit("test")),
     )
 
@@ -724,8 +704,6 @@ def cluster_safe_split(
     docs: DataFrame,
     components: DataFrame,
     key_col: str = "doc_id",
-    fractions: tuple[float, float] = (0.8, 0.1),
-    salt: str = "csplit",
 ) -> DataFrame:
     """Leakage-safe train/val/test assignment: the split UNIT is the
     near-dup cluster, not the document, so a near-duplicate of a training
@@ -737,9 +715,9 @@ def cluster_safe_split(
     component) over the near-dup edge list; docs absent from it are
     singletons and fall back to their own key (LEFT join + coalesce), so
     the unit id of a non-duplicated doc is itself. The draw hashes the
-    UNIT id through the same portable md5 thresholds as ``assign_split``
-    — stable under corpus growth, engine-portable, and by construction
-    constant within a cluster.
+    UNIT id (salt ``csplit``) through the same portable md5 thresholds as
+    ``assign_split`` — stable under corpus growth, engine-portable, and by
+    construction constant within a cluster.
 
     Scale shape: one broadcast-or-shuffle join of docs against the
     component map (bounded by the number of near-dup DOCS, typically a
@@ -751,4 +729,4 @@ def cluster_safe_split(
     with_unit = docs.join(comp, key_col, "left").withColumn(
         "split_unit", F.coalesce(F.col("component"), F.col(key_col))
     ).drop("component")
-    return assign_split(with_unit, "split_unit", fractions, salt)
+    return assign_split(with_unit, "split_unit", "csplit")

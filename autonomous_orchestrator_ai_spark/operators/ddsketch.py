@@ -44,6 +44,9 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: decimal places of ``ddsketch_quantiles``' estimates
+ROUND_DP = 4
+
 
 def dd_gamma(relative_accuracy: float) -> float:
     """γ = (1+α)/(1−α); α must sit in (0, 1)."""
@@ -102,7 +105,6 @@ def ddsketch_quantiles(
     quantiles: Sequence[float],
     group_cols: Sequence[str] = (),
     relative_accuracy: float = 0.01,
-    round_dp: int | None = 4,
 ) -> DataFrame:
     """Answer quantiles from a sketch: (group_cols..., q, est).
 
@@ -116,10 +118,10 @@ def ddsketch_quantiles(
     sketch rows all land in one window partition, which is exactly right:
     a sketch IS small.
 
-    ``round_dp`` snaps the estimate for cross-engine hash stability (the
-    registered oracles keep the default 4); pass None when magnitudes may
-    be tiny — absolute rounding would swamp the α-relative guarantee
-    there."""
+    The estimate is rounded to ``ROUND_DP`` places for cross-engine hash
+    stability (the registered oracles round the same way); absolute
+    rounding swamps the α-relative guarantee for magnitudes near
+    10^-ROUND_DP."""
     gamma = dd_gamma(relative_accuracy)
     gcols = list(group_cols)
     ord_key = (F.col("sign") * F.col("bucket")).alias("ord")
@@ -158,5 +160,4 @@ def ddsketch_quantiles(
             / F.lit(gamma + 1.0)
         )
     )
-    est = F.round(est, round_dp) if round_dp is not None else est
-    return hit.select(*gcols, "q", est.alias("est"))
+    return hit.select(*gcols, "q", F.round(est, ROUND_DP).alias("est"))

@@ -21,7 +21,7 @@ Scale design (the 100 TB contract):
   distance exceeds the threshold (returns -1), turning the per-candidate
   cost from O(|a|*|b|) into O(threshold * min(|a|,|b|)).
 - **Broadcast the dictionary.** A clean-entity dictionary is usually
-  tiny relative to the dirty feed; with ``broadcast_clean=True`` the
+  tiny relative to the dirty feed, so it is broadcast and the
   dirty side streams through a broadcast hash join — no shuffle of the
   100 TB side at all.
 
@@ -45,7 +45,6 @@ def blocked_levenshtein_join(
     block_dirty: Column,
     block_clean: Column,
     max_dist: int = 2,
-    broadcast_clean: bool = True,
 ) -> DataFrame:
     """Candidate-blocked fuzzy join.
 
@@ -56,9 +55,7 @@ def blocked_levenshtein_join(
     if max_dist < 0:
         raise ValueError(f"max_dist must be >= 0, got {max_dist}")
     d = dirty.withColumn("__blk", block_dirty)
-    c = clean.withColumn("__blk", block_clean)
-    if broadcast_clean:
-        c = F.broadcast(c)
+    c = F.broadcast(clean.withColumn("__blk", block_clean))
     dcol, ccol = F.col(dirty_col), F.col(clean_col)
     joined = d.join(c, on="__blk").where(
         F.abs(F.length(dcol) - F.length(ccol)) <= max_dist

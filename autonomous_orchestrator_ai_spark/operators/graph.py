@@ -14,7 +14,7 @@ the smallest reachable node id (the canonical component id). Rounds
 needed = graph diameter, which for near-dup clusters is tiny (dup
 clusters are dense — typically 2-4 hops), and per-round cost is one
 shuffle join + one shuffle agg on the EDGE list only. If propagation
-hasn't converged after ``switch_after`` rounds, the graph has an
+hasn't converged after ``CC_SWITCH_AFTER`` rounds, the graph has an
 adversarially long diameter (chains) and ``connected_components``
 contracts the edges through the labels computed so far and finishes
 with alternating large-star/small-star contraction
@@ -47,14 +47,20 @@ __all__ = [
     "triangle_stats",
 ]
 
+#: Rounds of label propagation before ``connected_components`` switches to
+#: star contraction, and the round cap of either loop.
+CC_SWITCH_AFTER = 8
+CC_MAX_ITERATIONS = 50
+#: Node count up to which the per-round state of ``connected_components``
+#: and ``pagerank`` is broadcast instead of shuffled.
+BROADCAST_STATE_MAX_NODES = 5_000_000
+PAGERANK_DAMPING = 0.85
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iterations: int = 50,
-    switch_after: int = 8,
-    broadcast_state_max_nodes: int = 5_000_000,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``; component
     is the smallest node id in that node's connected component.
@@ -69,14 +75,13 @@ def connected_components(
     for dense small-diameter dup clusters), auto-switching to
     alternating star contraction (O(log^2 n) rounds,
     ``connected_components_star``) if propagation hasn't converged after
-    ``switch_after`` rounds — the adversarial-diameter escape hatch for
+    ``CC_SWITCH_AFTER`` rounds — the adversarial-diameter escape hatch for
     chain-shaped graphs. The switch CONTRACTS the graph through the
     labels already computed (edges mapped label->label, self-loops
     dropped), so propagation work is kept, not thrown away: after k
     rounds every label is the min within k hops, so the contracted graph
     has at most diameter/k the original diameter and typically far fewer
-    nodes. Set ``switch_after=None`` (with ``max_iterations`` as the
-    cap) to force pure propagation.
+    nodes.
     """
     # symmetrize once; propagation then only needs one join direction.
     # Both orientations come out of ONE explode instead of a self-union:
@@ -118,13 +123,9 @@ def connected_components(
         .localCheckpoint()
     )
 
-    prop_rounds = (
-        max_iterations
-        if switch_after is None
-        else min(switch_after, max_iterations)
-    )
+    prop_rounds = min(CC_SWITCH_AFTER, CC_MAX_ITERATIONS)
     # Broadcast the per-round state when it's provably small (the
-    # pagerank broadcast_state_max_nodes pattern): the label table is
+    # pagerank BROADCAST_STATE_MAX_NODES pattern): the label table is
     # (node, component) — 16 B/node — and counting the just-checkpointed
     # frame is one cheap local scan. Below the threshold every round's
     # two state joins (neighbor pull, own-label fold) and the
@@ -132,7 +133,7 @@ def connected_components(
     # exchange left per round is the map-combined neighbor-min groupBy —
     # the symmetric edge list is never re-shuffled. Above the threshold
     # (billion-node dup graphs) the shuffle joins stay.
-    small_state = labels.count() <= broadcast_state_max_nodes
+    small_state = labels.count() <= BROADCAST_STATE_MAX_NODES
     hint = F.broadcast if small_state else (lambda df: df)
     converged = labels.isEmpty() if prop_rounds < 2 else False
     for rnd in range(1, prop_rounds):
@@ -165,7 +166,7 @@ def connected_components(
             # reach r becomes ~2r+1 per round instead of r+1, so
             # chain-shaped graphs converge in O(log diameter) rounds
             # instead of O(diameter). Measured at sf0.1 the n-gram
-            # near-dup graph burned the whole switch_after budget on
+            # near-dup graph burned the whole CC_SWITCH_AFTER budget on
             # plain rounds (~16 sequential jobs) and THEN ran ~10 star
             # rounds; with the jump it converges inside the propagation
             # budget. The jump only engages from round 3: dup-cluster
@@ -198,7 +199,7 @@ def connected_components(
         if changed == 0:
             converged = True
             break
-    if converged or switch_after is None:
+    if converged:
         return labels
 
     # Propagation ran out of its round budget: the graph has a long
@@ -222,7 +223,7 @@ def connected_components(
         .filter(F.col("ls") != F.col("ld"))
     )
     star = connected_components_star(
-        contracted, "ls", "ld", max_iterations=max_iterations
+        contracted, "ls", "ld", max_iterations=CC_MAX_ITERATIONS
     )
     return (
         labels.join(
@@ -350,10 +351,7 @@ def pagerank(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    damping: float = 0.85,
     iterations: int = 5,
-    checkpoint_every: int = 3,
-    broadcast_state_max_nodes: int = 5_000_000,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list -> (node, rank).
 
@@ -379,7 +377,7 @@ def pagerank(
       and out-degrees together (the old union-distinct nodes pass and the
       separate groupBy(s) degree pass computed the same information in
       two shuffles).
-    - ``localCheckpoint`` every ``checkpoint_every`` rounds truncates the
+    - ``localCheckpoint`` every 3 rounds truncates the
       lineage (plan growth is linear per round; analysis cost is the real
       enemy past ~10 uncheckpointed iterations).
     - Fixed iteration count (no convergence collect) keeps the whole run
@@ -389,7 +387,7 @@ def pagerank(
     - N (node count) is one driver scalar from a count() — the only
       driver-side value in the operator.
     - The rank state is bounded by the node count, which the setup
-      count() already measures. When ``n <= broadcast_state_max_nodes``
+      count() already measures. When ``n <= BROADCAST_STATE_MAX_NODES``
       the per-round joins broadcast the (node, rank) / (node, in_mass)
       sides instead of shuffling the (much larger) edge list every
       round: the loop body then touches the edges map-side only and the
@@ -435,8 +433,8 @@ def pagerank(
     n = nd.count()
     if n == 0:
         return nd.select("node").withColumn("rank", F.lit(0.0))
-    teleport = (1.0 - damping) / n
-    small_state = n <= broadcast_state_max_nodes
+    teleport = (1.0 - PAGERANK_DAMPING) / n
+    small_state = n <= BROADCAST_STATE_MAX_NODES
     hint = F.broadcast if small_state else (lambda df: df)
     ranks = nd.withColumn("rank", F.lit(1.0 / n))
     for i in range(iterations):
@@ -453,10 +451,11 @@ def pagerank(
             "out_deg",
             (
                 F.lit(teleport)
-                + F.lit(damping) * F.coalesce(F.col("in_mass"), F.lit(0.0))
+                + F.lit(PAGERANK_DAMPING)
+                * F.coalesce(F.col("in_mass"), F.lit(0.0))
             ).alias("rank"),
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
+        if (i + 1) % 3 == 0:
             ranks = ranks.localCheckpoint()
     return ranks.select("node", "rank")
 

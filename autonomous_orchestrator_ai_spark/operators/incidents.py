@@ -23,26 +23,13 @@ from datetime import datetime, timedelta
 from pathlib import Path
 
 from autonomous_orchestrator_ai_spark.schemas import INCIDENTS_SCHEMA
+from autonomous_orchestrator_ai_spark.sources.writers import append_jsonl
 
 FIELDS = INCIDENTS_SCHEMA.fieldNames()
 #: written as ISO strings, read back as naive datetimes
 TIMESTAMP_FIELDS = [
     f_.name for f_ in INCIDENTS_SCHEMA.fields if f_.dataType.typeName() == "timestamp"
 ]
-
-
-def _append(path: Path, rec: dict) -> None:
-    """Append one version line. A final line without its newline is an
-    append a crash cut short: it never committed, so it is cut off before
-    the new line goes on (else the two would fuse into one bad line)."""
-    with path.open("a+b") as f:
-        size = f.seek(0, 2)
-        if size:
-            f.seek(size - 1)
-            if f.read(1) != b"\n":
-                f.seek(0)
-                f.truncate(f.read().rfind(b"\n") + 1)
-        f.write(json.dumps(rec).encode() + b"\n")
 
 
 def _latest_in(path: Path) -> dict[str, dict]:
@@ -142,7 +129,7 @@ class IncidentStore:
             "resolution_notes": None,
             "created_by": created_by,
         }
-        _append(self._month_path(now.isoformat()[:7]), rec)
+        append_jsonl(self._month_path(now.isoformat()[:7]), rec)
         return incident_id
 
     def update_incident(self, incident_id: str, now: datetime | None = None, **updates) -> None:
@@ -155,7 +142,7 @@ class IncidentStore:
         rec, path = found
         rec.update(updates)
         rec["updated_at"] = (now or datetime.now()).isoformat()
-        _append(path, rec)
+        append_jsonl(path, rec)
 
     def resolve_incident(
         self, incident_id: str, notes: str | None = None, now: datetime | None = None

@@ -161,11 +161,11 @@ def ivf_topk(
     n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Approximate top-k: probe the query's ``n_probe`` nearest inverted
     lists, exact-cosine re-rank inside them. Same output shape as
-    cosine_topk: (query_id, neighbor_id, cosine_sim, rank)."""
+    cosine_topk: (query_id, neighbor_id, cosine_sim, rank); a query is
+    never its own neighbor."""
     c = (
         ensure_min_parallelism(corpus)
         .select(
@@ -182,9 +182,9 @@ def ivf_topk(
         "bucket", F.explode(_probe_udf(centroids, n_probe)(F.col("__qv")))
     ).select("query_id", "__qv", "bucket")
 
-    pairs = c.join(F.broadcast(probed), "bucket")
-    if exclude_self:
-        pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
+    pairs = c.join(F.broadcast(probed), "bucket").filter(
+        F.col("neighbor_id") != F.col("query_id")
+    )
     return rank_topk(
         pairs.select(
             "query_id",

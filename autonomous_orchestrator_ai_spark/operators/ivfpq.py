@@ -23,8 +23,8 @@ Scale shape:
   pandas UDF over candidate rows, and the shortlist cut is a per-query
   window over candidates only. Unlike ``pq_adc_topk`` (driver-collected
   query batch, LUT in the closure), every stage here is a distributed
-  join/UDF — so the QUERY side may be corpus-scale too (set
-  ``broadcast_queries=False`` and let AQE pick the join strategy).
+  join/UDF; the probe side is broadcast, the right plan for the bounded
+  serving batches every caller sends.
 
 Determinism (the oracle contract): with ``fixed_centroids`` +
 ``fixed_pq_codebooks`` the whole pipeline is a pure function of the corpus —
@@ -143,17 +143,14 @@ def ivfpq_topk(
     shortlist: int = 50,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exclude_self: bool = True,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """IVFADC with exact refine: probe ``n_probe`` inverted lists, ADC-
     score only those lists' PQ codes, keep a ``shortlist`` per query, then
     re-rank the shortlist with exact cosine over the full vectors.
 
     Output matches the ANN family shape: (query_id, neighbor_id,
-    cosine_sim, rank). ``broadcast_queries=True`` (default) hints the
-    probe side into a broadcast join — right for bounded serving batches;
-    flip it off for corpus-scale query sets and AQE picks the strategy."""
+    cosine_sim, rank); a query is never its own neighbor. The probe side
+    is a broadcast join, right for bounded serving batches."""
     from autonomous_orchestrator_ai_spark.operators.ivf import _probe_udf
 
     enc = ivfpq_encode(corpus, centroids, codebooks, id_col, vec_col).select(
@@ -166,12 +163,10 @@ def ivfpq_topk(
     probed = q.withColumn(
         "bucket", F.explode(_probe_udf(centroids, n_probe)(F.col("__qv")))
     ).select("query_id", "__qv", "bucket")
-    if broadcast_queries:
-        probed = F.broadcast(probed)
 
-    cand = enc.join(probed, "bucket")
-    if exclude_self:
-        cand = cand.filter(F.col("neighbor_id") != F.col("query_id"))
+    cand = enc.join(F.broadcast(probed), "bucket").filter(
+        F.col("neighbor_id") != F.col("query_id")
+    )
 
     scored = cand.select(
         "query_id",

@@ -8,8 +8,9 @@ into one sort key so that files/row groups stay "cubes" in N-dimensional
 space: their min/max footer statistics are narrow on EVERY participating
 column, and a predicate on any subset of them skips most files. (Same
 design as Delta Lake's OPTIMIZE ZORDER BY; here it's pure DataFrame ops —
-scale each column to a fixed-width integer, interleave bits with built-in
-shift/mask expressions, range-repartition + sort on the key.)
+scale each column to a fixed-width integer and interleave bits with
+built-in shift/mask expressions; a writer range-repartitions and sorts on
+the key.)
 
 Everything is expression-level (whole-stage codegen): the only extra cost
 over a plain sorted write is one scalar min/max aggregation for the bounds
@@ -22,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["column_bounds", "zorder_key", "write_zordered", "file_stat_spans"]
+__all__ = ["column_bounds", "zorder_key"]
 
 
 def column_bounds(df: DataFrame, cols: list[str]) -> list[tuple[float, float]]:
@@ -66,59 +67,3 @@ def zorder_key(
             z = z.bitwiseOR(F.shiftleft(bit, b * n + i))
     return z
 
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 12,
-    num_files: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as parquet clustered on the Z-curve of ``cols``:
-    range-repartition on the key (contiguous curve segments per file, one
-    shuffle) + sort within partitions (row-group-level locality inside each
-    file). The key column is dropped before the write — the layout, not the
-    schema, carries the information; every file's footer min/max on each of
-    ``cols`` is then a tight box that predicate pushdown prunes against."""
-    bounds = column_bounds(df, cols)
-    z = zorder_key(list(cols), bounds, bits)
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def file_stat_spans(path: str, cols: list[str]) -> list[dict]:
-    """Per-file min/max footer statistics for ``cols`` (via pyarrow) — the
-    observability half of the operator: what a scan's pruning actually sees.
-    Returns one dict per data file: {file, <col>_min, <col>_max, ...}."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    out = []
-    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
-        meta = pq.ParquetFile(f).metadata
-        schema_names = [meta.row_group(0).column(i).path_in_schema
-                        for i in range(meta.num_columns)]
-        rec: dict = {"file": os.path.basename(f)}
-        for c in cols:
-            idx = schema_names.index(c)
-            mins, maxs = [], []
-            for rg in range(meta.num_row_groups):
-                st = meta.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    continue
-                mins.append(st.min)
-                maxs.append(st.max)
-            if mins:
-                rec[f"{c}_min"] = min(mins)
-                rec[f"{c}_max"] = max(maxs)
-        out.append(rec)
-    return out

@@ -43,15 +43,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from autonomous_orchestrator_ai_spark.functions.text import _once
+from autonomous_orchestrator_ai_spark.functions.text import _once, lower_tokens
 
 __all__ = ["bigram_occurrences", "bigram_model", "bigram_perplexity"]
-
-
-def _tokens(text_col: str) -> Column:
-    """Same tokenizer as operators/scoring.py: lowercase, trim, split on
-    whitespace (empty docs yield [''] which downstream filters drop)."""
-    return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
 
 
 def bigram_occurrences(
@@ -63,7 +57,7 @@ def bigram_occurrences(
     ``sequence`` of 1-based positions) and exploded once — no self-join,
     no window; a document of n tokens emits exactly n-1 rows.
     """
-    toks = _tokens(text_col)
+    toks = lower_tokens(text_col)
 
     # _once-hoisted: captured raw, the lower+trim+regex split re-runs per
     # bigram (the O(n^2)-per-doc HOF trap — see functions.text._once)

@@ -22,15 +22,20 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
-    "mutual_information",
     "mutual_information_pairs",
     "woe_iv",
     "rfm_segments",
-    "rfm_segments_cutpoint",
     "poisson1_draw",
     "bootstrap_uniform",
     "poisson_bootstrap_mean",
 ]
+
+#: additive smoothing on every ``woe_iv`` cell
+WOE_SMOOTHING = 0.5
+#: ``rfm_segments`` scores each dimension by quartile
+RFM_TILES = 4
+#: normal quantile of ``poisson_bootstrap_mean``'s 95% interval
+CI_Z = 1.96
 
 
 def _cat(c: str | Column) -> Column:
@@ -122,25 +127,15 @@ def mutual_information_pairs(
     )
 
 
-def mutual_information(
-    df: DataFrame, x_col: str | Column, y_col: str | Column,
-    x_name: str = "x", y_name: str = "y",
-) -> DataFrame:
-    """Single-pair convenience wrapper over ``mutual_information_pairs``."""
-    return mutual_information_pairs(df, [(x_name, x_col, y_name, y_col)])
-
-
 def woe_iv(
     df: DataFrame,
     feature_col: str,
     target: Column,
-    *,
-    smoothing: float = 0.5,
 ) -> DataFrame:
     """Weight of evidence + information value per feature category.
 
     ``woe = ln((events_i/events_tot) / (non_events_i/non_events_tot))``
-    with additive ``smoothing`` on every cell so an all-one-class
+    with additive ``WOE_SMOOTHING`` on every cell so an all-one-class
     category stays finite; ``iv_contrib = (event_share − non_event_share)
     · woe`` and the feature's total IV is ``SUM(iv_contrib)`` (< 0.02
     useless, > 0.5 suspiciously strong — the classical screen for a
@@ -165,11 +160,11 @@ def woe_iv(
         F.sum("n_non_event").alias("tot_non_event"),
         F.count(F.lit(1)).alias("n_cats"),
     )
-    ev = (F.col("n_event") + smoothing) / (
-        F.col("tot_event") + smoothing * F.col("n_cats")
+    ev = (F.col("n_event") + WOE_SMOOTHING) / (
+        F.col("tot_event") + WOE_SMOOTHING * F.col("n_cats")
     )
-    ne = (F.col("n_non_event") + smoothing) / (
-        F.col("tot_non_event") + smoothing * F.col("n_cats")
+    ne = (F.col("n_non_event") + WOE_SMOOTHING) / (
+        F.col("tot_non_event") + WOE_SMOOTHING * F.col("n_cats")
     )
     return (
         per_cat.crossJoin(F.broadcast(tot))
@@ -192,7 +187,6 @@ def rfm_segments(
     cust_col: str = "o_custkey",
     date_col: str = "o_orderdate",
     amount_col: str = "o_totalprice",
-    n_tiles: int = 4,
 ) -> DataFrame:
     """Per-customer RFM quartile scores: recency (days from last order to
     ``as_of``), frequency (order count), monetary (total spend), each
@@ -220,9 +214,9 @@ def rfm_segments(
     wf = Window.orderBy(F.asc("frequency"), F.asc("custkey"))
     wm = Window.orderBy(F.asc("monetary"), F.asc("custkey"))
     return (
-        base.withColumn("r", F.ntile(n_tiles).over(wr))
-        .withColumn("f", F.ntile(n_tiles).over(wf))
-        .withColumn("m", F.ntile(n_tiles).over(wm))
+        base.withColumn("r", F.ntile(RFM_TILES).over(wr))
+        .withColumn("f", F.ntile(RFM_TILES).over(wf))
+        .withColumn("m", F.ntile(RFM_TILES).over(wm))
         .withColumn(
             "segment",
             F.concat(
@@ -230,79 +224,6 @@ def rfm_segments(
                 F.lit("M"), F.col("m"),
             ),
         )
-    )
-
-
-def rfm_segments_cutpoint(
-    orders: DataFrame,
-    as_of: str,
-    *,
-    cust_col: str = "o_custkey",
-    date_col: str = "o_orderdate",
-    amount_col: str = "o_totalprice",
-    accuracy: int = 10000,
-) -> DataFrame:
-    """Scale twin of ``rfm_segments``: scores against broadcast
-    approx-percentile cut points instead of ranking, so there is NO
-    global window — the per-customer base aggregates, one tiny
-    all-quantiles row broadcasts back, and assignment is a codegen
-    expression. At 1e9 customers this is two shuffles and no serial
-    sort; the price is ntile-exactness at the quartile boundaries
-    (ties and approx error move boundary customers one bucket —
-    test_mlstats_retrieval pins the agreement rate vs the exact form).
-
-    Scores: 4 = best (most recent / most frequent / highest spend),
-    matching ``rfm_segments``; ``v > cut`` strictness mirrors ntile's
-    first-buckets-get-extra tie placement for values AT a cut.
-    """
-    base = orders.groupBy(F.col(cust_col).alias("custkey")).agg(
-        F.datediff(F.lit(as_of).cast("date"), F.max(date_col)).alias(
-            "recency_days"
-        ),
-        F.count(F.lit(1)).alias("frequency"),
-        F.round(F.sum(F.col(amount_col).cast("decimal(18,4)")), 2)
-        .cast("double")
-        .alias("monetary"),
-    )
-    probs = F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))
-    cuts = base.agg(
-        F.percentile_approx("recency_days", probs, accuracy).alias("rc"),
-        F.percentile_approx("frequency", probs, accuracy).alias("fc"),
-        F.percentile_approx("monetary", probs, accuracy).alias("mc"),
-    )
-
-    def _asc_score(v: str, c: str) -> Column:
-        # quartile by value position among the cut points; > (not >=) so a
-        # value sitting exactly on a cut stays in the lower bucket, like
-        # ntile placing ties in the earlier (extra-row) buckets
-        return (
-            F.lit(1)
-            + (F.col(v) > F.col(c)[0]).cast("int")
-            + (F.col(v) > F.col(c)[1]).cast("int")
-            + (F.col(v) > F.col(c)[2]).cast("int")
-        )
-
-    def _desc_score(v: str, c: str) -> Column:
-        return (
-            F.lit(1)
-            + (F.col(v) < F.col(c)[2]).cast("int")
-            + (F.col(v) < F.col(c)[1]).cast("int")
-            + (F.col(v) < F.col(c)[0]).cast("int")
-        )
-
-    return (
-        base.crossJoin(F.broadcast(cuts))
-        .withColumn("r", _desc_score("recency_days", "rc"))
-        .withColumn("f", _asc_score("frequency", "fc"))
-        .withColumn("m", _asc_score("monetary", "mc"))
-        .withColumn(
-            "segment",
-            F.concat(
-                F.lit("R"), F.col("r"), F.lit("F"), F.col("f"),
-                F.lit("M"), F.col("m"),
-            ),
-        )
-        .drop("rc", "fc", "mc")
     )
 
 
@@ -330,13 +251,13 @@ def poisson1_draw(u: Column) -> Column:
     return expr
 
 
-def bootstrap_uniform(key: Column, replicate: Column, salt: str = "bs") -> Column:
+def bootstrap_uniform(key: Column, replicate: Column) -> Column:
     """Deterministic per-(row, replicate) uniform: the first 8 hex chars
-    of md5('<salt><r>:<key>') scaled to [0, 1). Portable — the oracle
+    of md5('bs<r>:<key>') scaled to [0, 1). Portable — the oracle
     reproduces the identical draw with string concat + md5."""
     h = F.md5(
         F.concat(
-            F.lit(salt),
+            F.lit("bs"),
             replicate.cast("string"),
             F.lit(":"),
             key.cast("string"),
@@ -351,8 +272,6 @@ def poisson_bootstrap_mean(
     key: Column,
     group_cols: Sequence[str] = (),
     n_replicates: int = 20,
-    salt: str = "bs",
-    z: float = 1.96,
 ) -> DataFrame:
     """Bootstrap standard error + normal-approx CI for a mean, the
     Poisson-bootstrap way (Chamandy et al., Google 2012): instead of R
@@ -380,7 +299,7 @@ def poisson_bootstrap_mean(
         "__v",
         F.when(F.col("__r") == -1, F.lit(1))
         .otherwise(
-            poisson1_draw(bootstrap_uniform(F.col("__k"), F.col("__r"), salt))
+            poisson1_draw(bootstrap_uniform(F.col("__k"), F.col("__r")))
         )
         .alias("__w"),
     )
@@ -405,6 +324,6 @@ def poisson_bootstrap_mean(
         "n_rows",
         F.round("__point", 6).alias("point_mean"),
         F.round("__se", 6).alias("boot_se"),
-        F.round(F.col("__point") - z * F.col("__se"), 6).alias("ci_lo"),
-        F.round(F.col("__point") + z * F.col("__se"), 6).alias("ci_hi"),
+        F.round(F.col("__point") - CI_Z * F.col("__se"), 6).alias("ci_lo"),
+        F.round(F.col("__point") + CI_Z * F.col("__se"), 6).alias("ci_hi"),
     )

@@ -17,14 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def ensure_min_parallelism(df: DataFrame, target: int | None = None) -> DataFrame:
+def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition iff the plan currently yields fewer
-    partitions than ``target`` (default: the cluster's default
-    parallelism). Batch-only; streaming frames pass through untouched."""
+    partitions than the cluster's default parallelism. Batch-only;
+    streaming frames pass through untouched."""
     if df.isStreaming:
         return df
-    spark = df.sparkSession
-    target = target or spark.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -33,20 +33,23 @@ from autonomous_orchestrator_ai_spark.operators.similarity import (
     rank_topk,
 )
 
+#: the most queries one ``pq_adc_topk`` call takes: 4096 queries ≈ 8 MB of
+#: LUT at m=8/n_codes=256 (see its docstring).
+MAX_QUERY_BATCH = 4096
+
 
 def train_pq(
     df: DataFrame,
     m: int = 8,
     n_codes: int = 16,
-    iterations: int = 10,
     sample_size: int = 4096,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> np.ndarray:
     """Train PQ codebooks: split the vector into ``m`` contiguous
-    subvectors, k-means each subspace independently on one deterministic
-    sample (shared recipe: ``ivf.collect_md5_sample`` + ``ivf.
-    lloyd_numpy``). Returns (m, n_codes, dim/m) codebooks."""
+    subvectors, k-means each subspace (10 Lloyd iterations) independently
+    on one deterministic sample (shared recipe: ``ivf.collect_md5_sample``
+    + ``ivf.lloyd_numpy``). Returns (m, n_codes, dim/m) codebooks."""
     from autonomous_orchestrator_ai_spark.operators.ivf import (
         collect_md5_sample,
         lloyd_numpy,
@@ -59,7 +62,7 @@ def train_pq(
     sub = dim // m
     return np.stack(
         [
-            lloyd_numpy(x[:, j * sub : (j + 1) * sub], n_codes, iterations)
+            lloyd_numpy(x[:, j * sub : (j + 1) * sub], n_codes, 10)
             for j in range(m)
         ]
     )
@@ -136,8 +139,6 @@ def pq_adc_topk(
     vec_col: str = "embedding",
     code_col: str = "pq_code",
     query_id_col: str | None = None,
-    exclude_self: bool = True,
-    max_query_batch: int = 4096,
 ) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes: per partition, build each
     query's (m × n_codes) inner-product lookup table once, score every
@@ -149,7 +150,7 @@ def pq_adc_topk(
     This is a SERVING-BATCH operator: the query vectors are collected to
     the driver and the Q×m×n_codes LUT ships to every task through the
     closure, so Q is a hard capacity parameter, enforced via
-    ``max_query_batch`` (default 4096 queries ≈ 8 MB of LUT at
+    ``MAX_QUERY_BATCH`` (4096 queries ≈ 8 MB of LUT at
     m=8/n_codes=256 — well under broadcast comfort). Larger query sets
     should be chunked by the caller (results are per-query independent, so
     a union of chunked calls is exact) or joined corpus-to-corpus via the
@@ -157,18 +158,18 @@ def pq_adc_topk(
 
     Scores are approximate inner products (sub-centroid IPs); rank is by
     ADC score with neighbor-id tie-break. Output: (query_id, neighbor_id,
-    adc_score, rank)."""
+    adc_score, rank); a query is never its own neighbor."""
     cb = np.ascontiguousarray(codebooks, dtype=np.float64)
     m, n_codes, sub = cb.shape
     query_id_col = query_id_col or id_col
-    qrows = queries.limit(max_query_batch + 1).select(
+    qrows = queries.limit(MAX_QUERY_BATCH + 1).select(
         F.col(query_id_col).alias("query_id"), _as_double_array(vec_col).alias("__qv")
     ).collect()
     if not qrows:
         raise ValueError("queries is empty")
-    if len(qrows) > max_query_batch:
+    if len(qrows) > MAX_QUERY_BATCH:
         raise ValueError(
-            f"query batch exceeds max_query_batch={max_query_batch}: the "
+            f"query batch exceeds MAX_QUERY_BATCH={MAX_QUERY_BATCH}: the "
             "driver-side ADC LUT is sized per query — chunk the query set "
             "and union the (per-query independent) results, or use the "
             "LSH/IVF index paths for corpus-scale query sets"
@@ -186,15 +187,11 @@ def pq_adc_topk(
             # broadcasts against codes (n, m) -> gather shape (Q, n, m)
             scores = lut[:, np.arange(m), codes].sum(axis=2)
             for qi in range(len(q_ids)):
-                s = scores[qi]
-                if exclude_self:
-                    # mask BEFORE truncating the partial top-k: filtering
-                    # after would let the query's own row crowd out the
-                    # batch's true k-th neighbor, which is then lost
-                    keep_mask = ids != q_ids[qi]
-                    s, batch_ids = s[keep_mask], ids[keep_mask]
-                else:
-                    batch_ids = ids
+                # mask the query's own row BEFORE truncating the partial
+                # top-k: filtering after would let it crowd out the
+                # batch's true k-th neighbor, which is then lost
+                keep_mask = ids != q_ids[qi]
+                s, batch_ids = scores[qi][keep_mask], ids[keep_mask]
                 # score desc, then neighbor id asc: rank_topk's order, so
                 # equal scores keep the lowest ids whatever the batching
                 top = np.lexsort((batch_ids, -s))[:k]
@@ -230,7 +227,6 @@ def pq_topk_reranked(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     code_col: str = "pq_code",
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Two-stage PQ serving (the FAISS IVF-PQ + refine shape): ADC over
     the compressed codes picks a ``shortlist`` per query, then ONLY those
@@ -247,7 +243,6 @@ def pq_topk_reranked(
         id_col=id_col,
         vec_col=vec_col,
         code_col=code_col,
-        exclude_self=exclude_self,
     ).select("query_id", "neighbor_id")
     vecs = corpus.select(
         F.col(id_col).alias("neighbor_id"), _as_double_array(vec_col).alias("__cv")

@@ -7,9 +7,7 @@ row per column. The scan happens once regardless of column count.
 
 Exact distinct counts use Spark's multi-distinct rewrite (an Expand that
 replicates each input row once per distinct aggregate — still one scan,
-but shuffle volume multiplies by the column count). At 100 TB switch
-``exact_distinct=False``: HyperLogLog sketches aggregate in fixed space
-with ordinary partial aggregation and no Expand.
+but shuffle volume multiplies by the column count).
 """
 
 from __future__ import annotations
@@ -23,7 +21,6 @@ __all__ = ["profile_columns", "numeric_histogram"]
 def profile_columns(
     df: DataFrame,
     cols: list[str] | None = None,
-    exact_distinct: bool = True,
 ) -> DataFrame:
     """(column, n_rows, n_nulls, n_distinct, min_value, max_value) per
     column, from ONE pass over ``df``. min/max are computed on the native
@@ -31,12 +28,11 @@ def profile_columns(
     for the tidy output. NULL-only columns yield NULL min/max; distinct
     counts ignore NULLs (COUNT DISTINCT semantics on both engines)."""
     cols = list(cols or df.columns)
-    distinct_agg = F.count_distinct if exact_distinct else F.approx_count_distinct
     aggs = [F.count(F.lit(1)).alias("__rows")]
     for c in cols:
         aggs += [
             F.sum(F.col(c).isNull().cast("bigint")).alias(f"__nn_{c}"),
-            distinct_agg(F.col(c)).alias(f"__nd_{c}"),
+            F.count_distinct(F.col(c)).alias(f"__nd_{c}"),
             F.min(F.col(c)).cast("string").alias(f"__mn_{c}"),
             F.max(F.col(c)).cast("string").alias(f"__mx_{c}"),
         ]
@@ -99,13 +95,13 @@ def numeric_histogram(
 def k_anonymity_report(
     df: DataFrame,
     quasi_identifiers: list[str],
-    k_levels: tuple[int, ...] = (2, 5, 10, 20),
 ) -> DataFrame:
     """Re-identification risk profile over a quasi-identifier combination
     (Sweeney 2002, k-anonymity): rows whose QI equivalence class has
     fewer than k members are linkable to at most k-1 others.
 
-    One row per k level: (k, n_classes_below, n_rows_below, pct_rows_below)
+    One row per k level in (2, 5, 10, 20): (k, n_classes_below,
+    n_rows_below, pct_rows_below)
     — how many equivalence classes (and what share of rows) fail
     k-anonymity at that threshold. The governance companion to
     curation.redact_pii: redaction handles direct identifiers, this
@@ -114,7 +110,7 @@ def k_anonymity_report(
     Scale shape: one map-side-combined groupBy over the QI tuple builds
     the class-size table (bounded by the QI domain product, not row
     count); each k level is then an aggregate over that bounded table —
-    the k_levels loop multiplies work on class counts, never on data."""
+    the k-level loop multiplies work on class counts, never on data."""
     classes = df.groupBy(*quasi_identifiers).agg(
         F.count(F.lit(1)).alias("class_size")
     )
@@ -130,7 +126,7 @@ def k_anonymity_report(
                 )
             ).cast("bigint").alias("n_rows_below"),
         )
-        for k in k_levels
+        for k in (2, 5, 10, 20)
     ]
     out = per_k[0]
     for frame in per_k[1:]:

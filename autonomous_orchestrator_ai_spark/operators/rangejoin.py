@@ -24,9 +24,8 @@ def range_join(
     range_end: str,
     bucket_seconds: int,
     extra_keys: list[str] | None = None,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join each point row to every range row with
+    """Inner-join each point row to every range row with
     ``range_start <= point_ts < range_end`` (+ optional equi keys).
 
     Returns points columns + ranges columns (caller aliases beforehand to
@@ -53,7 +52,7 @@ def range_join(
         ),
     )
     on = ["__bucket"] + extra_keys
-    joined = p.join(r, on=on, how=how).filter(
+    joined = p.join(r, on=on, how="inner").filter(
         (F.col(point_ts) >= F.col(range_start)) & (F.col(point_ts) < F.col(range_end))
     )
     return joined.drop("__bucket")

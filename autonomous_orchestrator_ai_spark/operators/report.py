@@ -38,7 +38,6 @@ def build_run_report(
     stats: dict,
     start_time: str | None = None,
     end_time: str | None = None,
-    watermark_delay: str = WATERMARK_DELAY,
 ) -> dict:
     """Assemble the run_report document (shape: ingest_transform.py:44-52,
     318-324; spec tests/test_spark_jobs.py:331-357)."""
@@ -53,7 +52,7 @@ def build_run_report(
         "processing_errors": int(stats.get("processing_errors", 0)),
         "start_time": start_time or now,
         "end_time": end_time or now,
-        "watermark_delay": watermark_delay,
+        "watermark_delay": WATERMARK_DELAY,
     }
     report["late_rate"] = report["late_records"] / total if total else 0.0
     report["dq_failure_rate"] = report["dq_failures"] / total if total else 0.0

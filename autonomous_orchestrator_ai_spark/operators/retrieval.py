@@ -34,20 +34,22 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from autonomous_orchestrator_ai_spark.functions.literals import local_relation
+from autonomous_orchestrator_ai_spark.functions.text import lower_tokens
 from autonomous_orchestrator_ai_spark.operators.scoring import (
-    _tokens,
     explode_tokens,
 )
 
 __all__ = ["bm25_scores", "rrf_fuse"]
+
+#: Okapi BM25 term-saturation and length-normalization constants
+BM25_K1 = 1.2
+BM25_B = 0.75
 
 
 def bm25_scores(
     docs: DataFrame,
     query_terms: Sequence[str] | DataFrame,
     *,
-    k1: float = 1.2,
-    b: float = 0.75,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
@@ -57,7 +59,8 @@ def bm25_scores(
     at least one query term. ``idf = ln(1 + (N - df + 0.5)/(df + 0.5))``
     (the Lucene form — strictly positive, so a term in >half the corpus
     can't subtract); the tf saturation uses the standard
-    ``tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))``.
+    ``tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))`` with ``BM25_K1`` and
+    ``BM25_B``.
 
     ``query_terms`` is either a literal term list or a small DataFrame
     with a ``token`` column (e.g. the distinct tokens of a query-by-
@@ -90,7 +93,7 @@ def bm25_scores(
     dl = docs.select(
         F.col(id_col),
         F.size(
-            F.filter(_tokens(text_col), lambda t: t != "")
+            F.filter(lower_tokens(text_col), lambda t: t != "")
         ).alias("dl"),
     ).where(F.col("dl") > 0)
     stats = dl.agg(
@@ -110,8 +113,8 @@ def bm25_scores(
 
     n, dfc, tfc, dlc = F.col("n_docs"), F.col("df"), F.col("tf"), F.col("dl")
     idf = F.log(F.lit(1.0) + (n - dfc + 0.5) / (dfc + 0.5))
-    denom = tfc + k1 * (1.0 - b + b * dlc / F.col("avgdl"))
-    term_score = idf * (tfc * (k1 + 1.0)) / denom
+    denom = tfc + BM25_K1 * (1.0 - BM25_B + BM25_B * dlc / F.col("avgdl"))
+    term_score = idf * (tfc * (BM25_K1 + 1.0)) / denom
 
     return (
         tf.join(F.broadcast(df_), "token")

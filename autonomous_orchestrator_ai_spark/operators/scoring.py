@@ -23,18 +23,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# Tokens: lowercase, trim, split on whitespace. Mirrors
-# plans/text_queries.py's DuckDB `string_split_regex(lower(trim(text)), '\s+')`.
-
-
-def _tokens(text_col: str) -> Column:
-    return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+from autonomous_orchestrator_ai_spark.functions.text import lower_tokens
 
 
 def explode_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, token) pairs; empty documents contribute no rows."""
     return (
-        df.select(id_col, F.explode(_tokens(text_col)).alias("token"))
+        df.select(id_col, F.explode(lower_tokens(text_col)).alias("token"))
         .filter(F.col("token") != "")
     )
 
@@ -297,12 +292,15 @@ def hashed_bucket(col: Column, n_buckets: int) -> Column:
     )
 
 
+#: hashed-unigram buckets of ``dsir_importance``'s class LMs
+DSIR_BUCKETS = 64
+
+
 def dsir_importance(
     docs: DataFrame,
     is_target: Column,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_buckets: int = 64,
 ) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, arXiv 2302.03169 —
     public): fit hashed-unigram bag-of-words LMs over a *target* slice and
@@ -317,8 +315,8 @@ def dsir_importance(
     Scale shape (100 TB):
     - one explode -> partial-agg ``groupBy(id, bucket)`` pass builds per-doc
       histograms (combine happens map-side; the shuffle carries at most
-      ``n_buckets`` rows per document, not tokens);
-    - the class LMs are a ``n_buckets``-row aggregate of those histograms —
+      ``DSIR_BUCKETS`` rows per document, not tokens);
+    - the class LMs are a ``DSIR_BUCKETS``-row aggregate of those histograms —
       tiny — and the smoothed log-ratio table is broadcast back;
     - the final per-doc reduce reuses the (id, bucket) partitioning. No
       driver-side state beyond the plan.
@@ -331,10 +329,10 @@ def dsir_importance(
     toks = base.select(
         id_col,
         "is_target",
-        F.explode(_tokens(text_col)).alias("token"),
+        F.explode(lower_tokens(text_col)).alias("token"),
     ).filter(F.col("token") != "")
     hist = (
-        toks.withColumn("bucket", hashed_bucket(F.col("token"), n_buckets))
+        toks.withColumn("bucket", hashed_bucket(F.col("token"), DSIR_BUCKETS))
         .groupBy(id_col, "is_target", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -352,8 +350,8 @@ def dsir_importance(
     lam = cls.crossJoin(F.broadcast(totals)).select(
         "bucket",
         F.log(
-            ((F.col("t_cnt") + 1.0) / (F.col("t_tot") + float(n_buckets)))
-            / ((F.col("r_cnt") + 1.0) / (F.col("r_tot") + float(n_buckets)))
+            ((F.col("t_cnt") + 1.0) / (F.col("t_tot") + float(DSIR_BUCKETS)))
+            / ((F.col("r_cnt") + 1.0) / (F.col("r_tot") + float(DSIR_BUCKETS)))
         ).alias("lam"),
     )
     return (

@@ -77,11 +77,11 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str | None = None,
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Exact top-k cosine neighbors: (query_id, neighbor_id, cosine_sim,
-    rank). Ties broken by neighbor id; cosine rounded to 6dp in the output
-    (ranking uses the unrounded value)."""
+    rank); a query is never its own neighbor. Ties broken by neighbor id;
+    cosine rounded to 6dp in the output (ranking uses the unrounded
+    value)."""
     query_id_col = query_id_col or id_col
     # norms hoisted to one fold per ROW (bit-identical to per-pair
     # cosine(): same dot/(|q|*|c|) expression, just not recomputed per
@@ -95,9 +95,9 @@ def cosine_topk(
         F.col(id_col).alias("neighbor_id"),
         _as_double_array(vec_col).alias("__cv"),
     ).withColumn("__cn", norm(F.col("__cv")))
-    pairs = c.crossJoin(F.broadcast(q))
-    if exclude_self:
-        pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
+    pairs = c.crossJoin(F.broadcast(q)).filter(
+        F.col("neighbor_id") != F.col("query_id")
+    )
     scored = pairs.select(
         "query_id",
         "neighbor_id",
@@ -109,7 +109,14 @@ def cosine_topk(
     return rank_topk(scored, k)
 
 
-def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
+#: base seed of the LSH hyperplanes: table t draws from LSH_SEED + 1000 * t.
+LSH_SEED = 42
+#: tables and dimension of the embedding near-duplicate screens.
+NEAR_DUP_TABLES = 4
+NEAR_DUP_DIM = 64
+
+
+def hyperplanes(dim: int, n_planes: int, seed: int = LSH_SEED) -> list[list[float]]:
     """Deterministic Gaussian hyperplanes (driver-side, embedded as
     literals)."""
     rng = np.random.default_rng(seed)
@@ -174,11 +181,9 @@ def lsh_bucketed_topk(
     n_planes: int = 4,
     n_tables: int = 4,
     dim: int = 64,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     multiprobe_bits: int = 1,
-    exclude_self: bool = True,
     broadcast_queries: bool | None = None,
     max_bucket_candidates: int | None = None,
     rescore_after_dedup: bool = False,
@@ -277,7 +282,9 @@ def lsh_bucketed_topk(
     # the dot product, and dot/(|q|*|c|) is bit-identical to cosine()
     # (same operations, same order, just not recomputed per pair); at
     # sf10 that alone cut the screen's scoring stage ~3x.
-    all_planes = [hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
+    all_planes = [
+        hyperplanes(dim, n_planes, LSH_SEED + 1000 * t) for t in range(n_tables)
+    ]
     if broadcast_queries is None:
         # bounded probe: LIMIT caps the scan, so deciding never costs a
         # full pass over a corpus-scaled query set
@@ -356,9 +363,7 @@ def lsh_bucketed_topk(
         q = repartition_for_exploding_join(q, "table_id", "bucket")
     pairs = c.join(
         F.broadcast(q) if broadcast_queries else q, ["table_id", "bucket"]
-    )
-    if exclude_self:
-        pairs = pairs.filter(F.col("neighbor_id") != F.col("query_id"))
+    ).filter(F.col("neighbor_id") != F.col("query_id"))
     if rescore_after_dedup:
         # ids-only dedup first (vectors prune out of the bucket join),
         # then one broadcast re-attach + one scoring fold per UNIQUE pair.
@@ -417,40 +422,34 @@ def embedding_near_duplicates(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_planes: int | None = None,
-    n_tables: int = 4,
-    dim: int = 64,
-    seed: int = 42,
     n_rows: int | None = None,
 ) -> DataFrame:
-    """Embedding-cosine near-dup pairs (id_a < id_b, cosine >= threshold),
-    multi-table LSH-bucketed: near-identical vectors land in the same
-    sign bucket with high probability, so the self-join is per-bucket,
-    not all-pairs; ``n_tables`` independent hash tables drive per-pair
-    recall toward 1-(1-p)^L (a single 8-plane table catches a
-    0.95-cosine pair with p≈0.43 — four tables ≈ 0.89) and a pair
-    colliding in several tables is emitted once (dropDuplicates).
+    """Embedding-cosine near-dup pairs (id_a < id_b, cosine >= threshold)
+    over ``NEAR_DUP_DIM``-dim vectors, multi-table LSH-bucketed:
+    near-identical vectors land in the same sign bucket with high
+    probability, so the self-join is per-bucket, not all-pairs;
+    ``NEAR_DUP_TABLES`` independent hash tables drive per-pair recall
+    toward 1-(1-p)^L (a single 8-plane table catches a 0.95-cosine pair
+    with p≈0.43 — four tables ≈ 0.89) and a pair colliding in several
+    tables is emitted once (dropDuplicates).
 
-    ``n_planes=None`` (default) sizes the plane count to the corpus
-    (``auto_planes`` with a floor of 8 — the historical fixed count, so
-    small corpora behave exactly as before; the sizing count() is one
-    cheap extra job). A FIXED plane count makes the per-bucket self-join
-    Σ|b|² ~ n²/2^planes — quadratic in disguise, the same failure mode
-    measured and fixed on the corpus-wide kNN screen (see PERF.md round
-    5 late). Pass an explicit value to pin the bucketing (oracle twins,
-    recall experiments). ``n_tables=1`` reproduces the historical
-    single-table behavior exactly (table 0's planes use the base seed).
+    The plane count is sized to the corpus (``auto_planes`` with a floor
+    of 8 — the historical fixed count, so small corpora behave exactly as
+    before; the sizing count() is one cheap extra job). A FIXED plane
+    count makes the per-bucket self-join Σ|b|² ~ n²/2^planes — quadratic
+    in disguise, the same failure mode measured and fixed on the
+    corpus-wide kNN screen (see PERF.md round 5 late).
 
     ``n_rows`` (r10): callers that know the corpus row count (e.g. from
     parquet footer metadata — registry.table_row_count) inject it so the
     auto-sizing pays no count() job; it MUST equal ``embeddings.count()``
     or the bucketing diverges from the oracle's."""
-    if n_planes is None:
-        n_planes = auto_planes(
-            embeddings.count() if n_rows is None else n_rows, floor=8
-        )
+    n_planes = auto_planes(
+        embeddings.count() if n_rows is None else n_rows, floor=8
+    )
     all_planes = [
-        hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)
+        hyperplanes(NEAR_DUP_DIM, n_planes, LSH_SEED + 1000 * t)
+        for t in range(NEAR_DUP_TABLES)
     ]
     # norm hoisted to one fold per ROW; the per-pair fold is dot only
     # (dot/(|a|*|b|) is bit-identical to cosine(), computed once per side)
@@ -588,10 +587,10 @@ def hard_negatives(
     return rank_topk(scored, k)
 
 
-def auto_planes(n_rows: int, target_bucket: int = 64, floor: int = 4) -> int:
+def auto_planes(n_rows: int, floor: int = 4) -> int:
     """Corpus-aware hyperplane count for lsh_bucketed_topk: enough planes
-    that the EXPECTED bucket size is ~``target_bucket`` —
-    ``ceil(log2(n / target_bucket))``, floored at ``floor``.
+    that the EXPECTED bucket size is ~64 — ``ceil(log2(n / 64))``,
+    floored at ``floor``.
 
     Why this must scale with the corpus: expected candidates per query
     are ~n/2^planes per table, so a FIXED plane count makes total
@@ -605,9 +604,9 @@ def auto_planes(n_rows: int, target_bucket: int = 64, floor: int = 4) -> int:
     """
     import math
 
-    if n_rows <= target_bucket:
+    if n_rows <= 64:
         return floor
-    return max(floor, math.ceil(math.log2(n_rows / target_bucket)))
+    return max(floor, math.ceil(math.log2(n_rows / 64)))
 
 
 def embedding_near_dup_star_edges(
@@ -615,10 +614,7 @@ def embedding_near_dup_star_edges(
     threshold: float = 0.4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_planes: int | None = None,
-    n_tables: int = 4,
-    dim: int = 64,
-    seed: int = 42,
+    n_tables: int = NEAR_DUP_TABLES,
     n_rows: int | None = None,
 ) -> DataFrame:
     """LINEAR-volume near-dup edges for CLUSTERING embeddings: in every
@@ -639,14 +635,14 @@ def embedding_near_dup_star_edges(
     so clusters of genuinely near-identical vectors are unaffected.
     This is the embedding analog of SemDeDup-style centroid grouping.
     ``n_rows``: same footer-count injection contract as
-    ``embedding_near_duplicates``.
+    ``embedding_near_duplicates``; its planes too.
     """
-    if n_planes is None:
-        n_planes = auto_planes(
-            embeddings.count() if n_rows is None else n_rows, floor=8
-        )
+    n_planes = auto_planes(
+        embeddings.count() if n_rows is None else n_rows, floor=8
+    )
     all_planes = [
-        hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)
+        hyperplanes(NEAR_DUP_DIM, n_planes, LSH_SEED + 1000 * t)
+        for t in range(n_tables)
     ]
     e = (
         ensure_min_parallelism(embeddings)

@@ -3,7 +3,7 @@ shuffle' guidance; AQE handles moderate skew automatically — these are the
 explicit tools for when it doesn't, and for removing shuffles entirely).
 
 - ``salted_aggregate``: two-phase aggregation over a salted key. A hot key
-  that would pin one reducer is split across ``n_salts`` partial groups,
+  that would pin one reducer is split across 8 partial groups,
   then partials combine in a second (tiny) aggregation. Works for any
   algebraic aggregate (sum/count/min/max — pass the partial and final
   specs).
@@ -54,13 +54,12 @@ def salted_aggregate(
     key: str,
     partial_aggs: dict[str, Column],
     final_aggs: dict[str, Column],
-    n_salts: int = 8,
     salt_by: str | None = None,
 ) -> DataFrame:
-    """Two-phase agg: groupBy(key, salt) -> partials, then groupBy(key) ->
-    combine. ``partial_aggs`` maps output-name -> agg Column over the raw
-    rows; ``final_aggs`` maps final-name -> agg Column over the partial
-    names. Example:
+    """Two-phase agg over 8 salts: groupBy(key, salt) -> partials, then
+    groupBy(key) -> combine. ``partial_aggs`` maps output-name -> agg
+    Column over the raw rows; ``final_aggs`` maps final-name -> agg Column
+    over the partial names. Example:
 
         salted_aggregate(ev, "user_id",
             {"cnt": F.count(F.lit(1)), "sum_v": F.sum("value")},
@@ -70,7 +69,7 @@ def salted_aggregate(
     then ``count_distinct(<col>)`` / ``approx_count_distinct(<col>)``
     partials combine exactly via SUM (each value owns one salt), so even
     distinct aggregates stay bounded-state on the salt path."""
-    salted = with_salt(df, key, n_salts, salt_by=salt_by)
+    salted = with_salt(df, key, 8, salt_by=salt_by)
     partial = salted.groupBy(key, "__salt").agg(
         *[c.alias(name) for name, c in partial_aggs.items()]
     )
@@ -107,7 +106,6 @@ def write_bucketed(
     n_buckets: int = 8,
     sort_by: str | None = None,
     path: str | None = None,
-    overwrite_location: bool = False,
 ) -> None:
     """Persist with bucketing so subsequent equi-joins/aggs on
     ``bucket_key`` read co-located buckets and skip the exchange.
@@ -126,8 +124,7 @@ def write_bucketed(
     (part files / _SUCCESS / committer markers) — i.e. an orphaned table
     location, not a directory holding unrelated data that a caller
     pointed ``path`` at (or a table name colliding with a foreign
-    warehouse dir). Anything else raises unless
-    ``overwrite_location=True`` explicitly authorizes the delete."""
+    warehouse dir). Anything else raises: the caller clears it."""
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {table_name}")
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
@@ -140,11 +137,10 @@ def write_bucketed(
     )
     fs = location.getFileSystem(jsc.hadoopConfiguration())
     if fs.exists(location):
-        if not overwrite_location and not _looks_like_table_location(fs, location):
+        if not _looks_like_table_location(fs, location):
             raise ValueError(
                 f"refusing to clear {location}: it contains entries that are "
-                "not Spark table output; pass overwrite_location=True to "
-                "delete it anyway"
+                "not Spark table output"
             )
         fs.delete(location, True)
     writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_key)

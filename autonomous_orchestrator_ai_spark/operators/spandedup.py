@@ -10,13 +10,13 @@ Spark-first:
 
 1. every document emits one row per word-``k``-gram *occurrence*
    ``(doc_id, pos, gram_hash)`` — a pure posexplode, no UDF;
-2. a gram duplicated across >= ``min_docs`` distinct documents is found
+2. a gram duplicated across >= 2 distinct documents is found
    with one groupBy on the 16-byte md5 (never the gram text — shuffle
    bytes stay fixed-width no matter how long the grams are);
-3. per document, the positions of duplicated grams are merged into
-   *maximal spans* with the classic island window (running max of
-   interval ends) — the window is partitioned by ``doc_id`` so its state
-   is bounded by document length, never corpus size;
+3. per document, the sorted starts of duplicated grams are merged into
+   *maximal spans* (``_island_bounds``: array functions over one doc's
+   starts, so the work is bounded by document length, never corpus
+   size);
 4. removal keeps one canonical copy per gram (the minimum ``doc_id``
    containing it — deterministic, engine-portable) and drops the covered
    token positions everywhere else, reconstructing the cleaned text
@@ -25,27 +25,20 @@ Spark-first:
 Scale shape: explode(positions) is linear in corpus tokens; the only
 shuffles are a groupBy on fixed-width hashes, a hash join occurrences ×
 duplicated-grams (both corpus-scale sides — no broadcast hints), and
-per-doc windows/groupBys bounded by document length. No all-pairs step
+per-doc groupBys bounded by document length. No all-pairs step
 exists anywhere, so the plan survives a 100x scale-up; at 100 TB the
 gram table is just a bigger shuffle, exactly what Spark is for.
 
 Everything is md5-based and positionally deterministic, so the DuckDB
 oracles in plans/span_queries.py replay each step bit-for-bit in SQL.
 
-Caching contract (r8): the one-shuffle-two-consumers ``persist()`` sites
-in this module (kgram occurrences, covered positions) exist so a second
-consumer inside the same plan reuses them. The TOP-LEVEL operators
-(``duplicate_span_doc_stats``, ``remove_duplicate_spans``,
-``remove_boilerplate``) default to ``release=True``: they eagerly
-materialize their (stats/delta-scale) result, then unpersist the
-corpus-scale caches before returning — a default-configured call leaves
-nothing corpus-scale pinned, only the result's own blocks, which the
-caller owns (``.unpersist()`` when done). ``release=False`` restores the
-r7 behavior (caches live until ``session.release_session_storage(spark)``
-— use it when chaining several span operators over the same corpus).
-The mid-level builders (``duplicate_spans``, ``covered_positions``,
-``boilerplate_covered_positions``) stay lazy and hand their cache
-handles back via ``_caches`` for callers composing their own release.
+Caching contract (r8): the one-shuffle-two-consumers ``persist()`` of the
+kgram occurrences exists so the gram groupBy and the marking join inside
+the same plan reuse it. The operators (``duplicate_span_doc_stats``,
+``remove_duplicate_spans``, ``remove_boilerplate``) eagerly materialize
+their (stats/delta-scale) result, then unpersist the corpus-scale cache
+before returning — a call leaves nothing corpus-scale pinned, only the
+result's own blocks, which the caller owns (``.unpersist()`` when done).
 
 Reference parity note: the reference repo (AbdulSohail018/
 Autonomous-Orchestrator-Ai) has no substring dedup — this is part of the
@@ -54,7 +47,7 @@ beyond-reference LLM-training-data surface, alongside operators/dedup.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from autonomous_orchestrator_ai_spark.functions.text import _once, normalized_text
@@ -62,11 +55,8 @@ from autonomous_orchestrator_ai_spark.functions.text import _once, normalized_te
 __all__ = [
     "kgram_occurrences",
     "duplicated_grams",
-    "duplicate_spans",
     "duplicate_span_doc_stats",
-    "covered_positions",
     "remove_duplicate_spans",
-    "boilerplate_covered_positions",
     "remove_boilerplate",
 ]
 
@@ -134,29 +124,6 @@ def duplicated_grams(
     )
 
 
-def _merge_islands(marked: DataFrame, k: int, id_col: str) -> DataFrame:
-    """Merge marked gram-start positions into maximal [start, end) token
-    spans per doc — the island trick: a new span starts where ``pos``
-    clears the running max of previous interval ends. Window state is
-    per-document (bounded by doc length), so no skew risk at corpus scale.
-    """
-    w = Window.partitionBy(id_col).orderBy("pos")
-    prev_end = F.max(F.col("pos") + k).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    new_island = (prev_end.isNull() | (F.col("pos") > prev_end)).cast("int")
-    return (
-        marked.select(id_col, "pos", new_island.alias("ni"))
-        .withColumn("island", F.sum("ni").over(w))
-        .groupBy(id_col, "island")
-        .agg(
-            F.min("pos").alias("span_start"),
-            (F.max("pos") + k).alias("span_end"),
-        )
-        .drop("island")
-    )
-
-
 def _release_through(result: DataFrame, caches: list[DataFrame]) -> DataFrame:
     """Materialize-then-unpersist (r8, VERDICT r7 item 9): persist and
     eagerly compute ``result``, then release the upstream caches it was
@@ -171,68 +138,35 @@ def _release_through(result: DataFrame, caches: list[DataFrame]) -> DataFrame:
     return result
 
 
-def duplicate_spans(
-    docs: DataFrame,
-    k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_docs: int = 2,
-    _caches: list[DataFrame] | None = None,
-) -> DataFrame:
-    """Maximal duplicated spans per doc: (doc_id, span_start, span_end).
-
-    Every occurrence of a cross-doc duplicated gram is marked (keeper or
-    not — a span IS duplicated in the keeper too; removal, not detection,
-    is where the keeper survives), then merged into maximal spans.
-    """
-    # One shuffle serves both consumers: the groupBy inside
-    # duplicated_grams and the marking join both cluster on gram_hash, so
-    # a persisted hash-partitioned occurrence table computes the gram
-    # explode once and satisfies both distributions (same pattern as the
-    # dedup.py inverted-index caches; see the module caching contract
-    # there — callers release via session.release_session_storage, or get
-    # the handle back via ``_caches`` for materialize-then-unpersist).
-    occ = kgram_occurrences(docs, k, id_col, text_col).repartition(
-        "gram_hash"
-    ).persist()
-    if _caches is not None:
-        _caches.append(occ)
-    dup = duplicated_grams(occ, id_col, min_docs)
-    marked = occ.join(dup.select("gram_hash"), "gram_hash")
-    return _merge_islands(marked, k, id_col)
-
-
 def duplicate_span_doc_stats(
     docs: DataFrame,
     k: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_docs: int = 2,
-    release: bool = True,
 ) -> DataFrame:
     """Per-doc duplication profile: (doc_id, n_spans, dup_tokens).
 
-    dup_tokens is the union length of the maximal spans — the count of
-    token positions inside any duplicated passage.
+    Every occurrence of a gram duplicated across docs is marked (keeper or
+    not — a span IS duplicated in the keeper too; removal, not detection,
+    is where the keeper survives). n_spans is the count of maximal spans,
+    dup_tokens their union length — the count of token positions inside
+    any duplicated passage.
 
-    ``release=True`` (default) eagerly materializes the per-doc stats and
-    unpersists the corpus-scale occurrence cache before returning, so a
-    stats call leaves nothing corpus-scale pinned (the r7 footgun: every
-    call in a long session stacked another occurrence table in executor
-    storage). Pass ``release=False`` to keep the cache for a follow-up
-    span operator over the same corpus."""
-    # Same marks as duplicate_spans, but the island merge runs on each
-    # doc's sorted start array via _island_bounds instead of the window +
-    # double groupBy of the span-listing form (r9): one exchange carries
-    # the occurrence starts, the maximal-span count and union length are
-    # then map-side arithmetic. Results are identical — n_spans is the
-    # island count, dup_tokens the summed island lengths.
+    The per-doc stats are materialized and the corpus-scale occurrence
+    cache unpersisted before returning, so a stats call leaves nothing
+    corpus-scale pinned (the r7 footgun: every call in a long session
+    stacked another occurrence table in executor storage)."""
+    # The island merge runs on each doc's sorted start array via
+    # _island_bounds (r9): one exchange carries the occurrence starts,
+    # the maximal-span count and union length are then map-side
+    # arithmetic — n_spans is the island count, dup_tokens the summed
+    # island lengths.
     caches: list[DataFrame] = []
     occ = kgram_occurrences(docs, k, id_col, text_col).repartition(
         "gram_hash"
     ).persist()
     caches.append(occ)
-    dup = duplicated_grams(occ, id_col, min_docs)
+    dup = duplicated_grams(occ, id_col)
     marked = occ.join(dup.select("gram_hash"), "gram_hash")
     starts = F.col("__starts")
     island_starts, island_ends = _island_bounds(starts, k)
@@ -253,41 +187,7 @@ def duplicate_span_doc_stats(
             ).alias("dup_tokens"),
         )
     )
-    return _release_through(stats, caches) if release else stats
-
-
-def covered_positions(
-    docs: DataFrame,
-    k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_docs: int = 2,
-    _caches: list[DataFrame] | None = None,
-) -> DataFrame:
-    """Token positions slated for removal: (doc_id, pos), distinct.
-
-    Only *non-keeper* occurrences cover positions — the minimum doc id
-    containing each duplicated gram keeps its copy, so exactly one
-    canonical occurrence of every duplicated passage survives the corpus
-    (the Lee et al. contract). The explode is a bounded fan-out of k rows
-    per occurrence; distinct() collapses overlap.
-    """
-    # same one-shuffle-two-consumers persist as duplicate_spans
-    occ = kgram_occurrences(docs, k, id_col, text_col).repartition(
-        "gram_hash"
-    ).persist()
-    if _caches is not None:
-        _caches.append(occ)
-    dup = duplicated_grams(occ, id_col, min_docs)
-    removable = occ.join(dup.select("gram_hash", "keeper_doc"), "gram_hash").where(
-        F.col(id_col) != F.col("keeper_doc")
-    )
-    return removable.select(
-        id_col,
-        F.explode(
-            F.sequence(F.col("pos"), F.col("pos") + (k - 1))
-        ).alias("pos"),
-    ).distinct()
+    return _release_through(stats, caches)
 
 
 def remove_duplicate_spans(
@@ -295,8 +195,6 @@ def remove_duplicate_spans(
     k: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_docs: int = 2,
-    release: bool = True,
 ) -> DataFrame:
     """Cleaned corpus for the *modified* docs: (doc_id, tokens_before,
     tokens_after, clean_text).
@@ -310,14 +208,19 @@ def remove_duplicate_spans(
     point is that the output of the removal step is a small delta, joined
     back to the corpus by the caller (left join + coalesce), not a
     rewritten copy of every row.
+
+    Only *non-keeper* occurrences are removed — the minimum doc id
+    containing each duplicated gram keeps its copy, so exactly one
+    canonical occurrence of every duplicated passage survives the corpus
+    (the Lee et al. contract).
     """
     # The removal marks are the NON-KEEPER occurrence starts; the whole
     # covered-position union, kept-token selection and text rebuild then
     # happen map-side in _removal_stats (r9 — the old path exploded k
     # rows per occurrence, distinct-shuffled them, and re-exploded every
     # affected doc's tokens for an anti-join + collect_list regroup).
-    # release=True (default) eagerly materializes the delta and
-    # unpersists the corpus-scale occurrence cache — after return, only
+    # The delta is materialized and the corpus-scale occurrence cache
+    # unpersisted — after return, only
     # the (delta-scale) result's own blocks are pinned, owned by the
     # caller (r8, VERDICT r7 item 9).
     caches: list[DataFrame] = []
@@ -325,14 +228,14 @@ def remove_duplicate_spans(
         "gram_hash"
     ).persist()
     caches.append(occ)
-    dup = duplicated_grams(occ, id_col, min_docs)
+    dup = duplicated_grams(occ, id_col)
     removable = occ.join(
         dup.select("gram_hash", "keeper_doc"), "gram_hash"
     ).where(F.col(id_col) != F.col("keeper_doc"))
     out = _removal_stats(
         docs, removable.select(id_col, "pos"), k, id_col, text_col
     )
-    return _release_through(out, caches) if release else out
+    return _release_through(out, caches)
 
 
 def _island_bounds(starts: Column, k: int) -> tuple[Column, Column]:
@@ -428,46 +331,12 @@ def _removal_stats(
     )
 
 
-def boilerplate_covered_positions(
-    docs: DataFrame,
-    k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_df: int = 4,
-    _caches: list[DataFrame] | None = None,
-) -> DataFrame:
-    """Token positions inside any k-gram shared by >= min_df documents:
-    (id, pos), distinct — NO keeper. Boilerplate (headers, footers,
-    license blurbs, nav text) is noise in every copy, unlike a duplicated
-    passage whose one canonical copy is content, so removal drops ALL
-    occurrences (CCNet's line-hash rule, expressed over word k-grams).
-
-    Same shuffle shape as covered_positions: one groupBy on 16-byte
-    hashes + one hash join + a k-row bounded explode. min_df is the
-    policy knob: df >= min_df across the corpus marks a gram boilerplate.
-    """
-    occ = kgram_occurrences(docs, k, id_col, text_col).repartition(
-        "gram_hash"
-    ).persist()
-    if _caches is not None:
-        _caches.append(occ)
-    boiler = duplicated_grams(occ, id_col, min_docs=min_df)
-    marked = occ.join(boiler.select("gram_hash"), "gram_hash")
-    return marked.select(
-        id_col,
-        F.explode(F.sequence(F.col("pos"), F.col("pos") + (k - 1))).alias(
-            "pos"
-        ),
-    ).distinct()
-
-
 def remove_boilerplate(
     docs: DataFrame,
     k: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
     min_df: int = 4,
-    release: bool = True,
 ) -> DataFrame:
     """Boilerplate removal, composed from the discovery profile
     (plans/curation_queries.py boilerplate_ngrams finds the grams) and the
@@ -479,6 +348,8 @@ def remove_boilerplate(
     occurrence is removed (no keeper_doc survives), because boilerplate
     has no canonical copy worth training on. Output is the affected-docs
     delta, not a rewritten corpus — the caller left-joins it back.
+    ``min_df`` is the policy knob: df >= min_df across the corpus marks a
+    gram boilerplate.
     """
     # Boilerplate removal has no keeper: every occurrence of a marked
     # gram is a removal start. Marks go to _removal_stats directly; the
@@ -493,4 +364,4 @@ def remove_boilerplate(
     out = _removal_stats(
         docs, marked.select(id_col, "pos"), k, id_col, text_col
     )
-    return _release_through(out, caches) if release else out
+    return _release_through(out, caches)

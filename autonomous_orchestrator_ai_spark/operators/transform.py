@@ -21,7 +21,6 @@ from pyspark.sql import types as T
 
 from autonomous_orchestrator_ai_spark.functions.enrich import with_email_domain, with_region
 from autonomous_orchestrator_ai_spark.functions.temporal import (
-    LATE_THRESHOLD_MINUTES,
     customer_age_days,
     late_arrival_flag,
     with_event_timestamps,
@@ -74,15 +73,13 @@ def detect_schema_drift(df: DataFrame, version_col: str = "version") -> DataFram
     )
 
 
-def detect_late_arrivals(
-    df: DataFrame, threshold_minutes: int = LATE_THRESHOLD_MINUTES
-) -> DataFrame:
+def detect_late_arrivals(df: DataFrame) -> DataFrame:
     """Flag-and-keep late arrivals (reference P9/T2, ingest_transform.py:
     211-225)."""
     return df.withColumn(
         "is_late_arrival",
         F.when(
-            late_arrival_flag("event_timestamp", "processing_timestamp", threshold_minutes),
+            late_arrival_flag("event_timestamp", "processing_timestamp"),
             F.lit(True),
         ).otherwise(F.lit(False)),
     )
@@ -110,14 +107,10 @@ def apply_data_quality_checks(df: DataFrame, now: Column | None = None) -> DataF
     )
 
 
-def apply_transformations(
-    df: DataFrame,
-    processing_time: Column | None = None,
-    second_precision: bool = False,
-) -> DataFrame:
+def apply_transformations(df: DataFrame, processing_time: Column | None = None) -> DataFrame:
     """Timestamp conversion + region + email domain + customer age
     (reference F1-F5, ingest_transform.py:164-207)."""
-    df = with_event_timestamps(df, processing_time, second_precision)
+    df = with_event_timestamps(df, processing_time)
     df = with_region(df)
     df = with_email_domain(df)
     return df.withColumn(
@@ -128,17 +121,15 @@ def apply_transformations(
 def enrich_customer_events(
     df: DataFrame,
     processing_time: Column | None = None,
-    late_threshold_minutes: int = LATE_THRESHOLD_MINUTES,
-    second_precision: bool = False,
 ) -> DataFrame:
     """The full transform chain (reference process_stream order,
     ingest_transform.py:344-362): transforms -> drift -> late -> DQ.
 
     Batch and streaming both accept this (only Column expressions inside).
     """
-    df = apply_transformations(df, processing_time, second_precision)
+    df = apply_transformations(df, processing_time)
     df = detect_schema_drift(df)
-    df = detect_late_arrivals(df, late_threshold_minutes)
+    df = detect_late_arrivals(df)
     df = apply_data_quality_checks(
         df, now=processing_time if processing_time is not None else None
     )

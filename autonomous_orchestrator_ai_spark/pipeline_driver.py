@@ -48,7 +48,6 @@ def run_pipeline_once(
     input_dir: str,
     work_dir: str,
     now: datetime | None = None,
-    retention_days: int = 7,
     quality_weights: dict[int, float] | None = None,
     quality_text_col: str = "name",
 ) -> dict:
@@ -144,7 +143,7 @@ def run_pipeline_once(
         # subdirs, so its ctime stays at the first tick's and a sweep would
         # delete it, after which the restarted query's batch ids collide
         # with the sink's committed ones and new events are skipped
-        removed = cleanup_old_data(str(ops / "quarantine"), retention_days)
+        removed = cleanup_old_data(str(ops / "quarantine"))
 
         return {
             "run_report": run_report,

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from autonomous_orchestrator_ai_spark.functions.literals import local_relation
+from autonomous_orchestrator_ai_spark.functions.text import lower_tokens
 from autonomous_orchestrator_ai_spark.operators.bpe import (
     bpe_initial_state,
     bpe_pair_counts,
@@ -189,20 +190,20 @@ from autonomous_orchestrator_ai_spark.operators.bpe import (  # noqa: E402
 )
 
 
-def _encode_ctes(n: int = _N_MERGES) -> str:
+def _encode_ctes() -> str:
     """_training_ctes + the word-preserving segmentation chain + the
     token-id vocabulary: ``segw`` is (word, n_sub, ids_str) — the exact
     mirror of operators.bpe.bpe_word_encodings (codepoint ids for
     single-char symbols, 256+min(rank) for merge products, OOV words are
-    not in segw and join to NULL)."""
+    not in segw and join to NULL), over ``_N_MERGES`` merges."""
     sep = "chr(31)"
     dsep = f"({sep} || {sep})"
     ctes = [
-        _training_ctes(n).removeprefix("WITH "),
+        _training_ctes(_N_MERGES).removeprefix("WITH "),
         f"""seg0 AS (SELECT word, {dsep} ||
            regexp_replace(word, '(.)', '\\1' || {dsep}, 'g') AS seq FROM wc)""",
     ]
-    for i in range(n):
+    for i in range(_N_MERGES):
         ctes.append(
             f"seg{i + 1} AS MATERIALIZED (SELECT word, "
             f"replace(s.seq, {sep} || t.a || {dsep} || t.b || {sep}, "
@@ -210,7 +211,7 @@ def _encode_ctes(n: int = _N_MERGES) -> str:
         )
     vocab_union = " UNION ALL ".join(
         f"SELECT a || b AS tok, 256 + {i + 1} AS id FROM t{i}"
-        for i in range(n)
+        for i in range(_N_MERGES)
     )
     ctes.append(
         f"mv AS MATERIALIZED (SELECT tok, MIN(id) AS id "
@@ -219,7 +220,7 @@ def _encode_ctes(n: int = _N_MERGES) -> str:
     ctes.append(
         f"""segt AS (
         SELECT word, i, list_extract(l, i) AS tok
-        FROM (SELECT word, string_split(seq, {dsep}) AS l FROM seg{n}) s,
+        FROM (SELECT word, string_split(seq, {dsep}) AS l FROM seg{_N_MERGES}) s,
              unnest(range(2, len(s.l))) AS r(i))"""
     )
     ctes.append(
@@ -324,7 +325,7 @@ def bpe_token_id_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = docs.where(F.col("doc_id") < 40).select(
         "doc_id",
         F.posexplode(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+            lower_tokens("text")
         ).alias("pos", "word"),
     )
     j = words.join(enc.select("word", "n_sub", "ids_str"), "word", "left")

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from autonomous_orchestrator_ai_spark.functions.text import lower_tokens
+
 from autonomous_orchestrator_ai_spark.operators.kmv import (
     kmv_distinct_estimate,
     kmv_jaccard_pairs,
@@ -162,7 +164,7 @@ def kmv_token_jaccard_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = (
         docs.select(
             "source",
-            F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("token"),
+            F.explode(lower_tokens("text")).alias("token"),
         )
         .where(F.col("token") != "")
     )

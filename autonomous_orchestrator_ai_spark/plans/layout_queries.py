@@ -149,9 +149,7 @@ def _layout_on_disk(base: str, tbl: str) -> bool:
     return os.path.exists(os.path.join(_local_path(base), tbl, "_SUCCESS"))
 
 
-def build_bucketed_layout(
-    spark: SparkSession, sf_dir: str, force: bool = False
-) -> tuple[str, str]:
+def build_bucketed_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """SETUP FIXTURE — the one-time layout INVESTMENT, deliberately NOT a
     registered query: (re)write lineitem/orders bucketed+sorted on
     orderkey (8 buckets). Idempotent across PROCESSES, not just sessions:
@@ -160,26 +158,21 @@ def build_bucketed_layout(
     them with a fast CREATE TABLE ... LOCATION instead of re-paying the
     write, so no timed pass ever includes the fixture (r6 driver bench
     showed pass-1 lazily building inside ``bucketed_join_revenue``
-    polluting a mean-of-passes figure). ``force=True`` rebuilds from the
-    source parquet (e.g. after a data refresh). Write cost at sf0.1 is
+    polluting a mean-of-passes figure). Write cost at sf0.1 is
     ~0.8 s vs 0.014 s for the join it buys."""
     from autonomous_orchestrator_ai_spark.operators.skew import write_bucketed
 
     li_tbl, ord_tbl = _bucket_demo_names(sf_dir)
     base = _bucket_demo_base(spark)
     for tbl, src in ((li_tbl, "lineitem"), (ord_tbl, "orders")):
-        if (
-            not force
-            and _layout_on_disk(base, tbl)
-            and not spark.catalog.tableExists(tbl)
-        ):
+        if _layout_on_disk(base, tbl) and not spark.catalog.tableExists(tbl):
             spark.sql(
                 f"CREATE TABLE {tbl} ({_DEMO_DDL_COLS[src]}) USING PARQUET "
                 f"CLUSTERED BY ({_DEMO_DDL_COLS[src].split()[0]}) "
                 f"SORTED BY ({_DEMO_DDL_COLS[src].split()[0]}) INTO 8 BUCKETS "
                 f"LOCATION '{base}/{tbl}'"
             )
-        elif force or not spark.catalog.tableExists(tbl):
+        elif not spark.catalog.tableExists(tbl):
             key = _DEMO_DDL_COLS[src].split()[0]
             cols = [c.split()[0] for c in _DEMO_DDL_COLS[src].split(", ")]
             write_bucketed(

@@ -155,9 +155,7 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank the per-CUSTOMER aggregate — the dimension table, not the fact
     table — and every window has a unique tie-break, so the assignment is
     a total order. The global ntile is the exact anchor (whitelisted like
-    value_equidepth_histogram); the scale form is
-    mlstats.rfm_segments_cutpoint — broadcast approx-percentile cut
-    points, no global window (agreement pinned in tests)."""
+    value_equidepth_histogram)."""
     orders = table(spark, sf_dir, "orders")
     seg = rfm_segments(orders, "2001-09-01")
     return seg.groupBy("segment").agg(
@@ -1103,7 +1101,7 @@ def knn_label_disagreement_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every vector is a query -> the probe side is corpus-scaled: shuffle
     # the bucket join instead of broadcasting it. The probe SET is
     # cost-routed (r9, VERDICT r8 item 6): own-bucket-only keeps screen
-    # work linear in n (candidates per query ~n_tables x target_bucket,
+    # work linear in n (candidates per query ~n_tables x 64,
     # corpus-independent under auto_planes) but starves small corpora —
     # measured recall@5 = 0.348 at 2k vectors / 5 planes, where 1-bit
     # flips are nearly free. _screen_multiprobe_route prices the

@@ -660,17 +660,15 @@ def _feat_ctes(prefix: str, src: str) -> str:
       FROM {prefix}_feats f JOIN {prefix}_labels l USING (doc_id))"""
 
 
-def _gd_ctes(
-    rounds: int = _GD_ROUNDS, lr: float = _GD_LR, src: str = "documents"
-) -> str:
+def _gd_ctes(src: str = "documents") -> str:
     """CTE chain replaying hashed_features + train_logistic_gd verbatim
-    over the ``src`` relation: gd_w{rounds} is the trained
-    (bucket, weight) table."""
+    (``_GD_ROUNDS`` rounds at ``_GD_LR``) over the ``src`` relation:
+    gd_w{_GD_ROUNDS} is the trained (bucket, weight) table."""
     head = f"""{_feat_ctes('gd', src)},
     gd_n AS MATERIALIZED (SELECT COUNT(*) * 1.0 AS n FROM {src}),
     gd_w0 AS MATERIALIZED (SELECT DISTINCT bucket, 0.0 AS weight FROM gd_feats)"""
     parts = [head]
-    for t in range(1, rounds + 1):
+    for t in range(1, _GD_ROUNDS + 1):
         parts.append(f""",
     gd_rs{t} AS MATERIALIZED (
       SELECT doc_id, 1.0 / (1.0 + exp(-SUM(x * weight))) - MIN(y) AS r
@@ -679,7 +677,7 @@ def _gd_ctes(
       SELECT bucket, SUM(x * r) / (SELECT n FROM gd_n) AS g
       FROM gd_fl JOIN gd_rs{t} USING (doc_id) GROUP BY bucket),
     gd_w{t} AS MATERIALIZED (
-      SELECT w.bucket, ROUND(w.weight - {lr} * g.g, 9) AS weight
+      SELECT w.bucket, ROUND(w.weight - {_GD_LR} * g.g, 9) AS weight
       FROM gd_w{t - 1} w JOIN gd_g{t} g USING (bucket))""")
     return "".join(parts)
 

@@ -44,7 +44,8 @@ _PRELUDE = f"""
 """.strip()
 
 #: island merge of duplicated-gram start positions into maximal spans
-#: (mirrors spandedup._merge_islands — same window, same 0-based basis).
+#: (the running-max window form of spandedup._island_bounds' neighbor
+#: test — the same spans on the same 0-based basis).
 _SPANS_SQL = f"""
     dup AS (SELECT gh FROM occ GROUP BY gh
             HAVING COUNT(DISTINCT doc_id) >= 2),

@@ -254,15 +254,16 @@ KAFKA_ENVELOPE_SCHEMA = T.StructType(
 
 
 def jsonl_as_kafka_envelope(
-    spark: SparkSession, path: str, key_field: str = "id", streaming: bool = False
+    spark: SparkSession, path: str, streaming: bool = False
 ) -> DataFrame:
     """Read a JSON-lines file and present it in the Kafka envelope shape
-    (binary key/value + topic/partition/offset/timestamp) so the full parse
-    pipeline is testable without a broker (reference S3's role in tests)."""
+    (binary key/value + topic/partition/offset/timestamp, the key being the
+    record's ``id``) so the full parse pipeline is testable without a
+    broker (reference S3's role in tests)."""
     reader = spark.readStream if streaming else spark.read
     raw = reader.text(path)
     return raw.select(
-        F.get_json_object(F.col("value"), f"$.{key_field}").cast("binary").alias("key"),
+        F.get_json_object(F.col("value"), "$.id").cast("binary").alias("key"),
         F.col("value").cast("binary").alias("value"),
         F.lit("test-topic").alias("topic"),
         F.spark_partition_id().alias("partition"),

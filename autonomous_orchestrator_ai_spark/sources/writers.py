@@ -1,5 +1,6 @@
-"""Sinks (reference S5/S8 quarantine, S10 retention, SURVEY.md §2.1) and
-the atomic publish of the tick's JSON documents.
+"""Sinks (reference S5/S8 quarantine, S10 retention, SURVEY.md §2.1), the
+atomic publish of the tick's JSON documents and the one commit rule of its
+append-only JSONL logs.
 
 The S4 partitioned parquet sink is the streaming writer
 ``streaming.pipeline.run_bounded``, partitioned like the reference
@@ -8,6 +9,7 @@ The S4 partitioned parquet sink is the streaming writer
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
@@ -35,6 +37,23 @@ def write_text_atomic(path: str | Path, text: str) -> None:
     except BaseException:
         tmp.unlink(missing_ok=True)
         raise
+
+
+def append_jsonl(path: str | Path, rec: dict) -> None:
+    """Append ``rec`` as one JSON line: the commit rule of every append-only
+    log the tick writes (decisions, notifications, retrigger requests,
+    incidents). A line is committed once its newline is written. A final
+    line without one is an append a crash cut short: it never committed,
+    so it is cut off before the new line goes on (else the two would fuse
+    into one corrupt line)."""
+    with Path(path).open("a+b") as f:
+        size = f.seek(0, 2)
+        if size:
+            f.seek(size - 1)
+            if f.read(1) != b"\n":
+                f.seek(0)
+                f.truncate(f.read().rfind(b"\n") + 1)
+        f.write(json.dumps(rec).encode() + b"\n")
 
 
 #: connector option keys the reference's writer builds
@@ -102,27 +121,27 @@ def foreach_batch_snowflake_sink(config: dict, save=None):
     return _write
 
 
-def write_quarantine(
-    quarantined: DataFrame, base_path: str, metadata: dict, timestamp: str | None = None
-) -> str:
-    """Write quarantined rows + metadata JSON to a timestamped dir (reference
-    D8, agent/tools.py:136-177 — the reference only wrote the metadata; the
-    record movement it deferred happens here)."""
-    import json
-
-    ts = timestamp or time.strftime("%Y%m%d_%H%M%S")
-    qdir = Path(base_path) / f"quarantine_{ts}"
-    quarantined.write.mode("overwrite").parquet(str(qdir / "records"))
-    qdir.mkdir(parents=True, exist_ok=True)
-    write_text_atomic(qdir / "metadata.json", json.dumps(metadata, indent=2))
-    return str(qdir)
+def write_quarantine(quarantined: DataFrame, quarantine_dir: str) -> str:
+    """Write the quarantined rows as ``records/`` into the directive's own
+    directory, the one ``PipelineTools.quarantine_records`` created with
+    its ``metadata.json`` (reference D8, agent/tools.py:136-177 — the
+    reference only wrote the metadata; the record movement it deferred
+    happens here). A directive's records are written once: a second write
+    into the same directory raises. Returns the records path."""
+    records = str(Path(quarantine_dir) / "records")
+    quarantined.write.parquet(records)
+    return records
 
 
-def cleanup_old_data(base_path: str, retention_days: int = 7) -> list[str]:
+#: the retention window of ``cleanup_old_data``, in days (reference C6).
+RETENTION_DAYS = 7
+
+
+def cleanup_old_data(base_path: str) -> list[str]:
     """Retention sweep (reference S10/C6, pipeline_dag.py:392-423): remove
-    top-level entries older than the retention window. For partitioned
+    top-level entries older than ``RETENTION_DAYS``. For partitioned
     tables prefer dropping date partitions."""
-    cutoff = time.time() - retention_days * 86400
+    cutoff = time.time() - RETENTION_DAYS * 86400
     removed: list[str] = []
     base = Path(base_path)
     if not base.exists():

@@ -39,8 +39,6 @@ def with_quality_score(
     weights: dict[int, float],
     text_col: str = "name",
     score_col: str = "quality_score",
-    n_buckets: int | None = None,
-    bias: float = 0.0,
 ) -> DataFrame:
     """Curation-scoring stage for the bounded-stream tick (r7, VERDICT r6
     item 8): score each record with the trained classifier's weight table
@@ -51,17 +49,9 @@ def with_quality_score(
     append-mode-safe, rides the same micro-batch the DQ flags do) and
     observe (n, score_sum) so the run report carries the exact
     cross-batch mean."""
-    from autonomous_orchestrator_ai_spark.operators.classify import (
-        TRAIN_BUCKETS,
-        trained_score_expr,
-    )
+    from autonomous_orchestrator_ai_spark.operators.classify import trained_score_expr
 
-    scored = df.withColumn(
-        score_col,
-        trained_score_expr(
-            text_col, weights, n_buckets or TRAIN_BUCKETS, bias
-        ),
-    )
+    scored = df.withColumn(score_col, trained_score_expr(text_col, weights))
     return scored.observe(
         QUALITY_OBSERVATION,
         F.count(score_col).alias("quality_n"),
@@ -71,15 +61,15 @@ def with_quality_score(
 
 def streaming_enrich(
     parsed: DataFrame,
-    watermark_delay: str = WATERMARK_DELAY,
     processing_time: Column | None = None,
 ) -> DataFrame:
     """parse-output -> watermark -> full enrichment chain (T1 + F1-F5 +
     P3-P9). Watermark is applied on event_timestamp right after it exists,
     mirroring ingest_transform.py:349-350 but *before* stateful ops so it
-    actually bounds their state."""
+    actually bounds their state. The delay is ``WATERMARK_DELAY``, the one
+    the run report states."""
     enriched = enrich_customer_events(parsed, processing_time=processing_time)
-    return enriched.withWatermark("event_timestamp", watermark_delay)
+    return enriched.withWatermark("event_timestamp", WATERMARK_DELAY)
 
 
 def with_run_observation(df: DataFrame) -> DataFrame:
@@ -108,17 +98,17 @@ def run_bounded(
     sink_path: str,
     checkpoint: str,
     partition_by: list[str] = (),
-    output_mode: str = "append",
     timeout_seconds: float | None = None,
 ) -> dict:
-    """Bounded streaming run (T6): availableNow trigger processes the whole
-    backlog then stops — the deterministic twin of the reference's
-    ``awaitTermination(duration*60)`` wall-clock runs. Returns the run
-    stats summed over the query's progress reports; raises TimeoutError
-    if the backlog is not drained within ``timeout_seconds``."""
+    """Bounded append-mode streaming run (T6): availableNow trigger
+    processes the whole backlog then stops — the deterministic twin of
+    the reference's ``awaitTermination(duration*60)`` wall-clock runs.
+    Returns the run stats summed over the query's progress reports;
+    raises TimeoutError if the backlog is not drained within
+    ``timeout_seconds``."""
     writer = (
         df.writeStream.format("parquet")
-        .outputMode(output_mode)
+        .outputMode("append")
         .option("path", sink_path)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)

@@ -7,14 +7,32 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from autonomous_orchestrator_ai_spark.functions.text import normalized_text
+from autonomous_orchestrator_ai_spark.operators import classify
 from autonomous_orchestrator_ai_spark.operators.classify import (
+    N_BUCKETS,
     frozen_weight_table,
     hashed_linear_score,
-    score_with_weight_table,
     token_bucket,
 )
 
-NB = 4096  # small feature space keeps frozen_weight_table cheap in tests
+NB = 4096  # small feature space for the bucketing test
+
+
+def _table_scores(docs, weights, n_buckets):
+    """Reference scorer, (doc_id, score): explode tokens -> bucket ->
+    broadcast-join a (bucket, weight) table -> per-doc mean -> sigmoid.
+    Tokens missing from the table weigh 0."""
+    toks = docs.select(
+        "doc_id", F.explode(F.split(normalized_text("text"), " ")).alias("tok")
+    ).select("doc_id", token_bucket(F.col("tok"), n_buckets).alias("bucket"))
+    joined = toks.join(F.broadcast(weights), "bucket", "left").select(
+        "doc_id", F.coalesce(F.col("weight"), F.lit(0.0)).alias("w")
+    )
+    logit = F.sum("w") / F.count(F.lit(1))
+    return joined.groupBy("doc_id").agg(
+        (F.lit(1.0) / (F.lit(1.0) + F.exp(-logit))).alias("score")
+    )
 
 
 def _docs(spark):
@@ -34,13 +52,13 @@ def test_expression_and_table_paths_agree(spark):
     expr = {
         r["doc_id"]: r["s"]
         for r in docs.select(
-            "doc_id", hashed_linear_score("text", n_buckets=NB).alias("s")
+            "doc_id", hashed_linear_score("text").alias("s")
         ).collect()
     }
     table = {
         r["doc_id"]: r["score"]
-        for r in score_with_weight_table(
-            docs, frozen_weight_table(spark, NB), n_buckets=NB
+        for r in _table_scores(
+            docs, frozen_weight_table(spark), N_BUCKETS
         ).collect()
     }
     assert set(expr) == set(table)
@@ -53,32 +71,28 @@ def test_normalization_makes_scores_text_canonical(spark):
         r["doc_id"]: r["s"]
         for r in _docs(spark)
         .where(F.col("doc_id").isin(0, 1))
-        .select("doc_id", hashed_linear_score("text", n_buckets=NB).alias("s"))
+        .select("doc_id", hashed_linear_score("text").alias("s"))
         .collect()
     }
     assert scores[0] == scores[1]
 
 
 def test_null_text_scores_sigmoid_of_bias(spark):
-    import math
-
+    """The frozen model's bias is 0, so NULL text scores sigmoid(0)."""
     row = (
         _docs(spark)
         .where(F.col("doc_id") == 4)
-        .select(hashed_linear_score("text", n_buckets=NB, bias=0.7).alias("s"))
+        .select(hashed_linear_score("text").alias("s"))
         .collect()[0]
     )
-    assert abs(row["s"] - 1.0 / (1.0 + math.exp(-0.7))) < 1e-12
+    assert row["s"] == 0.5
 
 
-def test_scores_are_probabilities_and_salt_changes_the_model(spark):
+def test_scores_are_probabilities(spark):
     docs = _docs(spark).where(F.col("text").isNotNull())
-    both = docs.select(
-        hashed_linear_score("text", salt="w1", n_buckets=NB).alias("a"),
-        hashed_linear_score("text", salt="other", n_buckets=NB).alias("b"),
-    ).collect()
-    assert all(0.0 < r["a"] < 1.0 and 0.0 < r["b"] < 1.0 for r in both)
-    assert any(r["a"] != r["b"] for r in both)
+    scores = [r["s"] for r in docs.select(hashed_linear_score("text").alias("s")).collect()]
+    assert all(0.0 < s < 1.0 for s in scores)
+    assert len(set(scores)) > 1
 
 
 def test_bucketing_is_stable_and_in_range(spark):
@@ -94,7 +108,7 @@ def test_bucketing_is_stable_and_in_range(spark):
 def test_expression_form_plan_has_no_exchange(spark):
     docs = _docs(spark).where(F.col("text").isNotNull())
     plan = (
-        docs.select(hashed_linear_score("text", n_buckets=NB).alias("s"))
+        docs.select(hashed_linear_score("text").alias("s"))
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -202,48 +216,45 @@ def test_trained_model_separates_separable_labels(spark):
     assert acc >= 0.8, acc
 
 
-def _train_both(spark, routes, rounds, lr):
+def _train_both(spark, routes, monkeypatch, rounds, lr):
     rows, X, y = _synthetic_problem()
     feats = spark.createDataFrame(rows, _FEAT_SCHEMA)
     labels = spark.createDataFrame(
         [(int(d), float(v)) for d, v in enumerate(y)], ["doc_id", "y"]
     )
     routes.clear()
-    w_es = train_logistic_gd(
-        feats, labels, rounds=rounds, lr=lr, early_stop=True
-    )
+    w_es = train_logistic_gd(feats, labels, rounds=rounds, lr=lr)
     [rec] = routes("logistic_gd_rounds")
     assert rec["budget"] == rounds
-    w_full = train_logistic_gd(
-        feats, labels, rounds=rounds, lr=lr, early_stop=False
-    )
+    monkeypatch.setattr(classify, "GD_EARLY_STOP", False)
+    w_full = train_logistic_gd(feats, labels, rounds=rounds, lr=lr)
     as_dict = lambda w: {r["bucket"]: r["weight"] for r in w.collect()}
     return as_dict(w_es), as_dict(w_full), rec["chosen"]
 
 
-def test_early_stop_fixed_point_is_bit_identical(spark, routes):
+def test_early_stop_fixed_point_is_bit_identical(spark, routes, monkeypatch):
     """A learning rate small enough that every update rounds to the 1e-9
     grid's zero makes round 1 a snapped fixed point: early_stop must exit
     after ONE round with weights bit-identical to the full 7-round loop
     (whose six tail rounds recompute the same all-zero table)."""
-    got, full, rounds_run = _train_both(spark, routes, rounds=7, lr=1e-12)
+    got, full, rounds_run = _train_both(spark, routes, monkeypatch, rounds=7, lr=1e-12)
     assert rounds_run == 1
     assert got == full
 
 
-def test_early_stop_does_not_fire_before_convergence(spark, routes):
+def test_early_stop_does_not_fire_before_convergence(spark, routes, monkeypatch):
     """On the standard fixture at a real learning rate the deltas stay
     above the snap grid for all 6 rounds: early_stop must run the full
     count and return exactly the un-stopped weights (the default path is
     unchanged, not merely approximately equal)."""
-    got, full, rounds_run = _train_both(spark, routes, rounds=6, lr=2.5)
+    got, full, rounds_run = _train_both(spark, routes, monkeypatch, rounds=6, lr=2.5)
     assert rounds_run == 6
     assert got == full
 
 
 def test_hashed_features_structure(spark):
     docs = _docs(spark).where(F.col("text").isNotNull())
-    feats = hashed_features(docs, n_buckets=64)
+    feats = hashed_features(docs)
     rows = feats.collect()
     by_doc = {}
     for r in rows:
@@ -266,14 +277,12 @@ def test_hashed_features_structure(spark):
 
 def test_trained_score_expr_matches_weight_table_path(spark):
     """r7: the stateless map form (trained_score_expr — the streaming
-    tick's scoring stage) must agree with score_with_weight_table to
-    float-summation noise; only the summation ORDER differs (array fold
-    vs partial aggregates). Missing buckets contribute 0 on both paths,
-    and an empty weight dict scores sigmoid(bias) exactly."""
-    from pyspark.sql import functions as F
-
+    tick's scoring stage) must agree with the explode + join + groupBy
+    table form to float-summation noise; only the summation ORDER differs
+    (array fold vs partial aggregates). Missing buckets contribute 0 on
+    both paths, and an empty weight dict scores sigmoid(0) exactly."""
     from autonomous_orchestrator_ai_spark.operators.classify import (
-        score_with_weight_table,
+        TRAIN_BUCKETS,
         trained_score_expr,
         weight_table_as_dict,
     )
@@ -293,28 +302,21 @@ def test_trained_score_expr_matches_weight_table_path(spark):
     )
     via_table = {
         r["doc_id"]: r["score"]
-        for r in score_with_weight_table(
-            docs, wdf, n_buckets=4096, bias=0.2
-        ).collect()
+        for r in _table_scores(docs, wdf, TRAIN_BUCKETS).collect()
     }
     wmap = weight_table_as_dict(wdf)
     via_expr = {
         r["doc_id"]: r["s"]
         for r in docs.select(
-            "doc_id", trained_score_expr("text", wmap, 4096, 0.2).alias("s")
+            "doc_id", trained_score_expr("text", wmap).alias("s")
         ).collect()
     }
     assert set(via_table) == set(via_expr)
     for k in via_table:
         assert abs(via_table[k] - via_expr[k]) < 1e-12
-    # empty model: every doc scores sigmoid(bias)
-    import math
-
-    neutral = docs.select(
-        trained_score_expr("text", {}, 4096, 0.3).alias("s")
-    ).collect()
-    for r in neutral:
-        assert abs(r["s"] - 1.0 / (1.0 + math.exp(-0.3))) < 1e-15
+    # empty model: every doc scores sigmoid(0)
+    neutral = docs.select(trained_score_expr("text", {}).alias("s")).collect()
+    assert [r["s"] for r in neutral] == [0.5] * 4
 
 
 def test_trained_score_expr_plan_is_shuffle_free(spark):
@@ -327,7 +329,7 @@ def test_trained_score_expr_plan_is_shuffle_free(spark):
 
     docs = spark.createDataFrame([(1, "a b c")], ["doc_id", "text"])
     scored = docs.select(
-        "doc_id", trained_score_expr("text", {0: 0.5}, 4096).alias("s")
+        "doc_id", trained_score_expr("text", {0: 0.5}).alias("s")
     )
     plan = scored._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
@@ -380,7 +382,7 @@ def test_trained_score_expr_py4j_traffic_is_independent_of_model_size(
     def commands(n_weights: int) -> int:
         weights = {b: (b % 7 - 3) / 11.0 for b in range(n_weights)}
         sent.clear()
-        trained_score_expr("text", weights, TRAIN_BUCKETS, 0.1)
+        trained_score_expr("text", weights)
         return len(sent)
 
     commands(16)  # warm the JVM-side function lookups

@@ -339,15 +339,6 @@ class TestProfileColumns:
         assert prof["c"].n_nulls == 3 and prof["c"].n_distinct == 0
         assert prof["c"].min_value is None
 
-    def test_approx_distinct_scale_path(self, spark):
-        from autonomous_orchestrator_ai_spark.operators.profiling import (
-            profile_columns,
-        )
-
-        df = spark.range(1000).select(F.col("id").alias("k"))
-        row = profile_columns(df, exact_distinct=False).first()
-        assert abs(row.n_distinct - 1000) / 1000 < 0.1
-
 
 class TestWeightedSample:
     def test_deterministic_and_nested(self, spark):
@@ -561,38 +552,6 @@ class TestAssignSplit:
             .join(sub.withColumnRenamed("split", "s_sub"), "doc_id")
         )
         assert joined.where(F.col("s_full") != F.col("s_sub")).count() == 0
-
-    def test_bad_fractions_raise(self, spark):
-        import pytest as _pytest
-
-        from autonomous_orchestrator_ai_spark.operators.curation import (
-            assign_split,
-        )
-
-        df = spark.range(10).withColumnRenamed("id", "doc_id")
-        for bad in ((1.0, 0.0), (1.2, 0.1), (0.8, -0.1), (0.7, 0.4),
-                    (0.0, 0.5), (-0.1, 0.5)):
-            with _pytest.raises(ValueError, match="fractions"):
-                assign_split(df, fractions=bad)
-
-    def test_fractions_sum_to_one_has_no_test_rows(self, spark):
-        from autonomous_orchestrator_ai_spark.operators.curation import (
-            assign_split,
-        )
-
-        df = spark.range(1000).withColumnRenamed("id", "doc_id")
-        counts = {
-            r["split"]: r["n"]
-            for r in assign_split(df, fractions=(0.8, 0.2))
-            .groupBy("split")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        # train + val == 1.0: every row must land in train or val — the
-        # t2=None ("keep everything") threshold may not leak rows to test.
-        assert counts.get("test", 0) == 0
-        assert sum(counts.values()) == 1000
-        assert counts["val"] > 0
 
 
 # --- cluster_safe_split ----------------------------------------------------

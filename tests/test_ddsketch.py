@@ -7,6 +7,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from autonomous_orchestrator_ai_spark.operators import ddsketch
 from autonomous_orchestrator_ai_spark.operators.ddsketch import (
     dd_gamma,
     ddsketch_build,
@@ -37,7 +38,9 @@ def test_gamma_validation():
     assert dd_gamma(0.01) == pytest.approx(1.01 / 0.99)
 
 
-def test_relative_error_guarantee_lognormal(spark):
+def test_relative_error_guarantee_lognormal(spark, monkeypatch):
+    # 12 places: absolute rounding stays far below α·|x| at these magnitudes
+    monkeypatch.setattr(ddsketch, "ROUND_DP", 12)
     rng = np.random.default_rng(5)
     vals = np.exp(rng.normal(size=2000) * 3.0)  # 6 orders of magnitude
     df = _build_df(spark, vals)
@@ -45,7 +48,7 @@ def test_relative_error_guarantee_lognormal(spark):
     out = {
         r.q: r.est
         for r in ddsketch_quantiles(
-            sk, [0.01, 0.25, 0.5, 0.9, 0.99], (), ALPHA, round_dp=None
+            sk, [0.01, 0.25, 0.5, 0.9, 0.99], (), ALPHA
         ).collect()
     }
     for q, est in out.items():
@@ -53,7 +56,8 @@ def test_relative_error_guarantee_lognormal(spark):
         assert abs(est - exact) <= ALPHA * abs(exact) * 1.001, (q, est, exact)
 
 
-def test_signed_and_zero_channels(spark):
+def test_signed_and_zero_channels(spark, monkeypatch):
+    monkeypatch.setattr(ddsketch, "ROUND_DP", 12)
     rng = np.random.default_rng(9)
     vals = np.concatenate(
         [-np.exp(rng.normal(size=700)), np.zeros(100), np.exp(rng.normal(size=700))]
@@ -63,7 +67,7 @@ def test_signed_and_zero_channels(spark):
     out = {
         r.q: r.est
         for r in ddsketch_quantiles(
-            sk, [0.05, 0.5, 0.95], (), ALPHA, round_dp=None
+            sk, [0.05, 0.5, 0.95], (), ALPHA
         ).collect()
     }
     for q, est in out.items():

@@ -82,20 +82,42 @@ def test_retention_cleanup(tmp_path):
     os.utime(base / "old_dir", (old, old))
     # ctime can't be set directly on linux; emulate by checking mtime-based
     # behavior is at least non-destructive for fresh entries
-    removed = cleanup_old_data(str(base), retention_days=7)
+    removed = cleanup_old_data(str(base))
     assert str(base / "fresh.txt") not in removed
     assert (base / "fresh.txt").exists()
 
 
 def test_write_quarantine_publishes_records_and_metadata(spark, tmp_path, events_fixture):
-    """P10/D8: the quarantined rows land under ``records`` and the
-    metadata document next to them, with no temp file left behind."""
-    meta = {"filter_condition": "country = 'XX'", "status": "pending"}
-    qdir = Path(write_quarantine(events_fixture, str(tmp_path), meta, timestamp="20240115_010000"))
-    assert qdir.name == "quarantine_20240115_010000"
+    """P10/D8: the quarantined rows land under ``records`` in the
+    directive's own directory, next to the metadata document
+    ``quarantine_records`` published, with no temp file left behind."""
+    from autonomous_orchestrator_ai_spark.agent.tools import PipelineTools
+
+    tools = PipelineTools(str(tmp_path / "ops"), now=datetime(2024, 1, 15, 1))
+    directive = tools.quarantine_records("country = 'XX'")
+    qdir = Path(directive["quarantine_dir"])
+    assert write_quarantine(events_fixture, str(qdir)) == str(qdir / "records")
     assert spark.read.parquet(str(qdir / "records")).count() == events_fixture.count()
-    assert json.loads((qdir / "metadata.json").read_text()) == meta
+    assert json.loads((qdir / "metadata.json").read_text()) == directive["metadata"]
     assert sorted(p.name for p in qdir.iterdir()) == ["metadata.json", "records"]
+
+
+def test_write_quarantine_keeps_both_directives_of_one_second(spark, tmp_path, events_fixture):
+    """Two directives issued in the same second each keep their own record
+    set: the records go into the directory each directive created."""
+    from autonomous_orchestrator_ai_spark.agent.tools import PipelineTools
+
+    tools = PipelineTools(str(tmp_path / "ops"), now=datetime(2024, 1, 15, 1))
+    first = events_fixture.where(F.col("id") == "cust_001")
+    rest = events_fixture.where(F.col("id") != "cust_001")
+    dirs = []
+    for part, cond in ((first, "id = 'cust_001'"), (rest, "id != 'cust_001'")):
+        qdir = tools.quarantine_records(cond)["quarantine_dir"]
+        write_quarantine(part, qdir)
+        dirs.append(qdir)
+    assert dirs[0] != dirs[1]
+    counts = [spark.read.parquet(f"{d}/records").count() for d in dirs]
+    assert counts == [1, events_fixture.count() - 1]
 
 
 class TestSnowflakeSink:

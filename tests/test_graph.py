@@ -173,16 +173,19 @@ def test_star_contraction_path_graph_logarithmic_rounds(spark):
     )
 
 
-def test_star_contraction_equivalent_to_propagation(spark):
+def test_star_contraction_equivalent_to_propagation(spark, monkeypatch):
     """Random multi-component graphs: star contraction and pure
-    propagation produce identical (node -> min id) labelings."""
+    propagation (no switch before the round cap) produce identical
+    (node -> min id) labelings."""
     import random
 
+    from autonomous_orchestrator_ai_spark.operators import graph
     from autonomous_orchestrator_ai_spark.operators.graph import (
         connected_components,
         connected_components_star,
     )
 
+    monkeypatch.setattr(graph, "CC_SWITCH_AFTER", graph.CC_MAX_ITERATIONS)
     rng = random.Random(42)
     nodes = list(range(0, 400, 3))  # non-contiguous ids
     edges = [
@@ -193,7 +196,7 @@ def test_star_contraction_equivalent_to_propagation(spark):
     )
     prop = {
         r["node"]: r["component"]
-        for r in connected_components(df, switch_after=None).collect()
+        for r in connected_components(df).collect()
     }
     star = {
         r["node"]: r["star_component"]
@@ -221,16 +224,18 @@ def test_star_contraction_equivalent_to_propagation(spark):
     assert prop == truth
 
 
-def test_cc_auto_switch_long_chain(spark):
-    """connected_components with the default auto-switch solves a chain
-    far longer than switch_after rounds of propagation could."""
+def test_cc_auto_switch_long_chain(spark, monkeypatch):
+    """connected_components with the auto-switch solves a chain far longer
+    than CC_SWITCH_AFTER rounds of propagation could."""
+    from autonomous_orchestrator_ai_spark.operators import graph
+
+    monkeypatch.setattr(graph, "CC_SWITCH_AFTER", 4)
+    monkeypatch.setattr(graph, "CC_MAX_ITERATIONS", 40)
     n = 2_000
     edges = spark.range(n - 1).selectExpr("id AS id_a", "id + 1 AS id_b")
     labels = {
         r["node"]: r["component"]
-        for r in connected_components(
-            edges, switch_after=4, max_iterations=40
-        ).collect()
+        for r in graph.connected_components(edges).collect()
     }
     assert len(labels) == n
     assert set(labels.values()) == {0}

@@ -1,5 +1,5 @@
-"""Z-order layout operator tests (operators/layout.py): key arithmetic,
-and the actual pruning benefit measured from parquet footer statistics."""
+"""Z-order layout operator tests (operators/layout.py): key arithmetic
+and bounds."""
 
 from __future__ import annotations
 
@@ -8,8 +8,6 @@ from pyspark.sql import functions as F
 
 from autonomous_orchestrator_ai_spark.operators.layout import (
     column_bounds,
-    file_stat_spans,
-    write_zordered,
     zorder_key,
 )
 
@@ -45,55 +43,3 @@ def test_column_bounds_and_degenerate_dim(spark):
     z = df.select(zorder_key(["a", "c"], [(0, 9), (7, 7)], bits=4).alias("z"))
     assert z.distinct().count() == 10
 
-
-def test_zorder_write_bounds_both_dims(spark, tmp_path):
-    """The point of the layout: after a Z-ordered write, every file's
-    footer min/max box is narrow on BOTH columns, so predicates on either
-    prune files. A single-column sort leaves the other column's span at
-    ~100% per file — nothing prunes."""
-    n = 20_000
-    df = (
-        spark.range(n)
-        .select(
-            (F.hash(F.col("id")) % 1000 + 1000).alias("a"),
-            (F.hash(F.col("id"), F.lit(1)) % 1000 + 1000).alias("b"),
-        )
-    )
-    zpath = str(tmp_path / "zordered")
-    spath = str(tmp_path / "sorted_a")
-    write_zordered(df, zpath, ["a", "b"], bits=10, num_files=8)
-    (
-        df.repartitionByRange(8, "a")
-        .sortWithinPartitions("a")
-        .write.parquet(spath)
-    )
-
-    def avg_span(path, col):
-        stats = [s for s in file_stat_spans(path, [col]) if f"{col}_min" in s]
-        assert stats
-        spans = [(s[f"{col}_max"] - s[f"{col}_min"]) / 2000.0 for s in stats]
-        return sum(spans) / len(spans)
-
-    # z-order: both dims bounded well below full range
-    assert avg_span(zpath, "a") < 0.7
-    assert avg_span(zpath, "b") < 0.7
-    # single-column sort: a is tight but b is unbounded per file
-    assert avg_span(spath, "a") < 0.3
-    assert avg_span(spath, "b") > 0.9
-
-    # pruning a predicate box on b alone: count files a scan must read
-    def overlapping(path, col, lo, hi):
-        return sum(
-            1
-            for s in file_stat_spans(path, [col])
-            if f"{col}_min" in s and not (s[f"{col}_max"] < lo or s[f"{col}_min"] > hi)
-        )
-
-    assert overlapping(zpath, "b", 1000, 1200) < overlapping(spath, "b", 1000, 1200)
-
-    # layout changes bytes on disk, never the relation
-    back = spark.read.parquet(zpath)
-    assert back.count() == n
-    assert back.agg(F.sum("a"), F.sum("b")).first() == df.agg(
-        F.sum("a"), F.sum("b")
-    ).first()

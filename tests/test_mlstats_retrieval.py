@@ -14,10 +14,15 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from autonomous_orchestrator_ai_spark.operators.mlstats import (
-    mutual_information,
+    mutual_information_pairs,
     rfm_segments,
     woe_iv,
 )
+
+
+def mutual_information(df, x_col, y_col):
+    """One (x, y) pair of ``mutual_information_pairs``."""
+    return mutual_information_pairs(df, [("x", x_col, "y", y_col)])
 from autonomous_orchestrator_ai_spark.operators.retrieval import bm25_scores
 from autonomous_orchestrator_ai_spark.operators.similarity import (
     hard_negatives,
@@ -172,47 +177,6 @@ def test_rfm_segments_quartiles(spark):
     assert out[0]["recency_days"] == 1
     assert out[7]["frequency"] == 8
     assert out[7]["monetary"] == pytest.approx(8 * 800.0)
-
-
-def test_rfm_cutpoint_twin_agrees_with_exact(spark):
-    """The approx-cut-point scale twin matches the exact ntile form away
-    from quartile boundaries; with distinct untied values and exact
-    quantiles (accuracy high, n small) it matches everywhere."""
-    import datetime as dt
-
-    from autonomous_orchestrator_ai_spark.operators.mlstats import (
-        rfm_segments_cutpoint,
-    )
-
-    rows = []
-    for i in range(16):
-        for j in range(i + 1):
-            rows.append(
-                Row(
-                    o_custkey=i,
-                    o_orderdate=dt.datetime(2020, 1, 28 - i)
-                    - dt.timedelta(days=j),
-                    o_totalprice=100.0 + 10.0 * i,
-                )
-            )
-    df = spark.createDataFrame(rows)
-    exact = {
-        r["custkey"]: r for r in rfm_segments(df, "2020-01-29").collect()
-    }
-    twin = {
-        r["custkey"]: r
-        for r in rfm_segments_cutpoint(df, "2020-01-29").collect()
-    }
-    assert set(exact) == set(twin)
-    # all three dimensions are strictly monotone in custkey here, so
-    # bucket agreement should be near-total; allow the boundary customer
-    # of each quartile edge to differ by one bucket
-    for dim in ("r", "f", "m"):
-        diffs = [
-            abs(exact[k][dim] - twin[k][dim]) for k in exact
-        ]
-        assert max(diffs) <= 1
-        assert sum(d == 0 for d in diffs) >= 13  # >=13/16 exact agreement
 
 
 def test_rrf_fuse_math_and_missing_legs(spark):

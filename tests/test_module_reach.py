@@ -15,11 +15,24 @@ production file (the package, ``bench.py``, ``__spark_entry__.py``,
 body of another unnamed def do not count, so a helper only an unnamed def
 calls is unnamed too. ``@register`` query functions are exempt (the
 registry runs them), and so are the defs of an ``ALLOWLIST`` module.
-``DEF_ALLOWLIST`` keeps a def, with its COVERAGE.md row and why.
+``DEF_ALLOWLIST`` keeps a def, with its COVERAGE.md row and why. The
+strings of a module's own ``__all__`` are not names: exporting a def does
+not run it.
 
-Delete a module or def that only tests run; its history stays in git.
-Tools are not production roots, so a third test checks that every package
-import in ``tools/`` still resolves.
+Options: a defaulted parameter of a package def (a top-level def or a
+method) fails unless some production call sets it, by keyword or by
+position. A def that production reaches through ``*args``/``**kwargs``, or
+uses as a method value (``self.notify_ops`` in a dispatch table), may get
+any argument, so its parameters count as set. Input-column names
+(``*_col``, ``src``, ``dst``, ``suffix``) and the clock ``now`` are exempt,
+and so are the parameters of ``ALLOWLIST`` modules and ``DEF_ALLOWLIST``
+defs. ``PARAM_ALLOWLIST`` keeps the rest, with its COVERAGE.md row and why.
+A value no caller sets is a constant: a tuning knob no query sets doubles
+the configurations a test must cover.
+
+Delete a module, def or option that only tests run; its history stays in git.
+Tools are not production roots, so one more test checks that every
+package import in ``tools/`` still resolves.
 """
 
 from __future__ import annotations
@@ -74,7 +87,8 @@ DEF_ALLOWLIST = {
     ),
     f"{PKG}.sources.writers.write_quarantine": (
         "P10 quarantine filter",
-        "kept, not run here: ROADMAP direction 1's quarantine apply writes through it",
+        "kept, not run here: ROADMAP direction 1's quarantine apply writes each "
+        "directive's records through it, into the directory quarantine_records made",
     ),
     f"{PKG}.session.codegen_compiles": (
         "Session: codegen cache",
@@ -174,6 +188,21 @@ def _production_files() -> list[Path]:
     ]
 
 
+def _exported(tree: ast.Module) -> Counter:
+    """The strings of the module's own top-level ``__all__``."""
+    out: Counter = Counter()
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+        ):
+            out.update(
+                n.value
+                for n in ast.walk(node.value)
+                if isinstance(n, ast.Constant) and isinstance(n.value, str)
+            )
+    return out
+
+
 def _names(node: ast.AST) -> Counter:
     """How often each name occurs in ``node``: as a ``Name``, an
     ``Attribute``, an import alias or a string that is an identifier."""
@@ -206,7 +235,7 @@ def package_defs() -> tuple[dict[str, tuple[str, Counter]], Counter]:
     total: Counter = Counter()
     for path in _production_files():
         tree = ast.parse(path.read_text(), str(path))
-        total += _names(tree)
+        total += _names(tree) - _exported(tree)
         if PKG not in path.relative_to(REPO).parts:
             continue
         module = _module_name(path)
@@ -256,6 +285,146 @@ def test_def_allowlist_names_only_existing_unnamed_defs():
     assert not gone, f"allowlisted defs that do not exist: {gone}"
     named = sorted(set(DEF_ALLOWLIST) - unnamed_defs(kept=set()))
     assert not named, f"allowlisted defs that production names: {named}"
+
+
+# -- options ----------------------------------------------------------------
+
+_EXEMPT_PARAM = re.compile(r"\w+_col|src|dst|suffix|now")
+
+#: module.def:param -> (COVERAGE.md row, why it stays although no production call sets it)
+PARAM_ALLOWLIST = {
+    f"{PKG}.session.get_spark:shuffle_partitions": (
+        "Session: shuffle partitions",
+        "kept: tier-1's session sets 4 (tests/conftest.py)",
+    ),
+    **{
+        f"{PKG}.agent.tools.PipelineTools.__init__:{name}": (
+            "§2.12 D6 retrigger / D9 notify",
+            "kept, not run here: the reference adapters (agent/transports.py)",
+        )
+        for name in ("slack", "email", "airflow", "dag_id")
+    },
+    f"{PKG}.operators.incidents.IncidentStore.recent:incident_type": (
+        "§2.12 D13 incident CRUD",
+        "kept: reference store API; ROADMAP direction 1's escalation counts incidents by type",
+    ),
+    f"{PKG}.operators.incidents.IncidentStore.log_incident:created_by": (
+        "§2.12 D13 incident CRUD",
+        "kept: reference store API",
+    ),
+    f"{PKG}.operators.incidents.IncidentStore.resolve_incident:notes": (
+        "§2.12 D13 incident CRUD",
+        "kept: reference store API (the resolution_notes field)",
+    ),
+}
+
+
+def _defaulted(fn: ast.FunctionDef, bound: bool) -> list[tuple[str, int | None]]:
+    """``fn``'s defaulted parameters: (name, position in a call, or None
+    for keyword-only). ``bound`` drops ``self``/``cls`` from positions."""
+    positional = fn.args.posonlyargs + fn.args.args
+    first = len(positional) - len(fn.args.defaults)
+    out = [(a.arg, i - bound) for i, a in enumerate(positional) if i >= first]
+    out += [
+        (a.arg, None)
+        for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+        if d is not None
+    ]
+    return out
+
+
+def option_defs() -> dict[str, tuple[str, list[tuple[str, int | None]]]]:
+    """Package defs with defaulted parameters, outside ``ALLOWLIST`` modules
+    and ``DEF_ALLOWLIST`` defs: ``module.def`` (or ``module.Class.method``)
+    -> (the name a call uses, its defaulted parameters)."""
+    out = {}
+    for path in (REPO / PKG).rglob("*.py"):
+        module = _module_name(path)
+        if module in ALLOWLIST:
+            continue
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if f"{module}.{getattr(node, 'name', '')}" in DEF_ALLOWLIST:
+                continue
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                out[f"{module}.{node.name}"] = (node.name, _defaulted(node, False))
+            elif isinstance(node, ast.ClassDef):
+                for fn in node.body:
+                    if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        continue
+                    static = any(
+                        isinstance(d, ast.Name) and d.id == "staticmethod"
+                        for d in fn.decorator_list
+                    )
+                    called = node.name if fn.name == "__init__" else fn.name
+                    out[f"{module}.{node.name}.{fn.name}"] = (
+                        called,
+                        _defaulted(fn, not static),
+                    )
+    return out
+
+
+def _production_calls() -> tuple[dict[str, list[ast.Call]], set[str]]:
+    """Every production call by the name it calls, and the attribute names
+    production uses as values (a bound method stored for dispatch)."""
+    calls: dict[str, list[ast.Call]] = {}
+    values: set[str] = set()
+    for path in _production_files():
+        tree = ast.parse(path.read_text(), str(path))
+        funcs = {id(n.func) for n in ast.walk(tree) if isinstance(n, ast.Call)}
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name:
+                    calls.setdefault(name, []).append(n)
+            elif (
+                isinstance(n, ast.Attribute)
+                and isinstance(n.ctx, ast.Load)
+                and id(n) not in funcs
+            ):
+                values.add(n.attr)
+    return calls, values
+
+
+def _sets(call: ast.Call, name: str, position: int | None) -> bool:
+    if any(isinstance(a, ast.Starred) for a in call.args):
+        return True
+    if any(k.arg is None or k.arg == name for k in call.keywords):
+        return True
+    return position is not None and len(call.args) > position
+
+
+def unset_options() -> set[str]:
+    """``module.def:param`` for every defaulted parameter no production
+    call sets, exempt ones left out."""
+    calls, values = _production_calls()
+    unset = set()
+    for key, (called, params) in option_defs().items():
+        if called in values and not key.endswith(".__init__"):
+            continue
+        for name, position in params:
+            if _EXEMPT_PARAM.fullmatch(name):
+                continue
+            if not any(_sets(c, name, position) for c in calls.get(called, [])):
+                unset.add(f"{key}:{name}")
+    return unset
+
+
+def test_every_option_is_set_or_allowlisted():
+    stray = sorted(unset_options() - set(PARAM_ALLOWLIST))
+    assert not stray, (
+        f"defaulted parameters no production call sets: {stray}. Make each "
+        "a module constant (or a literal) and delete the branches only "
+        "another value reached, or add it to PARAM_ALLOWLIST with its "
+        "COVERAGE.md row and the reason it is kept."
+    )
+
+
+def test_param_allowlist_names_only_unset_options():
+    """An allowlisted parameter that was deleted, or that a production call
+    now sets, is a stale entry."""
+    stale = sorted(set(PARAM_ALLOWLIST) - unset_options())
+    assert not stale, f"allowlisted parameters that are gone or set: {stale}"
 
 
 # -- tools ------------------------------------------------------------------

@@ -292,21 +292,3 @@ def test_mutual_info_single_source_scan(spark):
     nodes = plan_nodes(formatted_plan(spark, "event_type_time_mutual_info"))
     assert nodes.count("Scan") == 1
 
-
-def test_rfm_cutpoint_twin_has_no_global_window(spark):
-    """The scale twin must not contain a single-partition window — that
-    is the whole point of the cut-point design."""
-    from autonomous_orchestrator_ai_spark.operators.mlstats import (
-        rfm_segments_cutpoint,
-    )
-    from autonomous_orchestrator_ai_spark.plans.registry import table
-
-    df = rfm_segments_cutpoint(table(spark, SF, "orders"), "2001-09-01")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert "Window" not in plan
-    assert "SinglePartition" not in plan.replace(
-        "Exchange SinglePartition", "", 0
-    ) or "Window" not in plan

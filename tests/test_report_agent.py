@@ -332,6 +332,39 @@ def test_torn_final_line_is_skipped_then_cut_by_the_next_append(tmp_path):
     assert [r["id"] for r in store.recent(days=7, now=NOW + timedelta(hours=1))] == [i2, i1]
 
 
+def test_torn_decision_line_is_cut_by_the_next_log_decision(tmp_path):
+    """decisions.jsonl follows the same commit rule as the incident log: a
+    crash-torn final line is cut off by the next append instead of fusing
+    with it into one corrupt line."""
+    path = tmp_path / "ops" / "decisions.jsonl"
+    ctx = DecisionContext(run_report={"total_records": 100, "late_records": 20})
+    d = rule_based_decision(ctx)
+    log_decision(d, ctx, path, now=NOW)
+    with path.open("a") as f:
+        f.write('{"timestamp": "2024-01-15T01:05:00", "decis')
+    log_decision(d, ctx, path, now=NOW + timedelta(minutes=10))
+    text = path.read_text()
+    assert text.endswith("\n")
+    stamps = [json.loads(line)["timestamp"] for line in text.splitlines()]
+    assert stamps == [NOW.isoformat(), (NOW + timedelta(minutes=10)).isoformat()]
+
+
+def test_tool_logs_cut_a_torn_final_line(tmp_path):
+    """notifications.jsonl and retrigger_requests.jsonl: the same rule."""
+    tools = PipelineTools(str(tmp_path / "ops"), now=NOW)
+    tools.notify_ops("first")
+    tools.retrigger_task()
+    for name in ("notifications.jsonl", "retrigger_requests.jsonl"):
+        with (tmp_path / "ops" / name).open("a") as f:
+            f.write('{"message": "torn')
+    tools.notify_ops("second")
+    tools.retrigger_task("other_task")
+    notes = (tmp_path / "ops" / "notifications.jsonl").read_text().splitlines()
+    assert [json.loads(n)["message"] for n in notes] == ["first", "second"]
+    reqs = (tmp_path / "ops" / "retrigger_requests.jsonl").read_text().splitlines()
+    assert [json.loads(r)["task_id"] for r in reqs] == ["run_spark_job", "other_task"]
+
+
 def test_malformed_committed_line_raises_naming_the_file_and_line(tmp_path):
     base = tmp_path / "inc"
     store = IncidentStore(str(base))

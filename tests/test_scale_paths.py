@@ -105,7 +105,8 @@ def test_k_anonymity_report_hand_computed(spark):
     df = spark.createDataFrame(rows, "g string, q int")
     got = {r["k"]: (r["n_classes_below"], r["n_rows_below"],
                     r["pct_rows_below"])
-           for r in k_anonymity_report(df, ["g", "q"], (2, 4, 10)).collect()}
+           for r in k_anonymity_report(df, ["g", "q"]).collect()}
     assert got[2] == (1, 1, round(1 * 100.0 / 9, 4))
-    assert got[4] == (2, 4, round(4 * 100.0 / 9, 4))
+    assert got[5] == (2, 4, round(4 * 100.0 / 9, 4))
     assert got[10] == (3, 9, 100.0)
+    assert got[20] == (3, 9, 100.0)

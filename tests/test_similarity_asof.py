@@ -193,51 +193,35 @@ def test_screen_multiprobe_lifts_small_corpus_recall(spark):
 
 
 def test_embedding_near_duplicates(spark):
+    pad = [0.0] * 62  # the screen's 64-dim vectors
     rows = [
-        (0, [1.0, 0.0, 0.0, 0.0]),
-        (1, [0.999, 0.01, 0.0, 0.0]),
-        (2, [0.0, 1.0, 0.0, 0.0]),
+        (0, [1.0, 0.0] + pad),
+        (1, [0.999, 0.01] + pad),
+        (2, [0.0, 1.0] + pad),
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    pairs = embedding_near_duplicates(df, threshold=0.99, n_planes=4, dim=4)
+    pairs = embedding_near_duplicates(df, threshold=0.99)
     got = [(r["id_a"], r["id_b"]) for r in pairs.collect()]
     assert got == [(0, 1)]
 
 
-def test_embedding_near_duplicates_multitable_superset(spark):
-    """n_tables=1 reproduces the historical single-table bucketing
-    (table 0 uses the base seed); more tables only ADD pairs (recall),
-    never drop or re-score one, and each pair is emitted once."""
+def test_embedding_near_duplicates_finds_planted_copies_once(spark):
+    """The multi-table screen finds planted near-identical copies, and a
+    pair colliding in several tables is emitted once."""
     import numpy as np
 
     rng = np.random.default_rng(7)
-    base = rng.standard_normal((30, 8))
+    base = rng.standard_normal((30, 64))
     rows = [(i, base[i].tolist()) for i in range(30)]
     # plant near-identical copies of vectors 3 and 11
     rows += [(100, (base[3] + 1e-4).tolist()), (101, (base[11] - 1e-4).tolist())]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    one = {
-        (r["id_a"], r["id_b"], r["cosine_sim"])
-        for r in embedding_near_duplicates(
-            df, threshold=0.9, n_planes=4, n_tables=1, dim=8
-        ).collect()
-    }
-    four = {
-        (r["id_a"], r["id_b"], r["cosine_sim"])
-        for r in embedding_near_duplicates(
-            df, threshold=0.9, n_planes=4, n_tables=4, dim=8
-        ).collect()
-    }
-    assert one <= four
-    planted = {p[:2] for p in four}
-    assert (3, 100) in planted and (11, 101) in planted
-    # dropDuplicates: each pair once
     flat = [
         (r["id_a"], r["id_b"])
-        for r in embedding_near_duplicates(
-            df, threshold=0.9, n_planes=4, n_tables=4, dim=8
-        ).collect()
+        for r in embedding_near_duplicates(df, threshold=0.9).collect()
     ]
+    assert (3, 100) in flat and (11, 101) in flat
+    # dropDuplicates: each pair once
     assert len(flat) == len(set(flat))
 
 

@@ -232,17 +232,6 @@ def test_write_bucketed_refuses_foreign_directory(spark, tmp_path):
         write_bucketed(df, "bkt_guard_t1", "k", n_buckets=2, path=str(foreign))
     assert (foreign / "notes.txt").exists()  # untouched
 
-    # explicit override deletes and writes
-    write_bucketed(
-        df, "bkt_guard_t1", "k", n_buckets=2, path=str(foreign),
-        overwrite_location=True,
-    )
-    try:
-        assert spark.table("bkt_guard_t1").count() == 10
-        assert not (foreign / "notes.txt").exists()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_guard_t1")
-
     # an orphaned TABLE location (only part/_SUCCESS files) still clears
     # without the flag — the cross-session idempotence contract
     orphan = tmp_path / "orphan"

@@ -6,9 +6,7 @@ from __future__ import annotations
 from pyspark.sql import Row
 
 from autonomous_orchestrator_ai_spark.operators.spandedup import (
-    covered_positions,
     duplicate_span_doc_stats,
-    duplicate_spans,
     kgram_occurrences,
     remove_duplicate_spans,
 )
@@ -43,14 +41,14 @@ def test_adjacent_duplicated_grams_merge_into_one_maximal_span(spark):
         f"{_words(1, 'c')} {shared} {_words(3, 'd')}",
         _words(10, "z"),
     )
-    spans = {
-        r["doc_id"]: (r["span_start"], r["span_end"])
-        for r in duplicate_spans(docs, k=K).collect()
-    }
-    assert spans == {0: (2, 8), 1: (1, 7)}
     stats = {r["doc_id"]: r for r in duplicate_span_doc_stats(docs, k=K).collect()}
+    assert set(stats) == {0, 1}
     assert stats[0]["n_spans"] == 1 and stats[0]["dup_tokens"] == 6
     assert stats[1]["n_spans"] == 1 and stats[1]["dup_tokens"] == 6
+    # doc 1 is not the keeper: its span [1, 7) is the one cut out
+    out = {r["doc_id"]: r for r in remove_duplicate_spans(docs, k=K).collect()}
+    assert set(out) == {1}
+    assert out[1]["clean_text"] == "c0 d0 d1 d2"
 
 
 def test_disjoint_shared_runs_stay_separate_spans(spark):
@@ -91,23 +89,27 @@ def test_fully_covered_doc_comes_back_empty_not_missing(spark):
 def test_covered_positions_are_distinct_union_of_overlapping_grams(spark):
     shared = _words(6, "s")  # grams at 3 starts overlap; union = 6 positions
     docs = _docs(spark, shared, f"x0 {shared} x1")
-    cov = covered_positions(docs, k=K).collect()
-    assert {(r["doc_id"], r["pos"]) for r in cov} == {(1, p) for p in range(1, 7)}
+    out = {r["doc_id"]: r for r in remove_duplicate_spans(docs, k=K).collect()}
+    assert set(out) == {1}
+    assert out[1]["tokens_before"] == 8 and out[1]["tokens_after"] == 2
+    assert out[1]["clean_text"] == "x0 x1"
 
 
 def test_intra_doc_repeat_alone_is_not_cross_doc_duplicated(spark):
     rep = _words(K, "r")
     docs = _docs(spark, f"{rep} mid0 mid1 {rep}", _words(8, "o"))
-    assert duplicate_spans(docs, k=K).count() == 0
+    assert duplicate_span_doc_stats(docs, k=K).count() == 0
 
 
 def test_case_and_whitespace_normalize_before_matching(spark):
     docs = _docs(spark, "Alpha  Beta\tGamma Delta x0", "alpha beta gamma delta y0")
-    spans = duplicate_spans(docs, k=K).collect()
-    assert {(r["doc_id"], r["span_start"], r["span_end"]) for r in spans} == {
-        (0, 0, 4),
-        (1, 0, 4),
+    stats = duplicate_span_doc_stats(docs, k=K).collect()
+    assert {(r["doc_id"], r["n_spans"], r["dup_tokens"]) for r in stats} == {
+        (0, 1, 4),
+        (1, 1, 4),
     }
+    out = {r["doc_id"]: r["clean_text"] for r in remove_duplicate_spans(docs, k=K).collect()}
+    assert out == {1: "y0"}
 
 
 # ---------------------------------------------------------------------------
@@ -155,11 +157,10 @@ def test_boilerplate_below_min_df_survives(spark):
 
 
 def test_release_leaves_no_corpus_scale_blocks_pinned(spark):
-    """release=True (default, r8): after a span/boilerplate call returns,
-    the only persisted blocks are the RESULT's own — the corpus-scale
-    occurrence cache and covered positions are unpersisted. The r7
-    footgun was each call stacking another occurrence table in executor
-    storage for the session lifetime."""
+    """r8: after a span/boilerplate call returns, the only persisted
+    blocks are the RESULT's own — the corpus-scale occurrence cache is
+    unpersisted. The r7 footgun was each call stacking another occurrence
+    table in executor storage for the session lifetime."""
     from autonomous_orchestrator_ai_spark.session import (
         release_session_storage,
     )
@@ -176,13 +177,7 @@ def test_release_leaves_no_corpus_scale_blocks_pinned(spark):
     assert out.count() == 2  # still readable from its own cache
     out.unpersist()
     assert jsc.getPersistentRDDs().size() == 0
-
-    # release=False restores the chaining behavior: the corpus-scale
-    # occurrence cache stays for session-level release (r9: it is the
-    # ONLY upstream cache now — covered positions are computed map-side
-    # inside _removal_stats, never materialized)
-    out2 = remove_duplicate_spans(docs, k=3, release=False)
-    out2.count()
-    assert jsc.getPersistentRDDs().size() >= 1
-    release_session_storage(spark)  # session-level release clears them
+    out2 = remove_duplicate_spans(docs, k=3)
+    assert jsc.getPersistentRDDs().size() == 1
+    out2.unpersist()
     assert jsc.getPersistentRDDs().size() == 0

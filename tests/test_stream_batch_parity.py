@@ -14,10 +14,12 @@ fixed-point discipline the DuckDB oracles enforce.
 from __future__ import annotations
 
 import uuid
+from unittest import mock
 
 import pytest
 from pyspark.sql import functions as F
 
+from autonomous_orchestrator_ai_spark.functions import temporal
 from autonomous_orchestrator_ai_spark.functions.temporal import (
     late_arrival_flag,
 )
@@ -61,14 +63,11 @@ def _dq_flags(df):
 
 def _late_flag(df):
     """P9 flag-and-keep core (late_arrivals_by_type): annotate, never
-    filter, against an injected processing timestamp."""
-    return df.select(
-        "event_id",
-        "event_type",
-        late_arrival_flag(
-            F.col("ts"), F.expr(_NOW), threshold_minutes=60 * 24 * 90
-        ).alias("is_late_arrival"),
-    )
+    filter, against an injected processing timestamp and a 90-day
+    threshold (the fixture's events span months)."""
+    with mock.patch.object(temporal, "LATE_THRESHOLD_MINUTES", 60 * 24 * 90):
+        flag = late_arrival_flag(F.col("ts"), F.expr(_NOW))
+    return df.select("event_id", "event_type", flag.alias("is_late_arrival"))
 
 
 def _quarantine_keep(df):
@@ -196,7 +195,7 @@ def _trained_quality_score(df):
     return df.select(
         "doc_id",
         F.round(
-            trained_score_expr("text", weights, 4096, bias=0.1), 9
+            trained_score_expr("text", weights), 9
         ).alias("quality_score"),
     )
 
